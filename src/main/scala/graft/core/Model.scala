@@ -18,24 +18,6 @@ case class PrimaryKeyMapItem(
     col_ord_pos: Int)
 
 object Model {
-  /** Schema of one wal2json change element (reference formatter.py:89-101,
-    * README.rst:107-117). Column values are read as strings to stay
-    * type-agnostic, faithful to the reference's pass-through semantics.
-    */
-  val walChangeSchema: StructType = StructType(Seq(
-    StructField("kind", StringType),
-    StructField("schema", StringType),
-    StructField("table", StringType),
-    StructField("columnnames", ArrayType(StringType)),
-    StructField("columntypes", ArrayType(StringType)),
-    StructField("columnvalues", ArrayType(StringType))))
-
-  /** Top-level wal2json message: {"xid": n, "change": [...]} (with
-    * include-xids; reference slot.py:124-125, formatter.py:106-110). */
-  val walMessageSchema: StructType = StructType(Seq(
-    StructField("xid", LongType),
-    StructField("change", ArrayType(walChangeSchema))))
-
   val changeSchema: StructType = StructType(Seq(
     StructField("xid", LongType),
     StructField("table", StringType),

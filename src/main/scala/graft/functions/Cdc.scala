@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.core.Model
+import graft.expressions.CachedRegexpExtract.regexp_extract_cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * Where the reference runs a Python callback per WAL message, here the
   * same semantics are a whole-stage-codegen'd expression pipeline that
   * works identically on batch DataFrames and Structured Streaming
-  * micro-batches: `from_json` + `explode` + broadcast catalog join +
-  * `regexp_extract`. Nothing here touches the driver; every stage
-  * scales with input partitions.
+  * micro-batches: a one-walk wal2json extractor + `explode` + broadcast
+  * catalog join + `regexp_extract`. Nothing here touches the driver;
+  * every stage scales with input partitions.
   *
   * Error semantics: the reference raises on unknown tables / missing
   * PKs (formatter.py:20-21, 77, 134-137). `strict = true` reproduces
@@ -44,11 +44,14 @@ object Cdc {
       tablePat: String = defaultTablePat,
       strict: Boolean = true): DataFrame = {
     val keep = df.columns.filter(_ != payloadCol).map(col).toSeq
+    // one Jackson walk per message (FullChangeRows, PK mode) yields
+    // each change element's routing fields and its columnnames /
+    // columnvalues as text, the way from_json would read them; one
+    // payload → 0..N changes, empty change arrays drop out (P4)
     val parsed = df
-      .withColumn("_w", from_json(col(payloadCol), Model.walMessageSchema))
-      // one payload → 0..N changes; empty change arrays drop out (P4)
-      .select((keep :+ col("_w.xid").as("xid") :+
-        explode(col("_w.change")).as("_c")): _*)
+      .select((keep :+ explode(
+        graft.expressions.FullChangeRows.change_rows(col(payloadCol)))
+        .as("_c")): _*)
       .withColumn("table_name",
         concat(col("_c.schema"), lit("."), col("_c.table")))
       // F1: unanchored regex search, like the reference's re.search
@@ -73,7 +76,7 @@ object Cdc {
           .otherwise(element_at(col("_c.columnvalues"), col("_idx")))
       else when(col("_idx") > 0,
         element_at(col("_c.columnvalues"), col("_idx")))
-    parsed.select((keep :+ col("xid") :+ col("table_name") :+
+    parsed.select((keep :+ col("_c.xid").as("xid") :+ col("table_name") :+
       col("_c.kind").as("operation") :+ pkey.as("pkey")): _*)
   }
 
@@ -167,11 +170,9 @@ object Cdc {
       // built as a column so one regexp_extract serves every table
       .withColumn("_pk_pat", concat(col("pk_name"), lit("\\["),
         col("pk_type"), lit("\\]:'?([\\w\\-]+)'?")))
-      // Scala's regexp_extract overload requires a literal pattern;
-      // the underlying RegExpExtract expression does not — go through
-      // the SQL form to pass the per-table pattern column.
-      .withColumn("_pk_raw",
-        expr(s"regexp_extract(`$payloadCol`, _pk_pat, 1)"))
+      // regexp_extract with the per-table pattern column, one compiled
+      // pattern kept per table (interleaved tables would recompile it)
+      .withColumn("_pk_raw", regexp_extract_cached(p, col("_pk_pat"), 1))
     // strict checks inside the projected expression (see parseWal2Json)
     val pkey =
       if (strict)
@@ -201,7 +202,7 @@ object Cdc {
       .withColumn("_pk_pat", concat(col("pk_name"), lit("\\["),
         col("pk_type"), lit("\\]:'?([\\w\\-]+)'?")))
       .withColumn("_pk_raw",
-        expr(s"regexp_extract(`$bodyCol`, _pk_pat, 1)"))
+        regexp_extract_cached(col(bodyCol), col("_pk_pat"), 1))
     val pkey =
       if (strict)
         when(col("pk_name").isNull,

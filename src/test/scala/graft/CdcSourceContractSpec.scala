@@ -32,12 +32,12 @@ trait CdcSourceFixture {
 abstract class CdcSourceContractSpec extends SparkSpec {
   def mkFixture(): CdcSourceFixture
 
-  private def tmpDir(): String =
+  protected def tmpDir(): String =
     Files.createTempDirectory("graft-contract").toString
 
   /** Run to quiescence through foreachBatch, collecting (lsn, payload,
     * data_size) into `sink`; returns query progress row counts. */
-  private def drain(df: DataFrame, ckpt: String,
+  protected def drain(df: DataFrame, ckpt: String,
       sink: scala.collection.mutable.Buffer[(Long, String, Long)])
       : Seq[Long] = {
     val counts = scala.collection.mutable.Buffer.empty[Long]
@@ -178,6 +178,117 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
       Files.write(path, payloads.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+  }
+
+  // ---- file transport edges: the byte-offset index and its reader ----
+
+  import graft.sources.{CdcFileMicroBatchStream, CdcFileSource, LsnOffset}
+
+  private def wal(): java.nio.file.Path =
+    Files.createTempDirectory("graft-file-edge").resolve("wal.txt")
+
+  private def write(p: java.nio.file.Path, text: String,
+      mode: StandardOpenOption = StandardOpenOption.APPEND): Unit =
+    Files.write(p, text.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, mode)
+
+  /** Plan and read [start, end) on ONE live stream instance. */
+  private def batch(s: CdcFileMicroBatchStream, start: Long, end: Long)
+      : Seq[(Long, String, Long)] =
+    s.planInputPartitions(LsnOffset(start), LsnOffset(end)).toSeq.flatMap {
+      part =>
+        val r = s.createReaderFactory().createReader(part)
+        val out = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+        try while (r.next()) {
+          val row = r.get()
+          out += ((row.getLong(1), row.getUTF8String(0).toString, row.getLong(2)))
+        } finally r.close()
+        out
+    }
+
+  private def head(s: CdcFileMicroBatchStream): Long =
+    s.latestOffset().asInstanceOf[LsnOffset].lsn
+
+  /** What BufferedReader.readLine makes of the same bytes. */
+  private def readLines(p: java.nio.file.Path): Seq[String] = {
+    val r = Files.newBufferedReader(p, StandardCharsets.UTF_8)
+    try Iterator.continually(r.readLine()).takeWhile(_ != null).toSeq
+    finally r.close()
+  }
+
+  test("file: a torn last line waits for its newline, then is read once, whole") {
+    val p = wal()
+    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    write(p, "a0\na1\n{\"torn\": ")
+    assert(head(s) == 2L && CdcFileSource.lineCount(p.toString) == 2L)
+    assert(batch(s, 0, 2).map(_._2) == Seq("a0", "a1"))
+    assert(head(s) == 2L, "no newline yet: nothing more is admitted")
+    write(p, "1}")
+    assert(head(s) == 2L)
+    write(p, "\na3\n")
+    assert(head(s) == 4L)
+    assert(batch(s, 2, 4) == Seq((2L, "{\"torn\": 1}", 11L), (3L, "a3", 2L)))
+  }
+
+  test("file: CRLF lines read as BufferedReader.readLine reads them") {
+    val p = wal()
+    write(p, "x\r\nyé\r\n\r\n\n{\"k\": \"v\"}\r\nz\n")
+    val want = readLines(p)
+    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    assert(head(s) == want.size.toLong)
+    val got = batch(s, 0, want.size)
+    assert(got.map(_._2) == want)
+    assert(got.map(_._3) ==
+      want.map(_.getBytes(StandardCharsets.UTF_8).length.toLong))
+    val (it, h) = CdcFileSource.lineRange(p.toString, 1, 5)
+    try assert(it.toSeq == want.slice(1, 5)) finally h.close()
+  }
+
+  test("file: resuming mid-file rebuilds the index, rows byte-identical") {
+    val p = wal()
+    val lines = (0 until 40).map(i => s"""{"n": $i, "s": "${"é" * (i % 5)}"}""")
+    write(p, lines.take(17).map(_ + "\n").mkString)
+    val ckpt = Files.createTempDirectory("graft-file-edge").toString
+    def stream(cap: Long) = spark.readStream
+      .format(classOf[graft.sources.CdcFileSourceProvider].getName)
+      .option("path", p.toString)
+      .option("maxRecordsPerTrigger", cap.toString).load()
+    val got = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    drain(stream(6), ckpt, got)
+    assert(got.size == 17)
+    write(p, lines.drop(17).map(_ + "\r\n").mkString)
+    drain(stream(5), ckpt, got) // a new stream instance: index rebuilt
+    val fresh = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    drain(stream(Long.MaxValue), tmpDir() + "/ckpt", fresh)
+    assert(got.sortBy(_._1) == fresh.sortBy(_._1))
+    assert(fresh.sortBy(_._1).map(_._2) == lines)
+  }
+
+  test("file: a WAL truncated or replaced under a live stream fails fast") {
+    def regressed(s: CdcFileMicroBatchStream): Unit = {
+      val e = intercept[IllegalStateException](head(s))
+      assert(e.getMessage.contains("regressed"), e.getMessage)
+    }
+    // truncated in place, then regrown past the indexed byte
+    val p = wal()
+    write(p, (0 until 10).map(i => s"old$i\n").mkString)
+    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    assert(head(s) == 10L && batch(s, 0, 10).size == 10)
+    write(p, "new0\n", StandardOpenOption.TRUNCATE_EXISTING)
+    regressed(s)
+    write(p, (1 until 30).map(i => s"new$i\n").mkString)
+    assert(Files.size(p) > 50L)
+    regressed(s)
+    // replaced by a new file holding more than was indexed
+    val q = wal()
+    write(q, (0 until 10).map(i => s"old$i\n").mkString)
+    val t = new CdcFileMicroBatchStream(q.toString, Long.MaxValue)
+    assert(head(t) == 10L)
+    val tmp = Files.createTempFile(q.getParent, "wal", ".tmp")
+    write(tmp, (0 until 30).map(i => s"old$i\n").mkString,
+      StandardOpenOption.TRUNCATE_EXISTING)
+    Files.move(tmp, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    regressed(t)
   }
 }
 

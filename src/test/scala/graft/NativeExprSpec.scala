@@ -211,6 +211,33 @@ class NativeExprSpec extends SparkSpec {
     assert(rows("{broken").isEmpty)
   }
 
+  test("regexp_extract_cached equals regexp_extract with a per-row pattern") {
+    import graft.expressions.CachedRegexpExtract.regexp_extract_cached
+    val pk = "\\[integer\\]:'?([\\w\\-]+)'?"
+    // interleaved patterns (the case that recompiles), optional and
+    // unmatched groups, no match, null subject and null pattern
+    val df = Seq(
+      ("id[integer]:1 name[text]:'a'", "id" + pk),
+      ("uuid[uuid]:'k-9'", "uuid\\[uuid\\]:'?([\\w\\-]+)'?"),
+      ("id[integer]:22", "id" + pk),
+      ("other[integer]:3", "id" + pk),
+      ("ab", "a(x)?b"),
+      ("ab", "(a)(b)?"),
+      (null, "id" + pk),
+      ("id[integer]:4", null)
+    ).toDF("s", "p")
+    val got = df.select(regexp_extract_cached(col("s"), col("p"), 1))
+      .as[String].collect().toSeq
+    val want = df.select(expr("regexp_extract(s, p, 1)")).as[String]
+      .collect().toSeq
+    assert(got == want)
+    assert(got.take(6) == Seq("1", "k-9", "22", "", "", "a"))
+    // a group past the pattern's groups fails as regexp_extract does
+    val e = intercept[Exception](Seq(("ab", "(a)")).toDF("s", "p")
+      .select(regexp_extract_cached(col("s"), col("p"), 2)).collect())
+    assert(e.getMessage.contains("INVALID_PARAMETER_VALUE.REGEX_GROUP_INDEX"))
+  }
+
   test("token_md5_60 equals the composed split/md5/conv formulation") {
     val edge = Seq(
       (1L, "plain tokens here"),
