@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Cdc
-import graft.streaming.{CdcPipeline, OrderedAggregatingWriter, PutClient}
+import graft.streaming.{OrderedAggregatingWriter, PutClient}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -71,28 +71,29 @@ object GraftJob {
       pkCatalog: DataFrame): DataFrame = {
     validate(cfg)
     val ops = cfg.expandedOps
+    // transport chosen by path ("pg:<conn>" → walsender source)
+    val raw = graft.sources.CdcSource.rawStream(spark, cfg.sourcePath,
+      cfg.maxRecordsPerTrigger, cfg.dryRun)
     val out = cfg.plugin match {
       case "wal2json" =>
-        // transport chosen by path ("pg:<conn>" → walsender source)
-        val raw = graft.sources.CdcSource.rawStream(spark, cfg.sourcePath,
-          cfg.maxRecordsPerTrigger, cfg.dryRun)
+        // begin_xid is the test_decoding carry: not a pass-through here
+        val rawJson = raw.drop("begin_xid")
         if (cfg.fullChange) {
-          Cdc.parseWal2JsonFull(raw, "payload", cfg.tablePat)
+          Cdc.parseWal2JsonFull(rawJson, "payload", cfg.tablePat)
             .withColumn("fmt_msg", Cdc.operationGate(col("operation"),
               Cdc.csvPayloadFull(col("xid"), col("change_json")), ops))
         } else {
-          Cdc.parseWal2Json(raw, "payload", pkCatalog, cfg.tablePat)
+          Cdc.parseWal2Json(rawJson, "payload", pkCatalog, cfg.tablePat)
             .withColumn("fmt_msg", Cdc.operationGate(col("operation"),
               Cdc.formatterFor(cfg.formatter)(col("xid"), col("table_name"),
                 col("operation"), col("pkey")), ops))
         }
       case "test_decoding" =>
-        // xid carry lives in keyed state (P3 across micro-batches);
+        // the source carries the BEGIN xid (P3 across micro-batches);
         // the PK extraction tail is shared with the batch parser
-        val split = CdcPipeline
-          .transformTestDecoding(spark, cfg.sourcePath,
-            cfg.maxRecordsPerTrigger, cfg.dryRun)
-          .toDF("lsn", "xid", "table_name", "operation", "body")
+        val split = Cdc.splitTestDecoding(
+            raw.select(col("lsn"), col("begin_xid").as("xid"), col("payload")),
+            "payload")
           .filter(col("table_name").rlike(cfg.tablePat))
         Cdc.testDecodingPkey(split, "body", pkCatalog)
           .withColumn("fmt_msg", Cdc.operationGate(col("operation"),

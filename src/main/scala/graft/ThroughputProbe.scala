@@ -2,9 +2,7 @@ package graft
 
 import graft.catalog.PkCatalog
 import graft.core.PrimaryKeyMapItem
-import graft.streaming.CdcPipeline
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -45,8 +43,9 @@ object ThroughputProbe {
       Seq(PrimaryKeyMapItem("public.species", "id", "integer", 1)))
     // small warm batch first so measured time is pipeline, not codegen
     val t0 = System.nanoTime()
-    val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt", trigger = Trigger.ProcessingTime(0))
+    val q = GraftJob.start(spark, GraftConfig(src, s"$dir/sink",
+      s"$dir/ckpt", formatter = "CSVPayload", operations = Seq("insert"),
+      sendWindowSecs = 0), cat)
     q.processAllAvailable()
     q.stop()
     val secs = (System.nanoTime() - t0) / 1e9

@@ -139,8 +139,10 @@ object Cdc {
     * (ORDER BY lsn)` — a single-partition window, which matches the
     * problem: a replication slot is one totally ordered stream (the
     * reference is equally single-lane). The streaming path instead
-    * carries xid inside the already-ordered source partition
-    * (graft.streaming.CdcPipeline), so no global shuffle appears there.
+    * reads the carry off the source's `begin_xid` column: each source
+    * partition starts from the xid its start offset holds and advances
+    * it at each BEGIN line, so no shuffle and no state store appear
+    * there (graft.sources.CdcFileSource).
     *
     * @param pkCatalog catalog with (table_name, pk_name, pk_type)
     * @return xid LONG, table_name, operation, pkey (+ lsn passthrough)
@@ -190,10 +192,30 @@ object Cdc {
       col("operation"), pkey.as("pkey"))
   }
 
+  /** The grammar of a test_decoding change line, `table <name>: <op>:
+    * <body>`. `\z`, not `$`: `rlike`/`regexp_extract` search with
+    * `find()`, whose `$` also matches before one trailing line
+    * terminator; this pattern matches exactly the lines the whole-line
+    * `matches()` of `^table ([^:]+): (\w+): (.*)$` matches, with the
+    * same groups. */
+  private val TestDecodingLine = "^table ([^:]+): (\\w+): (.*)\\z"
+
+  /** Split test_decoding change lines into `table_name`, `operation`
+    * and `body` (P1); BEGIN, COMMIT and noise lines drop out (F3). The
+    * other input columns pass through. */
+  def splitTestDecoding(df: DataFrame, payloadCol: String): DataFrame = {
+    val p = col(payloadCol)
+    val keep = df.columns.filter(_ != payloadCol).map(col).toSeq
+    df.filter(p.rlike(TestDecodingLine)).select((keep ++ Seq(
+      regexp_extract(p, TestDecodingLine, 1).as("table_name"),
+      regexp_extract(p, TestDecodingLine, 2).as("operation"),
+      regexp_extract(p, TestDecodingLine, 3).as("body"))): _*)
+  }
+
   /** Per-table PK regex extraction for already-split test_decoding
     * rows (columns `table_name` + `bodyCol`) — the tail of
     * [[parseTestDecoding]] for callers that did the BEGIN-xid carry
-    * elsewhere (the streaming path carries it in keyed state). Adds
+    * elsewhere (the streaming path reads it from the source). Adds
     * `pkey`; strict mode reproduces the reference's halt-on-error. */
   def testDecodingPkey(df: DataFrame, bodyCol: String,
       pkCatalog: DataFrame, strict: Boolean = true): DataFrame = {

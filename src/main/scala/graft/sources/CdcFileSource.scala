@@ -30,8 +30,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    each partition seeks to its start byte and slices lines straight
   *    into the rows, so every WAL byte is read a constant number of
   *    times however long the file grows,
-  *  - offsets are LSN ranges; Structured Streaming's checkpoint plays
-  *    the role of the client-side restart position,
+  *  - each row carries `begin_xid`, the xid of the last `BEGIN <xid>`
+  *    line at or before it (-1 before any): test_decoding's
+  *    transaction carry (P3), a pure function of the WAL before the
+  *    row. wal2json lines never start with `BEGIN `, so it is -1 there,
+  *  - offsets are LSN ranges, `{"lsn":N,"xid":X}`: X is the xid in
+  *    effect at N, which the stream reads off the BEGIN lines its index
+  *    scan passes over. A partition starts its carry from its start
+  *    offset's X, so the checkpoint's offset log makes the carry
+  *    exactly as durable as the position, and a micro-batch needs no
+  *    state store. An offset written as `{"lsn":N}` restores with X
+  *    recomputed from the WAL below N. Structured Streaming's
+  *    checkpoint plays the role of the client-side restart position,
   *  - `commit(end)` — invoked by the engine only after the epoch is
   *    durably committed — appends the LSN to a `.feedback` file: the
   *    analog of `send_feedback(flush_lsn=...)` (reference
@@ -59,11 +69,13 @@ class CdcFileSourceProvider extends TableProvider {
 
 object CdcFileSource {
   /** payload + lsn + data_size, mirroring psycopg2's ReplicationMessage
-    * envelope (payload, data_start, data_size). */
+    * envelope (payload, data_start, data_size), + begin_xid (the
+    * test_decoding transaction carry, see above). */
   val Schema: StructType = StructType(Seq(
     StructField("payload", StringType, nullable = false),
     StructField("lsn", LongType, nullable = false),
-    StructField("data_size", LongType, nullable = false)))
+    StructField("data_size", LongType, nullable = false),
+    StructField("begin_xid", LongType, nullable = false)))
 
   /** Number of '\n'-terminated lines (LSNs) in the file: one forward
     * scan of its bytes, nothing decoded. A last line still missing its
@@ -137,6 +149,12 @@ final class WalLines(path: String, from: Long, until: Long)
   /** The current line's bytes. */
   def line: UTF8String = UTF8String.fromBytes(buf, lineOff, lineLen)
 
+  /** Whether the current line starts with `BEGIN `. */
+  def isBegin: Boolean = lineLen >= 6 && buf(lineOff) == 'B' &&
+    buf(lineOff + 1) == 'E' && buf(lineOff + 2) == 'G' &&
+    buf(lineOff + 3) == 'I' && buf(lineOff + 4) == 'N' &&
+    buf(lineOff + 5) == ' '
+
   /** File position just past the current line's '\n'. */
   def lineEnd: Long = bufPos + start
 
@@ -159,7 +177,9 @@ final class WalLines(path: String, from: Long, until: Long)
 
 /** Line → byte-offset index of a growing WAL file, kept by the stream
   * on the driver: the byte where each line from `first` to `head`
-  * starts (`head` = complete lines = the WAL head LSN). [[refresh]]
+  * starts (`head` = complete lines = the WAL head LSN), and the xid in
+  * effect there: that of the last BEGIN line before it, -1 before any.
+  * [[refresh]]
   * scans only the bytes appended since the last call, so a trigger
   * costs O(new bytes), not O(file); lines below the committed offset
   * are dropped ([[forget]]), so it holds O(uncommitted lines). A fresh
@@ -176,7 +196,9 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
   private val file = Paths.get(path)
   private var first = 0L
   private var starts = new Array[Long](1024)
+  private var xids = new Array[Long](1024)
   private var n = 0 // entries; starts(n - 1) is the start of line `head`
+  private var xid = -1L // in effect at `head`
   private var head = 0L
   private var headByte = 0L
   private var built = false
@@ -205,6 +227,7 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
     if (size > headByte) {
       val r = new WalLines(path, headByte, size)
       try while (r.next()) {
+        if (r.isBegin) xid = CdcSource.beginXid(r.line.toString)
         head += 1
         headByte = r.lineEnd
         if (head >= first) append(headByte)
@@ -216,10 +239,15 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
 
   /** Byte where `line` starts, for first <= line <= head; an index
     * that has dropped `line` is rebuilt from byte 0. */
-  def byteOf(line: Long): Long = {
+  def byteOf(line: Long): Long = starts(entry(line))
+
+  /** The xid in effect at `line`, -1 before any BEGIN; as [[byteOf]]. */
+  def xidAt(line: Long): Long = xids(entry(line))
+
+  private def entry(line: Long): Int = {
     if (!built || line < first) { reset(); refresh(keepFrom = line) }
     require(line <= head, s"line $line is past the WAL head $head")
-    starts((line - first).toInt)
+    (line - first).toInt
   }
 
   /** Drop the lines below `line`: no batch will start there again. */
@@ -227,18 +255,23 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
     if (line > first && line <= head) {
       val k = (line - first).toInt
       System.arraycopy(starts, k, starts, 0, n - k)
+      System.arraycopy(xids, k, xids, 0, n - k)
       n -= k
       first = line
     }
 
   private def reset(): Unit = {
-    n = 0; head = 0L; headByte = 0L
+    n = 0; head = 0L; headByte = 0L; xid = -1L
     built = false; tail = Array.emptyByteArray
   }
 
   private def append(b: Long): Unit = {
-    if (n == starts.length) starts = java.util.Arrays.copyOf(starts, n * 2)
+    if (n == starts.length) {
+      starts = java.util.Arrays.copyOf(starts, n * 2)
+      xids = java.util.Arrays.copyOf(xids, n * 2)
+    }
     starts(n) = b
+    xids(n) = xid
     n += 1
   }
 
@@ -271,8 +304,21 @@ class CdcFileTable(path: String, maxPerTrigger: Long,
     }
 }
 
-case class LsnOffset(lsn: Long) extends Offset {
-  override def json(): String = s"""{"lsn":$lsn}"""
+/** A WAL position and the test_decoding xid in effect there (-1 before
+  * any BEGIN). */
+case class LsnOffset(lsn: Long, xid: Long = -1L) extends Offset {
+  override def json(): String = s"""{"lsn":$lsn,"xid":$xid}"""
+}
+
+object LsnOffset {
+  private val Json = """\{"lsn":(\d+)(?:,"xid":(-?\d+))?\}""".r
+
+  /** Parse [[LsnOffset.json]]; the xid is None in offsets written as
+    * `{"lsn":N}`. */
+  def parse(json: String): (Long, Option[Long]) = json.trim match {
+    case Json(lsn, xid) => (lsn.toLong, Option(xid).map(_.toLong))
+    case other => throw new IllegalArgumentException(s"not an LSN offset: $other")
+  }
 }
 
 class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
@@ -321,7 +367,7 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     * checkpointed offset, so a capped first batch counts from there. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val base = start match {
-      case LsnOffset(lsn) => lsn
+      case o: LsnOffset => o.lsn
       case null => math.max(lastPlanned, 0L)
       case other => deserializeOffset(other.json).asInstanceOf[LsnOffset].lsn
     }
@@ -337,12 +383,13 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     // forever (processAllAvailable never converges)
     val admitted = if (cap > total - base) total else base + cap
     lastPlanned = math.max(lastPlanned, admitted)
-    LsnOffset(admitted)
+    LsnOffset(admitted, index.xidAt(admitted))
   }
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[LsnOffset].lsn
+    val from = start.asInstanceOf[LsnOffset]
+    val s = from.lsn
     val e = end.asInstanceOf[LsnOffset].lsn
     // Restart-replan of a planned-but-uncommitted batch, or a start
     // restored from the checkpoint (either beyond anything THIS stream
@@ -354,7 +401,8 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
       lastPlanned = last // keep the admission tracker consistent
     }
     if (e <= s) Array.empty
-    else Array(CdcFilePartition(path, s, e, index.byteOf(s), index.byteOf(e)))
+    else Array(CdcFilePartition(path, s, e, index.byteOf(s), index.byteOf(e),
+      from.xid))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -381,20 +429,20 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
   }
 
   override def deserializeOffset(json: String): Offset = {
-    val lsn = json.replaceAll("[^0-9]", "").toLong
+    val (lsn, xid) = LsnOffset.parse(json)
     // recovery path: remember the checkpoint's horizon for the
     // regression guard
     if (lsn > restoredFloor) restoredFloor = lsn
-    LsnOffset(lsn)
+    LsnOffset(lsn, xid.getOrElse(index.xidAt(lsn)))
   }
 
   override def stop(): Unit = ()
 }
 
 /** Lines [start, end) of the WAL, which are its bytes
-  * [startByte, endByte). */
+  * [startByte, endByte); `startXid` is the xid in effect at `start`. */
 case class CdcFilePartition(path: String, start: Long, end: Long,
-    startByte: Long, endByte: Long) extends InputPartition
+    startByte: Long, endByte: Long, startXid: Long) extends InputPartition
 
 class CdcFileReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
@@ -403,9 +451,14 @@ class CdcFileReaderFactory extends PartitionReaderFactory {
     val lines = new WalLines(p.path, p.startByte, p.endByte)
     new PartitionReader[InternalRow] {
       private var lsn = p.start - 1
-      private val row = new UnsafeRowWriter(3)
+      private var xid = p.startXid
+      private val row = new UnsafeRowWriter(4)
       override def next(): Boolean =
-        if (lines.next()) { lsn += 1; true }
+        if (lines.next()) {
+          lsn += 1
+          if (lines.isBegin) xid = CdcSource.beginXid(lines.line.toString)
+          true
+        }
         else if (lsn + 1 == p.end) false
         else throw new IllegalStateException(s"${p.path} changed under " +
           s"a planned batch: lines [${p.start}, ${p.end}) at bytes " +
@@ -418,6 +471,7 @@ class CdcFileReaderFactory extends PartitionReaderFactory {
         row.write(0, payload)
         row.write(1, lsn)
         row.write(2, payload.numBytes.toLong)
+        row.write(3, xid)
         row.getRow
       }
       override def close(): Unit = lines.close()

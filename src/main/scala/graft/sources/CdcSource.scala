@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Transport selection for the CDC pipeline's raw stream. Both
-  * transports expose the identical schema (payload, lsn, data_size)
-  * and offset/commit/backpressure contract (CdcSourceContractSpec), so
-  * everything downstream is source-agnostic:
+  * transports expose the identical schema (payload, lsn, data_size,
+  * begin_xid) and offset/commit/backpressure contract
+  * (CdcSourceContractSpec), so everything downstream is
+  * source-agnostic:
   *
   *  - `pg:<connection>` — the walsender-backed [[PgReplicationSource]]
   *    (`<connection>` names a registered [[ReplicationStream]] factory;
@@ -14,6 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - anything else — a path for the tailed-file source.
   */
 object CdcSource {
+  /** P3: the xid a test_decoding `BEGIN <xid>` message opens (reference
+    * formatter.py:59-60). A malformed xid throws, which fails the
+    * query. */
+  def beginXid(begin: String): Long = begin.substring(6).trim.toLong
+
   def rawStream(spark: SparkSession, sourcePath: String,
       maxRecordsPerTrigger: Long = Long.MaxValue,
       peek: Boolean = false): DataFrame = {

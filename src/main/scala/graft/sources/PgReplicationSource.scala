@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,7 +55,11 @@ trait ReplicationStream extends AutoCloseable {
   * live transport). Identical contract to [[CdcFileSource]] — LSN-range
   * offsets, commit(end) → standby feedback, maxRecordsPerTrigger
   * admission — so everything downstream (parse → gate → format → KPL
-  * sink) is source-agnostic. One input partition per batch: a
+  * sink) is source-agnostic. The test_decoding xid carry rides in the
+  * offset as on the file source: the stream reads it off the admitted
+  * records on its control connection. Once a batch is acked the slot
+  * no longer holds the records below the ack, so only the offset can
+  * carry the xid across a restart. One input partition per batch: a
   * replication slot is a single totally ordered lane (the reference is
   * equally single-lane); parallelism belongs to the transforms behind
   * it, not the tail of the WAL.
@@ -106,6 +110,10 @@ object PgReplicationSource {
     require(f != null, s"no replication connection registered as '$name'")
     f()
   }
+
+  /** The xid in effect after `r`, given the one in effect before it. */
+  private[sources] def carry(xid: Long, r: WalRecord): Long =
+    if (r.payload.startsWith("BEGIN ")) CdcSource.beginXid(r.payload) else xid
 }
 
 class PgReplicationTable(connection: String, maxPerTrigger: Long,
@@ -126,7 +134,7 @@ class PgReplicationTable(connection: String, maxPerTrigger: Long,
 
 class PgReplicationMicroBatchStream(connection: String,
     maxPerTrigger: Long, peek: Boolean = false)
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsAdmissionControl {
   // driver-side control connection: admission (headLsn) + feedback
   private lazy val conn = PgReplicationSource.connect(connection)
   // same admission tracker as CdcFileSource: each trigger admits at
@@ -151,20 +159,38 @@ class PgReplicationMicroBatchStream(connection: String,
 
   override def initialOffset(): Offset = LsnOffset(0L)
 
-  override def latestOffset(): Offset = {
+  override def getDefaultReadLimit: ReadLimit =
+    if (maxPerTrigger == Long.MaxValue) ReadLimit.allAvailable()
+    else ReadLimit.maxRows(maxPerTrigger)
+
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) is called instead")
+
+  /** The engine passes the batch's start, which after a restart is the
+    * checkpointed offset, so a capped first batch counts from there. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = start match {
+      case o: LsnOffset => o
+      case other => deserializeOffset(other.json).asInstanceOf[LsnOffset]
+    }
+    val cap = limit match {
+      case m: ReadMaxRows => m.maxRows
+      case _ => Long.MaxValue
+    }
     val head = conn.headLsn()
-    val base = if (lastPlanned < 0) 0L else lastPlanned
-    guardRegression(head, math.max(base, restoredFloor))
+    guardRegression(head,
+      math.max(math.max(from.lsn, lastPlanned), restoredFloor))
     // saturating add (see CdcFileSource.latestOffset)
-    val admitted =
-      if (maxPerTrigger > head - base) head else base + maxPerTrigger
-    lastPlanned = math.max(base, admitted)
-    LsnOffset(lastPlanned)
+    val admitted = if (cap > head - from.lsn) head else from.lsn + cap
+    lastPlanned = math.max(lastPlanned, admitted)
+    LsnOffset(admitted, conn.read(from.lsn, admitted)
+      .foldLeft(from.xid)(PgReplicationSource.carry))
   }
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[LsnOffset].lsn
+    val from = start.asInstanceOf[LsnOffset]
+    val s = from.lsn
     val e = end.asInstanceOf[LsnOffset].lsn
     // Restart-replan of a planned-but-uncommitted batch (e beyond
     // anything THIS stream instance planned): the slot must still hold
@@ -175,7 +201,7 @@ class PgReplicationMicroBatchStream(connection: String,
       guardRegression(conn.headLsn(), e)
       lastPlanned = e // checkpoint-restart replan
     }
-    Array(PgReplicationPartition(connection, s, e))
+    Array(PgReplicationPartition(connection, s, e, from.xid))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -195,17 +221,21 @@ class PgReplicationMicroBatchStream(connection: String,
     PgReplicationSource.logFlushed(lsn)
   }
 
+  /** An offset written as `{"lsn":N}` restores its xid from what the
+    * slot still holds below N. */
   override def deserializeOffset(json: String): Offset = {
-    val lsn = json.replaceAll("[^0-9]", "").toLong
+    val (lsn, xid) = LsnOffset.parse(json)
     if (lsn > restoredFloor) restoredFloor = lsn // recovery horizon
-    LsnOffset(lsn)
+    LsnOffset(lsn, xid.getOrElse(
+      conn.read(0L, lsn).foldLeft(-1L)(PgReplicationSource.carry)))
   }
 
   override def stop(): Unit = conn.close()
 }
 
-case class PgReplicationPartition(connection: String, start: Long, end: Long)
-    extends InputPartition
+/** Records [start, end); `startXid` is the xid in effect at `start`. */
+case class PgReplicationPartition(connection: String, start: Long, end: Long,
+    startXid: Long) extends InputPartition
 
 class PgReplicationReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
@@ -215,13 +245,18 @@ class PgReplicationReaderFactory extends PartitionReaderFactory {
     val it = conn.read(p.start, p.end)
     new PartitionReader[InternalRow] {
       private var cur: WalRecord = _
+      private var xid = p.startXid
       override def next(): Boolean = {
-        if (it.hasNext) { cur = it.next(); true } else false
+        if (it.hasNext) {
+          cur = it.next()
+          xid = PgReplicationSource.carry(xid, cur)
+          true
+        } else false
       }
       override def get(): InternalRow = new GenericInternalRow(Array[Any](
         UTF8String.fromString(cur.payload), cur.lsn,
         cur.payload.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          .length.toLong))
+          .length.toLong, xid))
       override def close(): Unit = conn.close()
     }
   }

@@ -3,17 +3,23 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{PgReplicationSource, ReplicationStream, WalRecord}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** THE source contract, proven identically for every CDC transport:
   * LSN-range offsets (k-th message has lsn k, head = message count),
   * at-least-once with exactly-once across a checkpoint resume,
   * maxRecordsPerTrigger admission, and commit(end) → transport ack
-  * (feedback may trail by one epoch — engine behavior). The file
-  * source and the walsender-backed pg source run the SAME suite, so a
-  * job composed on one transport behaves identically on the other.
+  * (feedback may trail by one epoch — engine behavior), and the
+  * test_decoding `begin_xid` carry across restarts. The file source and
+  * the walsender-backed pg source run the SAME suite, so a job composed
+  * on one transport behaves identically on the other.
   */
 trait CdcSourceFixture {
   def name: String
@@ -149,6 +155,135 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     drain(f.stream(), tmpDir() + "/ckpt2", sink2)
     assert(sink2.sortBy(_._1).map(_._2) == (0 until 3).map(i => s"new$i"),
       "fresh checkpoint must see the new slot's WAL from position 0")
+  }
+
+  // ---- the test_decoding xid carry (begin_xid) ----
+
+  /** A seeded test_decoding WAL: changes before any BEGIN, then
+    * multi-change transactions over interleaved tables. */
+  protected def carryWal(seed: Long, txs: Int): Seq[String] = {
+    val r = new scala.util.Random(seed)
+    val tables = Seq("public.a", "public.b", "audit.c")
+    val ops = Seq("INSERT", "UPDATE", "DELETE")
+    Seq("table public.a: INSERT: id[integer]:0", "COMMIT") ++
+      (0 until txs).flatMap { t =>
+        val xid = 700 + 3 * t + r.nextInt(3)
+        (s"BEGIN $xid" +: (0 to r.nextInt(4)).map(c =>
+          s"table ${tables(r.nextInt(3))}: ${ops(r.nextInt(3))}: " +
+            s"id[integer]:${10 * t + c}")) :+ s"COMMIT $xid"
+      }
+  }
+
+  /** (lsn, xid) of every message as `Cdc.parseTestDecoding` carries it:
+    * `last(_xid_begin) OVER (ORDER BY lsn)`, -1 before any BEGIN. */
+  protected def expectedCarry(wal: Seq[String]): Seq[(Long, Long)] = {
+    import spark.implicits._
+    val p = col("payload")
+    val w = Window.orderBy(col("lsn"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wal.zipWithIndex.map { case (m, i) => (i.toLong, m) }
+      .toDF("lsn", "payload")
+      .withColumn("_xid_begin",
+        when(p.startsWith("BEGIN "), split(p, " ").getItem(1).cast("long")))
+      .select(col("lsn"),
+        coalesce(last(col("_xid_begin"), ignoreNulls = true).over(w),
+          lit(-1L)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+  }
+
+  /** Run a new query from `ckpt` until `done`, keeping each batch's
+    * (lsn, begin_xid) under its batch id, so a replayed batch
+    * overwrites rather than duplicates. */
+  protected def drainCarry(df: DataFrame, ckpt: String,
+      sink: mutable.Map[Long, Seq[(Long, Long)]],
+      trigger: Trigger = Trigger.ProcessingTime(0))(
+      done: org.apache.spark.sql.streaming.StreamingQuery => Unit): Unit = {
+    val q = df.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(trigger)
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        val rows = batch.select("lsn", "begin_xid").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        sink.synchronized { sink(id) = rows }
+        ()
+      }
+      .start()
+    try done(q) finally q.stop()
+  }
+
+  /** One micro-batch per query: the first trigger of an hourly trigger
+    * runs at once, and the query stops when it has reported. */
+  protected def oneBatchPerQuery(f: CdcSourceFixture, cap: Long, ckpt: String,
+      lines: Int, sink: mutable.Map[Long, Seq[(Long, Long)]]): Int = {
+    var queries = 0
+    def delivered = sink.synchronized(sink.values.map(_.size).sum)
+    while (delivered < lines) {
+      assert(queries < 4 * lines, s"no progress after $queries queries")
+      drainCarry(f.stream(cap), ckpt, sink,
+        Trigger.ProcessingTime("1 hour")) { q =>
+        val deadline = System.currentTimeMillis() + 60000
+        while (q.isActive && q.recentProgress.isEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+        q.exception.foreach(e => throw e)
+      }
+      queries += 1
+    }
+    queries
+  }
+
+  protected def carried(sink: mutable.Map[Long, Seq[(Long, Long)]])
+      : Seq[(Long, Long)] = sink.values.flatten.toSeq.sorted
+
+  /** Drain `wal` with caps 1, 2 and 3, restarting after every batch;
+    * every message arrives once, with the carry the batch parser
+    * computes. */
+  protected def assertCarryAcrossRestarts(fixture: () => CdcSourceFixture)
+      : Unit = {
+    val wal = carryWal(seed = 7, txs = 4)
+    val want = expectedCarry(wal)
+    assert(want.exists(_._2 == -1L) && want.map(_._2).distinct.size > 4)
+    for (cap <- 1L to 3L) {
+      val f = fixture()
+      f.append(wal)
+      val sink = mutable.Map.empty[Long, Seq[(Long, Long)]]
+      val queries = oneBatchPerQuery(f, cap, tmpDir() + "/ckpt", wal.size, sink)
+      assert(queries >= wal.size / cap, s"cap $cap: only $queries restarts")
+      assert(carried(sink) == want, s"cap $cap")
+    }
+  }
+
+  test("contract: begin_xid carries the last BEGIN across restarts, exactly once") {
+    assertCarryAcrossRestarts(() => mkFixture())
+  }
+
+  test("contract: begin_xid restores from offsets written as {\"lsn\":N}") {
+    val f = mkFixture()
+    val wal = carryWal(seed = 11, txs = 4)
+    // cut inside the third transaction, after its BEGIN and one change
+    val cut = wal.indices.filter(i => wal(i).startsWith("BEGIN "))(2) + 2
+    val ckpt = tmpDir() + "/ckpt"
+    val sink = mutable.Map.empty[Long, Seq[(Long, Long)]]
+    f.append(wal.take(cut))
+    drainCarry(f.stream(2), ckpt, sink)(_.processAllAvailable())
+    val offsets = {
+      val l = Files.list(Paths.get(ckpt, "offsets"))
+      try l.iterator().asScala.toSeq finally l.close()
+    }
+    var rewritten = 0
+    offsets.foreach { o =>
+      if (o.getFileName.toString.endsWith(".crc")) Files.delete(o)
+      else {
+        val text = new String(Files.readAllBytes(o), StandardCharsets.UTF_8)
+        val old = text.replaceAll("\\{\"lsn\":(\\d+),\"xid\":-?\\d+\\}",
+          "{\"lsn\":$1}")
+        if (old != text) rewritten += 1
+        Files.write(o, old.getBytes(StandardCharsets.UTF_8))
+      }
+    }
+    assert(rewritten > 0, s"no offset rewritten in $offsets")
+    f.append(wal.drop(cut))
+    drainCarry(f.stream(2), ckpt, sink)(_.processAllAvailable())
+    assert(carried(sink) == expectedCarry(wal))
   }
 }
 
@@ -297,11 +432,16 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
   * Postgres (the ReplicationStream seam is what a pgjdbc
   * PGReplicationStream adapter implements in production). */
 class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
-  override def mkFixture(): CdcSourceFixture = new CdcSourceFixture {
+  override def mkFixture(): CdcSourceFixture = fixture(dropFlushed = false)
+
+  /** `dropFlushed`: the slot no longer serves records an ack covers, as
+    * the pgjdbc adapter trims its buffer at each `flushed`. */
+  private def fixture(dropFlushed: Boolean) = new CdcSourceFixture {
     private val wal =
       new java.util.concurrent.CopyOnWriteArrayList[WalRecord]()
     private val flushes =
       new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
+    @volatile private var floor = 0L
     private val connName =
       s"fake-${java.util.UUID.randomUUID().toString.take(8)}"
     PgReplicationSource.registerConnection(connName, () =>
@@ -310,9 +450,13 @@ class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
         override def read(start: Long, end: Long): Iterator[WalRecord] = {
           import scala.jdk.CollectionConverters._
           // slot replay semantics: skip below start, stop at end
-          wal.iterator().asScala.filter(r => r.lsn >= start && r.lsn < end)
+          val from = if (dropFlushed) math.max(start, floor) else start
+          wal.iterator().asScala.filter(r => r.lsn >= from && r.lsn < end)
         }
-        override def flushed(lsn: Long): Unit = flushes.add(lsn)
+        override def flushed(lsn: Long): Unit = {
+          flushes.add(lsn)
+          floor = math.max(floor, lsn)
+        }
       })
     override def name: String = "cdc-pg"
     override def append(payloads: Seq[String]): Unit =
@@ -329,7 +473,12 @@ class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
     }
     override def reset(payloads: Seq[String]): Unit = {
       wal.clear()
+      floor = 0L
       append(payloads)
     }
+  }
+
+  test("pg: the carry comes from the offset once the slot drops acked records") {
+    assertCarryAcrossRestarts(() => fixture(dropFlushed = true))
   }
 }

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.catalog.PkCatalog
 import graft.core.PrimaryKeyMapItem
-import graft.streaming.{CdcPipeline, KplAggregate, LocalFilePutClient}
+import org.apache.spark.sql.functions.{col, split}
+import graft.streaming.{KplAggregate, LocalFilePutClient, PutClient}
 
 /** End-to-end Structured Streaming specs for the CDC pipeline:
   * source offsets/commit, ordered sink, backpressure, checkpoint
@@ -46,14 +47,21 @@ class StreamingSpec extends SparkSpec {
   private def sinkRecords(sinkDir: String): Seq[String] =
     sinkUserRecords(sinkDir).map(_._2)
 
+  /** The wal2json job, operations `insert`, formatter CSVPayload. */
+  private def startJob(src: String, dir: String,
+      maxRecordsPerTrigger: Long = Long.MaxValue,
+      putClient: PutClient = null) =
+    GraftJob.start(spark, GraftConfig(src, s"$dir/sink", s"$dir/ckpt",
+      formatter = "CSVPayload", operations = Seq("insert"),
+      sendWindowSecs = 0, maxRecordsPerTrigger = maxRecordsPerTrigger),
+      cat, putClient = putClient)
+
   test("end-to-end: parse, gate, format, ordered sink, LSN feedback") {
     val dir = tmp()
     val src = writeSource(dir,
       (0 until 20).map(i => walLine(100 + i,
         if (i % 2 == 0) "insert" else "delete", i)))
-    val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = startJob(src, dir)
     q.processAllAvailable()
     val progress = q.lastProgress
     // the engine acks epoch N to the source only when batch N+1 runs —
@@ -89,9 +97,7 @@ class StreamingSpec extends SparkSpec {
     val dir = tmp()
     val src = writeSource(dir,
       (0 until 20).map(i => walLine(i, "insert", i)))
-    val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt", maxRecordsPerTrigger = 5,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = startJob(src, dir, maxRecordsPerTrigger = 5)
     q.processAllAvailable()
     q.stop()
     assert(sinkRecords(s"$dir/sink").size == 20)
@@ -103,9 +109,7 @@ class StreamingSpec extends SparkSpec {
   test("checkpoint resume: appended lines processed exactly once") {
     val dir = tmp()
     val src = writeSource(dir, (0 until 5).map(i => walLine(i, "insert", i)))
-    val t = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
-    val q1 = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt", trigger = t)
+    val q1 = startJob(src, dir)
     q1.processAllAvailable(); q1.stop()
     assert(sinkRecords(s"$dir/sink").size == 5)
     // append 5 more lines, restart from the same checkpoint
@@ -113,8 +117,7 @@ class StreamingSpec extends SparkSpec {
       ((5 until 10).map(i => walLine(i, "insert", i)).mkString("\n") + "\n")
         .getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.APPEND)
-    val q2 = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt", trigger = t)
+    val q2 = startJob(src, dir)
     q2.processAllAvailable(); q2.stop()
     val recs = sinkRecords(s"$dir/sink")
     assert(recs.size == 10, s"expected 10 records, got ${recs.size}")
@@ -129,9 +132,7 @@ class StreamingSpec extends SparkSpec {
       (0 until 6).map(i => walLine(i, "insert", i)))
     // tiny aggregate size => one put per record; every 2nd put throttles
     val client = new LocalFilePutClient(s"$dir/sink", failFirstAttemptEvery = 2)
-    val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt", putClient = client,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = startJob(src, dir, putClient = client)
     q.processAllAvailable()
     q.stop()
     assert(sinkRecords(s"$dir/sink").size == 6)
@@ -149,9 +150,7 @@ class StreamingSpec extends SparkSpec {
       val dir = tmp()
       val src = writeSource(dir,
         (0 until 4).map(i => walLine(800 + i, "insert", i)))
-      val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-        s"$dir/sink", s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      val q = startJob(src, dir)
       q.processAllAvailable()
       // the ack trails by one epoch: append more WAL so a later batch
       // commits the earlier one (same at-least-once lag as production)
@@ -216,9 +215,7 @@ class StreamingSpec extends SparkSpec {
       // crosses a boundary and emits.
       val src = writeSource(dir,
         (0 until 3).map(i => walLine(600 + i, "insert", i)))
-      val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-        s"$dir/sink", s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      val q = startJob(src, dir)
       q.processAllAvailable()
       writeSource(dir, (0 until 5).map(i => walLine(600 + i, "insert", i)))
       q.processAllAvailable()
@@ -332,15 +329,17 @@ class StreamingSpec extends SparkSpec {
       "BEGIN 500",
       "table public.species: UPDATE: id[integer]:1"))
     val t = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
-    import spark.implicits._
-    val q = CdcPipeline.transformTestDecoding(spark, src)
-      .toDF("lsn", "xid", "table_name", "operation", "body")
+    val q = GraftJob.transform(spark, GraftConfig(src, s"$dir/sink",
+        s"$dir/ckpt", plugin = "test_decoding", formatter = "CSV"), cat)
+      .select(col("xid"),
+        split(col("fmt_msg"), ",").getItem(4).as("operation"))
       .writeStream.format("memory").queryName("td_stream")
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode("append").trigger(t).start()
     q.processAllAvailable()
     // next micro-batch delivers MORE rows of xact 500 plus a new xact:
-    // the carry must come from state, not from anything in this batch
+    // the carry must come from the source offset, not from anything in
+    // this batch
     Files.write(Paths.get(src), Seq(
       "table public.species: UPDATE: id[integer]:2",
       "COMMIT", "BEGIN 501",
@@ -349,6 +348,8 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.StandardOpenOption.APPEND)
     q.processAllAvailable()
     q.stop()
+    assert(!Files.exists(Paths.get(s"$dir/ckpt/state")),
+      "the carry needs no state store")
     val rows = spark.table("td_stream")
       .select("xid", "operation").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted
@@ -360,9 +361,7 @@ class StreamingSpec extends SparkSpec {
     val dir = tmp()
     val src = writeSource(dir,
       (0 until 50).map(i => walLine(i, "insert", i)))
-    val q = CdcPipeline.start(spark, src, cat, Seq("insert"),
-      s"$dir/sink", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = startJob(src, dir)
     q.processAllAvailable(); q.stop()
     val files = Files.list(Paths.get(s"$dir/sink")).count()
     // 50 small records easily fit one 1MB aggregate per micro-batch

@@ -60,6 +60,11 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # graft.Verify records each query that threw; older dumps lack it
+    try:
+        failures = json.load(open(f"{out_dir}/failures.json"))
+    except FileNotFoundError:
+        failures = {}
     n_ok = n_bad = 0
     t_suite = time.time()
     slow = []
@@ -67,7 +72,10 @@ def main():
         t_q = time.time()
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output")
+            if name in failures:
+                print(f"FAIL {name}: spark error: {failures[name]}")
+            else:
+                print(f"FAIL {name}: no spark output")
             n_bad += 1
             continue
         try:
