@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
-  * local[32] with shuffle.partitions=32 (match threads, not 200) and
-  * AQE on — the same knobs a cluster deployment would start from.
+  * A [[Tuning.localSession]] of SPARK_GRAFT_CPUS cores (default 32),
+  * shuffle partitions matching threads, not 200.
   *
   * Wall-clock discipline: the harness runs this under an external
   * timeout, and a bench that never prints is worth less than one that
@@ -33,24 +31,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "420").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, must precede session creation: the default
-      // 100-entry generated-class cache evicts most of the ~hundreds
-      // of codegen stages this surface compiles, so the warm pass's
-      // compilation work was thrown away before the timed attempt
-      // (churn showed as 2-5x inflation of arbitrary queries vs their
-      // isolated runs)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.optimizer.excludedRules", Tuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Tuning.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Inline per-query warmup at the smallest scale factor: the
     // generated whole-stage-codegen source is identical across scale
     // factors, so a warm pass right before timing populates the Janino
@@ -210,9 +193,7 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
       val times = (1 to attempts).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        graft.operators.Pipeline.resetMemo()
-        graft.functions.TimeSeries.resetMemo()
+        SparkEntry.reset(spark)
         val t0 = System.nanoTime()
         // A query that throws must not masquerade as a fast success:
         // record it as -1 (and say so on stderr), never as its
@@ -250,9 +231,7 @@ object Bench {
         if (warmDir != null) {
           try fn(spark, warmDir).count() catch { case _: Throwable => () }
         }
-        spark.sharedState.cacheManager.clearCache()
-        graft.operators.Pipeline.resetMemo()
-        graft.functions.TimeSeries.resetMemo()
+        SparkEntry.reset(spark)
         val t0 = System.nanoTime()
         val t2 =
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }

@@ -275,7 +275,7 @@ object Main {
         System.err.println(usage)
         sys.exit(2)
       case Right(o) =>
-        val b = SparkSession.builder().appName("pg2kinesis-graft")
+        val b = Tuning.builder().appName("pg2kinesis-graft")
           .config("spark.sql.shuffle.partitions",
             sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
         // spark-submit injects the master; bare `runMain` runs local

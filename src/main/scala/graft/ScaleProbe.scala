@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe main: writes an Nx-replicated copy of the sf tables
@@ -307,13 +307,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules", Tuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tuning.localSession(32)
 
     val tmp = s"/tmp/graft_scale$n"
     // Per-copy key offset. One shared constant across ALL tables (not
@@ -438,9 +432,7 @@ object ScaleProbe {
     // drop warmup state: cached data AND the session cluster memo —
     // otherwise the 1x dedup_cluster timing measures a memo lookup
     // (~0.1 s) against a full 10x computation and the ratio is noise
-    spark.sharedState.cacheManager.clearCache()
-    graft.operators.Pipeline.resetMemo()
-    graft.functions.TimeSeries.resetMemo()
+    SparkEntry.reset(spark)
     val r = ops.flatMap { op =>
       val t1 = time(SparkEntry.queries(op)(spark, d).count())
       val tN = time(SparkEntry.queries(op)(spark, tmp).count())

@@ -1,8 +1,10 @@
 package graft
 
-/** Session-level optimizer tuning shared by every entry point
-  * (Verify/Bench/RunOne/probes/tests; GraftJob callers pass a session
-  * built with the same knobs).
+import org.apache.spark.sql.SparkSession
+
+/** Session-level optimizer tuning shared by every entry point: every
+  * session in this project (Main, Verify, Bench, Profile, the probes,
+  * the test session) is built by [[builder]] or [[localSession]].
   */
 object Tuning {
   /** `InferFiltersFromGenerate` synthesizes a `size(arr) > 0`
@@ -28,4 +30,27 @@ object Tuning {
   val excludedRules =
     sys.env.getOrElse("GRAFT_EXCLUDED_RULES",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+
+  /** A session builder with the confs every session shares:
+    * [[excludedRules]], UTC session time, and room for 2000 generated
+    * classes (a static conf, so it must precede session creation: the
+    * default 100-entry cache evicts most of the several hundred
+    * codegen stages the query surface compiles, throwing away a warm
+    * pass's compilation before the timed run). */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.sql.optimizer.excludedRules", excludedRules)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
+
+  /** A `local[cores]` session with as many shuffle partitions as cores
+    * and no UI. */
+  def localSession(cores: Int): SparkSession = {
+    val spark = builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -11,18 +11,8 @@ object Verify {
     // Optional dev filter: comma-separated query names (driver passes 2 args).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: keep every generated class cached across the
-      // whole declared-query surface (default 100 entries evicts mid-run)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.optimizer.excludedRules", Tuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Tuning.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Bounded query-level parallelism: most declared queries are small
     // sequential jobs whose wall cost is scheduling, not CPU, so
     // running a few concurrently nearly divides the wall time (the

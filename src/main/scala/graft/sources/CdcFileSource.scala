@@ -321,17 +321,20 @@ object LsnOffset {
   }
 }
 
-class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
-    peek: Boolean = false)
+/** The admission rule both CDC micro-batch streams share: the
+  * `maxRecordsPerTrigger` read limit, the positions admitted and
+  * restored so far, and the fail-fast guard against a WAL that
+  * regressed under them. Each transport supplies its head, its xid
+  * carry and its partitions. `wal` names the WAL in errors. */
+abstract class LsnAdmission(maxPerTrigger: Long, wal: String)
     extends MicroBatchStream with SupportsAdmissionControl {
   // The highest offset this stream instance has admitted or planned:
-  // the WAL must still hold it (guardRegression), and a latestOffset()
-  // with no start counts from it.
-  private var lastPlanned: Long = -1L
+  // the WAL must still hold it (guardRegression).
+  protected var lastPlanned: Long = -1L
   // Highest offset restored from the checkpoint log (deserializeOffset
   // runs during recovery): the engine has durably planned/committed up
   // to here, so the WAL head may NEVER be below it — see guardRegression.
-  private var restoredFloor: Long = 0L
+  protected var restoredFloor: Long = 0L
 
   /** Fail-fast on WAL regression (slot recreated / WAL file replaced
     * under a live checkpoint). Without this the source would sit on
@@ -342,17 +345,15 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     * checkpointless client just follows); with a durable checkpoint
     * the only safe move is to halt and make the operator choose:
     * fresh checkpoint, or stop recreating slots under running jobs. */
-  private def guardRegression(head: Long, floor: Long): Unit =
+  protected def guardRegression(head: Long, floor: Long): Unit =
     if (head < floor)
-      regressed(s"head=$head < checkpointed/planned=$floor for $path")
+      regressed(s"head=$head < checkpointed/planned=$floor for $wal")
 
-  private def regressed(detail: String): Nothing =
+  protected def regressed(detail: String): Nothing =
     throw new IllegalStateException(s"WAL position regressed: $detail — " +
       "the slot/WAL was dropped or recreated while this checkpoint " +
       "exists. Restart with a FRESH checkpoint to consume the recreated " +
       "slot from its new origin.")
-
-  private val index = new LineIndex(path, regressed)
 
   override def initialOffset(): Offset = LsnOffset(0L)
 
@@ -360,29 +361,44 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     if (maxPerTrigger == Long.MaxValue) ReadLimit.allAvailable()
     else ReadLimit.maxRows(maxPerTrigger)
 
-  override def latestOffset(): Offset =
-    latestOffset(null, getDefaultReadLimit)
-
-  /** The engine passes the batch's start, which after a restart is the
-    * checkpointed offset, so a capped first batch counts from there. */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val base = start match {
-      case o: LsnOffset => o.lsn
-      case null => math.max(lastPlanned, 0L)
-      case other => deserializeOffset(other.json).asInstanceOf[LsnOffset].lsn
-    }
+  /** The position a trigger starting at `base` admits up to under
+    * `limit`: `head(floor)` returns the WAL head, which must be at or
+    * above `floor`, the highest position planned or restored. */
+  protected def admit(base: Long, limit: ReadLimit)(head: Long => Long): Long = {
     val cap = limit match {
       case m: ReadMaxRows => m.maxRows
       case _ => Long.MaxValue
     }
     val floor = math.max(math.max(base, lastPlanned), restoredFloor)
-    val total = index.refresh(keepFrom = floor)
+    val total = head(floor)
     guardRegression(total, floor)
     // saturating add: base + Long.MaxValue must not wrap negative, or
     // the offset oscillates and the engine schedules empty batches
     // forever (processAllAvailable never converges)
     val admitted = if (cap > total - base) total else base + cap
     lastPlanned = math.max(lastPlanned, admitted)
+    admitted
+  }
+}
+
+class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
+    peek: Boolean = false)
+    extends LsnAdmission(maxPerTrigger, path) {
+  private val index = new LineIndex(path, regressed)
+
+  override def latestOffset(): Offset =
+    latestOffset(null, getDefaultReadLimit)
+
+  /** The engine passes the batch's start, which after a restart is the
+    * checkpointed offset, so a capped first batch counts from there;
+    * with no start, admission counts from the last admitted offset. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val base = start match {
+      case o: LsnOffset => o.lsn
+      case null => math.max(lastPlanned, 0L)
+      case other => deserializeOffset(other.json).asInstanceOf[LsnOffset].lsn
+    }
+    val admitted = admit(base, limit)(floor => index.refresh(keepFrom = floor))
     LsnOffset(admitted, index.xidAt(admitted))
   }
 

@@ -23,21 +23,17 @@ object CdcSource {
   def rawStream(spark: SparkSession, sourcePath: String,
       maxRecordsPerTrigger: Long = Long.MaxValue,
       peek: Boolean = false): DataFrame = {
-    val raw =
+    val (provider, key, value) =
       if (sourcePath.startsWith("pg:"))
-        spark.readStream
-          .format(classOf[PgReplicationSourceProvider].getName)
-          .option("connection", sourcePath.stripPrefix("pg:"))
-          .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
-          .option("peek", peek.toString)
-          .load()
-      else
-        spark.readStream
-          .format(classOf[CdcFileSourceProvider].getName)
-          .option("path", sourcePath)
-          .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
-          .option("peek", peek.toString)
-          .load()
+        (classOf[PgReplicationSourceProvider], "connection",
+          sourcePath.stripPrefix("pg:"))
+      else (classOf[CdcFileSourceProvider], "path", sourcePath)
+    val raw = spark.readStream
+      .format(provider.getName)
+      .option(key, value)
+      .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
+      .option("peek", peek.toString)
+      .load()
     // Raw-side counters for the reference's 10 s progress line
     // (__main__.py:88-93: EVERY consumed change ticks count and
     // data_size, before parsing or gating) — consumed by

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -134,34 +134,9 @@ class PgReplicationTable(connection: String, maxPerTrigger: Long,
 
 class PgReplicationMicroBatchStream(connection: String,
     maxPerTrigger: Long, peek: Boolean = false)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends LsnAdmission(maxPerTrigger, s"connection '$connection'") {
   // driver-side control connection: admission (headLsn) + feedback
   private lazy val conn = PgReplicationSource.connect(connection)
-  // same admission tracker as CdcFileSource: each trigger admits at
-  // most maxPerTrigger new positions even while WAL keeps growing
-  private var lastPlanned: Long = -1L
-  // checkpoint horizon restored through deserializeOffset (recovery)
-  private var restoredFloor: Long = 0L
-
-  /** Fail-fast on LSN regression — a slot recreated under a live
-    * checkpoint restarts the server's WAL position BELOW what this
-    * checkpoint has durably planned; silently waiting for the new WAL
-    * to catch up would skip its first records (see
-    * CdcFileSource.guardRegression — identical contract, both
-    * transports are pinned by the same suite). */
-  private def guardRegression(head: Long, floor: Long): Unit =
-    if (head < floor) throw new IllegalStateException(
-      s"WAL position regressed: head=$head < checkpointed/planned=" +
-        s"$floor on connection '$connection' — the replication slot " +
-        "was dropped or recreated while this checkpoint exists. " +
-        "Restart with a FRESH checkpoint to consume the recreated " +
-        "slot from its new origin.")
-
-  override def initialOffset(): Offset = LsnOffset(0L)
-
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxPerTrigger == Long.MaxValue) ReadLimit.allAvailable()
-    else ReadLimit.maxRows(maxPerTrigger)
 
   override def latestOffset(): Offset = throw new UnsupportedOperationException(
     "latestOffset(Offset, ReadLimit) is called instead")
@@ -173,16 +148,7 @@ class PgReplicationMicroBatchStream(connection: String,
       case o: LsnOffset => o
       case other => deserializeOffset(other.json).asInstanceOf[LsnOffset]
     }
-    val cap = limit match {
-      case m: ReadMaxRows => m.maxRows
-      case _ => Long.MaxValue
-    }
-    val head = conn.headLsn()
-    guardRegression(head,
-      math.max(math.max(from.lsn, lastPlanned), restoredFloor))
-    // saturating add (see CdcFileSource.latestOffset)
-    val admitted = if (cap > head - from.lsn) head else from.lsn + cap
-    lastPlanned = math.max(lastPlanned, admitted)
+    val admitted = admit(from.lsn, limit)(_ => conn.headLsn())
     LsnOffset(admitted, conn.read(from.lsn, admitted)
       .foldLeft(from.xid)(PgReplicationSource.carry))
   }
