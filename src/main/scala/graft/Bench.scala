@@ -105,7 +105,7 @@ object Bench {
         }
       } catch { case _: Throwable => () }
       (1 to 2).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
+        QueryCache.release(spark)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case _: Throwable => Double.NaN }
@@ -143,7 +143,7 @@ object Bench {
       val t0 = spent
       val fn = SparkEntry.queries("q1_pricing")
       val t = (1 to 2).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
+        QueryCache.release(spark)
         val a0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - a0) / 1e9 }
         catch { case _: Throwable => Double.NaN }
@@ -193,7 +193,7 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
       val times = (1 to attempts).map { _ =>
-        SparkEntry.reset(spark)
+        QueryCache.release(spark)
         val t0 = System.nanoTime()
         // A query that throws must not masquerade as a fast success:
         // record it as -1 (and say so on stderr), never as its
@@ -231,7 +231,7 @@ object Bench {
         if (warmDir != null) {
           try fn(spark, warmDir).count() catch { case _: Throwable => () }
         }
-        SparkEntry.reset(spark)
+        QueryCache.release(spark)
         val t0 = System.nanoTime()
         val t2 =
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   *  - `time`: per query, one warm run on the `sf0.001` sibling of
   *    sfDir (when it exists), then `n` (default 2) timed runs, each
-  *    after [[SparkEntry.reset]]. Each run prints its wall time, rows,
+  *    after [[QueryCache.release]]. Each run prints its wall time, rows,
   *    and the jobs, stages and shuffle write/read bytes a listener
   *    counted, so structural claims are measured, not inferred.
   *  - `plan`: the formatted physical plan as built.
@@ -90,11 +90,11 @@ object Profile {
     try names.foreach { q =>
       val fn = SparkEntry.queries(q)
       if (Files.isDirectory(warm)) {
-        SparkEntry.reset(spark)
+        QueryCache.release(spark)
         fn(spark, warm.toString).count()
       }
       (1 to n).foreach { r =>
-        SparkEntry.reset(spark)
+        QueryCache.release(spark)
         Thread.sleep(500) // let listener events drain before zeroing
         jobs.set(0); stages.set(0); shufWrite.set(0); shufRead.set(0)
         val t0 = System.nanoTime()

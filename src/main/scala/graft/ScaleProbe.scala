@@ -432,7 +432,7 @@ object ScaleProbe {
     // drop warmup state: cached data AND the session cluster memo —
     // otherwise the 1x dedup_cluster timing measures a memo lookup
     // (~0.1 s) against a full 10x computation and the ratio is noise
-    SparkEntry.reset(spark)
+    QueryCache.release(spark)
     val r = ops.flatMap { op =>
       val t1 = time(SparkEntry.queries(op)(spark, d).count())
       val tN = time(SparkEntry.queries(op)(spark, tmp).count())

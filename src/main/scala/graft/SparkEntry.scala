@@ -33,13 +33,4 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracles).toMap
-
-  /** Drop every cached relation and both query memos (CC clusters, TS
-    * features), so the next run pays its full input-scan and
-    * materialization cost. */
-  def reset(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    operators.Pipeline.resetMemo()
-    functions.TimeSeries.resetMemo()
-  }
 }

@@ -166,30 +166,11 @@ object Cdc {
       .withColumn("table_name", regexp_extract(p, "^table ([^:]+):", 1))
       .withColumn("operation", regexp_extract(p, "^table [^:]+: (\\w+):", 1))
       .filter(col("table_name").rlike(tablePat))
-      .join(broadcast(pkCatalog), Seq("table_name"), "left")
-      // per-table PK pattern, reference template formatter.py:19:
-      //   {col_name}\[{col_type}\]:'?([\w\-]+)'?
-      // built as a column so one regexp_extract serves every table
-      .withColumn("_pk_pat", concat(col("pk_name"), lit("\\["),
-        col("pk_type"), lit("\\]:'?([\\w\\-]+)'?")))
-      // regexp_extract with the per-table pattern column, one compiled
-      // pattern kept per table (interleaved tables would recompile it)
-      .withColumn("_pk_raw", regexp_extract_cached(p, col("_pk_pat"), 1))
-    // strict checks inside the projected expression (see parseWal2Json)
-    val pkey =
-      if (strict)
-        when(col("pk_name").isNull,
-          raise_error(concat(lit("Unable to locate table: "),
-            col("table_name"))).cast("string"))
-          .when(col("_pk_raw") === "",
-            raise_error(concat(
-              lit("Unable to locate primary key for table "),
-              col("table_name"))).cast("string"))
-          .otherwise(col("_pk_raw"))
-      else when(col("pk_name").isNotNull && col("_pk_raw") =!= "",
-        col("_pk_raw"))
-    changes.select(col(lsnCol), col("xid"), col("table_name"),
-      col("operation"), pkey.as("pkey"))
+    // the PK pattern reads the whole line: its `name[type]:` anchor
+    // only occurs in the change body
+    testDecodingPkey(changes, payloadCol, pkCatalog, strict)
+      .select(col(lsnCol), col("xid"), col("table_name"),
+        col("operation"), col("pkey"))
   }
 
   /** The grammar of a test_decoding change line, `table <name>: <op>:

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryModule, Tables}
+import graft.{QueryCache, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,11 +50,10 @@ object Dedup extends QueryModule {
     * shares one materialization across the whole dedup family in a
     * session. */
   def shingleSets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
+    QueryCache.cached(docs.select(col("doc_id"),
       graft.expressions.ShingleHashes.shingle_hashes(col("text"), 8)
         .as("set"))
-      .withColumn("n", size(col("set")).cast("long"))
-      .cache()
+      .withColumn("n", size(col("set")).cast("long")))
 
   /** Strict sequential double fold — the portable cosine primitive. */
   private def dot(a: Column, b: Column): Column =
@@ -106,7 +105,9 @@ object Dedup extends QueryModule {
       // cached: both sides of the candidate self-join consume it, and
       // AQE does not reuse the exchange across self-join aliases here —
       // without the cache the df-agg + join + window pipeline runs twice
-      val prefixes = prefixTable(sets, K).cache()
+      // (A/B at sf0.1, 4 vCPU: uncached 18 jobs and 40 MB shuffled,
+      // cached 13 jobs and 13-20 MB)
+      val prefixes = QueryCache.cached(prefixTable(sets, K))
       // length filter inside the candidate join: J >= 0.8 forces
       // 4*max(n) <= 5*min(n), killing size-mismatched pairs before
       // the expensive set intersection. Candidates then need >= K
@@ -506,11 +507,11 @@ object Dedup extends QueryModule {
     * dominates here. Docs under 3 tokens have no gram set and drop
     * out, same as the oracle's len(toks) >= 3 guard. */
   def wordGramSets(docs: DataFrame): DataFrame =
-    wordGramSetsPlan(docs).cache()
+    QueryCache.cached(wordGramSetsPlan(docs))
 
   /** The cache-free plan under [[wordGramSets]] — the ONE word-3-gram
     * set definition, also usable on STREAMING DataFrames (where
-    * `.cache()` is illegal): the streaming ingest gate
+    * caching is illegal): the streaming ingest gate
     * (StreamingDedup.nearDupPairsWords) bands this identical lineage,
     * which is what makes stream/batch parity for dedup_incremental
     * provable rather than approximate. */
@@ -535,12 +536,14 @@ object Dedup extends QueryModule {
     // all 48 per-permutation mins come from ONE native pass over the
     // set (see MinHashSig — the nested transform/array_min formulation
     // materialized 48 intermediate arrays per row and dominated the
-    // pipeline).
-    val perDoc = sets
+    // pipeline). Cached: both band-join legs read the signatures, so
+    // the signature pass runs once (A/B at sf0.1, 4 vCPU: same 11 jobs
+    // and 133 KiB shuffled either way, median wall 1.71/1.98 s cached
+    // vs 1.82/2.03 s uncached over two runs of 3).
+    val perDoc = QueryCache.cached(sets
       .withColumn("sig",
         graft.expressions.MinHashSig.minhash_sig(col("set"), numPerm))
-      .select(col("doc_id"), col("sig"))
-      .cache()
+      .select(col("doc_id"), col("sig")))
     // bands: hash each signature slice, explode to (doc, band, bandHash)
     val banded = perDoc.select(col("doc_id"),
       explode(bandStructs(col("sig"), bands, rowsPerBand)).as("e"))

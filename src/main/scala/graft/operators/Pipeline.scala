@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, QueryModule, Tables}
+import graft.{Num, QueryCache, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,34 +108,19 @@ object Pipeline extends QueryModule {
     * Spark's plan cache automatically), the CC loop materializes per
     * round, so two consumers (`dedup_cluster`, `dedup_survivors`)
     * would each re-run the whole iteration. A real pipeline computes
-    * the clustering once and every downstream stage reads it; this
-    * memo (keyed by session + immutable input dir) is that shape.
+    * the clustering once and every downstream stage reads it; the
+    * [[QueryCache.shared]] entry (keyed by session + immutable input
+    * dir) is that shape.
     */
-  private val ccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  /** Drop every memoized clustering (benchmarks/probes call this when
-    * they need a cold re-computation, e.g. after a warmup pass or when
-    * a probe rewrites an input dir in place — the memo assumes input
-    * dirs are immutable within a session). */
-  def resetMemo(): Unit = {
-    // unpersist before dropping the handle: clearing alone would leave
-    // the cached clustering pinned in the session CacheManager with no
-    // reference left to free it
-    ccMemo.values.forEach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    ccMemo.clear()
-  }
-  private def clusters(s: SparkSession, d: String): DataFrame = {
-    // evict entries whose session is gone so long-lived JVMs that cycle
-    // SparkSessions don't pin dead cached plans
-    ccMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ccMemo.computeIfAbsent((s, d), { _ =>
-      connectedComponents(
+  private def clusters(s: SparkSession, d: String): DataFrame =
+    QueryCache.shared(s, "cc:" + d)(
+      QueryCache.cached(connectedComponents(
         Dedup.minhashPairs(documents(s, d))
-          .select(col("a_id"), col("b_id")))
-        .cache()
-    })
-  }
+          .select(col("a_id"), col("b_id")))))
+
+  /** Forwards to [[QueryCache.release]]; kept only because the
+    * benchmark harness (`perfbench/Queries.scala`) calls it. */
+  def resetMemo(): Unit = QueryCache.release(SparkSession.active)
 
   /** Int8 symmetric per-vector quantization audit over (vec_id,
     * embedding): scale = max|v|/127, q_i = round(v_i/scale); emits the
@@ -1204,7 +1189,7 @@ object Pipeline extends QueryModule {
       //    barrier — a checkpoint's LogicalRDD loses the partitioning
       //    under AQE and every iteration re-shuffled anyway, measured
       //    WORSE at 54 jobs / 7.7 MB.)
-      def center(mat: DataFrame): DataFrame = mat.cache()
+      def center(mat: DataFrame): DataFrame = QueryCache.cached(mat)
       val c = center(e.join(broadcast(m), Seq("dim"))
         .select(col("vec_id"), col("dim"), (col("v") - col("mean")).as("c"))
         .repartition(col("vec_id")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, QueryModule, Tables}
+import graft.{Num, QueryCache, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1257,7 +1257,7 @@ object Relational extends QueryModule {
       // uncached, Catalyst re-runs the lineitem self-join per leg
       // (measured 4.5 s -> the join once). On a cluster this barrier
       // is a checkpoint or an intermediate table, same shape.
-      val e = basketPairs(s, d).select(col("p1"), col("p2")).cache()
+      val e = QueryCache.cached(basketPairs(s, d).select(col("p1"), col("p2")))
       val deg = e.select(col("p1").as("v"))
         .unionByName(e.select(col("p2").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -1268,11 +1268,13 @@ object Relational extends QueryModule {
           Seq("p2"))
       val uIsP1 = col("d1") < col("d2") ||
         (col("d1") === col("d2") && col("p1") < col("p2"))
-      val oriented = wd.select(
+      // cached: both wedge legs and the closure probe read it (A/B at
+      // sf0.1, 4 vCPU: uncached 43 jobs and 13.4 MB shuffled, 10.1-11.2
+      // s; cached 26 jobs and 12.5 MB, 5.8-7.4 s)
+      val oriented = QueryCache.cached(wd.select(
         when(uIsP1, col("p1")).otherwise(col("p2")).as("u"),
         when(uIsP1, col("p2")).otherwise(col("p1")).as("v"),
-        when(uIsP1, col("d2")).otherwise(col("d1")).as("dv"))
-        .cache()
+        when(uIsP1, col("d2")).otherwise(col("d1")).as("dv")))
       // Round 14 re-examined: a sorted-adjacency-intersect rewrite
       // (|N⁺(u) ∩ N⁺(v)| per oriented edge via SortedIntersectCount,
       // no wedge rows) measured a WASH at sf0.1 (3.47 → 3.50 s, 26 →
@@ -1971,13 +1973,12 @@ object Relational extends QueryModule {
       // both faces read it (guide §2.4); the bench clears the cache
       // manager before every attempt. Measured: 22.6 → 13.4 MB
       // shuffled at sf0.1 (the duplicated fact-join pass gone).
-      val perPair = lineitem(s, d)
+      val perPair = QueryCache.cached(lineitem(s, d)
         .join(orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_orderkey"), col("l_suppkey"))
         .agg(max(col("l_shipdate") >
-          col("o_orderdate") + expr("INTERVAL 90 DAYS")).as("late"))
-        .cache()
+          col("o_orderdate") + expr("INTERVAL 90 DAYS")).as("late")))
       val perOrder = perPair.groupBy(col("l_orderkey").as("po_orderkey"))
         .agg(count(lit(1)).as("n_supp"),
           sum(when(col("late"), 1L).otherwise(0L)).as("n_late"))
@@ -2528,7 +2529,7 @@ object Relational extends QueryModule {
         .groupBy(col("l_orderkey"))
         .agg(sum(dsumExpr(col("l_extendedprice") * (lit(1) - col("l_discount"))))
           .as("rev_q"))
-      val monthly = liOrder
+      val monthly = QueryCache.cached(liOrder
         .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
         .join(customer(s, d), col("o_custkey") === col("c_custkey"))
         .join(broadcast(nation(s, d)),
@@ -2536,8 +2537,7 @@ object Relational extends QueryModule {
         .groupBy(col("n_name"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
             .as("m"))
-        .agg((sum(col("rev_q")).cast("double") / 1e8).as("rev"))
-        .cache()
+        .agg((sum(col("rev_q")).cast("double") / 1e8).as("rev")))
       val a = monthly.select(col("n_name"), col("m").as("m1"),
         col("rev").as("r1"))
       val b = monthly.select(col("n_name"), col("m").as("m2"),

@@ -52,12 +52,11 @@ class DeterminismSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     def runAll(parts: String): Map[String, Seq[String]] = {
       spark.conf.set(key, parts)
-      // drop every session memo (CC fixpoint, TS feature table) so the
-      // second parallelism pass RECOMPUTES at its own partition count —
-      // a cached table carried across runs would compare run 1's bytes
+      // drop every cached table and shared entry so the second
+      // parallelism pass RECOMPUTES at its own partition count — a
+      // cached table carried across runs would compare run 1's bytes
       // to themselves and hide a partition-dependent aggregation bug
-      graft.operators.Pipeline.resetMemo()
-      graft.functions.TimeSeries.resetMemo()
+      QueryCache.release(spark)
       representative.map { name =>
         name -> SparkEntry.queries(name)(spark, sf)
           .collect().map(_.toString).toSeq

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The library has one session factory and a fixed set of mains: a
-  * new dev main or hand-built session in `src/main` fails here. */
+/** The library has one session factory, one cache owner and a fixed
+  * set of mains: a new dev main, hand-built session or unowned cache in
+  * `src/main` fails here. */
 class EntryPointSpec extends AnyFunSuite {
   private val mains = Set("Main", "Verify", "Bench", "Profile",
     "CdcThroughput", "ScaleProbe", "HupProbe")
@@ -35,6 +36,14 @@ class EntryPointSpec extends AnyFunSuite {
     assert(builders.isEmpty, s"build sessions with Tuning: $builders")
     assert(sources.exists { case (n, t) =>
       n == "Tuning" && count(t, "SparkSession.builder(") == 1 })
+  }
+
+  test(".cache() and .persist( appear only in QueryCache and PkCatalog") {
+    val caching = sources.collect {
+      case (name, text) if name != "QueryCache" && name != "PkCatalog" &&
+        (text.contains(".cache()") || text.contains(".persist(")) => name
+    }
+    assert(caching.isEmpty, s"cache through QueryCache: $caching")
   }
 
   test("def main appears once in each declared entry point, nowhere else") {

@@ -363,6 +363,8 @@ class PlanAuditSpec extends SparkSpec {
     * table was cached, and a collect over only the outer plan would
     * have read it as vanished (stale-entry false positive) while a
     * real unbounded window could hide the same way (missed offender).
+    * The cached subtree is stored analyzed; it is optimized here so it
+    * is judged at the same altitude as the outer optimized plan.
     */
   private def collectThroughCaches[A](p: LogicalPlan)(
       f: PartialFunction[LogicalPlan, A]): Seq[A] =
@@ -370,8 +372,8 @@ class PlanAuditSpec extends SparkSpec {
       case n => n
     }.flatMap {
       case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        collectThroughCaches(
-          imr.cacheBuilder.logicalPlan)(f)
+        collectThroughCaches(spark.sessionState.optimizer.execute(
+          imr.cacheBuilder.logicalPlan))(f)
       case n => f.lift(n).toSeq
     }
 
@@ -429,5 +431,21 @@ class PlanAuditSpec extends SparkSpec {
       assert(plan.contains("WholeStageCodegen") || plan.contains("*("),
         s"$name has no whole-stage-codegen span:\n$plan")
     }
+  }
+
+  test("one QueryCache.release frees every cached table and shared entry") {
+    // runs after the collect sweeps, so both kinds are populated: the
+    // cluster family registered its fixpoint under this key
+    val ccKey = "cc:" + sf
+    val probe = spark.range(1).toDF()
+    try {
+      assert(!(QueryCache.shared(spark, ccKey)(probe) eq probe),
+        "the sweep left no shared cluster entry to release")
+      assert(!spark.sharedState.cacheManager.isEmpty)
+      QueryCache.release(spark)
+      assert(spark.sharedState.cacheManager.isEmpty)
+      assert(QueryCache.shared(spark, ccKey)(probe) eq probe,
+        "release left a shared entry behind")
+    } finally QueryCache.release(spark)
   }
 }
