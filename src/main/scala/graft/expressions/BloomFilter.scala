@@ -81,23 +81,6 @@ object Bloom {
     true
   }
 
-  /** Same probe over a plain [m, k, words...] long array (the
-    * closure-shipped form the streaming contamination gate holds). */
-  def mightContainWords(filter: Array[Long], v: Long): Boolean = {
-    val mBits = filter(0)
-    val k = filter(1).toInt
-    val h1 = mix(v)
-    val h2 = mix(v ^ 0xA5A5A5A5A5A5A5A5L) | 1L
-    var i = 0
-    while (i < k) {
-      val bit = java.lang.Long.remainderUnsigned(h1 + i * h2, mBits).toInt
-      if ((filter(2 + (bit >>> 6)) & (1L << (bit & 63))) == 0L)
-        return false
-      i += 1
-    }
-    true
-  }
-
   def bloom_agg(c: Column, mBits: Int, k: Int): Column =
     Bridge.column(BloomAgg(Bridge.expression(c), mBits, k)
       .toAggregateExpression())

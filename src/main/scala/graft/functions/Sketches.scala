@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Shared bounded-sketch kernels with BOTH a batch and a streaming
   * face — the same lineage is used by the oracle-checked declared
   * queries (q_hll_distinct, q_cms_users) and by their streaming
-  * parity specs, so stream == batch == DuckDB closes by construction
-  * (the StreamingDedup/Dedup pattern).
+  * parity spec, so stream == batch == DuckDB closes by construction.
   *
   * Both kernels are plain groupBy aggregates over hash-derived
   * columns, which is exactly what makes them streamable: in complete

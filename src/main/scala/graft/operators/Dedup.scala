@@ -234,8 +234,7 @@ object Dedup extends QueryModule {
     // per-batch-doc ADMIT DECISION (what the ingest gate consumes):
     // match count, first matching index doc, best Jaccard, admit bit.
     // Scale: index banding is the one-time cost; per batch the probe
-    // is |batch| × bands explode + a bucket equi-join — the streaming
-    // face (StreamingDedup) holds the same buckets as state. Oracle =
+    // is |batch| × bands explode + a bucket equi-join. Oracle =
     // brute-force straddling pairs at word-gram J >= 0.9 — the verify
     // threshold sits INSIDE the banding's reliable-recall band:
     // 16-band/3-row recall at J = 0.9 is 1 - (1 - 0.9^3)^16 ≈ 1 - 1e-9
@@ -454,11 +453,6 @@ object Dedup extends QueryModule {
     * shuffle cheap: natural-language 8-gram shingles are overwhelmingly
     * unique, so the inner join against df>=2 discards most of the
     * stream before anything is shuffled on doc_id.
-    *
-    * (A narrow-expression variant that embeds a driver-collected df
-    * table — PrefixShingles — remains available for probes; the
-    * declared query uses this relational path so no input scale can
-    * materialize unbounded state on the driver.)
     */
   def prefixTable(sets: DataFrame, k: Int): DataFrame = {
     val exploded = sets.select(col("doc_id"), col("n"),
@@ -507,16 +501,7 @@ object Dedup extends QueryModule {
     * dominates here. Docs under 3 tokens have no gram set and drop
     * out, same as the oracle's len(toks) >= 3 guard. */
   def wordGramSets(docs: DataFrame): DataFrame =
-    QueryCache.cached(wordGramSetsPlan(docs))
-
-  /** The cache-free plan under [[wordGramSets]] — the ONE word-3-gram
-    * set definition, also usable on STREAMING DataFrames (where
-    * caching is illegal): the streaming ingest gate
-    * (StreamingDedup.nearDupPairsWords) bands this identical lineage,
-    * which is what makes stream/batch parity for dedup_incremental
-    * provable rather than approximate. */
-  def wordGramSetsPlan(docs: DataFrame): DataFrame =
-    docs
+    QueryCache.cached(docs
       .withColumn("toks", expr(
         "filter(split(text, '\\\\s+'), t -> t != '')"))
       .filter(size(col("toks")) >= 3)
@@ -525,7 +510,7 @@ object Dedup extends QueryModule {
           " i -> cast(conv(substring(md5(concat_ws(' '," +
           " toks[i - 1], toks[i], toks[i + 1])), 1, 15), 16, 10)" +
           " as bigint))))").as("set"))
-      .withColumn("n", size(col("set")).cast("long"))
+      .withColumn("n", size(col("set")).cast("long")))
 
   /** Banded MinHash over any (doc_id, set, n) hash-set table. */
   private def bandedMinhashPairs(sets: DataFrame,
@@ -560,15 +545,12 @@ object Dedup extends QueryModule {
     verifyJaccard(candidates, sets, threshold)
   }
 
-  /** The LSH band-hash expression — ONE definition shared by the batch
-    * candidate self-join (bandedMinhashPairs) and the streaming bucket
-    * state (StreamingDedup.banded), so the banding family cannot drift
-    * between the two faces of the operator (stream/batch parity —
-    * StreamingMinhashParitySpec — depends on them being identical,
-    * and a silent divergence would break production recall, not a
-    * compile). Returns array<struct<band:int, bh:long>> over a MinHash
-    * signature column. */
-  def bandStructs(sig: Column, bands: Int, rowsPerBand: Int): Column =
+  /** The LSH band-hash expression — ONE definition shared by the
+    * candidate self-join (bandedMinhashPairs) and the incremental
+    * gate's asymmetric probe (dedup_incremental). Returns
+    * array<struct<band:int, bh:long>> over a MinHash signature
+    * column. */
+  private def bandStructs(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { bi =>
       val slice = (0 until rowsPerBand).map(ri =>
         element_at(sig, bi * rowsPerBand + ri + 1))
@@ -576,49 +558,17 @@ object Dedup extends QueryModule {
     }: _*)
 
   /** SimHash chunk-band expression — 4 chunks of 15 bits; pigeonhole
-    * guarantees any pair within Hamming distance 3 shares a chunk.
-    * ONE definition shared by the batch self-join (simhashPairs) and
-    * the streaming bucket state (StreamingDedup.simhashNearDups), same
-    * no-drift rationale as [[bandStructs]]. */
-  def simhashBandStructs(sig: Column): Column =
+    * guarantees any pair within Hamming distance 3 shares a chunk. */
+  private def simhashBandStructs(sig: Column): Column =
     array((0 until 4).map(i => struct(lit(i).as("band"),
       shiftrightunsigned(sig, i * 15).bitwiseAND(lit(0x7FFFL))
         .as("key"))): _*)
 
-  /** The SCALE path for SimHash banding — the Manku-et-al wide-key
-    * layout: 6 blocks of 10 bits, one key per C(6,3) = 20 three-block
-    * combination. Pigeonhole: ≤ 3 flipped bits hit ≤ 3 blocks, so ≥ 3
-    * blocks are clean and at least one of the 20 combinations is
-    * untouched — the same full-recall guarantee at Hamming ≤ 3 as the
-    * 4×15 chunks, but over a 2^30 key space instead of 2^15. Trade:
-    * 20 band rows per doc instead of 4, for ~32 000× lower expected
-    * bucket occupancy — per-bucket work is quadratic in occupancy (in
-    * the batch join's match loop AND the streaming roster), so beyond
-    * ~10^7 docs the 15-bit buckets saturate and this layout is the
-    * one that survives. DedupSpec pins wide == narrow pair-for-pair.
-    */
-  def simhashBandStructsWide(sig: Column): Column = {
-    val combos = (0 until 6).combinations(3).toSeq
-    array(combos.zipWithIndex.map { case (blocks, bi) =>
-      val key = blocks.zipWithIndex
-        .map { case (b, pos) =>
-          shiftleft(shiftrightunsigned(sig, b * 10)
-            .bitwiseAND(lit(0x3FFL)), pos * 10)
-        }
-        .reduce((a, c) => a.bitwiseOR(c))
-      struct(lit(bi).as("band"), key.as("key"))
-    }: _*)
-  }
-
   /** Exact-Jaccard verify of an (a_id, b_id) candidate pair set
     * against a (doc_id, set, n) hash-set table — the shared verify
-    * kernel of the batch LSH pipelines, public so the STREAMING
-    * near-dup candidate stream (StreamingDedup.nearDupPairs) verifies
-    * with byte-identical semantics (StreamingMinhashParitySpec pins
-    * stream == batch on the same corpus). Candidates broadcast through
-    * both joins; the array-carrying sets side streams without a
-    * shuffle. */
-  def verifyJaccard(candidates: DataFrame, sets: DataFrame,
+    * kernel of the LSH pipelines. Candidates broadcast through both
+    * joins; the array-carrying sets side streams without a shuffle. */
+  private def verifyJaccard(candidates: DataFrame, sets: DataFrame,
       threshold: Double): DataFrame = {
     val thrNum = math.round(threshold * 100).toInt
     broadcast(candidates)
@@ -645,8 +595,7 @@ object Dedup extends QueryModule {
     * guarantees every pair within Hamming distance 3 shares a chunk,
     * so candidates stay linear in docs and the verify is exact.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      wide: Boolean = false): DataFrame = {
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     import graft.expressions.SimHash64.simhash64
     import graft.expressions.TokenMd5.token_md5_60
     // token_md5_60 = native one-pass replacement for
@@ -656,27 +605,22 @@ object Dedup extends QueryModule {
     // per-token string allocations of the composed form
     val sigs = docs.select(col("doc_id"),
       simhash64(token_md5_60(col("text"))).as("sig"))
-    hammingPairs(sigs, maxHamming, wide)
+    hammingPairs(sigs, maxHamming)
   }
 
   /** Band-bucketed Hamming pair generation over ANY 60-bit signature
     * column (doc_id, sig) — shared by SimHash text near-dup and the
-    * multimodal block-mean hash. Both band layouts (4×15 chunks;
-    * Manku 6×10/C(6,3)) pigeonhole exactly Hamming ≤ 3: with at most
-    * 3 differing bits, some band is untouched and the pair shares its
-    * key, so candidates stay linear in rows and the verify is exact.
+    * multimodal block-mean hash. The 4×15-bit chunk bands pigeonhole
+    * exactly Hamming ≤ 3: with at most 3 differing bits, some chunk is
+    * untouched and the pair shares its key, so candidates stay linear
+    * in rows and the verify is exact.
     * Recall is NOT guaranteed past 3 — a larger radius needs a layout
     * derived from it (more/overlapping bands), hence the require. */
-  def hammingPairs(sigs: DataFrame, maxHamming: Int = 3,
-      wide: Boolean = false): DataFrame = {
+  def hammingPairs(sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
-      s"band layouts guarantee recall only for Hamming <= 3, got $maxHamming")
-    // wide = the Manku 6x10/C(6,3) layout for corpora past ~1e7 docs
-    // (see simhashBandStructsWide); identical verified output either way
-    val bandExpr = if (wide) simhashBandStructsWide(col("sig"))
-                   else simhashBandStructs(col("sig"))
+      s"the band layout guarantees recall only for Hamming <= 3, got $maxHamming")
     val banded = sigs.select(col("doc_id"), col("sig"),
-      explode(bandExpr).as("e"))
+      explode(simhashBandStructs(col("sig"))).as("e"))
       .select(col("doc_id"), col("sig"), col("e.band").as("band"),
         col("e.key").as("key"))
     // the Hamming cut rides the join condition: candidates failing it

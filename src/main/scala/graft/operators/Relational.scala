@@ -1155,8 +1155,8 @@ object Relational extends QueryModule {
     // cross-engine bit-exact like the CMS report).
     "q_hll_distinct" -> ((s, d) => {
       val ev = events(s, d).select(col("event_type"), col("user_id"))
-      // shared kernel: the same lineage the streaming face aggregates
-      // incrementally (StreamingSketchParitySpec pins stream == batch)
+      // shared kernel: StreamingSketchParitySpec aggregates the same
+      // lineage incrementally and pins stream == batch
       val regs = graft.functions.Sketches
         .hllRegisters(ev, "event_type", "user_id")
       val sketch = regs.groupBy(col("event_type"))
@@ -1713,9 +1713,7 @@ object Relational extends QueryModule {
     // into two running windows over the day spine (bounded by type
     // count × calendar, never event count), which also sidesteps a
     // DuckDB 1.0 list_reduce bug that mis-binds struct-accumulator
-    // fields. The streaming face is EventAnalytics.cusumMonitor —
-    // the literal recursion as keyed state, parity-pinned in
-    // EventAnalyticsSpec.
+    // fields.
     "q_cusum_online" -> ((s, d) => {
       val daily0 = events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))

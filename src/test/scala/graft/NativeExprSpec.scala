@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{LshCodes, MinHashSig, PrefixShingles, ShingleHashes}
+import graft.expressions.{LshCodes, MinHashSig, ShingleHashes}
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the native expressions backing the dedup /
@@ -72,32 +72,6 @@ class NativeExprSpec extends SparkSpec {
       x.zip(y).count { case (u, v) => u == v }
     assert(agree(sigs("a"), sigs("c")) > 48 / 3) // E = 48 * 2/3 = 32
     assert(agree(sigs("a"), sigs("d")) <= 2)     // E = 0
-  }
-
-  test("prefix_shingles matches the relational AllPairs prefix") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val sets = docs.select(col("doc_id"),
-      ShingleHashes.shingle_hashes(col("text"), 8).as("set"))
-      .withColumn("n", size(col("set")).cast("long"))
-    val K = 16
-    val df = sets.select(explode(col("set")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("df")).filter(col("df") >= 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1).toInt))
-    val viaExpr = sets.select(col("doc_id"),
-      PrefixShingles.prefix_shingles(col("set"), df, K, 4, 5).as("p"))
-      .as[(Long, Array[Long])].collect().map { case (id, p) => id -> p.toSet }
-      .toMap
-    // reference formulation: sort (df, h) over the FULL set, slice
-    // plen, drop df=1
-    val dfMap = df.toMap
-    val viaRef = sets.select(col("doc_id"), col("set"))
-      .as[(Long, Array[Long])].collect().map { case (id, set) =>
-        val n = set.length
-        val plen = math.min(n, n - ((n * 4 + 4) / 5) + K)
-        val sorted = set.map(h => (dfMap.getOrElse(h, 1), h)).sorted
-        id -> sorted.take(plen).filter(_._1 >= 2).map(_._2).toSet
-      }.toMap
-    assert(viaExpr == viaRef)
   }
 
   test("lsh_codes equals per-plane float_dot sign codes") {

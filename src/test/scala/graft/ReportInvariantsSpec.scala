@@ -206,4 +206,19 @@ class ReportInvariantsSpec extends SparkSpec {
         s"shard $shard offsets not strictly increasing: $offs")
     }
   }
+
+  test("corpus_split, q_cusum_online and dedup_incremental are non-trivial") {
+    // a hash-compare also passes on an empty or one-sided result:
+    // corpus_split covers the corpus with all three splits,
+    // q_cusum_online has series, dedup_incremental rejects some doc
+    import org.apache.spark.sql.functions._
+    val split = SparkEntry.queries("corpus_split")(spark, sf)
+    assert(split.count() == Tables.documents(spark, sf).count())
+    assert(split.select("split").distinct().collect().map(_.getString(0))
+      .toSet == Set("train", "val", "test"))
+    assert(SparkEntry.queries("q_cusum_online")(spark, sf).count() > 0)
+    assert(SparkEntry.queries("dedup_incremental")(spark, sf)
+      .filter(!col("admit")).count() > 0,
+      "no batch doc near-duplicates an index doc")
+  }
 }

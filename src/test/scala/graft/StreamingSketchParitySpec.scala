@@ -1,21 +1,18 @@
 package graft
 
-import graft.streaming.EventAnalytics
+import graft.expressions.SpaceSavingTopK.space_saving_topk
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Stream/batch parity for the bounded-sketch aggregate
-  * (EventAnalytics.heavyHitters): the documents corpus tokenized and
-  * fed as a STREAM in round-robin micro-batches, the SpaceSaving
-  * buffer carried as streaming aggregation state across batches — the
-  * final complete-mode emission must equal the batch
-  * text_heavy_hitters DECLARED QUERY row for row (the
-  * StreamingMinhashParitySpec pattern: an operator's ingest-time face
-  * proves itself against its batch face on identical input — here
-  * that batch face is itself oracle-checked, closing the chain
-  * stream == batch == DuckDB). EventAnalyticsSpec covers the small
-  * synthetic-feed behavior; this rides the real corpus. */
+/** Stream/batch parity for the bounded-sketch aggregates: the
+  * documents corpus tokenized and fed as a STREAM in round-robin
+  * micro-batches, the SpaceSaving buffer carried as streaming
+  * aggregation state across batches — the final complete-mode
+  * emission must equal the batch text_heavy_hitters DECLARED QUERY
+  * row for row. That batch face is itself oracle-checked, closing the
+  * chain stream == batch == DuckDB; the HLL and Count-Min tests close
+  * the same chain for q_hll_distinct and q_cms_users. */
 class StreamingSketchParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,7 +27,13 @@ class StreamingSketchParitySpec extends SparkSpec {
     val tokens = in.toDF().toDF("doc_id", "text")
       .select(explode(expr(
         "filter(split(text, '\\\\s+'), t -> t != '')")).as("t"))
-    val q = EventAnalytics.heavyHitters(tokens, tokenCol = "t")
+    // text_heavy_hitters' aggregate: capacity 64, top 10
+    val q = tokens.agg(space_saving_topk(col("t"), 64).as("hh"))
+      .select(posexplode(col("hh")).as(Seq("pos", "e")))
+      .filter(col("pos") < 10)
+      .select((col("pos") + 1).cast("long").as("rank"),
+        col("e.token").as("token"), col("e.cnt").as("cnt"),
+        col("e.err").as("err"))
       .writeStream.format("memory").queryName("hh_stream")
       .outputMode(OutputMode.Complete).start()
     docs.zipWithIndex.groupBy(_._2 % 3).toSeq.sortBy(_._1)
