@@ -87,6 +87,11 @@ object CdcQueries extends QueryModule {
           (col("value") + 7).as("new_value"),
           (col("event_id") * 2 + 1).as("lsn")))
 
+  /** Test seam: the synthetic feed, for cross-surface parity specs
+    * (batch cdc_apply vs the streaming MaterializedTable). */
+  def syntheticChangesForTest(base: DataFrame): DataFrame =
+    syntheticChanges(base)
+
   override def queries: Map[String, Q] = Map(
     // SCD2 history build: the change stream as validity INTERVALS —
     // every non-delete change opens a version at its LSN, the next

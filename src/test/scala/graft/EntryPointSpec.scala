@@ -15,6 +15,14 @@ class EntryPointSpec extends AnyFunSuite {
   private val mains = Set("Main", "Verify", "Bench", "Profile",
     "CdcThroughput", "ScaleProbe", "HupProbe")
 
+  /** The streaming CDC materialization modules: no entry point runs
+    * them yet, their specs pin the commit-log recovery contract and
+    * parity with batch cdc_apply / cdc_scd2. Not roots, so nothing they
+    * name counts as reachable. */
+  private val cdcMaterialization = Set("CommitLog.scala",
+    "MaterializedTable.scala", "MaterializedAggregate.scala",
+    "Scd2History.scala")
+
   private def scalaFiles(root: Path): Seq[(Path, String)] = {
     assert(Files.isDirectory(root), s"run from the project root: $root")
     val files = Files.walk(root)
@@ -126,7 +134,12 @@ class EntryPointSpec extends AnyFunSuite {
       seen ++= frontier
     }
     val unreachable = files.map(_._1).filterNot(seen).map(_.toString).sorted
-    assert(unreachable.isEmpty,
-      s"no entry point reaches: ${unreachable.mkString(", ")}")
+    val (kept, stray) = unreachable.partition(p =>
+      cdcMaterialization(Paths.get(p).getFileName.toString))
+    assert(stray.isEmpty, s"no entry point reaches: ${stray.mkString(", ")}")
+    // the list is exact: a kept module that an entry point now runs,
+    // or that is deleted, leaves the list
+    assert(kept.map(p => Paths.get(p).getFileName.toString).toSet ==
+      cdcMaterialization, s"unreachable kept modules: $kept")
   }
 }
