@@ -525,34 +525,6 @@ object Multimodal extends QueryModule {
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
-  /** Stateless per-row scene-cut report — the INGEST face of
-    * mm_scene_cuts: a clip arrives as one row, so the whole
-    * segmentation is a pure expression over the [[FrameSums]] array
-    * (no window, no shuffle, no state — exactly what a streaming
-    * media gate wants). Value-identical to the batch query's
-    * window/aggregate formulation; StreamingSceneCutParitySpec pins
-    * stream == batch row for row. Works on streaming DataFrames
-    * (where the batch side's windows are illegal). */
-  def sceneCutReport(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    docs.filter(length(col("text")) >= 128)
-      .withColumn("fs",
-        graft.expressions.FrameSums.frame_sums(col("text"), 64))
-      .withColumn("cuts", expr(
-        "filter(sequence(2, size(fs)), i ->" +
-          " abs(element_at(fs, i) - element_at(fs, i - 1)) > 1024)"))
-      .select(col("doc_id"),
-        size(col("fs")).cast("long").as("n_frames"),
-        size(col("cuts")).cast("long").as("n_cuts"),
-        expr(
-          // boundaries [1] ++ cuts ++ [n+1]; longest segment = max
-          // consecutive diff, folded in one pass
-          "aggregate(concat(cuts, array(size(fs) + 1))," +
-            " struct(1 as prev, 0L as best)," +
-            " (acc, b) -> struct(b as prev," +
-            " greatest(acc.best, cast(b - acc.prev as bigint)) as best)," +
-            " acc -> acc.best)").as("longest_seg"))
-
   /** Shared decode stage over the test corpus — stub decoder because
     * the corpus payloads are text bytes (see module note); the real
     * JDK decoder rides the same [[decodeBlobs]] plumbing. */

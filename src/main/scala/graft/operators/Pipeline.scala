@@ -1667,7 +1667,7 @@ object Pipeline extends QueryModule {
         |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
         |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
         |  GROUP BY 1, 2),
-        |np AS (
+        |np AS MATERIALIZED (
         |  SELECT a_id, b_id FROM pairs
         |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
         |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
@@ -1677,7 +1677,7 @@ object Pipeline extends QueryModule {
         |  SELECT a, a FROM edges
         |  UNION
         |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |cl AS (SELECT node AS doc_id, MIN(r) AS cluster_id
+        |cl AS MATERIALIZED (SELECT node AS doc_id, MIN(r) AS cluster_id
         |  FROM reach GROUP BY node),
         |tk AS (
         |  SELECT doc_id, text,
@@ -1700,7 +1700,7 @@ object Pipeline extends QueryModule {
         |  WHERE doc_id NOT IN
         |      (SELECT doc_id FROM cl WHERE doc_id <> cluster_id)
         |    AND doc_id NOT IN (SELECT doc_id FROM contam)),
-        |h AS (SELECT doc_id,
+        |h AS MATERIALIZED (SELECT doc_id,
         |  ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b0
         |  FROM documents),
         |j AS (SELECT h.doc_id, COALESCE(cl.cluster_id, h.doc_id) AS rep_id
@@ -1709,7 +1709,7 @@ object Pipeline extends QueryModule {
         |  SELECT j.doc_id, CASE WHEN rh.b0 < 90 THEN 'train'
         |    WHEN rh.b0 < 95 THEN 'val' ELSE 'test' END AS split
         |  FROM j JOIN h rh ON rh.doc_id = j.rep_id),
-        |rel AS (
+        |rel AS MATERIALIZED (
         |  SELECT c.doc_id, c.n_toks, d.source, sp.split
         |  FROM clean c JOIN sp ON sp.doc_id = c.doc_id
         |  JOIN documents d ON d.doc_id = c.doc_id),

@@ -899,7 +899,9 @@ object Relational extends QueryModule {
     // map-side-combinable groupBy); the spine is generated from a
     // 2-value scalar aggregate and is |hours| rows, so the unkeyed
     // carry-forward window sorts only the spine — bounded by the time
-    // domain, not the data — and the spine-side join is a broadcast.
+    // domain, not the data. The left join keeps every spine hour, so
+    // the spine cannot be its build side: the hourly aggregate (also
+    // at most |hours| rows) is the side Spark broadcasts.
     "q_gapfill_hours" -> ((s, d) => {
       val hourly = events(s, d)
         .groupBy(date_trunc("hour", col("ts")).as("hr"))
@@ -910,7 +912,7 @@ object Relational extends QueryModule {
         .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("hr"))
       val w = Window.orderBy(col("hr"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      broadcast(spine).join(hourly, Seq("hr"), "left")
+      spine.join(hourly, Seq("hr"), "left")
         .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"),
           last(col("avg_value"), ignoreNulls = true).over(w)
             .as("filled_avg"))

@@ -141,4 +141,22 @@ class MultimodalSpec extends SparkSpec {
     }
     pairs.foreach(p => assert(p._3 <= 3, "verify must cap hamming at 3"))
   }
+
+  test("mm_scene_cuts detects cuts on synthetic step clips") {
+    // the sf0.001 corpus has no energy step past the threshold, so the
+    // cut path is pinned on hand-computed clips: 'a'(97)x64 then
+    // '!'(33)x64 — |Δsum| = 64*64 = 4096 > 1024 → one cut, two
+    // 1-frame segments; plus a uniform clip (no cut) and a 3-frame
+    // clip with a step after frame 2 (longest segment = 2)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-mm-cuts")
+      .toString
+    Seq((1L, "a" * 64 + "!" * 64), (2L, "a" * 128),
+      (3L, "a" * 128 + "!" * 64))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("mm_scene_cuts")(spark, dir)
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    assert(rows == Seq((1L, 2L, 1L, 1L), (2L, 2L, 0L, 2L),
+      (3L, 3L, 1L, 2L)), s"got $rows")
+  }
 }

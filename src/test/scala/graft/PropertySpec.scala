@@ -62,38 +62,6 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  // ---- Commit log torn-write healing -----------------------------------
-  test("CommitLog: any torn tail is dropped on read and healed by append") {
-    val genRecords = Gen.nonEmptyListOf(for {
-      a <- Gen.choose(0L, 1000000L)
-      b <- Gen.choose(0L, 1000000L)
-    } yield (a, b))
-    // a torn tail: any strict prefix of a valid record's bytes
-    val genTear = for {
-      a <- Gen.choose(0L, 1000000L)
-      b <- Gen.choose(0L, 1000000L)
-      full = s"$a,$b\n"
-      cut <- Gen.choose(1, full.length - 1)
-    } yield full.take(cut)
-    check(Prop.forAll(genRecords, genTear) { (records, tear) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-cl")
-      val p = dir.resolve("_log")
-      records.foreach { case (a, b) =>
-        graft.streaming.CommitLogAccess.append(p, a, b)
-      }
-      java.nio.file.Files.write(p, tear.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      // the torn tail is invisible to reads...
-      val afterTear = graft.streaming.CommitLogAccess.read(p, 2)
-      // ...and the next append never concatenates into a corrupt record
-      graft.streaming.CommitLogAccess.append(p, 7L, 9L)
-      val afterHeal = graft.streaming.CommitLogAccess.read(p, 2)
-      afterTear == records.map(r => Seq(r._1, r._2)) &&
-        afterHeal == (records :+ ((7L, 9L))).map(r => Seq(r._1, r._2))
-    })
-  }
-
   // ---- Bounded KMV buffer ----------------------------------------------
   test("KmvSmallest: any partitioning/merge order equals brute-force k-smallest") {
     val agg = KmvSmallest(BoundReference(0, DoubleType, nullable = true), 8)

@@ -74,6 +74,20 @@ class ReportInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("mm_scene_cuts reports every clip of two or more frames") {
+    // an empty report still hash-matches the oracle
+    import org.apache.spark.sql.functions._
+    val rows = SparkEntry.queries("mm_scene_cuts")(spark, sf).collect()
+    assert(rows.nonEmpty)
+    assert(rows.length == Tables.documents(spark, sf)
+      .filter(length(col("text")) >= 128).count())
+    rows.foreach { r =>
+      val (frames, cuts, longest) = (r.getLong(1), r.getLong(2), r.getLong(3))
+      assert(frames >= 2 && cuts >= 0 && cuts < frames, s"doc ${r.getLong(0)}")
+      assert(longest >= 1 && longest <= frames, s"doc ${r.getLong(0)}")
+    }
+  }
+
   test("text_ccnet_buckets: per-lang tertiles ordered and mass-bounded") {
     val rows = SparkEntry.queries("text_ccnet_buckets")(spark, sf).collect()
     rows.groupBy(_.getString(0)).foreach { case (lang, rs) =>
