@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Cdc
-import graft.streaming.{OrderedAggregatingWriter, PutClient}
+import graft.streaming.{LocalCheckpointFileManager, OrderedAggregatingWriter, PutClient}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -164,6 +164,11 @@ object GraftJob {
         "ignoring --create-slot/--recreate-slot (run without --dry-run " +
         "to apply slot DDL)")
     if (!cfg.dryRun) prepareSlot(cfg, slotAdmin)
+    // offset and commit files through NIO, not Hadoop's forking local
+    // file system; a manager the session already names is kept
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
     if (cfg.dryRun) {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft-peek-ckpt").toString

@@ -242,10 +242,10 @@ object Main {
       case None => PkCatalog.fromItems(spark, Seq.empty)
     }
     // Reference roadmap README.rst:136-138 ("refresh primary key
-    // cache on HUP"): snapshot the catalog and arm SIGHUP to drop and
-    // re-arm that cache — the next micro-batch re-runs the underlying
-    // JDBC/file read. Harmless for the literal-items fallback (a
-    // refresh recomputes the same literals).
+    // cache on HUP"): arm SIGHUP to mark the catalog snapshot stale —
+    // the next micro-batch re-runs the underlying JDBC/file read.
+    // Harmless for the literal-items fallback (a refresh recomputes
+    // the same literals).
     PkCatalog.hupRefreshable(cat)
     // Slot DDL needs a live statement executor; only wire one when a
     // DDL flag asks for it AND a database is configured (a JDBC driver

@@ -2,18 +2,22 @@ package graft.catalog
 
 import graft.core.PrimaryKeyMapItem
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Primary-key catalog (operator S2, reference slot.py:18-33, 79-94).
   *
   * The reference pushes a 3-way information_schema join down to
   * Postgres and materializes a dict keyed by "schema.table". Here the
   * same query rides `spark.read.jdbc` (predicate + join execute inside
-  * Postgres, identical pushdown), and the result is a small DataFrame
-  * that every parse stage broadcast-joins against — the Spark analog of
-  * the reference's per-record dict lookup, and the right shape at any
-  * scale since the catalog is O(#tables).
+  * Postgres, identical pushdown), and the result is a small DataFrame,
+  * one row per table. Parse stages do not join against it: they carry
+  * a [[graft.expressions.PkLookup]], which reads a driver-side
+  * [[snapshot]] of it once per optimized plan — the reference's
+  * per-record dict lookup, at the cost of one hash probe per change
+  * and no Spark job per micro-batch.
   */
 object PkCatalog {
 
@@ -73,58 +77,6 @@ object PkCatalog {
         col("col_type").as("pk_type"))
   }
 
-  /** TTL-refreshing catalog provider — the scheduled-refresh feature
-    * the reference lists on its roadmap but never shipped
-    * (README.rst:136-138: "Refresh primary key cache on a schedule"):
-    * a long-running CDC stream that sees a mid-flight ADD TABLE /
-    * PK-change otherwise keeps dead-lettering (lenient) or failing
-    * (strict) forever on a catalog snapshot from stream start.
-    *
-    * Call the returned function once per micro-batch (foreachBatch or
-    * the parse stage's builder): within `ttl` it returns the cached
-    * snapshot; after that the next call re-reads — one O(#tables)
-    * catalog query per TTL window, amortized to nothing next to the
-    * batch itself. The clock and the reader are injected so specs
-    * drive both; production passes `() => fromJdbc(...)`.
-    * Thread-confined to the driver's micro-batch loop (Structured
-    * Streaming runs foreachBatch serially per query), so a plain var
-    * suffices — no lock on the hot path. */
-  def refreshing(read: () => DataFrame, ttlMillis: Long,
-      now: () => Long = () => System.currentTimeMillis()): () => DataFrame = {
-    var cached: DataFrame = null
-    var asOf = Long.MinValue
-    () => {
-      val t = now()
-      if (cached == null || t - asOf >= ttlMillis) {
-        cached = read()
-        asOf = t
-      }
-      cached
-    }
-  }
-
-  /** HUP-triggered catalog refresh — the OTHER half of the
-    * reference's roadmap item (README.rst:136-138: "Refresh primary
-    * key cache on HUP signal / on a schedule"; [[refreshing]] is the
-    * schedule half). Returns (provider, trigger): the provider serves
-    * the cached snapshot until `trigger()` marks it dirty, and the
-    * NEXT provider call — i.e. the next micro-batch, never mid-batch
-    * — re-reads. The trigger is an injected seam: production wires it
-    * to SIGHUP via [[onSigHup]]; specs call it directly. The dirty
-    * flag is atomic because the signal thread races the micro-batch
-    * loop; the cache itself stays batch-loop-confined like
-    * [[refreshing]]'s. */
-  def hupRefreshing(read: () => DataFrame)
-      : (() => DataFrame, () => Unit) = {
-    val dirty = new java.util.concurrent.atomic.AtomicBoolean(true)
-    var cached: DataFrame = null
-    val provider = () => {
-      if (dirty.getAndSet(false) || cached == null) cached = read()
-      cached
-    }
-    (provider, () => dirty.set(true))
-  }
-
   /** Wire a refresh trigger to SIGHUP where the JVM supports signal
     * handling (jdk.unsupported's sun.misc.Signal — present on the
     * JDKs Spark supports). Returns false when unavailable OR when HUP
@@ -143,9 +95,8 @@ object PkCatalog {
     * (through the OS, same path as an external `kill -HUP`) and wait
     * for the handler. Not fired ⇒ restore the previous handler, log
     * the fallback, return false. The self-test fires `trigger` once
-    * at wiring time — both production triggers are idempotent
-    * (mark-dirty; re-persist of a just-persisted, unmaterialized
-    * cache), and the catalog was read fresh moments before anyway. */
+    * at wiring time — the production trigger only marks the catalog
+    * stale, and the catalog was not read yet or moments before. */
   def onSigHup(trigger: () => Unit): Boolean =
     try {
       val sigCls = Class.forName("sun.misc.Signal")
@@ -157,8 +108,8 @@ object PkCatalog {
           if (method.getName == "handle") {
             // trigger BEFORE signaling: the self-test below returns as
             // soon as `fired` ticks, and the caller may immediately
-            // act on the trigger's effect (e.g. materialize the
-            // re-armed cache) — incrementing first would let wiring
+            // act on the trigger's effect (e.g. read the refreshed
+            // catalog) — incrementing first would let wiring
             // return while the trigger is still mid-flight on this
             // handler thread
             trigger()
@@ -181,35 +132,60 @@ object PkCatalog {
           .invoke(null, sig, prev)
         catch { case _: Throwable => () }
         System.err.println("graft: SIGHUP ignored at JVM start (nohup?)" +
-          " — HUP-triggered catalog refresh cannot fire; use TTL refresh")
+          " — HUP-triggered catalog refresh cannot fire; restart the job" +
+          " to re-read the catalog")
         false
       }
     } catch { case _: Throwable => false }
 
-  /** Production HUP wiring for a RUNNING streaming job. A streaming
-    * plan bakes the catalog's logical subtree in at start — the
-    * [[hupRefreshing]] provider (a per-call DataFrame swap) can never
-    * be re-consulted by it. What IS re-consulted, every micro-batch,
-    * is the cache: each batch builds a fresh QueryExecution over the
-    * fixed plan and substitutes cached data for matching subtrees. So
-    * the refresh that reaches a live job is: persist the catalog
-    * (frozen snapshot served to every batch), and on HUP drop and
-    * re-arm that cache — the NEXT batch's execution finds no valid
-    * entry, re-runs the underlying read (the PK_SQL JDBC query /
-    * catalog file), and re-caches. Mid-batch consistency is free:
-    * unpersist never tears data out from under a running execution.
+  /** Production HUP wiring for a RUNNING streaming job: marks the
+    * catalog's snapshot stale on SIGHUP (via [[onSigHup]], where the JVM
+    * supports it). Plans carry the catalog as a
+    * [[graft.expressions.PkLookup]], which each micro-batch's plan reads
+    * [[snapshot]] through once, so the next batch re-reads the catalog
+    * (the PK_SQL JDBC query, the catalog file) and the running one
+    * keeps the snapshot it read.
     *
-    * Returns the trigger (also wired to SIGHUP via [[onSigHup]] when
-    * the JVM supports it) so callers and specs can fire it directly.
+    * Returns the trigger so callers and specs can fire it directly.
     */
   def hupRefreshable(cat: DataFrame): () => Unit = {
-    cat.persist()
-    val trigger: () => Unit = () => {
-      cat.unpersist(blocking = false)
-      cat.persist()
-      ()
-    }
+    val trigger: () => Unit = () => snapshots(cat).generation.incrementAndGet()
     onSigHup(trigger)
     trigger
+  }
+
+  /** The snapshot state of one catalog DataFrame: its current table
+    * and the refresh generation it was read at. It holds no reference
+    * to the DataFrame, so the weak map below can drop the entry. */
+  private final class Snapshots {
+    val generation = new java.util.concurrent.atomic.AtomicLong
+    var read: (Long, java.util.HashMap[UTF8String, InternalRow]) = (-1L, null)
+  }
+
+  private val byCatalog = new java.util.WeakHashMap[DataFrame, Snapshots]
+
+  private def snapshots(cat: DataFrame): Snapshots = byCatalog.synchronized(
+    byCatalog.computeIfAbsent(cat, _ => new Snapshots))
+
+  /** The catalog's current snapshot, `(pk_name, pk_type)` rows by
+    * table name: collected on the driver on first use and again after
+    * each [[hupRefreshable]] trigger, else the map read before (never
+    * mutated). A trigger that fires during a read leaves the next call
+    * to read again. */
+  def snapshot(cat: DataFrame): java.util.HashMap[UTF8String, InternalRow] = {
+    val s = snapshots(cat)
+    s.synchronized {
+      val gen = s.generation.get()
+      if (s.read._1 != gen) {
+        val byName = new java.util.HashMap[UTF8String, InternalRow]()
+        cat.select("table_name", "pk_name", "pk_type").collect().foreach { r =>
+          byName.put(UTF8String.fromString(r.getString(0)),
+            InternalRow(UTF8String.fromString(r.getString(1)),
+              UTF8String.fromString(r.getString(2))))
+        }
+        s.read = (gen, byName)
+      }
+      s.read._2
+    }
   }
 }

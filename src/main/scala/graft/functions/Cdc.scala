@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.expressions.CachedRegexpExtract.regexp_extract_cached
+import graft.expressions.PkLookup.pk_lookup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,9 +13,11 @@ import org.apache.spark.sql.functions._
   * Where the reference runs a Python callback per WAL message, here the
   * same semantics are a whole-stage-codegen'd expression pipeline that
   * works identically on batch DataFrames and Structured Streaming
-  * micro-batches: a one-walk wal2json extractor + `explode` + broadcast
-  * catalog join + `regexp_extract`. Nothing here touches the driver;
-  * every stage scales with input partitions.
+  * micro-batches: a one-walk wal2json extractor + `explode` + a PK
+  * lookup the plan carries + `regexp_extract`. Only the PK catalog
+  * snapshot lives on the driver (graft.expressions.PkLookup: a hash
+  * map bound when each plan is optimized, no join and no Spark job per
+  * batch); every stage scales with input partitions.
   *
   * Error semantics: the reference raises on unknown tables / missing
   * PKs (formatter.py:20-21, 77, 134-137). `strict = true` reproduces
@@ -33,8 +36,8 @@ object Cdc {
   /** Parse wal2json payloads (reference formatter.py:83-132).
     *
     * @param df dataframe holding `payloadCol` with raw JSON strings
-    * @param pkCatalog broadcastable catalog: (table_name, pk_name)
-    *                  as produced by graft.catalog.PkCatalog
+    * @param pkCatalog catalog: (table_name, pk_name, pk_type) as
+    *                  produced by graft.catalog.PkCatalog
     * @return columns: xid LONG, table_name STRING, operation STRING,
     *         pkey STRING (+ passthrough of other input columns)
     */
@@ -56,17 +59,17 @@ object Cdc {
         concat(col("_c.schema"), lit("."), col("_c.table")))
       // F1: unanchored regex search, like the reference's re.search
       .filter(col("table_name").rlike(tablePat))
-      // J1: broadcast lookup join against the PK catalog
-      .join(broadcast(pkCatalog), Seq("table_name"), "left")
+      // J1: PK lookup against the catalog snapshot the plan binds
+      .withColumn("_pk", pk_lookup(col("table_name"), pkCatalog))
       .withColumn("_idx",
-        array_position(col("_c.columnnames"), col("pk_name")).cast("int"))
+        array_position(col("_c.columnnames"), col("_pk.pk_name")).cast("int"))
     // strict checks live INSIDE the projected pkey expression — a
     // separate check column would be pruned away by Catalyst and never
     // evaluated, silently dropping the reference's halt-on-error
     // contract (formatter.py:134-137).
     val pkey =
       if (strict)
-        when(col("pk_name").isNull,
+        when(col("_pk.pk_name").isNull,
           raise_error(concat(lit("Unable to locate table: "),
             col("table_name"))).cast("string"))
           .when(col("_idx").isNull || col("_idx") <= 0,
@@ -201,14 +204,14 @@ object Cdc {
   def testDecodingPkey(df: DataFrame, bodyCol: String,
       pkCatalog: DataFrame, strict: Boolean = true): DataFrame = {
     val joined = df
-      .join(broadcast(pkCatalog), Seq("table_name"), "left")
-      .withColumn("_pk_pat", concat(col("pk_name"), lit("\\["),
-        col("pk_type"), lit("\\]:'?([\\w\\-]+)'?")))
+      .withColumn("_pk", pk_lookup(col("table_name"), pkCatalog))
+      .withColumn("_pk_pat", concat(col("_pk.pk_name"), lit("\\["),
+        col("_pk.pk_type"), lit("\\]:'?([\\w\\-]+)'?")))
       .withColumn("_pk_raw",
         regexp_extract_cached(col(bodyCol), col("_pk_pat"), 1))
     val pkey =
       if (strict)
-        when(col("pk_name").isNull,
+        when(col("_pk.pk_name").isNull,
           raise_error(concat(lit("Unable to locate table: "),
             col("table_name"))).cast("string"))
           .when(col("_pk_raw") === "",
@@ -216,10 +219,10 @@ object Cdc {
               lit("Unable to locate primary key for table "),
               col("table_name"))).cast("string"))
           .otherwise(col("_pk_raw"))
-      else when(col("pk_name").isNotNull && col("_pk_raw") =!= "",
+      else when(col("_pk.pk_name").isNotNull && col("_pk_raw") =!= "",
         col("_pk_raw"))
     joined.withColumn("pkey", pkey)
-      .drop("_pk_pat", "_pk_raw", "pk_name", "pk_type")
+      .drop("_pk_pat", "_pk_raw", "_pk")
   }
 
   // -------------------------------------------------------------------

@@ -259,46 +259,10 @@ class CdcSpec extends SparkSpec {
     assert(row.getAs[String]("pk_type") == "text")
   }
 
-  test("refreshing catalog re-reads only after the TTL elapses") {
-    // the scheduled-refresh roadmap item the reference never shipped
-    // (README.rst:136-138): a mid-flight ADD TABLE must become
-    // joinable after the TTL, with at most one catalog read per window
-    var reads = 0
-    var tables = Seq(PrimaryKeyMapItem("public.events", "id", "bigint", 1))
-    var clock = 0L
-    val provider = PkCatalog.refreshing(
-      () => { reads += 1; PkCatalog.fromItems(spark, tables) },
-      ttlMillis = 1000L, now = () => clock)
-    assert(provider().count() == 1 && reads == 1)
-    // within TTL: cached, no re-read, new table NOT yet visible
-    tables = tables :+ PrimaryKeyMapItem("public.orders", "oid", "bigint", 1)
-    clock = 999L
-    assert(provider().count() == 1 && reads == 1)
-    // TTL elapsed: one re-read, the new table appears
-    clock = 1000L
-    assert(provider().count() == 2 && reads == 2)
-    // and the fresh snapshot is cached again
-    clock = 1500L
-    assert(provider().count() == 2 && reads == 2)
-  }
-
-  test("HUP-triggered catalog re-reads only after the trigger fires") {
-    // the signal half of the same roadmap item (README.rst:136-138:
-    // "Refresh primary key cache on HUP signal"): the provider serves
-    // the cached snapshot until the trigger marks it dirty; the next
-    // call — the next micro-batch, never mid-batch — re-reads
-    var reads = 0
-    var tables = Seq(PrimaryKeyMapItem("public.events", "id", "bigint", 1))
-    val (provider, trigger) = PkCatalog.hupRefreshing(
-      () => { reads += 1; PkCatalog.fromItems(spark, tables) })
-    assert(provider().count() == 1 && reads == 1)
-    // no trigger: cached, mid-flight ADD TABLE not yet visible
-    tables = tables :+ PrimaryKeyMapItem("public.orders", "oid", "bigint", 1)
-    assert(provider().count() == 1 && reads == 1)
-    // trigger (the SIGHUP seam): the NEXT call re-reads, once
-    trigger()
-    assert(provider().count() == 2 && reads == 2)
-    assert(provider().count() == 2 && reads == 2)
+  test("onSigHup: wired means the trigger fired, and each raise fires it again") {
+    // the signal seam of the reference's roadmap item (README.rst:
+    // 136-138: "Refresh primary key cache on HUP signal"); what a
+    // trigger does to a running job is GraftJobSpec's HUP-refresh test.
     // The production wiring self-tests deliverability at registration
     // (in-process raise — hermetic, no external `kill` whose exit code
     // nothing checked): wired=true MEANS the handler already fired
@@ -347,41 +311,6 @@ class CdcSpec extends SparkSpec {
     assert(rc == 0, s"HupProbe exited $rc:\n$out")
     assert(out.contains("wired=false fired=0"),
       s"expected dead-HUP detection under trap '' HUP, got:\n$out")
-  }
-
-  test("hupRefreshable: a FIXED plan sees fresh catalog data only after the trigger") {
-    // The wiring that reaches a RUNNING job (Main.start): a streaming
-    // plan bakes the catalog subtree in once, but every micro-batch's
-    // QueryExecution re-substitutes cached data — so HUP = drop and
-    // re-arm the cache on the same DataFrame. Stand-in for the JDBC
-    // PK_SQL relation: a mapPartitions read of a mutable file,
-    // consulted at EXECUTION time exactly like a database query.
-    import spark.implicits._
-    val f = java.nio.file.Files.createTempFile("graft-pkcat", ".txt")
-    java.nio.file.Files.write(f, "id".getBytes("UTF-8"))
-    val path = f.toString
-    val cat = Seq(0).toDS().mapPartitions(_.map { _ =>
-      val pk = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      ("public.events", pk, "bigint", 1)
-    }).toDF("table_name", "pk_name", "pk_type", "ord")
-    val trigger = PkCatalog.hupRefreshable(cat)
-    try {
-      // the fixed plan a streaming job would build at start
-      val plan = cat.select(col("pk_name"))
-      def pk(): String = plan.collect().map(_.getString(0)).head
-      assert(pk() == "id")
-      // mid-flight catalog change: the cached snapshot keeps serving
-      // (per-batch consistency — the reference's own cache behavior)
-      java.nio.file.Files.write(f, "id_v2".getBytes("UTF-8"))
-      assert(pk() == "id",
-        "cached snapshot must not see the change before the trigger")
-      // HUP: the NEXT execution of the SAME plan re-reads and re-caches
-      trigger()
-      assert(pk() == "id_v2",
-        "post-trigger execution must observe the refreshed catalog")
-      assert(pk() == "id_v2")
-    } finally cat.unpersist()
   }
 
   test("dry-run never executes slot DDL (peek leaves the slot untouched)") {

@@ -42,9 +42,9 @@ class EntryPointSpec extends AnyFunSuite {
       n == "Tuning" && count(t, "SparkSession.builder(") == 1 })
   }
 
-  test(".cache() and .persist( appear only in QueryCache and PkCatalog") {
+  test(".cache() and .persist( appear only in QueryCache") {
     val caching = sources.collect {
-      case (name, text) if name != "QueryCache" && name != "PkCatalog" &&
+      case (name, text) if name != "QueryCache" &&
         (text.contains(".cache()") || text.contains(".persist(")) => name
     }
     assert(caching.isEmpty, s"cache through QueryCache: $caching")

@@ -506,4 +506,129 @@ class GraftJobSpec extends SparkSpec {
         plugin = "test_decoding", fullChange = true), cat)
     }
   }
+
+  test("HUP refresh reaches a running job from the next micro-batch on, never mid-batch") {
+    // Main.start's SIGHUP wiring on a RUNNING GraftJob, both plugins.
+    // Stand-in for the JDBC PK_SQL relation: a read of a mutable file,
+    // consulted each time the catalog is read, like a database query.
+    import spark.implicits._
+    for (plugin <- Seq("wal2json", "test_decoding")) {
+      val dir = tmp()
+      val pkFile = Paths.get(dir, "pk.txt")
+      Files.writeString(pkFile, "id")
+      val pkPath = pkFile.toString
+      val cat = Seq(0).toDS().mapPartitions(_.map { _ =>
+        ("public.species", Files.readString(Paths.get(pkPath)), "integer")
+      }).toDF("table_name", "pk_name", "pk_type")
+      val trigger = PkCatalog.hupRefreshable(cat)
+      val wal = Paths.get(dir, "wal")
+      Files.write(wal, Array.emptyByteArray)
+      // change i has id i, code 100 + i and name 200 + i
+      def append(from: Int): Unit = {
+        val lines = (from until from + 2).flatMap { i =>
+          if (plugin == "wal2json") Seq(
+            s"""{"xid": $i, "change": [{"kind": "insert", "schema": "public",""" +
+              """ "table": "species", "columnnames": ["id", "code", "name"],""" +
+              """ "columntypes": ["integer", "integer", "integer"],""" +
+              s""" "columnvalues": [$i, ${100 + i}, ${200 + i}]}]}""")
+          else Seq(s"BEGIN $i", s"table public.species: INSERT: id[integer]:$i" +
+            s" code[integer]:${100 + i} name[integer]:${200 + i}", "COMMIT")
+        }
+        Files.write(wal, lines.mkString("", "\n", "\n")
+          .getBytes(StandardCharsets.UTF_8), java.nio.file.StandardOpenOption.APPEND)
+      }
+      val sink = s"$dir/sink"
+      val q = GraftJob.start(spark, GraftConfig(wal.toString, sink,
+        s"$dir/ckpt", plugin = plugin, formatter = "CSV", sendWindowSecs = 0),
+        cat, putClient = new HookedPutClient(sink))
+      var seen = 0
+      def nextPkeys(from: Int): Seq[String] = {
+        append(from)
+        q.processAllAvailable()
+        val recs = records(sink)
+        val fresh = recs.drop(seen)
+        seen = recs.size
+        fresh.map(_.split(",").last)
+      }
+      try {
+        assert(nextPkeys(0) == Seq("0", "1"), plugin)
+        // catalog changed mid-stream: not visible before the trigger
+        Files.writeString(pkFile, "code")
+        assert(nextPkeys(2) == Seq("2", "3"), plugin)
+        // after the trigger: from the next micro-batch on
+        trigger()
+        assert(nextPkeys(4) == Seq("104", "105"), plugin)
+        // a trigger while a batch runs (its sink puts) reaches the next
+        // batch, not the running one
+        HookedPutClient.onBegin = () => {
+          HookedPutClient.onBegin = () => ()
+          Files.writeString(pkFile, "name")
+          trigger()
+        }
+        assert(nextPkeys(6) == Seq("106", "107"), plugin)
+        assert(nextPkeys(8) == Seq("208", "209"), plugin)
+      } finally {
+        HookedPutClient.onBegin = () => ()
+        q.stop()
+      }
+    }
+  }
+
+  test("a micro-batch of either plugin runs one Spark job of one task") {
+    // the PK catalog rides in the plan: no broadcast join, so no
+    // catalog jobs or tasks next to the sink's single ordered lane
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
+          String.valueOf(e.properties.getProperty("streaming.sql.batchId")),
+          e.stageInfos.map(_.numTasks).sum))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (plugin <- Seq("wal2json", "test_decoding")) {
+      val dir = tmp()
+      val wal = Paths.get(dir, "wal")
+      val lines = (0 until 4).flatMap { i =>
+        if (plugin == "wal2json") Seq(
+          s"""{"xid": $i, "change": [{"kind": "insert", "schema": "public",""" +
+            """ "table": "species", "columnnames": ["id"],""" +
+            s""" "columntypes": ["integer"], "columnvalues": [$i]}]}""")
+        else Seq(s"BEGIN $i", s"table public.species: INSERT: id[integer]:$i", "COMMIT")
+      }
+      Files.write(wal, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      val q = GraftJob.start(spark, GraftConfig(wal.toString, s"$dir/sink",
+        s"$dir/ckpt", plugin = plugin, formatter = "CSV", sendWindowSecs = 0,
+        maxRecordsPerTrigger = 2), cat)
+      try q.processAllAvailable() finally q.stop()
+      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSet
+      assert(batches.size >= 2, s"$plugin: ${q.recentProgress.map(_.numInputRows).toSeq}")
+      def perBatch = jobs.asScala.toSeq.filter(_._1 == q.runId.toString)
+        .groupBy(_._2).filter(b => batches(b._1))
+      val deadline = System.currentTimeMillis() + 10000
+      while (perBatch.size < batches.size && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(perBatch.keySet == batches, plugin)
+      perBatch.foreach { case (b, js) =>
+        assert(js.size == 1 && js.head._3 == 1,
+          s"$plugin batch $b: ${js.size} jobs, tasks ${js.map(_._3)}")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
+
+/** The job's local put client, calling [[HookedPutClient.onBegin]] as
+  * each batch's sink task starts. The client is serialized into the
+  * task; the hook is static, so a local-mode task reaches the spec's. */
+class HookedPutClient(dir: String) extends graft.streaming.PutClient {
+  private val inner = new graft.streaming.LocalFilePutClient(dir)
+  override def beginBatch(b: Long): Unit = {
+    HookedPutClient.onBegin()
+    inner.beginBatch(b)
+  }
+  override def put(seq: Long, data: Array[Byte]): Unit = inner.put(seq, data)
+  override def deliveredCount(): Long = inner.deliveredCount()
+}
+
+object HookedPutClient {
+  @volatile var onBegin: () => Unit = () => ()
 }
