@@ -165,10 +165,9 @@ object GraftJob {
         "to apply slot DDL)")
     if (!cfg.dryRun) prepareSlot(cfg, slotAdmin)
     // offset and commit files through NIO, not Hadoop's forking local
-    // file system; a manager the session already names is kept
-    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
-      spark.conf.set(LocalCheckpointFileManager.ConfKey,
-        classOf[LocalCheckpointFileManager].getName)
+    // file system
+    spark.conf.set(LocalCheckpointFileManager.ConfKey,
+      classOf[LocalCheckpointFileManager].getName)
     if (cfg.dryRun) {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft-peek-ckpt").toString

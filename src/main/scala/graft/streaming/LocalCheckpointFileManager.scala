@@ -24,7 +24,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   *  - `overwriteIfPossible = false` publishes with `link(2)`, which
   *    fails on an existing target: Spark's `FileAlreadyExistsException`
-  *    check for two queries on one checkpoint still holds.
+  *    check for two queries on one checkpoint still holds. Where the
+  *    file system has no hard links, it renames after an existence
+  *    check, as Spark's default manager does.
   *  - `overwriteIfPossible = true` publishes with an atomic rename.
   *  - Publishing and deleting also remove the target's `.crc` sidecar,
   *    which Spark's default manager writes and would check against new
@@ -134,6 +136,27 @@ object LocalCheckpointFileManager {
     }
   }
 
+  /** Publishes `tmp` as `target` unless `target` exists, through
+    * `link(target, tmp)`. A file system without hard links falls back
+    * to a rename that checks for the target first, as Spark's default
+    * manager does on `file:`: the check and the rename are two steps
+    * there, so two writers racing on one checkpoint file are caught
+    * only by the link. */
+  private[graft] def publishNew(tmp: NioPath, target: NioPath,
+      link: (NioPath, NioPath) => Unit): Unit =
+    try {
+      try link(target, tmp)
+      catch {
+        case e: java.nio.file.FileAlreadyExistsException => throw e
+        case _: UnsupportedOperationException |
+            _: java.nio.file.FileSystemException =>
+          Files.move(tmp, target)
+      }
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new FileAlreadyExistsException(s"$target already exists")
+    }
+
   /** The temp file's stream: one buffered write through the `SYNC`
     * channel at close, then the publish. */
   private final class AtomicOut(ch: FileChannel, tmp: NioPath,
@@ -150,11 +173,7 @@ object LocalCheckpointFileManager {
           Files.deleteIfExists(crcOf(target))
           Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
         } else {
-          try Files.createLink(target, tmp)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              throw new FileAlreadyExistsException(s"$target already exists")
-          }
+          publishNew(tmp, target, Files.createLink(_, _))
           Files.deleteIfExists(crcOf(target))
         }
       } finally Files.deleteIfExists(tmp)

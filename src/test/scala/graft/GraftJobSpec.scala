@@ -574,9 +574,11 @@ class GraftJobSpec extends SparkSpec {
     }
   }
 
-  test("a micro-batch of either plugin runs one Spark job of one task") {
+  test("a micro-batch of either plugin runs one Spark job of one task, except where it reads the catalog") {
     // the PK catalog rides in the plan: no broadcast join, so no
-    // catalog jobs or tasks next to the sink's single ordered lane
+    // catalog jobs or tasks next to the sink's single ordered lane. The
+    // catalog is read on the driver by the first batch and by the first
+    // batch after a HUP trigger; those batches add the read's jobs.
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -586,22 +588,40 @@ class GraftJobSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try for (plugin <- Seq("wal2json", "test_decoding")) {
+      // a catalog no earlier test has read
+      val cat = PkCatalog.fromItems(spark, Seq(
+        PrimaryKeyMapItem("public.species", "id", "integer", 1)))
+      val trigger = PkCatalog.hupRefreshable(cat)
       val dir = tmp()
       val wal = Paths.get(dir, "wal")
-      val lines = (0 until 4).flatMap { i =>
-        if (plugin == "wal2json") Seq(
-          s"""{"xid": $i, "change": [{"kind": "insert", "schema": "public",""" +
-            """ "table": "species", "columnnames": ["id"],""" +
-            s""" "columntypes": ["integer"], "columnvalues": [$i]}]}""")
-        else Seq(s"BEGIN $i", s"table public.species: INSERT: id[integer]:$i", "COMMIT")
+      def append(from: Int): Unit = {
+        val lines = (from until from + 4).flatMap { i =>
+          if (plugin == "wal2json") Seq(
+            s"""{"xid": $i, "change": [{"kind": "insert", "schema": "public",""" +
+              """ "table": "species", "columnnames": ["id"],""" +
+              s""" "columntypes": ["integer"], "columnvalues": [$i]}]}""")
+          else Seq(s"BEGIN $i", s"table public.species: INSERT: id[integer]:$i", "COMMIT")
+        }
+        Files.write(wal, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
+          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
       }
-      Files.write(wal, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
       val q = GraftJob.start(spark, GraftConfig(wal.toString, s"$dir/sink",
         s"$dir/ckpt", plugin = plugin, formatter = "CSV", sendWindowSecs = 0,
         maxRecordsPerTrigger = 2), cat)
-      try q.processAllAvailable() finally q.stop()
-      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSet
-      assert(batches.size >= 2, s"$plugin: ${q.recentProgress.map(_.numInputRows).toSeq}")
+      def dataBatches: Seq[Long] =
+        q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq.distinct
+      val reads = try {
+        append(0)
+        q.processAllAvailable()
+        val first = dataBatches
+        trigger()
+        append(4)
+        q.processAllAvailable()
+        Set(first.min, dataBatches.filterNot(first.contains).min).map(_.toString)
+      } finally q.stop()
+      val batches = dataBatches.map(_.toString).toSet
+      assert(batches.size >= 4, s"$plugin: ${q.recentProgress.map(_.numInputRows).toSeq}")
+      // jobs in start order, by batch
       def perBatch = jobs.asScala.toSeq.filter(_._1 == q.runId.toString)
         .groupBy(_._2).filter(b => batches(b._1))
       val deadline = System.currentTimeMillis() + 10000
@@ -609,8 +629,10 @@ class GraftJobSpec extends SparkSpec {
         Thread.sleep(20)
       assert(perBatch.keySet == batches, plugin)
       perBatch.foreach { case (b, js) =>
-        assert(js.size == 1 && js.head._3 == 1,
-          s"$plugin batch $b: ${js.size} jobs, tasks ${js.map(_._3)}")
+        // the sink's job starts last, after any catalog read
+        assert(js.last._3 == 1, s"$plugin batch $b: tasks ${js.map(_._3)}")
+        if (!reads(b))
+          assert(js.size == 1, s"$plugin batch $b: ${js.size} jobs, tasks ${js.map(_._3)}")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -16,9 +16,6 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * checkpoint manager GraftJob sets on `file:` checkpoints. */
 class LocalCheckpointFileManagerSpec extends SparkSpec {
 
-  private val SparkDefault = "org.apache.spark.sql.execution.streaming." +
-    "checkpointing.FileContextBasedCheckpointFileManager"
-
   private def tmp(): java.nio.file.Path =
     Files.createTempDirectory("graft-ckpt")
 
@@ -96,6 +93,25 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
       "new bytes, longer")
   }
 
+  test("a file system without hard links publishes by rename, still refusing an existing target") {
+    val dir = tmp()
+    val target = dir.resolve("0")
+    def staged(text: String): java.nio.file.Path = {
+      val t = dir.resolve(s".0.${text.length}.tmp")
+      Files.writeString(t, text)
+    }
+    val noLinks: (java.nio.file.Path, java.nio.file.Path) => Unit = (_, _) =>
+      throw new java.nio.file.FileSystemException("link: Operation not permitted")
+    LocalCheckpointFileManager.publishNew(staged("first"), target, noLinks)
+    assert(Files.readString(target) == "first")
+    val second = staged("second")
+    intercept[FileAlreadyExistsException] {
+      LocalCheckpointFileManager.publishNew(second, target,
+        (_, _) => throw new UnsupportedOperationException("no links"))
+    }
+    assert(Files.readString(target) == "first")
+  }
+
   test("a query restarted on a checkpoint Spark's default manager wrote resumes at its offset") {
     val dir = tmp()
     val wal = dir.resolve("wal.txt")
@@ -112,37 +128,51 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     val cfg = GraftConfig(wal.toString, dir.resolve("sink").toString,
       ckpt.toString, plugin = "test_decoding", formatter = "CSV",
       sendWindowSecs = 0)
-    val key = LocalCheckpointFileManager.ConfKey
-    try {
-      spark.conf.set(key, SparkDefault)
-      val q1 = GraftJob.start(spark, cfg, cat)
-      try q1.processAllAvailable() finally q1.stop()
-      assert(names(ckpt.resolve("offsets")).contains(".0.crc"))
-      assert(names(ckpt.resolve("commits")).contains(".0.crc"))
-      val offsetsDir = ckpt.resolve("offsets")
-      val last = names(offsetsDir).filter(_.forall(_.isDigit)).map(_.toInt).max
-      val committed = Files.readAllLines(offsetsDir.resolve(last.toString))
-        .asScala.last
+    val q1 = GraftJob.start(spark, cfg, cat)
+    try q1.processAllAvailable() finally q1.stop()
 
-      append("table public.species: INSERT: id[integer]:3", "COMMIT")
-      spark.conf.unset(key)
-      val q2 = GraftJob.start(spark, cfg, cat)
-      try q2.processAllAvailable() finally q2.stop()
-      assert(spark.conf.get(key) == classOf[LocalCheckpointFileManager].getName)
-      val resumed = q2.recentProgress.filter(_.numInputRows > 0)
-      assert(resumed.nonEmpty)
-      assert(resumed.head.sources.head.startOffset == committed)
-      assert(committed.contains("\"xid\":701"), committed)
-      assert(!names(offsetsDir).contains(s".${last + 1}.crc"))
+    // rewrite every checkpoint file as Spark's default manager writes
+    // it, .crc sidecars included
+    val sparkDefault = CheckpointFileManager.create(
+      new Path(ckpt.toUri), new Configuration())
+    assert(!sparkDefault.isInstanceOf[LocalCheckpointFileManager])
+    val files = {
+      val w = Files.walk(ckpt)
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally w.close()
+    }
+    files.foreach { f =>
+      val bytes = Files.readAllBytes(f)
+      Files.delete(f)
+      val out = sparkDefault.createAtomic(new Path(f.toUri), false)
+      out.write(bytes)
+      out.close()
+    }
+    val offsetsDir = ckpt.resolve("offsets")
+    assert(names(offsetsDir).contains(".0.crc"))
+    assert(names(ckpt.resolve("commits")).contains(".0.crc"))
+    val last = names(offsetsDir).filter(_.forall(_.isDigit)).map(_.toInt).max
+    val committed = Files.readAllLines(offsetsDir.resolve(last.toString))
+      .asScala.last
 
-      val sink = Paths.get(cfg.sinkDir)
-      val recs = Files.list(sink).iterator().asScala.toSeq
-        .sortBy(_.getFileName.toString)
-        .flatMap(f => KplAggregate.decode(Files.readAllBytes(f)))
-        .map(r => new String(r._2, StandardCharsets.UTF_8))
-      assert(recs == Seq("0,CDC,700,public.species,INSERT,1",
-        "0,CDC,701,public.species,INSERT,2",
-        "0,CDC,701,public.species,INSERT,3"))
-    } finally spark.conf.unset(key)
+    append("table public.species: INSERT: id[integer]:3", "COMMIT")
+    val q2 = GraftJob.start(spark, cfg, cat)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(spark.conf.get(LocalCheckpointFileManager.ConfKey) ==
+      classOf[LocalCheckpointFileManager].getName)
+    val resumed = q2.recentProgress.filter(_.numInputRows > 0)
+    assert(resumed.nonEmpty)
+    assert(resumed.head.sources.head.startOffset == committed)
+    assert(committed.contains("\"xid\":701"), committed)
+    assert(!names(offsetsDir).contains(s".${last + 1}.crc"))
+
+    val sink = Paths.get(cfg.sinkDir)
+    val recs = Files.list(sink).iterator().asScala.toSeq
+      .sortBy(_.getFileName.toString)
+      .flatMap(f => KplAggregate.decode(Files.readAllBytes(f)))
+      .map(r => new String(r._2, StandardCharsets.UTF_8))
+    assert(recs == Seq("0,CDC,700,public.species,INSERT,1",
+      "0,CDC,701,public.species,INSERT,2",
+      "0,CDC,701,public.species,INSERT,3"))
   }
 }

@@ -13,14 +13,12 @@
 # counts go to stderr after it ends, and the logs stay under the temp
 # dir printed with them. Per acked batch: divide by the number of
 # `Flushed LSN` lines the job printed.
-#
-# FORKCOUNT_HELPERS overrides the helper list (space separated).
 set -u
 if [ $# -eq 0 ]; then
   echo "usage: $0 <cmd> [args...]" >&2
   exit 2
 fi
-helpers=${FORKCOUNT_HELPERS:-"readlink chmod chown ls stat df du id groups whoami uname hostname getent"}
+helpers="readlink chmod chown ls stat df du id groups whoami uname hostname getent"
 dir=$(mktemp -d "${TMPDIR:-/tmp}/forkcount.XXXXXX")
 mkdir -p "$dir/bin" "$dir/log"
 for h in $helpers; do
