@@ -3,7 +3,7 @@
 // org.postgresql:postgresql is unresolvable in this offline build; at
 // deploy time swap the shims for the real driver jar, see README
 // "Connecting to a real Postgres"). Everything it plugs into
-// (PgReplicationSource, the LSN-offset/commit/backpressure contract,
+// (ReplicationTransport, the LSN-offset/commit/backpressure contract,
 // CdcSourceContractSpec) is compiled and tested in the main build;
 // this file is only the transport.
 package graft.sources
@@ -32,7 +32,7 @@ import org.postgresql.replication.{LogSequenceNumber, PGReplicationStream}
   *    `send_feedback(flush_lsn=...)` (__main__.py:101-104); also
   *    drops served records at or below the ack from the buffer.
   *
-  * Single-threaded by contract: the MicroBatchStream drives headLsn /
+  * Single-threaded by contract: the CDC stream drives headLsn /
   * read / flushed from the driver; the one-partition reader uses a
   * separate connection made by the same factory (a slot is one totally
   * ordered lane — same constraint the reference lives with).
@@ -126,7 +126,7 @@ class PgJdbcReplicationStream(
 
 object PgJdbcReplicationStream {
   /** Register a pgjdbc-backed factory so `spark.readStream
-    * .format("graft.sources.PgReplicationSourceProvider")
+    * .format("graft.sources.CdcSourceProvider")
     * .option("connection", name)` resolves to live walsender
     * connections. In local mode one registration covers driver and
     * executors; on a cluster, call this from an executor plugin. */

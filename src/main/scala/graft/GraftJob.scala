@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.Cdc
 import graft.streaming.{LocalCheckpointFileManager, OrderedAggregatingWriter, PutClient}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -100,16 +100,14 @@ object GraftJob {
             Cdc.formatterFor(cfg.formatter)(col("xid"), col("table_name"),
               col("operation"), col("pkey")), ops))
     }
+    // the reference's formatter.cur_xact for the progress line (its
+    // counts come from the raw stream's cdc_raw_metrics): the xid of
+    // the LATEST change in WAL order (max_by lsn) — plain max(xid)
+    // would report a high-xid transaction over a long-running
+    // lower-xid one that commits after it, and xid wraparound would
+    // pin it forever
     out.select(col("lsn"), col("xid"), col("fmt_msg"))
-      .observe("cdc_metrics",
-        count(lit(1)).as("msg_count"),
-        sum(length(col("fmt_msg"))).as("msg_bytes"),
-        // the reference's formatter.cur_xact for the progress line:
-        // the xid of the LATEST change in WAL order (max_by lsn) —
-        // plain max(xid) would report a high-xid transaction over a
-        // long-running lower-xid one that commits after it, and xid
-        // wraparound would pin it forever
-        max_by(col("xid"), col("lsn")).as("last_xid"))
+      .observe("cdc_metrics", max_by(col("xid"), col("lsn")).as("last_xid"))
   }
 
   /** Slot DDL dispatch at job start (reference __main__.py:56-60):
@@ -168,41 +166,29 @@ object GraftJob {
     // file system
     spark.conf.set(LocalCheckpointFileManager.ConfKey,
       classOf[LocalCheckpointFileManager].getName)
-    if (cfg.dryRun) {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-peek-ckpt").toString
-      return transform(spark, cfg, pkCatalog)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(cfg.sendWindowSecs * 1000L))
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              id: Long) =>
-            val rows = df.filter(col("fmt_msg").isNotNull)
-              .sort(col("lsn")).limit(DryRunPreviewRows).collect()
-            rows.foreach(r => dryRunOut(
-              s"DRY-RUN would put: ${r.getAs[String]("fmt_msg")}"))
-            ()
-        }
-        .start()
-    }
-    // S4 (reference stream.py:19-30): create-tolerate-exists, then
-    // block until ACTIVE before the first put
-    if (streamLifecycle != null)
-      graft.streaming.StreamLifecycle.ensureActive(streamLifecycle,
-        cfg.sinkDir)
-    val client = if (putClient != null) putClient
-      else new graft.streaming.LocalFilePutClient(cfg.sinkDir)
-    val writer = new OrderedAggregatingWriter(client,
-      lanes = cfg.sinkLanes)
+    val (ckpt, sinkBatch): (String, (Dataset[Row], Long) => Unit) =
+      if (cfg.dryRun)
+        (java.nio.file.Files.createTempDirectory("graft-peek-ckpt").toString,
+          (df, _) => df.filter(col("fmt_msg").isNotNull)
+            .sort(col("lsn")).limit(DryRunPreviewRows).collect()
+            .foreach(r => dryRunOut(
+              s"DRY-RUN would put: ${r.getAs[String]("fmt_msg")}")))
+      else {
+        // S4 (reference stream.py:19-30): create-tolerate-exists, then
+        // block until ACTIVE before the first put
+        if (streamLifecycle != null)
+          graft.streaming.StreamLifecycle.ensureActive(streamLifecycle,
+            cfg.sinkDir)
+        val client = if (putClient != null) putClient
+          else new graft.streaming.LocalFilePutClient(cfg.sinkDir)
+        (cfg.checkpointDir,
+          new OrderedAggregatingWriter(client, lanes = cfg.sinkLanes).writeBatch)
+      }
     transform(spark, cfg, pkCatalog)
       .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(cfg.sendWindowSecs * 1000L))
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) => writer.writeBatch(df, id)
-      }
+      .foreachBatch(sinkBatch)
       .start()
   }
 }

@@ -134,18 +134,22 @@ object Cdc {
   // P1/P3/F1/F3/J1: test_decoding text → Change rows with xact carry.
   // -------------------------------------------------------------------
 
-  /** Parse test_decoding text payloads (reference formatter.py:45-81).
+  /** Parse test_decoding text payloads (reference formatter.py:45-81)
+    * with the streaming path's grammar: [[splitTestDecoding]], the
+    * table filter and [[testDecodingPkey]] on the change body.
     *
     * The BEGIN-xid carry-forward (P3, reference's mutable cur_xact at
     * formatter.py:37,59-60) is an order-dependent scan over the LSN
     * order. Batch replay expresses it as `last(xid, ignoreNulls) OVER
     * (ORDER BY lsn)` — a single-partition window, which matches the
     * problem: a replication slot is one totally ordered stream (the
-    * reference is equally single-lane). The streaming path instead
-    * reads the carry off the source's `begin_xid` column: each source
-    * partition starts from the xid its start offset holds and advances
-    * it at each BEGIN line, so no shuffle and no state store appear
-    * there (graft.sources.CdcFileSource).
+    * reference is equally single-lane). A `BEGIN ` line opens the xid
+    * [[graft.sources.CdcSource.beginXid]] reads (the text after it,
+    * trimmed, as a long; a malformed one fails the query); xid is null
+    * before any BEGIN. The streaming path instead reads the carry off
+    * the source's `begin_xid` column: each source partition starts from
+    * the xid its start offset holds and advances it at each BEGIN line,
+    * so no shuffle and no state store appear there.
     *
     * @param pkCatalog catalog with (table_name, pk_name, pk_type)
     * @return xid LONG, table_name, operation, pkey (+ lsn passthrough)
@@ -158,20 +162,13 @@ object Cdc {
     val p = col(payloadCol)
     val w = Window.orderBy(col(lsnCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tagged = df
-      .withColumn("_xid_begin",
-        when(p.startsWith("BEGIN "),
-          split(p, " ").getItem(1).cast("long")))
-      .withColumn("xid", last(col("_xid_begin"), ignoreNulls = true).over(w))
-    val changes = tagged
-      // F3: BEGIN consumed as state above, COMMIT ignored
-      .filter(p.startsWith("table "))
-      .withColumn("table_name", regexp_extract(p, "^table ([^:]+):", 1))
-      .withColumn("operation", regexp_extract(p, "^table [^:]+: (\\w+):", 1))
+    // the cast trims what String.trim trims (chars up to ' '), and DEL
+    val begin = when(p.startsWith("BEGIN "), p.substr(7, Int.MaxValue).cast("long"))
+    val carried = df.select(col(lsnCol),
+      last(begin, ignoreNulls = true).over(w).as("xid"), p)
+    val changes = splitTestDecoding(carried, payloadCol)
       .filter(col("table_name").rlike(tablePat))
-    // the PK pattern reads the whole line: its `name[type]:` anchor
-    // only occurs in the change body
-    testDecodingPkey(changes, payloadCol, pkCatalog, strict)
+    testDecodingPkey(changes, "body", pkCatalog, strict)
       .select(col(lsnCol), col("xid"), col("table_name"),
         col("operation"), col("pkey"))
   }

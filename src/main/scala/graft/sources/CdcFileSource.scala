@@ -5,72 +5,19 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
-import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** "cdc-file": a DataSourceV2 MicroBatchStream with the exact contract
-  * of the reference's replication-slot source (S1/K2/K3, SURVEY.md
-  * §2.1), backed by a tailed text file instead of a walsender socket:
-  *
-  *  - one payload line per WAL message; the line number IS the LSN
-  *    (a totally ordered, ever-growing position — same algebra as a
-  *    Postgres LSN). A line counts once its '\n' is written: a torn
-  *    last line waits for its newline, then is read once, whole,
-  *  - the stream keeps a line → byte-offset index ([[LineIndex]]):
-  *    each trigger scans only the bytes appended since the last one,
-  *    each partition seeks to its start byte and slices lines straight
-  *    into the rows, so every WAL byte is read a constant number of
-  *    times however long the file grows,
-  *  - each row carries `begin_xid`, the xid of the last `BEGIN <xid>`
-  *    line at or before it (-1 before any): test_decoding's
-  *    transaction carry (P3), a pure function of the WAL before the
-  *    row. wal2json lines never start with `BEGIN `, so it is -1 there,
-  *  - offsets are LSN ranges, `{"lsn":N,"xid":X}`: X is the xid in
-  *    effect at N, which the stream reads off the BEGIN lines its index
-  *    scan passes over. A partition starts its carry from its start
-  *    offset's X, so the checkpoint's offset log makes the carry
-  *    exactly as durable as the position, and a micro-batch needs no
-  *    state store. An offset written as `{"lsn":N}` restores with X
-  *    recomputed from the WAL below N. Structured Streaming's
-  *    checkpoint plays the role of the client-side restart position,
-  *  - `commit(end)` — invoked by the engine only after the epoch is
-  *    durably committed — appends the LSN to a `.feedback` file: the
-  *    analog of `send_feedback(flush_lsn=...)` (reference
-  *    __main__.py:101-104). Crash before commit ⇒ replay ⇒ the same
-  *    at-least-once contract (reference README.rst:15-18),
-  *  - `maxRecordsPerTrigger` caps each micro-batch (K3 backpressure:
-  *    unread lines simply stay in the file, as unread WAL stays in
-  *    the slot).
-  *
-  * A production Postgres source swaps the file tail for a replication
-  * connection and keeps every interface here; nothing downstream
-  * changes.
-  */
-class CdcFileSourceProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CdcFileSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CdcFileTable(properties.get("path"),
-      Option(properties.get("maxRecordsPerTrigger")).map(_.toLong)
-        .getOrElse(Long.MaxValue),
-      Option(properties.get("peek")).exists(_.toBoolean))
-  override def supportsExternalMetadata(): Boolean = true
-}
-
+/** The schema of the CDC stream, and helpers over a WAL file that read
+  * it with the transport's own line scanner. */
 object CdcFileSource {
   /** payload + lsn + data_size, mirroring psycopg2's ReplicationMessage
     * envelope (payload, data_start, data_size), + begin_xid (the
-    * test_decoding transaction carry, see above). */
+    * test_decoding transaction carry, see [[CdcMicroBatchStream]]). */
   val Schema: StructType = StructType(Seq(
     StructField("payload", StringType, nullable = false),
     StructField("lsn", LongType, nullable = false),
@@ -175,8 +122,8 @@ final class WalLines(path: String, from: Long, until: Long)
   override def close(): Unit = ch.close()
 }
 
-/** Line → byte-offset index of a growing WAL file, kept by the stream
-  * on the driver: the byte where each line from `first` to `head`
+/** Line → byte-offset index of a growing WAL file, kept by the file
+  * transport on the driver: the byte where each line from `first` to `head`
   * starts (`head` = complete lines = the WAL head LSN), and the xid in
   * effect there: that of the last BEGIN line before it, -1 before any.
   * [[refresh]]
@@ -189,10 +136,10 @@ final class WalLines(path: String, from: Long, until: Long)
   * Every refresh first checks that the indexed prefix is still there:
   * same file (inode), not shorter, and the same bytes at the end of the
   * last indexed line. A WAL truncated or replaced under the live
-  * stream fails through `regressed`, even once it has regrown past the
+  * stream fails through [[CdcSource.regressed]], even once it has regrown past the
   * indexed byte, instead of being read from a stale offset.
   */
-private final class LineIndex(path: String, regressed: String => Nothing) {
+private final class LineIndex(path: String) {
   private val file = Paths.get(path)
   private var first = 0L
   private var starts = new Array[Long](1024)
@@ -216,7 +163,7 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
     val key = if (attrs == null) null else attrs.fileKey()
     if (built && headByte > 0 && (size < headByte || key != fileKey ||
         !read(tail.length).sameElements(tail)))
-      regressed(s"$path changed under the stream: $size bytes, " +
+      CdcSource.regressed(s"$path changed under the stream: $size bytes, " +
         s"$headByte indexed through line $head")
     if (!built) {
       built = true
@@ -288,171 +235,37 @@ private final class LineIndex(path: String, regressed: String => Nothing) {
   }
 }
 
-class CdcFileTable(path: String, maxPerTrigger: Long,
-    peek: Boolean = false)
-    extends Table with SupportsRead {
-  override def name(): String = s"cdc-file($path)"
-  override def schema(): StructType = CdcFileSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan {
-      override def readSchema(): StructType = CdcFileSource.Schema
-      override def toMicroBatchStream(checkpointLocation: String)
-          : MicroBatchStream =
-        new CdcFileMicroBatchStream(path, maxPerTrigger, peek)
-    }
-}
+/** The tailed-file transport, the walsender stand-in: one payload
+  * line per WAL message, and the line number IS the LSN (a totally
+  * ordered, ever-growing position — same algebra as a Postgres LSN).
+  * A line counts once its '\n' is written: a torn last line waits for
+  * its newline, then is read once, whole.
+  *
+  * The [[LineIndex]] holds the start byte and the xid in effect for
+  * every uncommitted line: each trigger scans only the bytes appended
+  * since the last one, and each partition seeks to its start byte and
+  * slices lines straight into the rows, so every WAL byte is read a
+  * constant number of times however long the file grows. Rows carry
+  * `begin_xid`, the xid of the last `BEGIN <xid>` line at or before
+  * them (-1 before any; wal2json lines never start with `BEGIN `). The
+  * ack appends the LSN to `<path>.feedback`; committed lines leave the
+  * index even under peek.
+  */
+class FileTransport(path: String) extends CdcTransport {
+  private val index = new LineIndex(path)
 
-/** A WAL position and the test_decoding xid in effect there (-1 before
-  * any BEGIN). */
-case class LsnOffset(lsn: Long, xid: Long = -1L) extends Offset {
-  override def json(): String = s"""{"lsn":$lsn,"xid":$xid}"""
-}
-
-object LsnOffset {
-  private val Json = """\{"lsn":(\d+)(?:,"xid":(-?\d+))?\}""".r
-
-  /** Parse [[LsnOffset.json]]; the xid is None in offsets written as
-    * `{"lsn":N}`. */
-  def parse(json: String): (Long, Option[Long]) = json.trim match {
-    case Json(lsn, xid) => (lsn.toLong, Option(xid).map(_.toLong))
-    case other => throw new IllegalArgumentException(s"not an LSN offset: $other")
-  }
-}
-
-/** The admission rule both CDC micro-batch streams share: the
-  * `maxRecordsPerTrigger` read limit, the positions admitted and
-  * restored so far, and the fail-fast guard against a WAL that
-  * regressed under them. Each transport supplies its head, its xid
-  * carry and its partitions. `wal` names the WAL in errors. */
-abstract class LsnAdmission(maxPerTrigger: Long, wal: String)
-    extends MicroBatchStream with SupportsAdmissionControl {
-  // The highest offset this stream instance has admitted or planned:
-  // the WAL must still hold it (guardRegression).
-  protected var lastPlanned: Long = -1L
-  // Highest offset restored from the checkpoint log (deserializeOffset
-  // runs during recovery): the engine has durably planned/committed up
-  // to here, so the WAL head may NEVER be below it — see guardRegression.
-  protected var restoredFloor: Long = 0L
-
-  /** Fail-fast on WAL regression (slot recreated / WAL file replaced
-    * under a live checkpoint). Without this the source would sit on
-    * empty batches until the NEW WAL grows past the old offset and
-    * then silently skip its first `floor` records — data loss wearing
-    * a clean progress log. The reference has the same failure mode
-    * (a recreated slot restarts at a fresh restart_lsn and its
-    * checkpointless client just follows); with a durable checkpoint
-    * the only safe move is to halt and make the operator choose:
-    * fresh checkpoint, or stop recreating slots under running jobs. */
-  protected def guardRegression(head: Long, floor: Long): Unit =
-    if (head < floor)
-      regressed(s"head=$head < checkpointed/planned=$floor for $wal")
-
-  protected def regressed(detail: String): Nothing =
-    throw new IllegalStateException(s"WAL position regressed: $detail — " +
-      "the slot/WAL was dropped or recreated while this checkpoint " +
-      "exists. Restart with a FRESH checkpoint to consume the recreated " +
-      "slot from its new origin.")
-
-  override def initialOffset(): Offset = LsnOffset(0L)
-
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxPerTrigger == Long.MaxValue) ReadLimit.allAvailable()
-    else ReadLimit.maxRows(maxPerTrigger)
-
-  /** The position a trigger starting at `base` admits up to under
-    * `limit`: `head(floor)` returns the WAL head, which must be at or
-    * above `floor`, the highest position planned or restored. */
-  protected def admit(base: Long, limit: ReadLimit)(head: Long => Long): Long = {
-    val cap = limit match {
-      case m: ReadMaxRows => m.maxRows
-      case _ => Long.MaxValue
-    }
-    val floor = math.max(math.max(base, lastPlanned), restoredFloor)
-    val total = head(floor)
-    guardRegression(total, floor)
-    // saturating add: base + Long.MaxValue must not wrap negative, or
-    // the offset oscillates and the engine schedules empty batches
-    // forever (processAllAvailable never converges)
-    val admitted = if (cap > total - base) total else base + cap
-    lastPlanned = math.max(lastPlanned, admitted)
-    admitted
-  }
-}
-
-class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
-    peek: Boolean = false)
-    extends LsnAdmission(maxPerTrigger, path) {
-  private val index = new LineIndex(path, regressed)
-
-  override def latestOffset(): Offset =
-    latestOffset(null, getDefaultReadLimit)
-
-  /** The engine passes the batch's start, which after a restart is the
-    * checkpointed offset, so a capped first batch counts from there;
-    * with no start, admission counts from the last admitted offset. */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val base = start match {
-      case o: LsnOffset => o.lsn
-      case null => math.max(lastPlanned, 0L)
-      case other => deserializeOffset(other.json).asInstanceOf[LsnOffset].lsn
-    }
-    val admitted = admit(base, limit)(floor => index.refresh(keepFrom = floor))
-    LsnOffset(admitted, index.xidAt(admitted))
-  }
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[LsnOffset]
-    val s = from.lsn
-    val e = end.asInstanceOf[LsnOffset].lsn
-    // Restart-replan of a planned-but-uncommitted batch, or a start
-    // restored from the checkpoint (either beyond anything THIS stream
-    // instance planned): the WAL must still hold every line of it. In
-    // steady state latestOffset just indexed and guarded the same head.
-    val last = math.max(s, e)
-    if (last > lastPlanned) {
-      guardRegression(index.refresh(keepFrom = s), last)
-      lastPlanned = last // keep the admission tracker consistent
-    }
-    if (e <= s) Array.empty
-    else Array(CdcFilePartition(path, s, e, index.byteOf(s), index.byteOf(e),
-      from.xid))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CdcFileReaderFactory
-
-  /** The 2-phase-commit ack: only after the engine has durably
-    * committed the epoch does the slot learn it may discard WAL.
-    * Note the engine invokes this while constructing the NEXT batch,
-    * so feedback trails the sink by one epoch — a conservative lag
-    * that can only cause replay, never loss (at-least-once preserved,
-    * same contract as the reference's post-put send_feedback). */
-  override def commit(end: Offset): Unit = {
-    val lsn = end.asInstanceOf[LsnOffset].lsn
-    index.forget(lsn)
-    // peek mode (pg_logical_slot_peek_changes parity): consume without
-    // acking — the slot's restart pointer never advances, so a later
-    // real run replays everything from the same position
-    if (peek) { PgReplicationSource.logPeeked(lsn); return }
+  override def name: String = s"cdc-file($path)"
+  override def head(keepFrom: Long): Long = index.refresh(keepFrom)
+  override def xidAt(lsn: Long, known: LsnOffset): Long = index.xidAt(lsn)
+  override def partition(start: LsnOffset, end: Long): InputPartition =
+    CdcFilePartition(path, start.lsn, end, index.byteOf(start.lsn),
+      index.byteOf(end), start.xid)
+  override def readerFactory: PartitionReaderFactory = new CdcFileReaderFactory
+  override def ack(lsn: Long): Unit =
     Files.write(Paths.get(path + ".feedback"),
       s"$lsn\n".getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    // reference __main__.py:103-104: every feedback ack logs its LSN
-    PgReplicationSource.logFlushed(lsn)
-  }
-
-  override def deserializeOffset(json: String): Offset = {
-    val (lsn, xid) = LsnOffset.parse(json)
-    // recovery path: remember the checkpoint's horizon for the
-    // regression guard
-    if (lsn > restoredFloor) restoredFloor = lsn
-    LsnOffset(lsn, xid.getOrElse(index.xidAt(lsn)))
-  }
-
-  override def stop(): Unit = ()
+  override def release(lsn: Long): Unit = index.forget(lsn)
 }
 
 /** Lines [start, end) of the WAL, which are its bytes

@@ -90,25 +90,19 @@ object StreamLifecycle {
 }
 
 /** Local-filesystem stand-in for the Kinesis shard: one file per
-  * aggregated record. Once [[beginBatch]] has been observed, files are
-  * keyed `rec-<batchId>-<posInBatch>` — a foreachBatch REPLAY of the
+  * aggregated record, keyed `rec-<batchId>-<posInBatch>` (or
+  * `rec-<batchId>-L<lane>-<posInBatch>`) — a foreachBatch REPLAY of the
   * same batch regenerates the same (deterministically ordered) records
   * and overwrites the same paths with identical bytes, so replays are
   * idempotent on this client (the real-Kinesis path stays
-  * at-least-once; see PutClient.beginBatch). Before any beginBatch the
-  * legacy global `rec-<seq>` naming applies. failFirstAttemptEvery
-  * injects a ThrottlingException on the first attempt of every Nth
-  * put to exercise the backoff path. */
+  * at-least-once; see PutClient.beginBatch). A put before any
+  * [[beginBatch]] fails. failFirstAttemptEvery injects a
+  * ThrottlingException on the first attempt of every Nth put to
+  * exercise the backoff path. */
 class LocalFilePutClient(dir: String, failFirstAttemptEvery: Int = 0)
     extends PutClient {
   // Task-local (the client is serialized into each foreachPartition
-  // closure); the sink is a single coalesced lane so one task owns
-  // the whole batch's position sequence. Deliberately NOT @transient:
-  // a transient Long deserializes to 0, which would turn the -1
-  // "no beginBatch yet" sentinel into batch 0 on executors and make
-  // every unbatched put() overwrite batch-0 names; serializing the
-  // driver's -1 keeps the legacy rec-<seq> fallback reachable for
-  // writers that never call beginBatch.
+  // closure); one task owns each (batch, lane) position sequence.
   private var curBatch: Long = -1L
   private var curLane: Int = -1
   private var posInBatch: Long = 0L
@@ -123,6 +117,8 @@ class LocalFilePutClient(dir: String, failFirstAttemptEvery: Int = 0)
     posInBatch = 0L
   }
   override def put(seq: Long, data: Array[Byte]): Unit = {
+    if (curBatch < 0)
+      throw new IllegalStateException(s"put of record $seq before beginBatch")
     if (failFirstAttemptEvery > 0 && seq % failFirstAttemptEvery == 0 &&
         LocalFilePutClient.attempted.putIfAbsent(s"$dir/$seq", true) == null) {
       throw new ThrottlingException(s"injected throttle for seq $seq")
@@ -130,10 +126,8 @@ class LocalFilePutClient(dir: String, failFirstAttemptEvery: Int = 0)
     val d = Paths.get(dir)
     Files.createDirectories(d)
     val name =
-      if (curBatch >= 0 && curLane >= 0)
-        f"rec-$curBatch%09d-L$curLane%04d-$posInBatch%06d"
-      else if (curBatch >= 0) f"rec-$curBatch%09d-$posInBatch%06d"
-      else f"rec-$seq%09d"
+      if (curLane >= 0) f"rec-$curBatch%09d-L$curLane%04d-$posInBatch%06d"
+      else f"rec-$curBatch%09d-$posInBatch%06d"
     Files.write(d.resolve(name), data)
     posInBatch += 1
   }

@@ -299,7 +299,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     override def stream(maxPerTrigger: Long): DataFrame =
       spark.readStream
-        .format(classOf[graft.sources.CdcFileSourceProvider].getName)
+        .format(classOf[graft.sources.CdcSourceProvider].getName)
         .option("path", path.toString)
         .option("maxRecordsPerTrigger", maxPerTrigger.toString)
         .load()
@@ -317,7 +317,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
 
   // ---- file transport edges: the byte-offset index and its reader ----
 
-  import graft.sources.{CdcFileMicroBatchStream, CdcFileSource, LsnOffset}
+  import graft.sources.{CdcFileSource, CdcMicroBatchStream, FileTransport, LsnOffset}
 
   private def wal(): java.nio.file.Path =
     Files.createTempDirectory("graft-file-edge").resolve("wal.txt")
@@ -328,7 +328,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
       StandardOpenOption.CREATE, mode)
 
   /** Plan and read [start, end) on ONE live stream instance. */
-  private def batch(s: CdcFileMicroBatchStream, start: Long, end: Long)
+  private def batch(s: CdcMicroBatchStream, start: Long, end: Long)
       : Seq[(Long, String, Long)] =
     s.planInputPartitions(LsnOffset(start), LsnOffset(end)).toSeq.flatMap {
       part =>
@@ -341,7 +341,11 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
         out
     }
 
-  private def head(s: CdcFileMicroBatchStream): Long =
+  /** A stream over the file at `p`, outside any query. */
+  private def fileStream(p: java.nio.file.Path): CdcMicroBatchStream =
+    new CdcMicroBatchStream(new FileTransport(p.toString), Long.MaxValue)
+
+  private def head(s: CdcMicroBatchStream): Long =
     s.latestOffset().asInstanceOf[LsnOffset].lsn
 
   /** What BufferedReader.readLine makes of the same bytes. */
@@ -353,7 +357,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
 
   test("file: a torn last line waits for its newline, then is read once, whole") {
     val p = wal()
-    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    val s = fileStream(p)
     write(p, "a0\na1\n{\"torn\": ")
     assert(head(s) == 2L && CdcFileSource.lineCount(p.toString) == 2L)
     assert(batch(s, 0, 2).map(_._2) == Seq("a0", "a1"))
@@ -369,7 +373,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
     val p = wal()
     write(p, "x\r\nyé\r\n\r\n\n{\"k\": \"v\"}\r\nz\n")
     val want = readLines(p)
-    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    val s = fileStream(p)
     assert(head(s) == want.size.toLong)
     val got = batch(s, 0, want.size)
     assert(got.map(_._2) == want)
@@ -385,7 +389,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
     write(p, lines.take(17).map(_ + "\n").mkString)
     val ckpt = Files.createTempDirectory("graft-file-edge").toString
     def stream(cap: Long) = spark.readStream
-      .format(classOf[graft.sources.CdcFileSourceProvider].getName)
+      .format(classOf[graft.sources.CdcSourceProvider].getName)
       .option("path", p.toString)
       .option("maxRecordsPerTrigger", cap.toString).load()
     val got = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
@@ -400,14 +404,14 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
   }
 
   test("file: a WAL truncated or replaced under a live stream fails fast") {
-    def regressed(s: CdcFileMicroBatchStream): Unit = {
+    def regressed(s: CdcMicroBatchStream): Unit = {
       val e = intercept[IllegalStateException](head(s))
       assert(e.getMessage.contains("regressed"), e.getMessage)
     }
     // truncated in place, then regrown past the indexed byte
     val p = wal()
     write(p, (0 until 10).map(i => s"old$i\n").mkString)
-    val s = new CdcFileMicroBatchStream(p.toString, Long.MaxValue)
+    val s = fileStream(p)
     assert(head(s) == 10L && batch(s, 0, 10).size == 10)
     write(p, "new0\n", StandardOpenOption.TRUNCATE_EXISTING)
     regressed(s)
@@ -417,7 +421,7 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
     // replaced by a new file holding more than was indexed
     val q = wal()
     write(q, (0 until 10).map(i => s"old$i\n").mkString)
-    val t = new CdcFileMicroBatchStream(q.toString, Long.MaxValue)
+    val t = fileStream(q)
     assert(head(t) == 10L)
     val tmp = Files.createTempFile(q.getParent, "wal", ".tmp")
     write(tmp, (0 until 30).map(i => s"old$i\n").mkString,
@@ -463,7 +467,7 @@ class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
       payloads.foreach(p => wal.add(WalRecord(wal.size().toLong, p)))
     override def stream(maxPerTrigger: Long): DataFrame =
       spark.readStream
-        .format(classOf[graft.sources.PgReplicationSourceProvider].getName)
+        .format(classOf[graft.sources.CdcSourceProvider].getName)
         .option("connection", connName)
         .option("maxRecordsPerTrigger", maxPerTrigger.toString)
         .load()

@@ -7,10 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The library has one session factory, one cache owner and a fixed
-  * set of mains, and every file is reachable from an entry point: a
-  * new dev main, hand-built session, unowned cache or file nothing
-  * runs in `src/main` fails here. */
+/** The library has one session factory, one cache owner, one CDC
+  * stream and a fixed set of mains, and every file is reachable from an
+  * entry point: a new dev main, hand-built session, unowned cache,
+  * second stream or file nothing runs in `src/main` fails here. */
 class EntryPointSpec extends AnyFunSuite {
   private val mains = Set("Main", "Verify", "Bench", "Profile",
     "CdcThroughput", "ScaleProbe", "HupProbe")
@@ -94,6 +94,28 @@ class EntryPointSpec extends AnyFunSuite {
       } else { out += s(i); i += 1 }
     }
     out.toString
+  }
+
+  test("one MicroBatchStream, one TableProvider and one Table serve both CDC transports") {
+    for (api <- Seq("MicroBatchStream", "TableProvider", "Table")) {
+      val decl = s"\\b(?:extends|with|new)\\s+$api\\b".r
+      val found = mainFiles.flatMap { case (p, text) =>
+        decl.findAllIn(stripComments(text)).map(_ => p.getFileName.toString) }
+      assert(found.size == 1, s"$api implementations: $found")
+    }
+  }
+
+  test("the CDC provider takes exactly one of path and connection") {
+    import graft.sources.{CdcFileSource, CdcSourceProvider}
+    def table(opts: (String, String)*) = new CdcSourceProvider().getTable(
+      CdcFileSource.Schema, Array.empty, opts.toMap.asJava)
+    assert(table("path" -> "wal").name == "cdc-file(wal)")
+    assert(table("connection" -> "c", "peek" -> "true").name == "cdc-pg(c)")
+    for (opts <- Seq(Seq("path" -> "wal", "connection" -> "c"),
+        Seq("maxRecordsPerTrigger" -> "5"))) {
+      val e = intercept[IllegalArgumentException](table(opts: _*))
+      assert(e.getMessage.contains("path and connection"), e.getMessage)
+    }
   }
 
   test("every src/main file is reachable from an entry point") {

@@ -389,9 +389,9 @@ class GraftJobSpec extends SparkSpec {
     val previews = scala.collection.mutable.ArrayBuffer.empty[String]
     val peekedLsns = scala.collection.mutable.ArrayBuffer.empty[Long]
     val oldOut = GraftJob.dryRunOut
-    val oldPeek = graft.sources.PgReplicationSource.logPeeked
+    val oldPeek = graft.sources.CdcSource.logPeeked
     GraftJob.dryRunOut = line => previews.synchronized { previews += line }
-    graft.sources.PgReplicationSource.logPeeked =
+    graft.sources.CdcSource.logPeeked =
       lsn => peekedLsns.synchronized { peekedLsns += lsn }
     try {
       val o = Main.parse(Seq(
@@ -421,7 +421,7 @@ class GraftJobSpec extends SparkSpec {
       q.stop()
     } finally {
       GraftJob.dryRunOut = oldOut
-      graft.sources.PgReplicationSource.logPeeked = oldPeek
+      graft.sources.CdcSource.logPeeked = oldPeek
     }
     assert(previews.toSeq == (0 until 6).map(i =>
       s"DRY-RUN would put: 0,CDC,$i,public.species,insert,$i"),
@@ -442,7 +442,7 @@ class GraftJobSpec extends SparkSpec {
   }
 
   test("--dry-run over the walsender transport never sends standby feedback") {
-    import graft.sources.{PgReplicationSource, ReplicationStream, WalRecord}
+    import graft.sources.{CdcSource, PgReplicationSource, ReplicationStream, WalRecord}
     val wal = new java.util.concurrent.CopyOnWriteArrayList[WalRecord]()
     val flushes =
       new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
@@ -464,9 +464,9 @@ class GraftJobSpec extends SparkSpec {
     val previews = scala.collection.mutable.ArrayBuffer.empty[String]
     val peeked = scala.collection.mutable.ArrayBuffer.empty[Long]
     val oldOut = GraftJob.dryRunOut
-    val oldPeek = PgReplicationSource.logPeeked
+    val oldPeek = CdcSource.logPeeked
     GraftJob.dryRunOut = line => previews.synchronized { previews += line }
-    PgReplicationSource.logPeeked =
+    CdcSource.logPeeked =
       lsn => peeked.synchronized { peeked += lsn }
     try {
       val dir = tmp()
@@ -487,7 +487,7 @@ class GraftJobSpec extends SparkSpec {
       q.stop()
     } finally {
       GraftJob.dryRunOut = oldOut
-      PgReplicationSource.logPeeked = oldPeek
+      CdcSource.logPeeked = oldPeek
     }
     assert(previews.size == 4, s"previews: $previews")
     assert(peeked.nonEmpty, "peek commits must log")
@@ -578,7 +578,10 @@ class GraftJobSpec extends SparkSpec {
     // the PK catalog rides in the plan: no broadcast join, so no
     // catalog jobs or tasks next to the sink's single ordered lane. The
     // catalog is read on the driver by the first batch and by the first
-    // batch after a HUP trigger; those batches add the read's jobs.
+    // batch after a HUP trigger; those batches add the read's jobs. The
+    // walsender transport runs over a fake connection that serves the
+    // same file's lines.
+    import graft.sources.{CdcFileSource, PgReplicationSource, ReplicationStream, WalRecord}
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -587,7 +590,8 @@ class GraftJobSpec extends SparkSpec {
           e.stageInfos.map(_.numTasks).sum))
     }
     spark.sparkContext.addSparkListener(listener)
-    try for (plugin <- Seq("wal2json", "test_decoding")) {
+    try for (plugin <- Seq("wal2json", "test_decoding"); pg <- Seq(false, true)) {
+      val label = s"$plugin over ${if (pg) "pg" else "file"}"
       // a catalog no earlier test has read
       val cat = PkCatalog.fromItems(spark, Seq(
         PrimaryKeyMapItem("public.species", "id", "integer", 1)))
@@ -605,7 +609,22 @@ class GraftJobSpec extends SparkSpec {
         Files.write(wal, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
       }
-      val q = GraftJob.start(spark, GraftConfig(wal.toString, s"$dir/sink",
+      val source = if (!pg) wal.toString else {
+        val conn = s"tasks-${java.util.UUID.randomUUID().toString.take(8)}"
+        PgReplicationSource.registerConnection(conn, () =>
+          new ReplicationStream {
+            override def headLsn(): Long = CdcFileSource.lineCount(wal.toString)
+            override def read(start: Long, end: Long): Iterator[WalRecord] = {
+              val (it, h) = CdcFileSource.lineRange(wal.toString, start, end)
+              try it.zipWithIndex.map { case (l, i) => WalRecord(start + i, l) }
+                .toList.iterator
+              finally h.close()
+            }
+            override def flushed(lsn: Long): Unit = ()
+          })
+        s"pg:$conn"
+      }
+      val q = GraftJob.start(spark, GraftConfig(source, s"$dir/sink",
         s"$dir/ckpt", plugin = plugin, formatter = "CSV", sendWindowSecs = 0,
         maxRecordsPerTrigger = 2), cat)
       def dataBatches: Seq[Long] =
@@ -620,19 +639,19 @@ class GraftJobSpec extends SparkSpec {
         Set(first.min, dataBatches.filterNot(first.contains).min).map(_.toString)
       } finally q.stop()
       val batches = dataBatches.map(_.toString).toSet
-      assert(batches.size >= 4, s"$plugin: ${q.recentProgress.map(_.numInputRows).toSeq}")
+      assert(batches.size >= 4, s"$label: ${q.recentProgress.map(_.numInputRows).toSeq}")
       // jobs in start order, by batch
       def perBatch = jobs.asScala.toSeq.filter(_._1 == q.runId.toString)
         .groupBy(_._2).filter(b => batches(b._1))
       val deadline = System.currentTimeMillis() + 10000
       while (perBatch.size < batches.size && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
-      assert(perBatch.keySet == batches, plugin)
+      assert(perBatch.keySet == batches, label)
       perBatch.foreach { case (b, js) =>
         // the sink's job starts last, after any catalog read
-        assert(js.last._3 == 1, s"$plugin batch $b: tasks ${js.map(_._3)}")
+        assert(js.last._3 == 1, s"$label batch $b: tasks ${js.map(_._3)}")
         if (!reads(b))
-          assert(js.size == 1, s"$plugin batch $b: ${js.size} jobs, tasks ${js.map(_._3)}")
+          assert(js.size == 1, s"$label batch $b: ${js.size} jobs, tasks ${js.map(_._3)}")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -142,10 +142,10 @@ class StreamingSpec extends SparkSpec {
     // reference __main__.py:103-104: logger.info('Flushed LSN: {}') on
     // each send_feedback — the graft ack path (MicroBatchStream.commit
     // → flushed) emits the same line through the injectable hook
-    import graft.sources.PgReplicationSource
+    import graft.sources.CdcSource
     val logged = new java.util.concurrent.CopyOnWriteArrayList[Long]()
-    val orig = PgReplicationSource.logFlushed
-    PgReplicationSource.logFlushed = lsn => { logged.add(lsn); () }
+    val orig = CdcSource.logFlushed
+    CdcSource.logFlushed = lsn => { logged.add(lsn); () }
     try {
       val dir = tmp()
       val src = writeSource(dir,
@@ -166,7 +166,7 @@ class StreamingSpec extends SparkSpec {
       val feedback = Files.readAllLines(Paths.get(s"$src.feedback"))
         .asScala.map(_.trim.toLong).toSeq
       assert(acks == feedback, s"log $acks != feedback $feedback")
-    } finally PgReplicationSource.logFlushed = orig
+    } finally CdcSource.logFlushed = orig
   }
 
   test("progress window reproduces the reference's 10 s log cadence") {
@@ -269,6 +269,14 @@ class StreamingSpec extends SparkSpec {
     writer.writeBatch(batch.limit(2), 8L)
     assert(shard().size > first.size)
     assert(sinkRecords(s"$dir/sink").size == 8, "6 originals + 2 new")
+  }
+
+  test("the local file client rejects a put before any beginBatch") {
+    val dir = tmp()
+    val client = new LocalFilePutClient(s"$dir/sink")
+    val e = intercept[IllegalStateException](client.put(0L, Array[Byte](1)))
+    assert(e.getMessage.contains("before beginBatch"), e.getMessage)
+    assert(!Files.exists(Paths.get(s"$dir/sink")), "nothing may be written")
   }
 
   test("non-throughput sink errors re-raise immediately, no backoff retry") {

@@ -5,6 +5,8 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
+import graft.catalog.PkCatalog
+import graft.core.PrimaryKeyMapItem
 import graft.functions.Cdc
 import graft.sources.CdcSource
 import org.apache.spark.sql.{Dataset, Row}
@@ -12,7 +14,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 /** The streaming test_decoding split — the source's `begin_xid` carry
-  * plus [[Cdc.splitTestDecoding]] — against the reference kept here:
+  * plus [[Cdc.splitTestDecoding]] — and the batch parser
+  * [[Cdc.parseTestDecoding]] against the reference kept here:
   * one mutable xid advanced at each `BEGIN ` message, and the Scala
   * `Regex` extractor (a whole-line `matches()`) on every other one, on
   * an edge corpus of the lines a WAL can hold. */
@@ -119,6 +122,29 @@ class TestDecodingSplitParitySpec extends SparkSpec {
     val path = wal(corpus)
     for (cap <- Seq(Long.MaxValue, 3L))
       assert(split(path, cap) == want, s"cap $cap")
+  }
+
+  test("the batch parser equals the reference after the first BEGIN") {
+    import spark.implicits._
+    val cat = PkCatalog.fromItems(spark,
+      Seq(PrimaryKeyMapItem("public.a", "id", "integer", 1)))
+    val Pk = "id\\[integer\\]:'?([\\w\\-]+)'?".r
+    val firstBegin = corpus.indexWhere(_.startsWith("BEGIN "))
+    val want = reference(corpus).filter(_._1 > firstBegin).map {
+      case (lsn, xid, table, op, body) => (lsn, Some(xid), table, op,
+        if (table != "public.a") null
+        else Pk.findFirstMatchIn(body).map(_.group(1)).orNull)
+    }
+    val got = Cdc.parseTestDecoding(
+        corpus.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+          .toDF("lsn", "payload"), "payload", "lsn", cat, strict = false)
+      .collect().map(r => (r.getLong(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]), r.getString(2),
+        r.getString(3), r.getString(4))).toSeq.sortBy(_._1)
+    val (before, after) = got.partition(_._1 < firstBegin)
+    assert(before.nonEmpty && before.forall(_._2.isEmpty),
+      s"no xid before the first BEGIN: $before")
+    assert(after == want)
   }
 
   test("a malformed BEGIN fails on both sides") {
