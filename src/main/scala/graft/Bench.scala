@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -64,6 +66,24 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
+    type Query = (SparkSession, String) => DataFrame
+    // One timed attempt on sfDir. Data caches and the cluster memo are
+    // cleared first, so the attempt pays its own full input scan and
+    // materialization. A query that throws must not masquerade as a
+    // fast success: the attempt reads NaN, never its
+    // elapsed-time-to-failure, and `onFail` sees the exception.
+    def attempt(fn: Query, onFail: Throwable => Unit = _ => ()): Double = {
+      QueryCache.release(spark)
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case t: Throwable => onFail(t); Double.NaN }
+    }
+    // Untimed warm run on the sf0.001 sibling (none: no-op); a throw
+    // is left to the timed attempts to report.
+    def warm(fn: Query): Unit =
+      if (warmDir != null) {
+        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      }
     // Machine-speed calibration (round-12 lesson: the driver's box ran
     // the same bytecode 3x slower than the committed clean run, and
     // nothing IN the artifact said so — q_seasonal_decompose's 26.72 s
@@ -104,12 +124,7 @@ object Bench {
           i += 1
         }
       } catch { case _: Throwable => () }
-      (1 to 2).map { _ =>
-        QueryCache.release(spark)
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => Double.NaN }
-      }.min
+      (1 to 2).map(_ => attempt(fn)).min
     }
     val calibRatio = calibS / CalibCleanS
     System.err.println(f"bench: calibration q1_pricing $calibS%.3f s " +
@@ -142,12 +157,7 @@ object Bench {
     def recalibrate(afterN: Int): Unit = {
       val t0 = spent
       val fn = SparkEntry.queries("q1_pricing")
-      val t = (1 to 2).map { _ =>
-        QueryCache.release(spark)
-        val a0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - a0) / 1e9 }
-        catch { case _: Throwable => Double.NaN }
-      }.min
+      val t = (1 to 2).map(_ => attempt(fn)).min
       if (!t.isNaN) {
         calibCurve += ((afterN, t, t / CalibCleanS))
         System.err.println(f"bench: recalibration after $afterN queries: " +
@@ -189,23 +199,10 @@ object Bench {
         (budgetS - calibWall) * ((done + 1).toDouble / nSelected)
       val attempts = if (onPace && frac < 0.9) 2 else 1
       if (attempts == 1) budgetShed = true
-      if (warmDir != null && frac < 0.85) {
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-      val times = (1 to attempts).map { _ =>
-        QueryCache.release(spark)
-        val t0 = System.nanoTime()
-        // A query that throws must not masquerade as a fast success:
-        // record it as -1 (and say so on stderr), never as its
-        // elapsed-time-to-failure.
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case t: Throwable =>
-            System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
-            false
-          }
-        if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-      }
+      if (frac < 0.85) warm(fn)
+      val times = (1 to attempts).map(_ => attempt(fn, t =>
+        System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")))
+      // a failed attempt records the query as -1
       val t = if (times.exists(_.isNaN)) -1.0 else times.min
       System.err.println(f"bench: $name%-26s ${t}%9.3f s   [wall ${spent}%7.1f s, $attempts att]")
       done += 1
@@ -228,14 +225,8 @@ object Bench {
     val withRaw = firstPass.map { case (name, t, times) =>
       if (t > capS) {
         val fn = SparkEntry.queries(name)
-        if (warmDir != null) {
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        }
-        QueryCache.release(spark)
-        val t0 = System.nanoTime()
-        val t2 =
-          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => Double.NaN }
+        warm(fn)
+        val t2 = attempt(fn)
         val best = if (!t2.isNaN && t2 < t) t2 else t
         System.err.println(
           f"bench: RECHECK $name first=$t%.2f s again=$t2%.2f s -> keeping $best%.2f s")

@@ -87,6 +87,23 @@ object CdcQueries extends QueryModule {
           (col("value") + 7).as("new_value"),
           (col("event_id") * 2 + 1).as("lsn")))
 
+  /** Body of a `changes` CTE over `base(event_id, value)`: the same
+    * stream as [[syntheticChanges]]. */
+  private val syntheticChangesSql =
+    """(
+      |  SELECT event_id, 'update' AS op, value * 2 AS new_value,
+      |    event_id * 2 AS lsn
+      |  FROM base WHERE event_id % 3 = 0
+      |  UNION ALL
+      |  SELECT event_id, 'delete', NULL, event_id * 2
+      |  FROM base WHERE event_id % 3 = 1
+      |  UNION ALL
+      |  SELECT -event_id - 1, 'insert', value, event_id * 2
+      |  FROM base WHERE event_id % 3 = 2
+      |  UNION ALL
+      |  SELECT event_id, 'update', value + 7, event_id * 2 + 1
+      |  FROM base WHERE event_id % 9 = 0)""".stripMargin
+
   override def queries: Map[String, Q] = Map(
     // SCD2 history build: the change stream as validity INTERVALS —
     // every non-delete change opens a version at its LSN, the next
@@ -334,82 +351,46 @@ object CdcQueries extends QueryModule {
         |FROM events ORDER BY xid""".stripMargin,
 
     "cdc_scd2" ->
-      """WITH base AS MATERIALIZED (SELECT event_id, value FROM events),
-        |changes AS MATERIALIZED (
-        |  SELECT event_id, 'update' AS op, value * 2 AS new_value,
-        |    event_id * 2 AS lsn
-        |  FROM base WHERE event_id % 3 = 0
-        |  UNION ALL
-        |  SELECT event_id, 'delete', NULL, event_id * 2
-        |  FROM base WHERE event_id % 3 = 1
-        |  UNION ALL
-        |  SELECT -event_id - 1, 'insert', value, event_id * 2
-        |  FROM base WHERE event_id % 3 = 2
-        |  UNION ALL
-        |  SELECT event_id, 'update', value + 7, event_id * 2 + 1
-        |  FROM base WHERE event_id % 9 = 0),
-        |versions AS (
-        |  SELECT event_id, 'insert' AS op, value AS new_value,
-        |    CAST(-1 AS BIGINT) AS lsn
-        |  FROM base
-        |  UNION ALL SELECT * FROM changes),
-        |v2 AS (
-        |  SELECT event_id, op, new_value, lsn,
-        |    LEAD(lsn) OVER (PARTITION BY event_id ORDER BY lsn)
-        |      AS valid_to_lsn
-        |  FROM versions)
-        |SELECT event_id, new_value AS value, lsn AS valid_from_lsn,
-        |  valid_to_lsn,
-        |  CAST(CASE WHEN valid_to_lsn IS NULL THEN 1 ELSE 0 END
-        |    AS BIGINT) AS is_current
-        |FROM v2 WHERE op <> 'delete'
-        |ORDER BY event_id, valid_from_lsn""".stripMargin,
+      s"""WITH base AS MATERIALIZED (SELECT event_id, value FROM events),
+         |changes AS MATERIALIZED $syntheticChangesSql,
+         |versions AS (
+         |  SELECT event_id, 'insert' AS op, value AS new_value,
+         |    CAST(-1 AS BIGINT) AS lsn
+         |  FROM base
+         |  UNION ALL SELECT * FROM changes),
+         |v2 AS (
+         |  SELECT event_id, op, new_value, lsn,
+         |    LEAD(lsn) OVER (PARTITION BY event_id ORDER BY lsn)
+         |      AS valid_to_lsn
+         |  FROM versions)
+         |SELECT event_id, new_value AS value, lsn AS valid_from_lsn,
+         |  valid_to_lsn,
+         |  CAST(CASE WHEN valid_to_lsn IS NULL THEN 1 ELSE 0 END
+         |    AS BIGINT) AS is_current
+         |FROM v2 WHERE op <> 'delete'
+         |ORDER BY event_id, valid_from_lsn""".stripMargin,
 
     "cdc_change_stats" ->
-      """WITH base AS (SELECT event_id, value FROM events),
-        |changes AS (
-        |  SELECT event_id, 'update' AS op, value * 2 AS new_value,
-        |    event_id * 2 AS lsn
-        |  FROM base WHERE event_id % 3 = 0
-        |  UNION ALL
-        |  SELECT event_id, 'delete', NULL, event_id * 2
-        |  FROM base WHERE event_id % 3 = 1
-        |  UNION ALL
-        |  SELECT -event_id - 1, 'insert', value, event_id * 2
-        |  FROM base WHERE event_id % 3 = 2
-        |  UNION ALL
-        |  SELECT event_id, 'update', value + 7, event_id * 2 + 1
-        |  FROM base WHERE event_id % 9 = 0)
-        |SELECT op, COUNT(*) AS n_changes,
-        |  COUNT(DISTINCT event_id) AS n_keys,
-        |  MIN(lsn) AS min_lsn, MAX(lsn) AS max_lsn
-        |FROM changes GROUP BY op ORDER BY op""".stripMargin,
+      s"""WITH base AS (SELECT event_id, value FROM events),
+         |changes AS $syntheticChangesSql
+         |SELECT op, COUNT(*) AS n_changes,
+         |  COUNT(DISTINCT event_id) AS n_keys,
+         |  MIN(lsn) AS min_lsn, MAX(lsn) AS max_lsn
+         |FROM changes GROUP BY op ORDER BY op""".stripMargin,
 
     "cdc_apply" ->
-      """WITH base AS (SELECT event_id, value FROM events),
-        |changes AS (
-        |  SELECT event_id, 'update' AS op, value * 2 AS new_value,
-        |    event_id * 2 AS lsn
-        |  FROM base WHERE event_id % 3 = 0
-        |  UNION ALL
-        |  SELECT event_id, 'delete', NULL, event_id * 2
-        |  FROM base WHERE event_id % 3 = 1
-        |  UNION ALL
-        |  SELECT -event_id - 1, 'insert', value, event_id * 2
-        |  FROM base WHERE event_id % 3 = 2
-        |  UNION ALL
-        |  SELECT event_id, 'update', value + 7, event_id * 2 + 1
-        |  FROM base WHERE event_id % 9 = 0),
-        |latest AS (
-        |  SELECT event_id, op, new_value FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
-        |      ORDER BY lsn DESC) AS rn
-        |    FROM changes) t WHERE rn = 1)
-        |SELECT COALESCE(b.event_id, l.event_id) AS event_id,
-        |  CASE WHEN l.op IS NULL THEN b.value ELSE l.new_value END AS value
-        |FROM base b FULL OUTER JOIN latest l ON b.event_id = l.event_id
-        |WHERE COALESCE(l.op, 'keep') <> 'delete'
-        |ORDER BY event_id""".stripMargin,
+      s"""WITH base AS (SELECT event_id, value FROM events),
+         |changes AS $syntheticChangesSql,
+         |latest AS (
+         |  SELECT event_id, op, new_value FROM (
+         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
+         |      ORDER BY lsn DESC) AS rn
+         |    FROM changes) t WHERE rn = 1)
+         |SELECT COALESCE(b.event_id, l.event_id) AS event_id,
+         |  CASE WHEN l.op IS NULL THEN b.value ELSE l.new_value END AS value
+         |FROM base b FULL OUTER JOIN latest l ON b.event_id = l.event_id
+         |WHERE COALESCE(l.op, 'keep') <> 'delete'
+         |ORDER BY event_id""".stripMargin,
 
     "cdc_table_filter" ->
       """SELECT 'public.t' || CAST(user_id % 5 AS VARCHAR) AS table_name,

@@ -21,32 +21,20 @@ import org.apache.spark.sql.functions._
   */
 object Corpus extends QueryModule {
   import Tables._
-  import graft.expressions.FloatDot.float_dot
-
-  /** Cosine over float vectors with precomputed squared norms; the
-    * strict sequential double fold in FloatDot matches DuckDB's
-    * list_dot_product bit-for-bit (proved by the Similarity oracles). */
-  private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
-    float_dot(a, b) / (sqrt(an) * sqrt(bn))
+  import Similarity.{corpus, corpusSql, cosine, standInCentroids}
+  // whitespace tokens: the one tokenizer both engines express identically
+  import TextAnalysis.{sqlToks, toksExpr}
 
   private val NumCentroids = 32
 
-  /** (vec_id, embedding, nrm) corpus projection. */
-  private def corpus(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d).select(col("vec_id"), col("embedding"),
-      float_dot(col("embedding"), col("embedding")).as("nrm"))
-
   /** Nearest-centroid assignment (cosine, ties to the lower centroid
     * id). Centroids are the first NumCentroids vectors — deterministic,
-    * so the whole pipeline is SQL-expressible; production swaps in
-    * kmeans|| seeds with no other change (same note as Similarity's
-    * IVF). Assignment is one linear pass over the corpus against a
+    * so the whole pipeline is SQL-expressible (Similarity's IVF lists
+    * use the same stand-ins). Assignment is one linear pass over the corpus against a
     * broadcast centroid table — the only scale-relevant cost. */
   private def assigned(s: SparkSession, d: String): DataFrame = {
     val c = corpus(s, d)
-    val cent = c.filter(col("vec_id") < NumCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
+    val cent = standInCentroids(c, NumCentroids)
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("c_sim").desc, col("cid"))
     c.crossJoin(broadcast(cent))
@@ -60,27 +48,36 @@ object Corpus extends QueryModule {
   /** Shared DuckDB prelude: corpus + centroids + nearest-centroid
     * assignment, mirroring `assigned` above. */
   private val assignedSql =
-    """c AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |    list_dot_product(CAST(embedding AS DOUBLE[]),
-      |                     CAST(embedding AS DOUBLE[])) AS nrm
-      |  FROM embeddings),
-      |cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
-      |         FROM c WHERE vec_id < 32),
-      |assigned AS (
-      |  SELECT vec_id, cid, emb, nrm FROM (
-      |    SELECT c.vec_id, cent.cid, c.emb, c.nrm,
-      |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
-      |        ORDER BY list_dot_product(c.emb, cent.c_emb)
-      |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
-      |          cent.cid) AS rk
-      |    FROM c CROSS JOIN cent) t WHERE rk = 1)""".stripMargin
+    s"""c AS $corpusSql,
+       |cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
+       |         FROM c WHERE vec_id < 32),
+       |assigned AS (
+       |  SELECT vec_id, cid, emb, nrm FROM (
+       |    SELECT c.vec_id, cent.cid, c.emb, c.nrm,
+       |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
+       |        ORDER BY list_dot_product(c.emb, cent.c_emb)
+       |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
+       |          cent.cid) AS rk
+       |    FROM c CROSS JOIN cent) t WHERE rk = 1)""".stripMargin
 
-  /** Whitespace tokens, shared with TextAnalysis (the one tokenizer
-    * both engines express identically). */
-  private val toksExpr = "filter(split(text, '\\\\s+'), t -> t != '')"
-  private val sqlToks =
-    "list_filter(string_split_regex(text, '\\s+'), t -> t != '')"
+  /** The BM25 inputs in the DuckDB dialect, mirroring [[bm25Top]]:
+    * the query terms `qt`, document lengths `docs`, corpus totals
+    * `scal`, query-term occurrences `toks`, term frequencies `tf` and
+    * document frequencies `dft`. */
+  private val bm25TermsSql =
+    s"""qt AS (
+       |  SELECT * FROM (VALUES (0, 'spark'), (0, 'join'), (1, 'hash'),
+       |    (1, 'table'), (1, 'scan'), (2, 'window'), (2, 'agg'))
+       |    t(query_id, tok)),
+       |docs AS (SELECT doc_id, len($sqlToks) AS dl FROM documents),
+       |scal AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_len
+       |         FROM docs),
+       |toks AS (
+       |  SELECT doc_id, tok FROM (
+       |    SELECT doc_id, unnest($sqlToks) AS tok FROM documents)
+       |  WHERE tok IN (SELECT tok FROM qt)),
+       |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
+       |dft AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1)""".stripMargin
 
   /** The BM25 ranking shared by text_bm25 and text_rrf_fusion —
     * (query_id, rank, doc_id, n_terms, score_micro) for the fixed
@@ -118,55 +115,6 @@ object Corpus extends QueryModule {
         count(lit(1)).as("n_terms"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
-  }
-
-  /** Multi-iteration Lloyd k-means over (vec_id, embedding) — the full
-    * training loop whose single step emb_kmeans_step oracle-pins. The
-    * kmeans|| execution shape: per iteration, one broadcast of the K
-    * current centroids (K x dim doubles — tiny), one linear
-    * squared-euclidean assignment pass over the corpus, one
-    * partial-aggregated per-dimension mean. Centroids live in a K-row
-    * DataFrame end to end — the corpus never leaves the executors and
-    * nothing corpus-sized reaches the driver. localCheckpoint per
-    * round keeps the plan flat (lineage would otherwise double per
-    * iteration — same discipline as the CC/PageRank loops).
-    *
-    * Returns (assignment (vec_id, cid, d2), centroids (cid, c_vec)).
-    * An empty cluster keeps its previous centroid (no NaN means): the
-    * mean aggregate simply produces no row for it, and the next
-    * iteration's join falls back to the prior vector.
-    */
-  def kmeans(vecs: DataFrame, k: Int, iters: Int)
-      : (DataFrame, DataFrame) = {
-    require(k > 0 && iters > 0)
-    val v = vecs.select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x as double))").as("emb"))
-    var cent = v.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("emb").as("c_vec"))
-      .localCheckpoint()
-    var assigned: DataFrame = null
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2"), col("cid"))
-    for (_ <- 1 to iters) {
-      assigned = v.crossJoin(broadcast(cent))
-        .withColumn("d2", expr("aggregate(zip_with(emb, c_vec, " +
-          "(x, c) -> (x - c) * (x - c)), 0D, (acc, t) -> acc + t)"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("vec_id"), col("cid"), col("emb"), col("d2"))
-        .localCheckpoint()
-      val means = assigned
-        .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, m)))," +
-          " s -> s.m)").as("c_new"))
-      cent = cent.join(means, Seq("cid"), "left_outer")
-        .select(col("cid"),
-          coalesce(col("c_new"), col("c_vec")).as("c_vec"))
-        .localCheckpoint()
-    }
-    (assigned.select(col("vec_id"), col("cid"), col("d2")), cent)
   }
 
   override def queries: Map[String, Q] = Map(
@@ -609,18 +557,14 @@ object Corpus extends QueryModule {
 
   override def oracles: Map[String, String] = Map(
     "emb_decontaminate" ->
-      """WITH v AS MATERIALIZED (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                     CAST(embedding AS DOUBLE[])) AS nrm
-        |  FROM embeddings)
-        |SELECT a.vec_id, b.vec_id AS bench_id,
-        |  list_dot_product(a.emb, b.emb) / (sqrt(a.nrm) * sqrt(b.nrm))
-        |    AS cosine
-        |FROM v a JOIN v b ON a.vec_id >= 20 AND b.vec_id < 20
-        |WHERE list_dot_product(a.emb, b.emb) / (sqrt(a.nrm) * sqrt(b.nrm))
-        |  >= 0.30
-        |ORDER BY a.vec_id, bench_id""".stripMargin,
+      s"""WITH v AS MATERIALIZED $corpusSql
+         |SELECT a.vec_id, b.vec_id AS bench_id,
+         |  list_dot_product(a.emb, b.emb) / (sqrt(a.nrm) * sqrt(b.nrm))
+         |    AS cosine
+         |FROM v a JOIN v b ON a.vec_id >= 20 AND b.vec_id < 20
+         |WHERE list_dot_product(a.emb, b.emb) / (sqrt(a.nrm) * sqrt(b.nrm))
+         |  >= 0.30
+         |ORDER BY a.vec_id, bench_id""".stripMargin,
 
     "dedup_semantic" ->
       s"""WITH $assignedSql,
@@ -654,19 +598,7 @@ object Corpus extends QueryModule {
          |ORDER BY doc_id, rank""".stripMargin,
 
     "text_bm25" ->
-      s"""WITH qt AS (
-         |  SELECT * FROM (VALUES (0, 'spark'), (0, 'join'), (1, 'hash'),
-         |    (1, 'table'), (1, 'scan'), (2, 'window'), (2, 'agg'))
-         |    t(query_id, tok)),
-         |docs AS (SELECT doc_id, len($sqlToks) AS dl FROM documents),
-         |scal AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_len
-         |         FROM docs),
-         |toks AS (
-         |  SELECT doc_id, tok FROM (
-         |    SELECT doc_id, unnest($sqlToks) AS tok FROM documents)
-         |  WHERE tok IN (SELECT tok FROM qt)),
-         |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-         |dft AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
+      s"""WITH $bm25TermsSql,
          |scored AS (
          |  SELECT qt.query_id, tf.doc_id,
          |    SUM(CAST(
@@ -689,19 +621,7 @@ object Corpus extends QueryModule {
          |ORDER BY query_id, rank""".stripMargin,
 
     "text_rrf_fusion" ->
-      s"""WITH qt AS (
-         |  SELECT * FROM (VALUES (0, 'spark'), (0, 'join'), (1, 'hash'),
-         |    (1, 'table'), (1, 'scan'), (2, 'window'), (2, 'agg'))
-         |    t(query_id, tok)),
-         |docs AS (SELECT doc_id, len($sqlToks) AS dl FROM documents),
-         |scal AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_len
-         |         FROM docs),
-         |toks AS (
-         |  SELECT doc_id, tok FROM (
-         |    SELECT doc_id, unnest($sqlToks) AS tok FROM documents)
-         |  WHERE tok IN (SELECT tok FROM qt)),
-         |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-         |dft AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
+      s"""WITH $bm25TermsSql,
          |scored AS (
          |  SELECT qt.query_id, tf.doc_id,
          |    SUM(CAST(
@@ -717,11 +637,7 @@ object Corpus extends QueryModule {
          |    ROW_NUMBER() OVER (PARTITION BY query_id
          |      ORDER BY score_micro DESC, doc_id) AS r_bm25
          |  FROM scored QUALIFY r_bm25 <= 10),
-         |c AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
+         |c AS $corpusSql,
          |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
          |      FROM c WHERE vec_id < 3),
          |dn AS (

@@ -637,6 +637,79 @@ object Dedup extends QueryModule {
       .distinct()
   }
 
+  // DuckDB fragments of the kernels above, one definition each; the
+  // oracles below and Pipeline's splice them in. A fragment holds only
+  // text that is byte-identical in every oracle using it: a CTE's
+  // `name AS [MATERIALIZED]` header stays in the oracle.
+
+  /** Body of an `sh` CTE: the distinct 8-char shingles (doc_id, s) of
+    * every document, mirroring [[shingleSets]]. */
+  private[operators] val shinglesSql =
+    """(
+      |  SELECT DISTINCT doc_id, u.s FROM documents,
+      |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
+      |    i -> substr(text, i, 8))) u(s))""".stripMargin
+
+  /** `sz` (set size n) and `pairs` (shared shingles `inter`, a_id <
+    * b_id) over `sh`: the counts [[verifyJaccard]] takes from the
+    * sorted sets. */
+  private[operators] val shinglePairsSql =
+    """sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+      |pairs AS (
+      |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
+      |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Body of an `np` CTE: the `pairs` at Jaccard >= 0.8 in integer
+    * form, the (a_id, b_id) edge set [[minhashPairs]] returns at its
+    * default threshold. */
+  private[operators] val jaccardNpSql =
+    """(
+      |  SELECT a_id, b_id FROM pairs
+      |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
+      |  WHERE inter * 5 >= (a.n + b.n - inter) * 4)""".stripMargin
+
+  /** Opens an oracle's WITH list: tokens `t` and the distinct md5-60
+    * word-3-gram hashes `g` (doc_id, h), mirroring [[wordGramSets]].
+    * Concatenate it in front of the oracle's stripped literal, never
+    * splice it into one: its `||` line would lose a bar to a second
+    * stripMargin. */
+  private val wordGramsSql =
+    """WITH t AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(text, '\s+'), x -> x != '')
+      |      AS toks
+      |  FROM documents),
+      |g AS MATERIALIZED (
+      |  SELECT DISTINCT doc_id,
+      |    ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' '
+      |      || toks[i + 2]), 1, 15))::BIGINT AS h
+      |  FROM t, UNNEST(generate_series(1, len(toks) - 2)) u(i)
+      |  WHERE len(toks) >= 3)""".stripMargin
+
+  /** [[shinglePairsSql]] over the word-gram set `g`. */
+  private val wordGramPairsSql =
+    """sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
+      |pairs AS (
+      |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
+      |  FROM g x JOIN g y ON x.h = y.h AND x.doc_id < y.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Body of a `t` CTE: each document's md5-60 token hashes `th`, the
+    * values token_md5_60 yields in [[simhashPairs]]. */
+  private val tokenHashesSql =
+    """(
+      |  SELECT doc_id, list_transform(
+      |    list_filter(string_split_regex(text, '\s+'), t -> t != ''),
+      |    t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS th
+      |  FROM documents)""".stripMargin
+
+  /** The 60-bit SimHash of `th`, one majority vote per bit: the
+    * fingerprint simhash64 folds in [[simhashPairs]]. */
+  private val simhashSigSql = (0 until 60).map { i =>
+    s"(CASE WHEN 2 * COALESCE(list_sum(list_transform(th, x -> (x >> $i) & 1)), 0) > len(th) THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
+  }.mkString(" + ")
+
   override def oracles: Map[String, String] = Map(
     "dedup_exact" ->
       """WITH corpus AS (
@@ -657,64 +730,29 @@ object Dedup extends QueryModule {
         |ORDER BY survivor_id""".stripMargin,
 
     "dedup_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n,
-        |  CAST(inter AS DOUBLE) / (a.n + b.n - inter) AS jaccard
-        |FROM pairs JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |WHERE inter * 5 >= (a.n + b.n - inter) * 4
-        |ORDER BY a_id, b_id""".stripMargin,
+      s"""WITH sh AS $shinglesSql,
+         |$shinglePairsSql
+         |SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n,
+         |  CAST(inter AS DOUBLE) / (a.n + b.n - inter) AS jaccard
+         |FROM pairs JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
+         |WHERE inter * 5 >= (a.n + b.n - inter) * 4
+         |ORDER BY a_id, b_id""".stripMargin,
 
     // Exact near-dup pair set: the LSH pipeline's verified output must
     // equal this (banding is tuned so no true pair is missed; the
     // verify step removes every false candidate).
     "dedup_minhash_words" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x != '')
-        |      AS toks
-        |  FROM documents),
-        |g AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id,
-        |    ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' '
-        |      || toks[i + 2]), 1, 15))::BIGINT AS h
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 2)) u(i)
-        |  WHERE len(toks) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM g x JOIN g y ON x.h = y.h AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
+      (wordGramsSql + s""",
+        |$wordGramPairsSql
         |SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
         |FROM pairs JOIN sz a ON a.doc_id = a_id
         |           JOIN sz b ON b.doc_id = b_id
         |WHERE inter * 100 >= (a.n + b.n - inter) * 80
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
     "dedup_threshold_sweep" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x != '')
-        |      AS toks
-        |  FROM documents),
-        |g AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id,
-        |    ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' '
-        |      || toks[i + 2]), 1, 15))::BIGINT AS h
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 2)) u(i)
-        |  WHERE len(toks) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM g x JOIN g y ON x.h = y.h AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
+      (wordGramsSql + s""",
+        |$wordGramPairsSql,
         |m AS (
         |  SELECT a_id, b_id,
         |    inter * 1000000 // (a.n + b.n - inter) AS jac_ppm
@@ -732,25 +770,11 @@ object Dedup extends QueryModule {
         |  CAST(COALESCE(n_pairs, 0) AS BIGINT) AS n_pairs,
         |  CAST(COALESCE(n_dropped, 0) AS BIGINT) AS n_dropped
         |FROM ths LEFT JOIN agg USING (threshold_ppm)
-        |ORDER BY threshold_ppm""".stripMargin,
+        |ORDER BY threshold_ppm""".stripMargin),
 
     "emb_consistency_audit" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x != '')
-        |      AS toks
-        |  FROM documents),
-        |g AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id,
-        |    ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' '
-        |      || toks[i + 2]), 1, 15))::BIGINT AS h
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 2)) u(i)
-        |  WHERE len(toks) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM g x JOIN g y ON x.h = y.h AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
+      (wordGramsSql + s""",
+        |$wordGramPairsSql,
         |m AS (
         |  SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
         |  FROM pairs JOIN sz a ON a.doc_id = a_id
@@ -767,20 +791,10 @@ object Dedup extends QueryModule {
         |         * sqrt(list_dot_product(y.emb, y.emb))) AS cosine
         |  FROM m JOIN c x ON x.vec_id = a_id JOIN c y ON y.vec_id = b_id)
         |SELECT a_id, b_id, jac_ppm, cosine, cosine >= 0.9 AS consistent
-        |FROM scored ORDER BY a_id, b_id""".stripMargin,
+        |FROM scored ORDER BY a_id, b_id""".stripMargin),
 
     "dedup_incremental" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x != '')
-        |      AS toks
-        |  FROM documents),
-        |g AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id,
-        |    ('0x' || substr(md5(toks[i] || ' ' || toks[i + 1] || ' '
-        |      || toks[i + 2]), 1, 15))::BIGINT AS h
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 2)) u(i)
-        |  WHERE len(toks) >= 3),
+      (wordGramsSql + s""",
         |sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
         |pairs AS (
         |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
@@ -802,42 +816,27 @@ object Dedup extends QueryModule {
         |  COALESCE(per.n_matches, 0) = 0 AS admit
         |FROM documents d LEFT JOIN per ON d.doc_id = per.a_id
         |WHERE d.doc_id % 10 = 9
-        |ORDER BY batch_id""".stripMargin,
+        |ORDER BY batch_id""".stripMargin),
 
     "dedup_minhash_lsh" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
-        |FROM pairs JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |WHERE inter * 5 >= (a.n + b.n - inter) * 4
-        |ORDER BY a_id, b_id""".stripMargin,
+      s"""WITH sh AS $shinglesSql,
+         |$shinglePairsSql
+         |SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
+         |FROM pairs JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
+         |WHERE inter * 5 >= (a.n + b.n - inter) * 4
+         |ORDER BY a_id, b_id""".stripMargin,
 
     // Identical md5-60bit SimHash recomputed in SQL, then brute-force
     // Hamming over all pairs (the Spark side's banding is exact by
     // pigeonhole, so the sets match).
-    "dedup_simhash" -> {
-      val bitSum = (0 until 60).map { i =>
-        s"(CASE WHEN 2 * COALESCE(list_sum(list_transform(th, x -> (x >> $i) & 1)), 0) > len(th) THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_transform(
-         |    list_filter(string_split_regex(text, '\\s+'), t -> t != ''),
-         |    t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS th
-         |  FROM documents),
-         |s AS (SELECT doc_id, $bitSum AS sig FROM t)
+    "dedup_simhash" ->
+      s"""WITH t AS $tokenHashesSql,
+         |s AS (SELECT doc_id, $simhashSigSql AS sig FROM t)
          |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
          |  bit_count(xor(a.sig, b.sig)) AS hamming
          |FROM s a JOIN s b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-         |ORDER BY a_id, b_id""".stripMargin
-    },
+         |ORDER BY a_id, b_id""".stripMargin,
 
     "dedup_embedding_cosine" ->
       """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -857,24 +856,14 @@ object Dedup extends QueryModule {
         |                         CAST(b.embedding AS DOUBLE[])))) >= 0.4
         |ORDER BY a_id, b_id""".stripMargin,
 
-    "dedup_agreement" -> {
-      val bitSum = (0 until 60).map { i =>
-        s"(CASE WHEN 2 * COALESCE(list_sum(list_transform(th, x -> (x >> $i) & 1)), 0) > len(th) THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString(" + ")
-      s"""WITH t AS MATERIALIZED (
-         |  SELECT doc_id, list_transform(
-         |    list_filter(string_split_regex(text, '\\s+'), t -> t != ''),
-         |    t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS th
-         |  FROM documents),
-         |sgs AS MATERIALIZED (SELECT doc_id, $bitSum AS sig FROM t),
+    "dedup_agreement" ->
+      s"""WITH t AS MATERIALIZED $tokenHashesSql,
+         |sgs AS MATERIALIZED (SELECT doc_id, $simhashSigSql AS sig FROM t),
          |simp AS MATERIALIZED (
          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
          |  FROM sgs a JOIN sgs b ON a.doc_id < b.doc_id
          |  WHERE bit_count(xor(a.sig, b.sig)) <= 3),
-         |sh AS MATERIALIZED (
-         |  SELECT DISTINCT doc_id, u.s FROM documents,
-         |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-         |    i -> substr(text, i, 8))) u(s)),
+         |sh AS MATERIALIZED $shinglesSql,
          |sz AS MATERIALIZED (
          |  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
          |jacp AS MATERIALIZED (
@@ -892,19 +881,11 @@ object Dedup extends QueryModule {
          |  CAST(SUM(CASE WHEN s.a_id IS NULL AND j.a_id IS NOT NULL
          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_jaccard_only
          |FROM simp s FULL OUTER JOIN jacp j
-         |  ON s.a_id = j.a_id AND s.b_id = j.b_id""".stripMargin
-    },
+         |  ON s.a_id = j.a_id AND s.b_id = j.b_id""".stripMargin,
 
-    "dedup_simhash_buckets" -> {
-      val bitSum = (0 until 60).map { i =>
-        s"(CASE WHEN 2 * COALESCE(list_sum(list_transform(th, x -> (x >> $i) & 1)), 0) > len(th) THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_transform(
-         |    list_filter(string_split_regex(text, '\\s+'), t -> t != ''),
-         |    t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS th
-         |  FROM documents),
-         |s AS (SELECT doc_id, $bitSum AS sig FROM t),
+    "dedup_simhash_buckets" ->
+      s"""WITH t AS $tokenHashesSql,
+         |s AS (SELECT doc_id, $simhashSigSql AS sig FROM t),
          |banded AS (
          |  SELECT u.band, (s.sig >> (u.band * 15)) & 32767 AS key
          |  FROM s, UNNEST([0, 1, 2, 3]) u(band)),
@@ -912,8 +893,7 @@ object Dedup extends QueryModule {
          |  SELECT band, key, COUNT(*) AS bucket_size
          |  FROM banded GROUP BY band, key)
          |SELECT bucket_size, COUNT(*) AS n_buckets
-         |FROM buckets GROUP BY bucket_size ORDER BY bucket_size""".stripMargin
-    },
+         |FROM buckets GROUP BY bucket_size ORDER BY bucket_size""".stripMargin,
 
     "dedup_prefix" ->
       """SELECT md5(substr(text, 1, 64)) AS prefix_md5,

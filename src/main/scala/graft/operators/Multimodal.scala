@@ -525,6 +525,26 @@ object Multimodal extends QueryModule {
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** Opens the scene oracles' WITH list: code points `t`, 64-char
+    * frame sums `frames` and the cut flags `cuts`, mirroring
+    * [[sceneSegments]]. */
+  private val sceneCutsSql =
+    """WITH t AS (
+      |  SELECT doc_id, len(text) AS n,
+      |    list_transform(range(1, len(text) + 1),
+      |      i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)) AS cs
+      |  FROM documents WHERE len(text) >= 128),
+      |frames AS (
+      |  SELECT doc_id, u.f AS frame_idx,
+      |    CAST(list_sum(cs[(u.f * 64 + 1):((u.f + 1) * 64)]) AS BIGINT)
+      |      AS fsum
+      |  FROM t, UNNEST(range(0, n // 64)) u(f)),
+      |cuts AS (
+      |  SELECT doc_id, frame_idx, fsum,
+      |    CASE WHEN abs(fsum - LAG(fsum) OVER (PARTITION BY doc_id
+      |      ORDER BY frame_idx)) > 1024 THEN 1 ELSE 0 END AS cut
+      |  FROM frames)""".stripMargin
+
   /** Shared decode stage over the test corpus — stub decoder because
     * the corpus payloads are text bytes (see module note); the real
     * JDK decoder rides the same [[decodeBlobs]] plumbing. */
@@ -535,6 +555,22 @@ object Multimodal extends QueryModule {
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .as[(Long, Array[Byte])],
       FakeDecoder)
+  }
+
+  /** `t2` (adds the total `tsum`) and the 60-bit block-mean hash `s`
+    * (doc_id, sig) over `t(doc_id, n, cs)`, a document's length and
+    * code points: one bit per block, set when the block's mean is
+    * above the document's, as BlockMeanHash60 computes it. */
+  private val blockHashSql = {
+    val bits = (0 until 60).map { i =>
+      s"(CASE WHEN COALESCE(list_sum(cs[(($i * n) // 60 + 1):" +
+        s"((${i + 1} * n) // 60)]), 0) * n" +
+        s" > tsum * ((${i + 1} * n) // 60 - ($i * n) // 60)" +
+        s" THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
+    }.mkString(" + ")
+    s"""t2 AS (SELECT doc_id, n, cs,
+       |  CAST(list_sum(cs) AS BIGINT) AS tsum FROM t),
+       |s AS (SELECT doc_id, $bits AS sig FROM t2)""".stripMargin
   }
 
   override def oracles: Map[String, String] = Map(
@@ -553,13 +589,7 @@ object Multimodal extends QueryModule {
     // brute-force pair oracle (band recall is pigeonhole-exact at
     // Hamming <= 3, so brute == banded); ASCII corpus makes
     // unicode(char) == Spark's ascii(char) per the family note
-    "mm_blockhash_neardup" -> {
-      val bitSum = (0 until 60).map { i =>
-        s"(CASE WHEN COALESCE(list_sum(cs[(($i * n) // 60 + 1):" +
-          s"((${i + 1} * n) // 60)]), 0) * n" +
-          s" > tsum * ((${i + 1} * n) // 60 - ($i * n) // 60)" +
-          s" THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString(" + ")
+    "mm_blockhash_neardup" ->
       s"""WITH duped AS (
          |  SELECT doc_id, text FROM documents WHERE len(text) >= 60
          |  UNION ALL
@@ -570,52 +600,29 @@ object Multimodal extends QueryModule {
          |    list_transform(range(1, len(text) + 1),
          |      i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)) AS cs
          |  FROM duped),
-         |t2 AS (SELECT doc_id, n, cs,
-         |  CAST(list_sum(cs) AS BIGINT) AS tsum FROM t),
-         |s AS (SELECT doc_id, $bitSum AS sig FROM t2)
+         |$blockHashSql
          |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
          |  bit_count(xor(a.sig, b.sig)) AS hamming
          |FROM s a JOIN s b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-         |ORDER BY a_id, b_id""".stripMargin
-    },
+         |ORDER BY a_id, b_id""".stripMargin,
     "mm_scene_cuts" ->
-      """WITH t AS (
-        |  SELECT doc_id, len(text) AS n,
-        |    list_transform(range(1, len(text) + 1),
-        |      i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)) AS cs
-        |  FROM documents WHERE len(text) >= 128),
-        |frames AS (
-        |  SELECT doc_id, u.f AS frame_idx,
-        |    CAST(list_sum(cs[(u.f * 64 + 1):((u.f + 1) * 64)]) AS BIGINT)
-        |      AS fsum
-        |  FROM t, UNNEST(range(0, n // 64)) u(f)),
-        |cuts AS (
-        |  SELECT doc_id, frame_idx, fsum,
-        |    CASE WHEN abs(fsum - LAG(fsum) OVER (PARTITION BY doc_id
-        |      ORDER BY frame_idx)) > 1024 THEN 1 ELSE 0 END AS cut
-        |  FROM frames),
-        |segs AS (
-        |  SELECT doc_id,
-        |    SUM(cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
-        |  FROM cuts),
-        |per AS (
-        |  SELECT doc_id, seg, COUNT(*) AS seg_frames
-        |  FROM segs GROUP BY 1, 2)
-        |SELECT doc_id, CAST(SUM(seg_frames) AS BIGINT) AS n_frames,
-        |  CAST(COUNT(*) - 1 AS BIGINT) AS n_cuts,
-        |  CAST(MAX(seg_frames) AS BIGINT) AS longest_seg
-        |FROM per GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+      s"""$sceneCutsSql,
+         |segs AS (
+         |  SELECT doc_id,
+         |    SUM(cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
+         |  FROM cuts),
+         |per AS (
+         |  SELECT doc_id, seg, COUNT(*) AS seg_frames
+         |  FROM segs GROUP BY 1, 2)
+         |SELECT doc_id, CAST(SUM(seg_frames) AS BIGINT) AS n_frames,
+         |  CAST(COUNT(*) - 1 AS BIGINT) AS n_cuts,
+         |  CAST(MAX(seg_frames) AS BIGINT) AS longest_seg
+         |FROM per GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin,
 
-    "mm_curate" -> {
-      val bitSum = (0 until 60).map { i =>
-        s"(CASE WHEN COALESCE(list_sum(cs[(($i * n) // 60 + 1):" +
-          s"((${i + 1} * n) // 60)]), 0) * n" +
-          s" > tsum * ((${i + 1} * n) // 60 - ($i * n) // 60)" +
-          s" THEN (CAST(1 AS BIGINT) << $i) ELSE CAST(0 AS BIGINT) END)"
-      }.mkString(" + ")
+    "mm_curate" ->
       s"""WITH base AS (SELECT doc_id, text FROM documents),
          |duped AS (
          |  SELECT doc_id, text FROM base
@@ -633,9 +640,7 @@ object Multimodal extends QueryModule {
          |    list_transform(range(1, len(text) + 1),
          |      i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)) AS cs
          |  FROM exact),
-         |t2 AS (SELECT doc_id, n, cs,
-         |  CAST(list_sum(cs) AS BIGINT) AS tsum FROM t),
-         |s AS (SELECT doc_id, $bitSum AS sig FROM t2),
+         |$blockHashSql,
          |dropped AS (
          |  SELECT DISTINCT b.doc_id FROM s a JOIN s b ON a.doc_id < b.doc_id
          |  WHERE bit_count(xor(a.sig, b.sig)) <= 3),
@@ -654,43 +659,28 @@ object Multimodal extends QueryModule {
          |UNION ALL
          |SELECT 3, 'neardup_survivors', COUNT(*),
          |  CAST(SUM(len(text)) AS BIGINT) FROM near
-         |ORDER BY stage""".stripMargin
-    },
+         |ORDER BY stage""".stripMargin,
 
     "mm_keyframe_select" ->
-      """WITH t AS (
-        |  SELECT doc_id, len(text) AS n,
-        |    list_transform(range(1, len(text) + 1),
-        |      i -> CAST(unicode(substr(text, i, 1)) AS BIGINT)) AS cs
-        |  FROM documents WHERE len(text) >= 128),
-        |frames AS (
-        |  SELECT doc_id, u.f AS frame_idx,
-        |    CAST(list_sum(cs[(u.f * 64 + 1):((u.f + 1) * 64)]) AS BIGINT)
-        |      AS fsum
-        |  FROM t, UNNEST(range(0, n // 64)) u(f)),
-        |cuts AS (
-        |  SELECT doc_id, frame_idx, fsum,
-        |    CASE WHEN abs(fsum - LAG(fsum) OVER (PARTITION BY doc_id
-        |      ORDER BY frame_idx)) > 1024 THEN 1 ELSE 0 END AS cut
-        |  FROM frames),
-        |segs AS (
-        |  SELECT doc_id, frame_idx, fsum,
-        |    SUM(cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
-        |  FROM cuts),
-        |per AS (
-        |  SELECT doc_id, seg, COUNT(*) AS seg_frames,
-        |    MIN(frame_idx) AS first_frame, MAX(frame_idx) AS last_frame,
-        |    MAX(fsum * 4294967296 + (4294967295 - frame_idx)) AS packed
-        |  FROM segs GROUP BY 1, 2)
-        |SELECT doc_id, CAST(seg AS BIGINT) AS seg,
-        |  CAST(seg_frames AS BIGINT) AS seg_frames,
-        |  CAST(first_frame AS BIGINT) AS first_frame,
-        |  CAST(last_frame AS BIGINT) AS last_frame,
-        |  CAST(4294967295 - packed % 4294967296 AS BIGINT)
-        |    AS keyframe_idx,
-        |  CAST(packed // 4294967296 AS BIGINT) AS key_fsum
-        |FROM per ORDER BY doc_id, seg""".stripMargin,
+      s"""$sceneCutsSql,
+         |segs AS (
+         |  SELECT doc_id, frame_idx, fsum,
+         |    SUM(cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg
+         |  FROM cuts),
+         |per AS (
+         |  SELECT doc_id, seg, COUNT(*) AS seg_frames,
+         |    MIN(frame_idx) AS first_frame, MAX(frame_idx) AS last_frame,
+         |    MAX(fsum * 4294967296 + (4294967295 - frame_idx)) AS packed
+         |  FROM segs GROUP BY 1, 2)
+         |SELECT doc_id, CAST(seg AS BIGINT) AS seg,
+         |  CAST(seg_frames AS BIGINT) AS seg_frames,
+         |  CAST(first_frame AS BIGINT) AS first_frame,
+         |  CAST(last_frame AS BIGINT) AS last_frame,
+         |  CAST(4294967295 - packed % 4294967296 AS BIGINT)
+         |    AS keyframe_idx,
+         |  CAST(packed // 4294967296 AS BIGINT) AS key_fsum
+         |FROM per ORDER BY doc_id, seg""".stripMargin,
 
     // text is pure ASCII in this corpus, so byte length == char length
     // and byte sum == char-code sum; the oracle checks the decode

@@ -30,6 +30,7 @@ import org.apache.spark.sql.functions._
 object Pipeline extends QueryModule {
   import Tables._
   import Num._
+  import Dedup.{jaccardNpSql, shinglePairsSql, shinglesSql}
 
   private val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
   private val cardPat = "[0-9]{12,19}"
@@ -193,19 +194,6 @@ object Pipeline extends QueryModule {
       .orderBy(col("shard"), col("doc_id"))
   }
 
-  /** Deterministic PII-bearing corpus: the synthetic documents carry no
-    * emails or card numbers, so the scrub operator plants them —
-    * deterministically from doc_id, identically in the oracle. */
-  /** Content-hash train/val/test assignment shared by corpus_split,
-    * its stratification report, and the leakage audit: bucket =
-    * first-8-hex of md5(text) mod 100, 90/5/5. */
-  /** The curation pipeline's stages, shared by corpus_curate (shard
-    * rollup), corpus_funnel (per-stage counts) and corpus_release (the
-    * composed release card): input (docs >= 20, the rest are the
-    * benchmark set), quality (>= 20 tokens), exact (md5 first-doc
-    * dedup), surv (near-dup cluster representatives only), clean
-    * (decontaminated at >= 80 shared 8-gram shingles vs the
-    * benchmark). Each frame carries (doc_id, text, n_toks). */
   /** The curation pipeline's SETS, defined once: input rows (with
     * n_toks), the first-doc-per-content-hash ids, the dropped near-dup
     * cluster members, and the decontaminated ids (>= 80 shared 8-gram
@@ -242,7 +230,11 @@ object Pipeline extends QueryModule {
   }
 
   /** Anti-join face (corpus_curate / corpus_release): the nested stage
-    * frames, each a semi/anti join against the shared sets — the
+    * frames input (docs >= 20, the rest are the benchmark set),
+    * quality (>= 20 tokens), exact (md5 first-doc dedup), surv
+    * (near-dup cluster representatives only) and clean
+    * (decontaminated), each (doc_id, text, n_toks) and each a
+    * semi/anti join against the shared sets — the
     * original shape, which measured FASTER than a left-join+flag
     * formulation for single-stage consumers (anti joins shrink rows at
     * each step instead of carrying null-extended flags through). */
@@ -276,6 +268,9 @@ object Pipeline extends QueryModule {
       .drop("_first", "_dropped", "_contam")
   }
 
+  /** Content-hash train/val/test assignment shared by corpus_split,
+    * its stratification report, and the leakage audit: bucket =
+    * first-8-hex of md5(text) mod 100, 90/5/5. */
   private def splitAssign(docs: DataFrame): DataFrame =
     docs
       .withColumn("bucket", expr(
@@ -283,6 +278,9 @@ object Pipeline extends QueryModule {
       .withColumn("split", expr("CASE WHEN bucket < 90 THEN 'train'" +
         " WHEN bucket < 95 THEN 'val' ELSE 'test' END"))
 
+  /** Deterministic PII-bearing corpus: the synthetic documents carry no
+    * emails or card numbers, so the scrub operator plants them —
+    * deterministically from doc_id, identically in the oracle. */
   private def piiCorpus(s: SparkSession, d: String): DataFrame =
     documents(s, d).withColumn("aug", concat(col("text"),
       when(col("doc_id") % 4 === 0,
@@ -312,6 +310,26 @@ object Pipeline extends QueryModule {
       .groupBy(col("vec_id"), col("label"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("d2"))
   }
+
+  /** Opens the label-centroid oracles' WITH list: quantized values `e`,
+    * centroids `c` and each vector's squared distance `d`, mirroring
+    * [[labelCentroidDist]]. */
+  private val labelCentroidSql =
+    """WITH e AS MATERIALIZED (
+      |  SELECT vec_id, label, i AS dim,
+      |    CAST(round(1000000 * CAST(embedding[i] AS DOUBLE)) AS BIGINT)
+      |      AS q
+      |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)),
+      |c AS (
+      |  SELECT label, dim,
+      |    CAST((SUM(q) + 1000000000 * COUNT(*)) // COUNT(*)
+      |      - 1000000000 AS BIGINT) AS cq
+      |  FROM e GROUP BY label, dim),
+      |d AS (
+      |  SELECT e.vec_id, e.label,
+      |    CAST(SUM((e.q - c.cq) * (e.q - c.cq)) AS BIGINT) AS d2
+      |  FROM e JOIN c ON e.label = c.label AND e.dim = c.dim
+      |  GROUP BY e.vec_id, e.label)""".stripMargin
 
   override def queries: Map[String, Q] = Map(
     // Near-dup clustering: exact near-dup pairs (MinHash-LSH verified)
@@ -1318,113 +1336,124 @@ object Pipeline extends QueryModule {
     })
   )
 
+  /** Opens an oracle's WITH list: documents `t` with their shard (8
+    * md5 shards), token count and rank in the shard, and the greedy
+    * first-fit walk `p` into 512-token packs, mirroring
+    * [[packSequences]]. */
+  private val packSql =
+    """WITH RECURSIVE t AS (
+      |  SELECT doc_id,
+      |    ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+      |      % 8 AS shard,
+      |    CAST(len(list_filter(string_split_regex(text, '\s+'),
+      |      x -> x != '')) AS BIGINT) AS tokens,
+      |    ROW_NUMBER() OVER (PARTITION BY
+      |      ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8
+      |      ORDER BY doc_id) AS rn
+      |  FROM documents),
+      |p AS (
+      |  SELECT shard, rn, doc_id, tokens, tokens AS acc,
+      |    CAST(0 AS BIGINT) AS pack_id
+      |  FROM t WHERE rn = 1
+      |  UNION ALL
+      |  SELECT t.shard, t.rn, t.doc_id, t.tokens,
+      |    CASE WHEN p.acc + t.tokens > 512 THEN t.tokens
+      |      ELSE p.acc + t.tokens END,
+      |    CASE WHEN p.acc + t.tokens > 512 THEN p.pack_id + 1
+      |      ELSE p.pack_id END
+      |  FROM t JOIN p ON t.shard = p.shard AND t.rn = p.rn + 1)""".stripMargin
+
+  /** `tk`: every document with its token count, the rows
+    * [[curationSets]] starts from. */
+  private val curationDocsSql =
+    """tk AS (
+      |  SELECT doc_id, text,
+      |    CAST(len(list_filter(string_split_regex(text, '\s+'),
+      |      x -> x != '')) AS BIGINT) AS n_toks
+      |  FROM documents)""".stripMargin
+
+  /** `contam`: the non-benchmark documents sharing >= 80 shingles of
+    * `sh` with one benchmark document (doc_id < 20), the decontamination
+    * set of [[curationSets]]. */
+  private val curationContamSql =
+    """contam AS (
+      |  SELECT DISTINCT doc_id FROM (
+      |    SELECT c.doc_id FROM sh c
+      |    JOIN (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20) b
+      |      ON c.s = b.s
+      |    WHERE c.doc_id >= 20
+      |    GROUP BY c.doc_id, b.bench_id HAVING COUNT(*) >= 80))""".stripMargin
+
+  /** Opens the PCA oracles' WITH list: long-form values `e`, per-dim
+    * means `m`, the centered matrix `c` and the all-ones start vector
+    * `v0` of the power iteration. */
+  private val pcaCenteredSql =
+    s"""WITH e AS MATERIALIZED (
+       |  SELECT vec_id, u.i AS dim, emb[u.i] AS v FROM (
+       |    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+       |    FROM embeddings) t,
+       |  UNNEST(generate_series(1, len(emb))) u(i)),
+       |m AS MATERIALIZED (
+       |  SELECT dim, ${sqlAvg("v")} AS mean FROM e GROUP BY dim),
+       |c AS MATERIALIZED (
+       |  SELECT vec_id, e.dim, v - mean AS c FROM e JOIN m USING (dim)),
+       |v0 AS MATERIALIZED (SELECT dim, 1.0 AS vv FROM m)""".stripMargin
+
+  /** `edges` (both directions of `np`) and `reach(node, r)`: every
+    * node with every node it reaches, so `MIN(r)` per node is the
+    * hash-to-min label [[connectedComponents]] converges to. Needs
+    * `WITH RECURSIVE`. */
+  private val reachSql =
+    """edges(a, b) AS (
+      |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
+      |reach(node, r) AS (
+      |  SELECT a, a FROM edges
+      |  UNION
+      |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b)""".stripMargin
+
+  /** The benchmark-overlap pairs: docs sharing >= 8 shingles with a
+    * benchmark doc (doc_id < 20). */
+  private val decontaminateSql =
+    s"""WITH sh AS $shinglesSql,
+       |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
+       |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20)
+       |SELECT c.doc_id, b.bench_id, COUNT(*) AS n_shared
+       |FROM c JOIN b ON c.s = b.s
+       |GROUP BY 1, 2 HAVING COUNT(*) >= 8
+       |ORDER BY doc_id, bench_id""".stripMargin
+
   override def oracles: Map[String, String] = Map(
     "dedup_cluster" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b)
-        |SELECT node AS doc_id, MIN(r) AS cluster_id
-        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql
+         |SELECT node AS doc_id, MIN(r) AS cluster_id
+         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
 
-    "text_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
-        |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20)
-        |SELECT c.doc_id, b.bench_id, COUNT(*) AS n_shared
-        |FROM c JOIN b ON c.s = b.s
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 8
-        |ORDER BY doc_id, bench_id""".stripMargin,
+    "text_decontaminate" -> decontaminateSql,
 
     // Bloom prefilter + exact verify ≡ the exact join (no false
     // negatives), so the oracle is text_decontaminate's, verbatim.
-    "text_bloom_decon" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
-        |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20)
-        |SELECT c.doc_id, b.bench_id, COUNT(*) AS n_shared
-        |FROM c JOIN b ON c.s = b.s
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 8
-        |ORDER BY doc_id, bench_id""".stripMargin,
+    "text_bloom_decon" -> decontaminateSql,
 
     // The greedy reset is sequential per shard; the oracle walks it
     // with a recursive CTE joined on per-shard row number (iteration
     // depth = max docs per shard).
     "pack_sequences" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 8 AS shard,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS tokens,
-        |    ROW_NUMBER() OVER (PARTITION BY
-        |      ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8
-        |      ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |p AS (
-        |  SELECT shard, rn, doc_id, tokens, tokens AS acc,
-        |    CAST(0 AS BIGINT) AS pack_id
-        |  FROM t WHERE rn = 1
-        |  UNION ALL
-        |  SELECT t.shard, t.rn, t.doc_id, t.tokens,
-        |    CASE WHEN p.acc + t.tokens > 512 THEN t.tokens
-        |      ELSE p.acc + t.tokens END,
-        |    CASE WHEN p.acc + t.tokens > 512 THEN p.pack_id + 1
-        |      ELSE p.pack_id END
-        |  FROM t JOIN p ON t.shard = p.shard AND t.rn = p.rn + 1)
-        |SELECT shard, doc_id, tokens, pack_id FROM p
-        |ORDER BY shard, doc_id""".stripMargin,
+      s"""$packSql
+         |SELECT shard, doc_id, tokens, pack_id FROM p
+         |ORDER BY shard, doc_id""".stripMargin,
 
     "pack_efficiency" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 8 AS shard,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS tokens,
-        |    ROW_NUMBER() OVER (PARTITION BY
-        |      ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8
-        |      ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |p AS (
-        |  SELECT shard, rn, doc_id, tokens, tokens AS acc,
-        |    CAST(0 AS BIGINT) AS pack_id
-        |  FROM t WHERE rn = 1
-        |  UNION ALL
-        |  SELECT t.shard, t.rn, t.doc_id, t.tokens,
-        |    CASE WHEN p.acc + t.tokens > 512 THEN t.tokens
-        |      ELSE p.acc + t.tokens END,
-        |    CASE WHEN p.acc + t.tokens > 512 THEN p.pack_id + 1
-        |      ELSE p.pack_id END
-        |  FROM t JOIN p ON t.shard = p.shard AND t.rn = p.rn + 1)
-        |SELECT shard, COUNT(*) AS n_docs,
-        |  CAST(MAX(pack_id) + 1 AS BIGINT) AS n_bins,
-        |  CAST(SUM(tokens) AS BIGINT) AS sum_tokens,
-        |  CAST(CAST(SUM(tokens) AS HUGEINT) * 1000000
-        |    // ((MAX(pack_id) + 1) * 512) AS BIGINT) AS util_ppm,
-        |  CAST((SUM(tokens) + 511) // 512 AS BIGINT) AS lb_bins
-        |FROM p GROUP BY shard ORDER BY shard""".stripMargin,
+      s"""$packSql
+         |SELECT shard, COUNT(*) AS n_docs,
+         |  CAST(MAX(pack_id) + 1 AS BIGINT) AS n_bins,
+         |  CAST(SUM(tokens) AS BIGINT) AS sum_tokens,
+         |  CAST(CAST(SUM(tokens) AS HUGEINT) * 1000000
+         |    // ((MAX(pack_id) + 1) * 512) AS BIGINT) AS util_ppm,
+         |  CAST((SUM(tokens) + 511) // 512 AS BIGINT) AS lb_bins
+         |FROM p GROUP BY shard ORDER BY shard""".stripMargin,
 
     // Every CTE here is AS MATERIALIZED: each pr{i} references pr{i-1}
     // TWICE (rank row + in_sum subjoin), and DuckDB re-inlines plain
@@ -1434,27 +1463,21 @@ object Pipeline extends QueryModule {
     // localCheckpoint; this is the oracle-side equivalent.
     "graph_pagerank" -> {
       val base =
-        """WITH sh AS MATERIALIZED (
-          |  SELECT DISTINCT doc_id, u.s FROM documents,
-          |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-          |    i -> substr(text, i, 8))) u(s)),
-          |sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-          |pairs AS MATERIALIZED (
-          |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-          |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-          |  GROUP BY 1, 2),
-          |np AS MATERIALIZED (
-          |  SELECT a_id, b_id FROM pairs
-          |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-          |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-          |edges AS MATERIALIZED (
-          |  SELECT a_id AS s, b_id AS t FROM np
-          |  UNION ALL SELECT b_id, a_id FROM np),
-          |deg AS MATERIALIZED (SELECT s AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
-          |pr0 AS MATERIALIZED (
-          |  SELECT node, deg, (SELECT COUNT(*) FROM deg) AS n,
-          |    CAST(100000000 AS BIGINT) // (SELECT COUNT(*) FROM deg) AS pr
-          |  FROM deg)""".stripMargin
+        s"""WITH sh AS MATERIALIZED $shinglesSql,
+           |sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+           |pairs AS MATERIALIZED (
+           |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
+           |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
+           |  GROUP BY 1, 2),
+           |np AS MATERIALIZED $jaccardNpSql,
+           |edges AS MATERIALIZED (
+           |  SELECT a_id AS s, b_id AS t FROM np
+           |  UNION ALL SELECT b_id, a_id FROM np),
+           |deg AS MATERIALIZED (SELECT s AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
+           |pr0 AS MATERIALIZED (
+           |  SELECT node, deg, (SELECT COUNT(*) FROM deg) AS n,
+           |    CAST(100000000 AS BIGINT) // (SELECT COUNT(*) FROM deg) AS pr
+           |  FROM deg)""".stripMargin
       val iters = (1 to 5).map { i =>
         s"""pr$i AS MATERIALIZED (
            |  SELECT p.node, p.deg, p.n,
@@ -1471,21 +1494,18 @@ object Pipeline extends QueryModule {
     },
 
     "text_containment" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
-        |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM b GROUP BY 1),
-        |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20),
-        |inter AS (
-        |  SELECT c.doc_id, b.bench_id, COUNT(*) AS inter
-        |  FROM c JOIN b ON c.s = b.s GROUP BY 1, 2)
-        |SELECT doc_id, bench_id, inter, bench_n,
-        |  CAST(inter AS DOUBLE) / bench_n AS containment
-        |FROM inter JOIN bn USING (bench_id)
-        |WHERE inter * 4 >= bench_n
-        |ORDER BY doc_id, bench_id""".stripMargin,
+      s"""WITH sh AS $shinglesSql,
+         |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
+         |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM b GROUP BY 1),
+         |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20),
+         |inter AS (
+         |  SELECT c.doc_id, b.bench_id, COUNT(*) AS inter
+         |  FROM c JOIN b ON c.s = b.s GROUP BY 1, 2)
+         |SELECT doc_id, bench_id, inter, bench_n,
+         |  CAST(inter AS DOUBLE) / bench_n AS containment
+         |FROM inter JOIN bn USING (bench_id)
+         |WHERE inter * 4 >= bench_n
+         |ORDER BY doc_id, bench_id""".stripMargin,
 
     "shard_assign" ->
       """SELECT ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 32 AS shard,
@@ -1493,277 +1513,157 @@ object Pipeline extends QueryModule {
         |FROM documents GROUP BY 1 ORDER BY shard""".stripMargin,
 
     "dedup_survivors_quality" ->
-      """WITH RECURSIVE sh AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
-        |tk AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS n_toks
-        |  FROM documents),
-        |m AS (
-        |  SELECT c.cluster_id, c.node AS doc_id, tk.n_toks,
-        |    tk.n_toks * 4294967296 - c.node AS pk
-        |  FROM clusters c JOIN tk ON tk.doc_id = c.node)
-        |SELECT cluster_id, COUNT(*) AS n_members,
-        |  arg_max(doc_id, pk) AS survivor_id,
-        |  arg_max(n_toks, pk) AS survivor_toks
-        |FROM m GROUP BY cluster_id HAVING COUNT(*) >= 2
-        |ORDER BY cluster_id""".stripMargin,
+      s"""WITH RECURSIVE sh AS MATERIALIZED $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+         |tk AS (
+         |  SELECT doc_id,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'),
+         |      x -> x != '')) AS BIGINT) AS n_toks
+         |  FROM documents),
+         |m AS (
+         |  SELECT c.cluster_id, c.node AS doc_id, tk.n_toks,
+         |    tk.n_toks * 4294967296 - c.node AS pk
+         |  FROM clusters c JOIN tk ON tk.doc_id = c.node)
+         |SELECT cluster_id, COUNT(*) AS n_members,
+         |  arg_max(doc_id, pk) AS survivor_id,
+         |  arg_max(n_toks, pk) AS survivor_toks
+         |FROM m GROUP BY cluster_id HAVING COUNT(*) >= 2
+         |ORDER BY cluster_id""".stripMargin,
 
     "dedup_survivors" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node)
-        |SELECT doc_id, lang FROM documents
-        |WHERE doc_id NOT IN (SELECT node FROM clusters WHERE node <> cluster_id)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node)
+         |SELECT doc_id, lang FROM documents
+         |WHERE doc_id NOT IN (SELECT node FROM clusters WHERE node <> cluster_id)
+         |ORDER BY doc_id""".stripMargin,
 
     // The composed pipeline's oracle is the composition of the
     // already-proven stage oracles: same shingle/cluster prelude as
     // dedup_survivors, same containment test as text_decontaminate,
     // same shard expression as shard_assign.
     "corpus_funnel" ->
-      """WITH RECURSIVE sh AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
-        |tk AS (
-        |  SELECT doc_id, text,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS n_toks
-        |  FROM documents),
-        |input AS (SELECT * FROM tk WHERE doc_id >= 20),
-        |quality AS (SELECT * FROM input WHERE n_toks >= 20),
-        |firsts AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY md5(text)),
-        |exact AS (SELECT q.* FROM quality q JOIN firsts USING (doc_id)),
-        |surv AS (
-        |  SELECT * FROM exact WHERE doc_id NOT IN
-        |    (SELECT node FROM clusters WHERE node <> cluster_id)),
-        |contam AS (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT c.doc_id FROM sh c
-        |    JOIN (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20) b
-        |      ON c.s = b.s
-        |    WHERE c.doc_id >= 20
-        |    GROUP BY c.doc_id, b.bench_id HAVING COUNT(*) >= 80)),
-        |clean AS (
-        |  SELECT * FROM surv
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contam))
-        |SELECT stage, n_docs FROM (
-        |  SELECT '1_input' AS stage, COUNT(*) AS n_docs FROM input
-        |  UNION ALL SELECT '2_quality', COUNT(*) FROM quality
-        |  UNION ALL SELECT '3_exact_dedup', COUNT(*) FROM exact
-        |  UNION ALL SELECT '4_neardup_survivors', COUNT(*) FROM surv
-        |  UNION ALL SELECT '5_decontaminated', COUNT(*) FROM clean) t
-        |ORDER BY stage""".stripMargin,
+      s"""WITH RECURSIVE sh AS MATERIALIZED $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+         |$curationDocsSql,
+         |input AS (SELECT * FROM tk WHERE doc_id >= 20),
+         |quality AS (SELECT * FROM input WHERE n_toks >= 20),
+         |firsts AS (
+         |  SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY md5(text)),
+         |exact AS (SELECT q.* FROM quality q JOIN firsts USING (doc_id)),
+         |surv AS (
+         |  SELECT * FROM exact WHERE doc_id NOT IN
+         |    (SELECT node FROM clusters WHERE node <> cluster_id)),
+         |$curationContamSql,
+         |clean AS (
+         |  SELECT * FROM surv
+         |  WHERE doc_id NOT IN (SELECT doc_id FROM contam))
+         |SELECT stage, n_docs FROM (
+         |  SELECT '1_input' AS stage, COUNT(*) AS n_docs FROM input
+         |  UNION ALL SELECT '2_quality', COUNT(*) FROM quality
+         |  UNION ALL SELECT '3_exact_dedup', COUNT(*) FROM exact
+         |  UNION ALL SELECT '4_neardup_survivors', COUNT(*) FROM surv
+         |  UNION ALL SELECT '5_decontaminated', COUNT(*) FROM clean) t
+         |ORDER BY stage""".stripMargin,
 
     "corpus_curate" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
-        |tk AS (
-        |  SELECT doc_id, text,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS n_toks
-        |  FROM documents),
-        |corpus AS (SELECT * FROM tk WHERE doc_id >= 20 AND n_toks >= 20),
-        |firsts AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-        |exact AS (SELECT c.* FROM corpus c JOIN firsts USING (doc_id)),
-        |contam AS (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT c.doc_id FROM sh c
-        |    JOIN (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20) b
-        |      ON c.s = b.s
-        |    WHERE c.doc_id >= 20
-        |    GROUP BY c.doc_id, b.bench_id HAVING COUNT(*) >= 80))
-        |SELECT
-        |  ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |    % 32 AS shard,
-        |  COUNT(*) AS n_docs,
-        |  CAST(SUM(n_toks) AS BIGINT) AS total_tokens
-        |FROM exact
-        |WHERE doc_id NOT IN
-        |    (SELECT node FROM clusters WHERE node <> cluster_id)
-        |  AND doc_id NOT IN (SELECT doc_id FROM contam)
-        |GROUP BY shard ORDER BY shard""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+         |$curationDocsSql,
+         |corpus AS (SELECT * FROM tk WHERE doc_id >= 20 AND n_toks >= 20),
+         |firsts AS (
+         |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
+         |exact AS (SELECT c.* FROM corpus c JOIN firsts USING (doc_id)),
+         |$curationContamSql
+         |SELECT
+         |  ('0x' || substr(md5('sh' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+         |    % 32 AS shard,
+         |  COUNT(*) AS n_docs,
+         |  CAST(SUM(n_toks) AS BIGINT) AS total_tokens
+         |FROM exact
+         |WHERE doc_id NOT IN
+         |    (SELECT node FROM clusters WHERE node <> cluster_id)
+         |  AND doc_id NOT IN (SELECT doc_id FROM contam)
+         |GROUP BY shard ORDER BY shard""".stripMargin,
 
     "corpus_release" ->
-      """WITH RECURSIVE sh AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS MATERIALIZED (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |cl AS MATERIALIZED (SELECT node AS doc_id, MIN(r) AS cluster_id
-        |  FROM reach GROUP BY node),
-        |tk AS (
-        |  SELECT doc_id, text,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |      x -> x != '')) AS BIGINT) AS n_toks
-        |  FROM documents),
-        |corpus AS (SELECT * FROM tk WHERE doc_id >= 20 AND n_toks >= 20),
-        |firsts AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-        |exact AS (SELECT c.* FROM corpus c JOIN firsts USING (doc_id)),
-        |contam AS (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT c.doc_id FROM sh c
-        |    JOIN (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20) b
-        |      ON c.s = b.s
-        |    WHERE c.doc_id >= 20
-        |    GROUP BY c.doc_id, b.bench_id HAVING COUNT(*) >= 80)),
-        |clean AS (
-        |  SELECT * FROM exact
-        |  WHERE doc_id NOT IN
-        |      (SELECT doc_id FROM cl WHERE doc_id <> cluster_id)
-        |    AND doc_id NOT IN (SELECT doc_id FROM contam)),
-        |h AS MATERIALIZED (SELECT doc_id,
-        |  ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b0
-        |  FROM documents),
-        |j AS (SELECT h.doc_id, COALESCE(cl.cluster_id, h.doc_id) AS rep_id
-        |  FROM h LEFT JOIN cl ON cl.doc_id = h.doc_id),
-        |sp AS (
-        |  SELECT j.doc_id, CASE WHEN rh.b0 < 90 THEN 'train'
-        |    WHEN rh.b0 < 95 THEN 'val' ELSE 'test' END AS split
-        |  FROM j JOIN h rh ON rh.doc_id = j.rep_id),
-        |rel AS MATERIALIZED (
-        |  SELECT c.doc_id, c.n_toks, d.source, sp.split
-        |  FROM clean c JOIN sp ON sp.doc_id = c.doc_id
-        |  JOIN documents d ON d.doc_id = c.doc_id),
-        |lp AS (
-        |  SELECT ra.split AS a_split, rb.split AS b_split
-        |  FROM np JOIN rel ra ON ra.doc_id = np.a_id
-        |  JOIN rel rb ON rb.doc_id = np.b_id
-        |  WHERE ra.split != rb.split),
-        |leaks AS (
-        |  SELECT split, COUNT(*) AS leak_pairs FROM (
-        |    SELECT a_split AS split FROM lp
-        |    UNION ALL SELECT b_split FROM lp) t GROUP BY 1),
-        |card AS (
-        |  SELECT split, COUNT(*) AS n_docs,
-        |    CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
-        |    CAST(SUM(n_toks) * 1000 // COUNT(*) AS BIGINT)
-        |      AS mean_tokens_milli,
-        |    CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
-        |  FROM rel GROUP BY 1)
-        |SELECT card.split, n_docs, total_tokens, mean_tokens_milli,
-        |  n_sources, CAST(COALESCE(leak_pairs, 0) AS BIGINT) AS leak_pairs,
-        |  COALESCE(leak_pairs, 0) = 0 AS release_ok
-        |FROM card LEFT JOIN leaks ON leaks.split = card.split
-        |ORDER BY card.split""".stripMargin,
+      s"""WITH RECURSIVE sh AS MATERIALIZED $shinglesSql,
+         |$shinglePairsSql,
+         |np AS MATERIALIZED $jaccardNpSql,
+         |$reachSql,
+         |cl AS MATERIALIZED (SELECT node AS doc_id, MIN(r) AS cluster_id
+         |  FROM reach GROUP BY node),
+         |$curationDocsSql,
+         |corpus AS (SELECT * FROM tk WHERE doc_id >= 20 AND n_toks >= 20),
+         |firsts AS (
+         |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
+         |exact AS (SELECT c.* FROM corpus c JOIN firsts USING (doc_id)),
+         |$curationContamSql,
+         |clean AS (
+         |  SELECT * FROM exact
+         |  WHERE doc_id NOT IN
+         |      (SELECT doc_id FROM cl WHERE doc_id <> cluster_id)
+         |    AND doc_id NOT IN (SELECT doc_id FROM contam)),
+         |h AS MATERIALIZED (SELECT doc_id,
+         |  ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b0
+         |  FROM documents),
+         |j AS (SELECT h.doc_id, COALESCE(cl.cluster_id, h.doc_id) AS rep_id
+         |  FROM h LEFT JOIN cl ON cl.doc_id = h.doc_id),
+         |sp AS (
+         |  SELECT j.doc_id, CASE WHEN rh.b0 < 90 THEN 'train'
+         |    WHEN rh.b0 < 95 THEN 'val' ELSE 'test' END AS split
+         |  FROM j JOIN h rh ON rh.doc_id = j.rep_id),
+         |rel AS MATERIALIZED (
+         |  SELECT c.doc_id, c.n_toks, d.source, sp.split
+         |  FROM clean c JOIN sp ON sp.doc_id = c.doc_id
+         |  JOIN documents d ON d.doc_id = c.doc_id),
+         |lp AS (
+         |  SELECT ra.split AS a_split, rb.split AS b_split
+         |  FROM np JOIN rel ra ON ra.doc_id = np.a_id
+         |  JOIN rel rb ON rb.doc_id = np.b_id
+         |  WHERE ra.split != rb.split),
+         |leaks AS (
+         |  SELECT split, COUNT(*) AS leak_pairs FROM (
+         |    SELECT a_split AS split FROM lp
+         |    UNION ALL SELECT b_split FROM lp) t GROUP BY 1),
+         |card AS (
+         |  SELECT split, COUNT(*) AS n_docs,
+         |    CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
+         |    CAST(SUM(n_toks) * 1000 // COUNT(*) AS BIGINT)
+         |      AS mean_tokens_milli,
+         |    CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
+         |  FROM rel GROUP BY 1)
+         |SELECT card.split, n_docs, total_tokens, mean_tokens_milli,
+         |  n_sources, CAST(COALESCE(leak_pairs, 0) AS BIGINT) AS leak_pairs,
+         |  COALESCE(leak_pairs, 0) = 0 AS release_ok
+         |FROM card LEFT JOIN leaks ON leaks.split = card.split
+         |ORDER BY card.split""".stripMargin,
 
     "dedup_source_stats" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
-        |dropped AS (SELECT node FROM clusters WHERE node <> cluster_id)
-        |SELECT d.source, COUNT(*) AS n_docs,
-        |  CAST(SUM(CASE WHEN dr.node IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_dropped,
-        |  CAST(SUM(CASE WHEN dr.node IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-        |    AS BIGINT) // COUNT(*) AS dup_ppm
-        |FROM documents d LEFT JOIN dropped dr ON d.doc_id = dr.node
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |clusters AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+         |dropped AS (SELECT node FROM clusters WHERE node <> cluster_id)
+         |SELECT d.source, COUNT(*) AS n_docs,
+         |  CAST(SUM(CASE WHEN dr.node IS NOT NULL THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS n_dropped,
+         |  CAST(SUM(CASE WHEN dr.node IS NOT NULL THEN 1 ELSE 0 END) * 1000000
+         |    AS BIGINT) // COUNT(*) AS dup_ppm
+         |FROM documents d LEFT JOIN dropped dr ON d.doc_id = dr.node
+         |GROUP BY d.source ORDER BY d.source""".stripMargin,
 
     "emb_whiten" -> {
       import graft.Num.sqlAvg
@@ -1790,18 +1690,6 @@ object Pipeline extends QueryModule {
     // Same MATERIALIZED discipline as graph_pagerank: every iteration
     // CTE is referenced more than once downstream.
     "emb_pca_power" -> {
-      import graft.Num.{sqlAvg, sqlSum}
-      val base =
-        s"""WITH e AS MATERIALIZED (
-           |  SELECT vec_id, u.i AS dim, emb[u.i] AS v FROM (
-           |    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           |    FROM embeddings) t,
-           |  UNNEST(generate_series(1, len(emb))) u(i)),
-           |m AS MATERIALIZED (
-           |  SELECT dim, ${sqlAvg("v")} AS mean FROM e GROUP BY dim),
-           |c AS MATERIALIZED (
-           |  SELECT vec_id, e.dim, v - mean AS c FROM e JOIN m USING (dim)),
-           |v0 AS MATERIALIZED (SELECT dim, 1.0 AS vv FROM m)""".stripMargin
       val iters = (1 to 3).map { k =>
         s"""d$k AS MATERIALIZED (
            |  SELECT vec_id, ${sqlSum("c.c * p.vv")} AS dot
@@ -1814,25 +1702,13 @@ object Pipeline extends QueryModule {
            |v$k AS MATERIALIZED (
            |  SELECT dim, w / (SELECT nrm FROM n$k) AS vv FROM w$k)""".stripMargin
       }.mkString(",\n")
-      base + ",\n" + iters +
+      pcaCenteredSql + ",\n" + iters +
         "\nSELECT dim, CAST(round(vv * 1000000) AS BIGINT) AS loading_ppm," +
         "\n  (SELECT nrm FROM n3) AS eigenvalue" +
         "\nFROM v3 ORDER BY dim"
     },
 
     "emb_pca2" -> {
-      import graft.Num.{sqlAvg, sqlSum}
-      val base =
-        s"""WITH e AS MATERIALIZED (
-           |  SELECT vec_id, u.i AS dim, emb[u.i] AS v FROM (
-           |    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           |    FROM embeddings) t,
-           |  UNNEST(generate_series(1, len(emb))) u(i)),
-           |m AS MATERIALIZED (
-           |  SELECT dim, ${sqlAvg("v")} AS mean FROM e GROUP BY dim),
-           |c AS MATERIALIZED (
-           |  SELECT vec_id, e.dim, v - mean AS c FROM e JOIN m USING (dim)),
-           |v0 AS MATERIALIZED (SELECT dim, 1.0 AS vv FROM m)""".stripMargin
       def chain(mat: String, pfx: String, v0: String) = (1 to 3).map { k =>
         val prev = if (k == 1) v0 else s"$pfx-v${k - 1}"
         s""""$pfx-d$k" AS MATERIALIZED (
@@ -1855,7 +1731,7 @@ object Pipeline extends QueryModule {
            |  SELECT c.vec_id, c.dim, c.c - dproj.dot * p.vv AS c
            |  FROM c JOIN dproj USING (vec_id)
            |  JOIN "p1-v3" p USING (dim))""".stripMargin
-      base + ",\n" + chain("c", "p1", "v0") + ",\n" + deflate + ",\n" +
+      pcaCenteredSql + ",\n" + chain("c", "p1", "v0") + ",\n" + deflate + ",\n" +
         chain("c2", "p2", "v0") +
         "\nSELECT dim, CAST(round(vv * 1000000) AS BIGINT) AS loading_ppm," +
         "\n  (SELECT nrm FROM \"p2-n3\") AS eigenvalue" +
@@ -1905,24 +1781,21 @@ object Pipeline extends QueryModule {
         |GROUP BY f.query_id ORDER BY f.query_id""".stripMargin,
 
     "corpus_contamination_report" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
-        |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20),
-        |flagged AS (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT c.doc_id, b.bench_id FROM c JOIN b ON c.s = b.s
-        |    GROUP BY 1, 2 HAVING COUNT(*) >= 8))
-        |SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(CASE WHEN flagged.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_contaminated,
-        |  CAST(SUM(CASE WHEN flagged.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    * 1000000 // COUNT(*) AS BIGINT) AS rate_ppm
-        |FROM documents LEFT JOIN flagged USING (doc_id)
-        |WHERE documents.doc_id >= 20
-        |GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH sh AS $shinglesSql,
+         |b AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20),
+         |c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20),
+         |flagged AS (
+         |  SELECT DISTINCT doc_id FROM (
+         |    SELECT c.doc_id, b.bench_id FROM c JOIN b ON c.s = b.s
+         |    GROUP BY 1, 2 HAVING COUNT(*) >= 8))
+         |SELECT source, COUNT(*) AS n_docs,
+         |  CAST(SUM(CASE WHEN flagged.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS n_contaminated,
+         |  CAST(SUM(CASE WHEN flagged.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+         |    * 1000000 // COUNT(*) AS BIGINT) AS rate_ppm
+         |FROM documents LEFT JOIN flagged USING (doc_id)
+         |WHERE documents.doc_id >= 20
+         |GROUP BY source ORDER BY source""".stripMargin,
 
     "sample_hash" ->
       """SELECT doc_id, lang FROM documents
@@ -1951,16 +1824,7 @@ object Pipeline extends QueryModule {
          |    ${TextAnalysis.sqlToks} AS toks FROM documents),
          |m AS (
          |  SELECT doc_id, n_chars,
-         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-         |    CAST(list_sum(list_prepend(0,
-         |      list_transform(toks, t -> len(t)))) AS BIGINT) AS tok_chars,
-         |    CAST(len(list_filter(toks,
-         |      t -> regexp_matches(t, '[a-zA-Z]'))) AS BIGINT) AS n_alpha,
-         |    CAST(len(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-         |      AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter(toks, t -> t IN
-         |      (${TextAnalysis.stopwords.map("'" + _ + "'").mkString(",")})))
-         |      AS BIGINT) AS n_stop
+         |    ${TextAnalysis.gopherSignalsSql}
          |  FROM t),
          |r AS (
          |  SELECT doc_id, n_tokens, n_chars,
@@ -1986,65 +1850,43 @@ object Pipeline extends QueryModule {
          |ORDER BY split""".stripMargin,
 
     "corpus_split_leakage" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |verified AS (
-        |  SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
-        |  FROM pairs JOIN sz a ON a.doc_id = a_id
-        |  JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |sp AS (
-        |  SELECT doc_id, CASE WHEN b < 90 THEN 'train'
-        |    WHEN b < 95 THEN 'val' ELSE 'test' END AS split
-        |  FROM (SELECT doc_id,
-        |    ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b
-        |    FROM documents))
-        |SELECT a_id, b_id, sa.split AS a_split, sb.split AS b_split,
-        |  inter, union_n
-        |FROM verified JOIN sp sa ON sa.doc_id = a_id
-        |JOIN sp sb ON sb.doc_id = b_id
-        |WHERE sa.split != sb.split
-        |ORDER BY a_id, b_id""".stripMargin,
+      s"""WITH sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |verified AS (
+         |  SELECT a_id, b_id, inter, a.n + b.n - inter AS union_n
+         |  FROM pairs JOIN sz a ON a.doc_id = a_id
+         |  JOIN sz b ON b.doc_id = b_id
+         |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
+         |sp AS (
+         |  SELECT doc_id, CASE WHEN b < 90 THEN 'train'
+         |    WHEN b < 95 THEN 'val' ELSE 'test' END AS split
+         |  FROM (SELECT doc_id,
+         |    ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b
+         |    FROM documents))
+         |SELECT a_id, b_id, sa.split AS a_split, sb.split AS b_split,
+         |  inter, union_n
+         |FROM verified JOIN sp sa ON sa.doc_id = a_id
+         |JOIN sp sb ON sb.doc_id = b_id
+         |WHERE sa.split != sb.split
+         |ORDER BY a_id, b_id""".stripMargin,
 
     "corpus_split_safe" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |cl AS (SELECT node AS doc_id, MIN(r) AS cluster_id
-        |  FROM reach GROUP BY node),
-        |h AS (SELECT doc_id,
-        |  ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b0
-        |  FROM documents),
-        |j AS (SELECT h.doc_id, COALESCE(cl.cluster_id, h.doc_id) AS rep_id,
-        |  h.b0 FROM h LEFT JOIN cl ON cl.doc_id = h.doc_id)
-        |SELECT j.doc_id, j.rep_id, rh.b0 AS bucket,
-        |  CASE WHEN rh.b0 < 90 THEN 'train'
-        |       WHEN rh.b0 < 95 THEN 'val' ELSE 'test' END AS split
-        |FROM j JOIN h rh ON rh.doc_id = j.rep_id
-        |ORDER BY j.doc_id""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |cl AS (SELECT node AS doc_id, MIN(r) AS cluster_id
+         |  FROM reach GROUP BY node),
+         |h AS (SELECT doc_id,
+         |  ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS b0
+         |  FROM documents),
+         |j AS (SELECT h.doc_id, COALESCE(cl.cluster_id, h.doc_id) AS rep_id,
+         |  h.b0 FROM h LEFT JOIN cl ON cl.doc_id = h.doc_id)
+         |SELECT j.doc_id, j.rep_id, rh.b0 AS bucket,
+         |  CASE WHEN rh.b0 < 90 THEN 'train'
+         |       WHEN rh.b0 < 95 THEN 'val' ELSE 'test' END AS split
+         |FROM j JOIN h rh ON rh.doc_id = j.rep_id
+         |ORDER BY j.doc_id""".stripMargin,
 
     "corpus_split_report" ->
       """WITH a AS (
@@ -2156,33 +1998,18 @@ object Pipeline extends QueryModule {
         |FROM counted GROUP BY source ORDER BY source""".stripMargin,
 
     "dedup_cluster_hist" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, u.s FROM documents,
-        |  UNNEST(list_transform(generate_series(1, greatest(1, len(text) - 7)),
-        |    i -> substr(text, i, 8))) u(s)),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, COUNT(*) AS inter
-        |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |np AS (
-        |  SELECT a_id, b_id FROM pairs
-        |  JOIN sz a ON a.doc_id = a_id JOIN sz b ON b.doc_id = b_id
-        |  WHERE inter * 5 >= (a.n + b.n - inter) * 4),
-        |edges(a, b) AS (
-        |  SELECT a_id, b_id FROM np UNION SELECT b_id, a_id FROM np),
-        |reach(node, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b),
-        |cc AS (
-        |  SELECT node AS doc_id, MIN(r) AS cluster_id
-        |  FROM reach GROUP BY node),
-        |sizes AS (
-        |  SELECT cluster_id, COUNT(*) AS cluster_size
-        |  FROM cc GROUP BY cluster_id)
-        |SELECT cluster_size, COUNT(*) AS n_clusters
-        |FROM sizes GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
+      s"""WITH RECURSIVE sh AS $shinglesSql,
+         |$shinglePairsSql,
+         |np AS $jaccardNpSql,
+         |$reachSql,
+         |cc AS (
+         |  SELECT node AS doc_id, MIN(r) AS cluster_id
+         |  FROM reach GROUP BY node),
+         |sizes AS (
+         |  SELECT cluster_id, COUNT(*) AS cluster_size
+         |  FROM cc GROUP BY cluster_id)
+         |SELECT cluster_size, COUNT(*) AS n_clusters
+         |FROM sizes GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
 
     "corpus_mix" ->
       """SELECT source, lang, COUNT(*) AS n_docs,
@@ -2264,59 +2091,31 @@ object Pipeline extends QueryModule {
     },
 
     "emb_class_reps" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT vec_id, label, i AS dim,
-        |    CAST(round(1000000 * CAST(embedding[i] AS DOUBLE)) AS BIGINT)
-        |      AS q
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)),
-        |c AS (
-        |  SELECT label, dim,
-        |    CAST((SUM(q) + 1000000000 * COUNT(*)) // COUNT(*)
-        |      - 1000000000 AS BIGINT) AS cq
-        |  FROM e GROUP BY label, dim),
-        |d AS (
-        |  SELECT e.vec_id, e.label,
-        |    CAST(SUM((e.q - c.cq) * (e.q - c.cq)) AS BIGINT) AS d2
-        |  FROM e JOIN c ON e.label = c.label AND e.dim = c.dim
-        |  GROUP BY e.vec_id, e.label),
-        |r AS (
-        |  SELECT label, vec_id, d2,
-        |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2, vec_id) AS rk
-        |  FROM d)
-        |SELECT label, rk, vec_id, d2 FROM r WHERE rk <= 5
-        |ORDER BY label, rk""".stripMargin,
+      s"""$labelCentroidSql,
+         |r AS (
+         |  SELECT label, vec_id, d2,
+         |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2, vec_id) AS rk
+         |  FROM d)
+         |SELECT label, rk, vec_id, d2 FROM r WHERE rk <= 5
+         |ORDER BY label, rk""".stripMargin,
 
     "emb_label_outliers" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT vec_id, label, i AS dim,
-        |    CAST(round(1000000 * CAST(embedding[i] AS DOUBLE)) AS BIGINT)
-        |      AS q
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)),
-        |c AS (
-        |  SELECT label, dim,
-        |    CAST((SUM(q) + 1000000000 * COUNT(*)) // COUNT(*)
-        |      - 1000000000 AS BIGINT) AS cq
-        |  FROM e GROUP BY label, dim),
-        |d AS (
-        |  SELECT e.vec_id, e.label,
-        |    CAST(SUM((e.q - c.cq) * (e.q - c.cq)) AS BIGINT) AS d2
-        |  FROM e JOIN c ON e.label = c.label AND e.dim = c.dim
-        |  GROUP BY e.vec_id, e.label),
-        |r AS (
-        |  SELECT label, vec_id, d2,
-        |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2, vec_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY label) AS cnt
-        |  FROM d),
-        |m AS (SELECT label, d2 AS med_d2 FROM r WHERE rn = (cnt + 1) // 2),
-        |f AS (
-        |  SELECT label, vec_id, d2,
-        |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2 DESC, vec_id)
-        |      AS rk
-        |  FROM r)
-        |SELECT f.label, f.rk, f.vec_id, f.d2, m.med_d2,
-        |  CAST(f.d2 AS DOUBLE) / m.med_d2 AS ratio
-        |FROM f JOIN m USING (label)
-        |WHERE f.rk <= 5
-        |ORDER BY f.label, f.rk""".stripMargin
+      s"""$labelCentroidSql,
+         |r AS (
+         |  SELECT label, vec_id, d2,
+         |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2, vec_id) AS rn,
+         |    COUNT(*) OVER (PARTITION BY label) AS cnt
+         |  FROM d),
+         |m AS (SELECT label, d2 AS med_d2 FROM r WHERE rn = (cnt + 1) // 2),
+         |f AS (
+         |  SELECT label, vec_id, d2,
+         |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2 DESC, vec_id)
+         |      AS rk
+         |  FROM r)
+         |SELECT f.label, f.rk, f.vec_id, f.d2, m.med_d2,
+         |  CAST(f.d2 AS DOUBLE) / m.med_d2 AS ratio
+         |FROM f JOIN m USING (label)
+         |WHERE f.rk <= 5
+         |ORDER BY f.label, f.rk""".stripMargin
   )
 }

@@ -3004,6 +3004,37 @@ object Relational extends QueryModule {
     })
   )
 
+  /** Opens the time-series oracles' WITH list: weekly counts `daily`,
+    * the first week `mw`, the 6-week shape `wide`, its sums `st` and
+    * the users with non-zero variance `f`, mirroring
+    * TimeSeries.weeklyCounts and featureTable. */
+  private val weeklyFeaturesSql =
+    """WITH daily AS (
+      |  SELECT user_id,
+      |    CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
+      |      AS BIGINT) // 7 AS wk,
+      |    COUNT(*) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      |mw AS (SELECT MIN(wk) AS w0 FROM daily),
+      |wide AS (
+      |  SELECT user_id,
+      |    SUM(CASE WHEN wk - w0 = 0 THEN cnt ELSE 0 END) AS w0c,
+      |    SUM(CASE WHEN wk - w0 = 1 THEN cnt ELSE 0 END) AS w1c,
+      |    SUM(CASE WHEN wk - w0 = 2 THEN cnt ELSE 0 END) AS w2c,
+      |    SUM(CASE WHEN wk - w0 = 3 THEN cnt ELSE 0 END) AS w3c,
+      |    SUM(CASE WHEN wk - w0 = 4 THEN cnt ELSE 0 END) AS w4c,
+      |    SUM(CASE WHEN wk - w0 = 5 THEN cnt ELSE 0 END) AS w5c
+      |  FROM daily CROSS JOIN mw GROUP BY 1),
+      |st AS (
+      |  SELECT user_id, w0c, w1c, w2c, w3c, w4c, w5c,
+      |    w0c + w1c + w2c + w3c + w4c + w5c AS sx,
+      |    6 * (w0c::HUGEINT*w0c + w1c::HUGEINT*w1c + w2c::HUGEINT*w2c
+      |       + w3c::HUGEINT*w3c + w4c::HUGEINT*w4c + w5c::HUGEINT*w5c)
+      |      - (w0c + w1c + w2c + w3c + w4c + w5c)::HUGEINT
+      |        * (w0c + w1c + w2c + w3c + w4c + w5c) AS vx
+      |  FROM wide),
+      |f AS (SELECT * FROM st WHERE vx > 0)""".stripMargin
+
   override def oracles: Map[String, String] = Map(
     "q_exact_median" ->
       """WITH r AS (
@@ -3979,31 +4010,7 @@ object Relational extends QueryModule {
         |FROM res ORDER BY method""".stripMargin,
 
     "q_ts_similarity" ->
-      s"""WITH daily AS (
-        |  SELECT user_id,
-        |    CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |      AS BIGINT) // 7 AS wk,
-        |    COUNT(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |mw AS (SELECT MIN(wk) AS w0 FROM daily),
-        |wide AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN wk - w0 = 0 THEN cnt ELSE 0 END) AS w0c,
-        |    SUM(CASE WHEN wk - w0 = 1 THEN cnt ELSE 0 END) AS w1c,
-        |    SUM(CASE WHEN wk - w0 = 2 THEN cnt ELSE 0 END) AS w2c,
-        |    SUM(CASE WHEN wk - w0 = 3 THEN cnt ELSE 0 END) AS w3c,
-        |    SUM(CASE WHEN wk - w0 = 4 THEN cnt ELSE 0 END) AS w4c,
-        |    SUM(CASE WHEN wk - w0 = 5 THEN cnt ELSE 0 END) AS w5c
-        |  FROM daily CROSS JOIN mw GROUP BY 1),
-        |st AS (
-        |  SELECT user_id, w0c, w1c, w2c, w3c, w4c, w5c,
-        |    w0c + w1c + w2c + w3c + w4c + w5c AS sx,
-        |    6 * (w0c::HUGEINT*w0c + w1c::HUGEINT*w1c + w2c::HUGEINT*w2c
-        |       + w3c::HUGEINT*w3c + w4c::HUGEINT*w4c + w5c::HUGEINT*w5c)
-        |      - (w0c + w1c + w2c + w3c + w4c + w5c)::HUGEINT
-        |        * (w0c + w1c + w2c + w3c + w4c + w5c) AS vx
-        |  FROM wide),
-        |f AS (SELECT * FROM st WHERE vx > 0),
+      s"""$weeklyFeaturesSql,
         |nn AS (SELECT COUNT(*) AS n_users,
         |  GREATEST(1, LEAST(1024, COUNT(*) // 64)) AS k FROM f),
         |mxx AS (SELECT MAX(sx) AS mx FROM f),
@@ -4050,31 +4057,7 @@ object Relational extends QueryModule {
         |ORDER BY u1, u2""".stripMargin,
 
     "q_sax_words" ->
-      s"""WITH daily AS (
-        |  SELECT user_id,
-        |    CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |      AS BIGINT) // 7 AS wk,
-        |    COUNT(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |mw AS (SELECT MIN(wk) AS w0 FROM daily),
-        |wide AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN wk - w0 = 0 THEN cnt ELSE 0 END) AS w0c,
-        |    SUM(CASE WHEN wk - w0 = 1 THEN cnt ELSE 0 END) AS w1c,
-        |    SUM(CASE WHEN wk - w0 = 2 THEN cnt ELSE 0 END) AS w2c,
-        |    SUM(CASE WHEN wk - w0 = 3 THEN cnt ELSE 0 END) AS w3c,
-        |    SUM(CASE WHEN wk - w0 = 4 THEN cnt ELSE 0 END) AS w4c,
-        |    SUM(CASE WHEN wk - w0 = 5 THEN cnt ELSE 0 END) AS w5c
-        |  FROM daily CROSS JOIN mw GROUP BY 1),
-        |st AS (
-        |  SELECT user_id, w0c, w1c, w2c, w3c, w4c, w5c,
-        |    w0c + w1c + w2c + w3c + w4c + w5c AS sx,
-        |    6 * (w0c::HUGEINT*w0c + w1c::HUGEINT*w1c + w2c::HUGEINT*w2c
-        |       + w3c::HUGEINT*w3c + w4c::HUGEINT*w4c + w5c::HUGEINT*w5c)
-        |      - (w0c + w1c + w2c + w3c + w4c + w5c)::HUGEINT
-        |        * (w0c + w1c + w2c + w3c + w4c + w5c) AS vx
-        |  FROM wide),
-        |f AS (SELECT * FROM st WHERE vx > 0),
+      s"""$weeklyFeaturesSql,
         |sb AS (
         |  SELECT f.*,
         |    ${(0 until 6).map(i =>

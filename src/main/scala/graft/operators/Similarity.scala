@@ -31,7 +31,11 @@ object Similarity extends QueryModule {
   private val NumTables = 16
   private val BitsPerTable = 6
 
-  private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
+  /** Cosine over float vectors with precomputed squared norms; the
+    * strict sequential double fold in FloatDot matches DuckDB's
+    * list_dot_product bit for bit. */
+  private[operators] def cosine(a: Column, an: Column, b: Column,
+      bn: Column): Column =
     float_dot(a, b) / (sqrt(an) * sqrt(bn))
 
   /** Deterministic Rademacher (±1) hyperplane weights — single source
@@ -39,7 +43,8 @@ object Similarity extends QueryModule {
   private def planeWeights(table: Int, bit: Int): Seq[Double] =
     graft.expressions.LshCodes.planeWeights(table, bit)
 
-  private def corpus(s: SparkSession, d: String): DataFrame =
+  /** The (vec_id, embedding, nrm) corpus projection. */
+  private[operators] def corpus(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).select(col("vec_id"), col("embedding"),
       float_dot(col("embedding"), col("embedding")).as("nrm"))
 
@@ -149,9 +154,9 @@ object Similarity extends QueryModule {
     // assignment is a linear pass, search touches nProbe/nCentroids
     // of the corpus. Centroids here are the first 32 vectors
     // (deterministic, so the whole pipeline is SQL-expressible and
-    // hash-exact against the oracle); production swaps in kmeans||
-    // centroids with no other change. Recall vs brute force is
-    // measured in SimilaritySpec.
+    // hash-exact against the oracle); trained centroids would replace
+    // standInCentroids and change nothing else. Recall vs brute force
+    // is measured in SimilaritySpec.
     "sim_ann_ivf" -> ((s, d) =>
       ivfTopK(corpus(s, d), 10).orderBy(col("query_id"), col("rank"))),
 
@@ -170,7 +175,8 @@ object Similarity extends QueryModule {
     // exemption). skew magnitudes: mx·3200 ≤ 3.2e15 at a 1e12-vector
     // corpus — inside long on both engines.
     "sim_ivf_balance" -> ((s, d) => {
-      val sizes = ivfAssign(corpus(s, d), corpus(s, d), "vec_id", 1, 32)
+      val sizes = ivfAssignTo(standInCentroids(corpus(s, d), 32),
+        corpus(s, d), "vec_id", 1)
         .groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
       val tot = sizes.agg(sum(col("n_vecs")).as("total"),
         max(col("n_vecs")).as("mx"))
@@ -289,26 +295,7 @@ object Similarity extends QueryModule {
     }),
 
     "sim_ann_pq" -> ((s, d) => {
-      val (m8, sub, k16) = (8, 8, 16)
-      val e = embeddings(s, d).select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
-        .as("qv"))
-      val subs = e.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m8 - 1})," +
-          s" m -> slice(qv, m * $sub + 1, $sub))")).as(Seq("m", "svec")))
-      val cent = subs.filter(col("vec_id") < k16)
-        .select(col("vec_id").as("cid"), col("m"), col("svec").as("cvec"))
-      val dist = expr("aggregate(zip_with(svec, cvec," +
-        " (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)")
-      val codes = subs.join(broadcast(cent), Seq("m"))
-        .withColumn("pk", dist * lit(k16) + col("cid"))
-        .groupBy(col("vec_id"), col("m")).agg(min(col("pk")).as("mpk"))
-        .select(col("vec_id"), col("m"), (col("mpk") % k16).as("cid"))
-      val lut = subs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("m"),
-          col("svec"))
-        .join(broadcast(cent), Seq("m"))
-        .select(col("query_id"), col("m"), col("cid"), dist.as("pd"))
+      val (codes, lut) = pqCodesLut(s, d)
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("adc"), col("vec_id"))
       codes.join(broadcast(lut), Seq("m", "cid"))
@@ -328,49 +315,20 @@ object Similarity extends QueryModule {
     // search touches nProbe/nCentroids of the corpus and never reads a
     // raw vector: the billion-scale shape where the index is 8 bytes
     // per vector in RAM and the exact-rerank tier sits elsewhere.
-    // Everything reuses the proven kernels bit-for-bit: candidates
-    // come from the sim_ann_ivf pipeline (32 stand-in centroids, 8
-    // probes; production swaps kmeansCentroids with no other change),
-    // codes/LUT from the sim_ann_pq micro-int grid (integer-identical
-    // in both engines). Scale shape: centroids + per-query LUT
-    // broadcast; assignment and the ADC scan are linear passes; the
-    // (query_id, vec_id)-keyed ADC aggregate is map-side combined and
-    // now runs over candidates only — nProbe/32 of the corpus —
-    // instead of sim_ann_pq's deliberately exhaustive scan.
+    // It calls the same kernels as its parts: candidates from
+    // ivfCandidates (sim_ann_ivf's 32 stand-in centroids, 8 probes),
+    // codes/LUT from pqCodesLut (sim_ann_pq's micro-int grid,
+    // integer-identical in both engines). Scale shape: centroids +
+    // per-query LUT broadcast; assignment and the ADC scan are linear
+    // passes; the (query_id, vec_id)-keyed ADC aggregate is map-side
+    // combined and runs over candidates only — nProbe/32 of the
+    // corpus — instead of sim_ann_pq's deliberately exhaustive scan.
     "sim_ann_ivfpq" -> ((s, d) => {
       val c = corpus(s, d)
-      val cent = standInCentroids(c, 32)
-      val lists = ivfAssignTo(cent, c, "vec_id", 1)
-      val q = querySet(c)
-      val probes = ivfAssignTo(cent,
-        q.select(col("query_id"), col("q_emb").as("embedding"),
-          col("q_nrm").as("nrm")), "query_id", 8)
-      val candidates = probes.join(lists, Seq("cid"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"))
-        .distinct()
-      val (m8, sub, k16) = (8, 8, 16)
-      val e = embeddings(s, d).select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
-        .as("qv"))
-      val subs = e.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m8 - 1})," +
-          s" m -> slice(qv, m * $sub + 1, $sub))")).as(Seq("m", "svec")))
-      val pcent = subs.filter(col("vec_id") < k16)
-        .select(col("vec_id").as("cid"), col("m"), col("svec").as("cvec"))
-      val dist = expr("aggregate(zip_with(svec, cvec," +
-        " (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)")
-      val codes = subs.join(broadcast(pcent), Seq("m"))
-        .withColumn("pk", dist * lit(k16) + col("cid"))
-        .groupBy(col("vec_id"), col("m")).agg(min(col("pk")).as("mpk"))
-        .select(col("vec_id"), col("m"), (col("mpk") % k16).as("cid"))
-      val lut = subs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("m"), col("svec"))
-        .join(broadcast(pcent), Seq("m"))
-        .select(col("query_id"), col("m"), col("cid"), dist.as("pd"))
+      val (codes, lut) = pqCodesLut(s, d)
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("adc"), col("vec_id"))
-      candidates.join(codes, Seq("vec_id"))
+      ivfCandidates(c, querySet(c)).join(codes, Seq("vec_id"))
         .join(broadcast(lut), Seq("query_id", "m", "cid"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(sum(col("pd")).as("adc"))
@@ -566,23 +524,21 @@ object Similarity extends QueryModule {
         col("cosine"))
   }
 
-  /** IVF candidate generation + exact scoring. */
-  /** Nearest-centroid assignment against the deterministic first-N
-    * centroids: each row of `df` (which must carry `embedding`/`nrm`)
-    * gets its `topn` nearest centroid ids. The linear pass under both
-    * IVF list building and query probing — corpus × broadcast-32
-    * (bounded small side by construction). */
-  /** The deterministic stand-in coarse quantizer: first-n vectors as
-    * centroids (SQL-expressible, hash-exact against the oracle). */
-  def standInCentroids(c: DataFrame, nCentroids: Int): DataFrame =
+  /** The first `nCentroids` vectors as the IVF coarse quantizer
+    * (cid, c_emb, c_nrm): deterministic, so the whole pipeline is
+    * SQL-expressible and hash-exact against the oracle. */
+  private[operators] def standInCentroids(c: DataFrame,
+      nCentroids: Int): DataFrame =
     c.filter(col("vec_id") < nCentroids)
       .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))
 
-  /** Coarse-quantizer assignment against an EXPLICIT centroid table
-    * (cid, c_emb, c_nrm) — centroids broadcast, one linear pass over
-    * df, per-row top-n window over nCentroids scored rows. */
-  def ivfAssignTo(cent: DataFrame, df: DataFrame, idCol: String,
+  /** Each row of `df` (which must carry `embedding`/`nrm`) with its
+    * `topn` nearest centroids by cosine, ties to the lower cid: the
+    * centroids broadcast, one linear pass over df, a per-row top-n
+    * window over the centroid rows. The pass under both IVF list
+    * building and query probing. */
+  private def ivfAssignTo(cent: DataFrame, df: DataFrame, idCol: String,
       topn: Int): DataFrame = {
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("c_sim").desc, col("cid"))
@@ -594,62 +550,29 @@ object Similarity extends QueryModule {
       .select(col(idCol), col("cid"))
   }
 
-  def ivfAssign(c: DataFrame, df: DataFrame, idCol: String, topn: Int,
-      nCentroids: Int): DataFrame =
-    ivfAssignTo(standInCentroids(c, nCentroids), df, idCol, topn)
-
-  /** Lloyd-refined coarse quantizer: seed from the stand-ins, run
-    * `rounds` of assign→mean (cosine assignment — the emb_kmeans_step
-    * Lloyd update, composed per the sim_ann_ivf contract: "production
-    * swaps in kmeans centroids with no other change"). Each round is
-    * one broadcast-assign pass over the corpus plus a (cid, dim)
-    * aggregate — linear at any corpus size; the centroid table stays
-    * nCentroids rows and re-broadcasts. localCheckpoint per round cuts
-    * the iterative lineage (the emb_pca2 analysis-blowup lesson).
-    * Empty clusters drop, which IVF tolerates (fewer lists). Recall
-    * at-or-above the stand-in index is asserted in SimilaritySpec. */
-  def kmeansCentroids(c: DataFrame, nCentroids: Int = 32,
-      rounds: Int = 2): DataFrame = {
-    var cent = standInCentroids(c, nCentroids)
-    for (_ <- 1 to rounds) {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_sim").desc, col("cid"))
-      val assigned = c.crossJoin(broadcast(cent))
-        .withColumn("c_sim", cosine(col("embedding"), col("nrm"),
-          col("c_emb"), col("c_nrm")))
-        .withColumn("c_rk", row_number().over(w))
-        .filter(col("c_rk") === 1)
-        .select(col("cid"), col("embedding"))
-      cent = assigned
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("dim"))
-        .agg(avg(col("v")).as("m"))
-        .groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(dim, m)))," +
-          " x -> cast(x.m as float))").as("c_emb"))
-        .withColumn("c_nrm", float_dot(col("c_emb"), col("c_emb")))
-        .select(col("cid"), col("c_emb"), col("c_nrm"))
-        .localCheckpoint()
-    }
-    cent
-  }
-
-  def ivfTopK(c: DataFrame, k: Int, nCentroids: Int = 32,
-      nProbe: Int = 8, centroids: DataFrame = null): DataFrame = {
-    val cent =
-      if (centroids == null) standInCentroids(c, nCentroids) else centroids
+  /** The IVF candidate step: every vector of `c` goes to the list of
+    * its nearest of the 32 stand-in centroids, and each probe of `q`
+    * reads its 8 nearest lists. Returns the distinct (query_id,
+    * vec_id) pairs found there, the probe itself excluded. Shared by
+    * sim_ann_ivf (exact re-score) and sim_ann_ivfpq (ADC over codes). */
+  private def ivfCandidates(c: DataFrame, q: DataFrame): DataFrame = {
+    val cent = standInCentroids(c, 32)
     val lists = ivfAssignTo(cent, c, "vec_id", 1)
-    val q = querySet(c)
     val probes = ivfAssignTo(cent,
       q.select(col("query_id"), col("q_emb").as("embedding"),
-        col("q_nrm").as("nrm")), "query_id", nProbe)
-    val candidates = probes.join(lists, Seq("cid"))
+        col("q_nrm").as("nrm")), "query_id", 8)
+    probes.join(lists, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
+  }
+
+  /** IVF candidates re-scored by exact cosine, top `k` per probe. */
+  private def ivfTopK(c: DataFrame, k: Int): DataFrame = {
+    val q = querySet(c)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
-    candidates
+    ivfCandidates(c, q)
       .join(c, Seq("vec_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cosine", cosine(col("q_emb"), col("q_nrm"),
@@ -658,6 +581,38 @@ object Similarity extends QueryModule {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
         col("cosine"))
+  }
+
+  /** The PQ kernel shared by sim_ann_pq and sim_ann_ivfpq: every vector
+    * on the micro-int grid (integer-identical in both engines), cut
+    * into 8 subvectors of 8; each subspace's codebook is the first 16
+    * vectors' subvectors. Returns `codes` (vec_id, m, cid), each
+    * subvector's nearest codeword by squared L2 (ties to the lower
+    * cid), and the 10 probes' lookup table `lut` (query_id, m, cid,
+    * pd), the squared distance from each probe subvector to each
+    * codeword. */
+  private def pqCodesLut(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val (m8, sub, k16) = (8, 8, 16)
+    val e = embeddings(s, d).select(col("vec_id"), expr(
+      "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
+      .as("qv"))
+    val subs = e.select(col("vec_id"), posexplode(expr(
+      s"transform(sequence(0, ${m8 - 1})," +
+        s" m -> slice(qv, m * $sub + 1, $sub))")).as(Seq("m", "svec")))
+    val cent = subs.filter(col("vec_id") < k16)
+      .select(col("vec_id").as("cid"), col("m"), col("svec").as("cvec"))
+    val dist = expr("aggregate(zip_with(svec, cvec," +
+      " (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)")
+    val codes = subs.join(broadcast(cent), Seq("m"))
+      .withColumn("pk", dist * lit(k16) + col("cid"))
+      .groupBy(col("vec_id"), col("m")).agg(min(col("pk")).as("mpk"))
+      .select(col("vec_id"), col("m"), (col("mpk") % k16).as("cid"))
+    val lut = subs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("m"), col("svec"))
+      .join(broadcast(cent), Seq("m"))
+      .select(col("query_id"), col("m"), col("cid"), dist.as("pd"))
+    (codes, lut)
   }
 
   /** SQL literal for one hyperplane's ±1 weights. */
@@ -671,6 +626,91 @@ object Similarity extends QueryModule {
     (0 until BitsPerTable).map { bit =>
       s"(CASE WHEN list_dot_product(emb, ${weightsLit(table, bit)}) >= 0 THEN ${1 << bit} ELSE 0 END)"
     }.mkString(" + ")
+
+  // DuckDB fragments of the kernels above, one definition each; Corpus
+  // splices in corpusSql too. A fragment holds only text that is
+  // byte-identical in every oracle using it: a CTE's `name AS
+  // [MATERIALIZED]` header stays in the oracle.
+
+  /** Body of the float corpus CTE (vec_id, emb, nrm), mirroring
+    * [[corpus]]. */
+  private[operators] val corpusSql =
+    """(
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+      |    list_dot_product(CAST(embedding AS DOUBLE[]),
+      |                     CAST(embedding AS DOUBLE[])) AS nrm
+      |  FROM embeddings)""".stripMargin
+
+  /** The 16 tables' sign codes `k0`..`k15` of `emb`, as select items. */
+  private val lshCodesSql = (0 until NumTables)
+    .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
+
+  /** Body of the coded corpus CTE over `c0`: the codes lsh_codes
+    * gives [[annTopK]] and [[knnEdges]]. */
+  private val lshCorpusSql =
+    s"""(
+       |  SELECT vec_id, emb, nrm,
+       |    $lshCodesSql
+       |  FROM c0)""".stripMargin
+
+  /** The 10 probes `q`, their codes renamed `qk0`..`qk15`. */
+  private val lshProbesSql =
+    s"""q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm,
+       |        ${(0 until NumTables).map(t => s"k$t AS qk$t").mkString(", ")}
+       |      FROM c WHERE vec_id < 10)""".stripMargin
+
+  /** Probe `q` and corpus vector `c` share a bucket in some table. */
+  private val probeCollisionSql =
+    (0 until NumTables).map(t => s"c.k$t = q.qk$t").mkString(" OR ")
+
+  /** Corpus vectors `x` and `y` share a bucket in some table. */
+  private val pairCollisionSql =
+    (0 until NumTables).map(t => s"x.k$t = y.k$t").mkString(" OR ")
+
+  /** The IVF lists over `c`: the 32 stand-in centroids `cent` and each
+    * vector's nearest one `assigned`, mirroring [[standInCentroids]]
+    * and [[ivfAssignTo]] at topn 1. */
+  private val ivfListsSql =
+    """cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
+      |         FROM c WHERE vec_id < 32),
+      |assigned AS (
+      |  SELECT vec_id, cid FROM (
+      |    SELECT c.vec_id, cent.cid,
+      |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
+      |        ORDER BY list_dot_product(c.emb, cent.c_emb)
+      |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
+      |          cent.cid) AS rk
+      |    FROM c CROSS JOIN cent) t WHERE rk = 1)""".stripMargin
+
+  /** The 10 probes `q`, their 8 nearest lists `probes` and the
+    * (query_id, vec_id) candidates `cand` in them, mirroring
+    * [[ivfCandidates]]. */
+  private val ivfCandidatesSql =
+    """q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
+      |      FROM c WHERE vec_id < 10),
+      |probes AS (
+      |  SELECT query_id, cid FROM (
+      |    SELECT q.query_id, cent.cid,
+      |      ROW_NUMBER() OVER (PARTITION BY q.query_id
+      |        ORDER BY list_dot_product(q.q_emb, cent.c_emb)
+      |                   / (sqrt(q.q_nrm) * sqrt(cent.c_nrm)) DESC,
+      |          cent.cid) AS rk
+      |    FROM q CROSS JOIN cent) t WHERE rk <= 8),
+      |cand AS (
+      |  SELECT DISTINCT p.query_id, a.vec_id
+      |  FROM probes p JOIN assigned a ON p.cid = a.cid
+      |  WHERE a.vec_id <> p.query_id)""".stripMargin
+
+  /** The micro-int grid vectors `e` and their 8 subvectors `sub`
+    * (vec_id, m, svec), the input of [[pqCodesLut]]. */
+  private val pqSubvectorsSql =
+    """e AS MATERIALIZED (
+      |  SELECT vec_id, list_transform(embedding,
+      |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+      |  FROM embeddings),
+      |sub AS MATERIALIZED (
+      |  SELECT vec_id, u.m, qv[u.m * 8 + 1 : u.m * 8 + 8] AS svec
+      |  FROM e, UNNEST(generate_series(0, 7)) u(m))""".stripMargin
 
   override def oracles: Map[String, String] = Map(
     "emb_triplets" ->
@@ -705,126 +745,77 @@ object Similarity extends QueryModule {
         |ORDER BY p.query_id""".stripMargin,
 
     "sim_ann_pq" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |sub AS MATERIALIZED (
-        |  SELECT vec_id, u.m, qv[u.m * 8 + 1 : u.m * 8 + 8] AS svec
-        |  FROM e, UNNEST(generate_series(0, 7)) u(m)),
-        |cent AS (SELECT vec_id AS cid, m, svec AS cvec
-        |         FROM sub WHERE vec_id < 16),
-        |codes AS (
-        |  SELECT vec_id, m, CAST(MIN(
-        |      list_sum(list_transform(generate_series(1, 8),
-        |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
-        |      * 16 + cid) % 16 AS BIGINT) AS cid
-        |  FROM sub JOIN cent USING (m)
-        |  GROUP BY vec_id, m),
-        |lut AS (
-        |  SELECT s.vec_id AS query_id, s.m, c.cid,
-        |    CAST(list_sum(list_transform(generate_series(1, 8),
-        |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
-        |      AS BIGINT) AS pd
-        |  FROM sub s JOIN cent c USING (m) WHERE s.vec_id < 10),
-        |adc AS (
-        |  SELECT l.query_id, c.vec_id, CAST(SUM(l.pd) AS BIGINT) AS adc
-        |  FROM codes c JOIN lut l ON c.m = l.m AND c.cid = l.cid
-        |  WHERE c.vec_id <> l.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rank, neighbor_id, adc FROM (
-        |  SELECT query_id, vec_id AS neighbor_id, adc,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY adc, vec_id) AS rank
-        |  FROM adc) t
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+      s"""WITH $pqSubvectorsSql,
+         |cent AS (SELECT vec_id AS cid, m, svec AS cvec
+         |         FROM sub WHERE vec_id < 16),
+         |codes AS (
+         |  SELECT vec_id, m, CAST(MIN(
+         |      list_sum(list_transform(generate_series(1, 8),
+         |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
+         |      * 16 + cid) % 16 AS BIGINT) AS cid
+         |  FROM sub JOIN cent USING (m)
+         |  GROUP BY vec_id, m),
+         |lut AS (
+         |  SELECT s.vec_id AS query_id, s.m, c.cid,
+         |    CAST(list_sum(list_transform(generate_series(1, 8),
+         |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
+         |      AS BIGINT) AS pd
+         |  FROM sub s JOIN cent c USING (m) WHERE s.vec_id < 10),
+         |adc AS (
+         |  SELECT l.query_id, c.vec_id, CAST(SUM(l.pd) AS BIGINT) AS adc
+         |  FROM codes c JOIN lut l ON c.m = l.m AND c.cid = l.cid
+         |  WHERE c.vec_id <> l.query_id
+         |  GROUP BY 1, 2)
+         |SELECT query_id, rank, neighbor_id, adc FROM (
+         |  SELECT query_id, vec_id AS neighbor_id, adc,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY adc, vec_id) AS rank
+         |  FROM adc) t
+         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
     "sim_ann_ivfpq" ->
-      """WITH c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                     CAST(embedding AS DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
-        |         FROM c WHERE vec_id < 32),
-        |assigned AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT c.vec_id, cent.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
-        |        ORDER BY list_dot_product(c.emb, cent.c_emb)
-        |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
-        |          cent.cid) AS rk
-        |    FROM c CROSS JOIN cent) t WHERE rk = 1),
-        |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
-        |      FROM c WHERE vec_id < 10),
-        |probes AS (
-        |  SELECT query_id, cid FROM (
-        |    SELECT q.query_id, cent.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        |        ORDER BY list_dot_product(q.q_emb, cent.c_emb)
-        |                   / (sqrt(q.q_nrm) * sqrt(cent.c_nrm)) DESC,
-        |          cent.cid) AS rk
-        |    FROM q CROSS JOIN cent) t WHERE rk <= 8),
-        |cand AS (
-        |  SELECT DISTINCT p.query_id, a.vec_id
-        |  FROM probes p JOIN assigned a ON p.cid = a.cid
-        |  WHERE a.vec_id <> p.query_id),
-        |e AS MATERIALIZED (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |sub AS MATERIALIZED (
-        |  SELECT vec_id, u.m, qv[u.m * 8 + 1 : u.m * 8 + 8] AS svec
-        |  FROM e, UNNEST(generate_series(0, 7)) u(m)),
-        |pcent AS (SELECT vec_id AS cid, m, svec AS cvec
-        |          FROM sub WHERE vec_id < 16),
-        |codes AS (
-        |  SELECT vec_id, m, CAST(MIN(
-        |      list_sum(list_transform(generate_series(1, 8),
-        |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
-        |      * 16 + cid) % 16 AS BIGINT) AS cid
-        |  FROM sub JOIN pcent USING (m)
-        |  GROUP BY vec_id, m),
-        |lut AS (
-        |  SELECT s.vec_id AS query_id, s.m, c.cid,
-        |    CAST(list_sum(list_transform(generate_series(1, 8),
-        |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
-        |      AS BIGINT) AS pd
-        |  FROM sub s JOIN pcent c USING (m) WHERE s.vec_id < 10),
-        |adc AS (
-        |  SELECT cand.query_id, cand.vec_id,
-        |    CAST(SUM(l.pd) AS BIGINT) AS adc
-        |  FROM cand
-        |  JOIN codes cd ON cd.vec_id = cand.vec_id
-        |  JOIN lut l ON l.query_id = cand.query_id
-        |            AND l.m = cd.m AND l.cid = cd.cid
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rank, neighbor_id, adc FROM (
-        |  SELECT query_id, vec_id AS neighbor_id, adc,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY adc, vec_id) AS rank
-        |  FROM adc) t
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+      s"""WITH c AS $corpusSql,
+         |$ivfListsSql,
+         |$ivfCandidatesSql,
+         |$pqSubvectorsSql,
+         |pcent AS (SELECT vec_id AS cid, m, svec AS cvec
+         |          FROM sub WHERE vec_id < 16),
+         |codes AS (
+         |  SELECT vec_id, m, CAST(MIN(
+         |      list_sum(list_transform(generate_series(1, 8),
+         |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
+         |      * 16 + cid) % 16 AS BIGINT) AS cid
+         |  FROM sub JOIN pcent USING (m)
+         |  GROUP BY vec_id, m),
+         |lut AS (
+         |  SELECT s.vec_id AS query_id, s.m, c.cid,
+         |    CAST(list_sum(list_transform(generate_series(1, 8),
+         |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
+         |      AS BIGINT) AS pd
+         |  FROM sub s JOIN pcent c USING (m) WHERE s.vec_id < 10),
+         |adc AS (
+         |  SELECT cand.query_id, cand.vec_id,
+         |    CAST(SUM(l.pd) AS BIGINT) AS adc
+         |  FROM cand
+         |  JOIN codes cd ON cd.vec_id = cand.vec_id
+         |  JOIN lut l ON l.query_id = cand.query_id
+         |            AND l.m = cd.m AND l.cid = cd.cid
+         |  GROUP BY 1, 2)
+         |SELECT query_id, rank, neighbor_id, adc FROM (
+         |  SELECT query_id, vec_id AS neighbor_id, adc,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY adc, vec_id) AS rank
+         |  FROM adc) t
+         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
-    "sim_knn_graph" -> {
-      val corpusCodes = (0 until NumTables)
-        .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
-      val anyCollision = (0 until NumTables)
-        .map(t => s"x.k$t = y.k$t").mkString(" OR ")
-      s"""WITH c0 AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
-         |c AS (
-         |  SELECT vec_id, emb, nrm,
-         |    $corpusCodes
-         |  FROM c0),
+    "sim_knn_graph" ->
+      s"""WITH c0 AS $corpusSql,
+         |c AS $lshCorpusSql,
          |cand AS (
          |  SELECT x.vec_id, y.vec_id AS nbr_id,
          |    x.emb AS xe, x.nrm AS xn, y.emb AS ye, y.nrm AS yn
          |  FROM c x JOIN c y
-         |    ON x.vec_id <> y.vec_id AND ($anyCollision)),
+         |    ON x.vec_id <> y.vec_id AND ($pairCollisionSql)),
          |ranked AS (
          |  SELECT vec_id, nbr_id,
          |    list_dot_product(xe, ye) / (sqrt(xn) * sqrt(yn)) AS cosine,
@@ -834,14 +825,9 @@ object Similarity extends QueryModule {
          |  FROM cand)
          |SELECT vec_id, rank, nbr_id AS neighbor_id, cosine
          |FROM ranked WHERE rank <= 4
-         |ORDER BY vec_id, rank""".stripMargin
-    },
+         |ORDER BY vec_id, rank""".stripMargin,
 
-    "emb_label_prop" -> {
-      val corpusCodes = (0 until NumTables)
-        .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
-      val anyCollision = (0 until NumTables)
-        .map(t => s"x.k$t = y.k$t").mkString(" OR ")
+    "emb_label_prop" ->
       s"""WITH c0 AS (
          |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
          |    list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -849,13 +835,13 @@ object Similarity extends QueryModule {
          |  FROM embeddings),
          |c AS (
          |  SELECT vec_id, label, emb, nrm,
-         |    $corpusCodes
+         |    $lshCodesSql
          |  FROM c0),
          |cand AS (
          |  SELECT x.vec_id, y.vec_id AS nbr_id, y.label AS n_label,
          |    x.emb AS xe, x.nrm AS xn, y.emb AS ye, y.nrm AS yn
          |  FROM c x JOIN c y
-         |    ON x.vec_id <> y.vec_id AND ($anyCollision)),
+         |    ON x.vec_id <> y.vec_id AND ($pairCollisionSql)),
          |ranked AS (
          |  SELECT vec_id, nbr_id, n_label,
          |    list_dot_product(xe, ye) / (sqrt(xn) * sqrt(yn)) AS cosine,
@@ -876,31 +862,15 @@ object Similarity extends QueryModule {
          |  FROM votes GROUP BY vec_id)
          |SELECT c0.label, pred.predicted, COUNT(*) AS n
          |FROM pred JOIN c0 ON c0.vec_id = pred.vec_id
-         |GROUP BY 1, 2 ORDER BY label, predicted""".stripMargin
-    },
+         |GROUP BY 1, 2 ORDER BY label, predicted""".stripMargin,
 
-    "sim_ann_lsh" -> {
-      val corpusCodes = (0 until NumTables)
-        .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
-      val queryCodes = (0 until NumTables)
-        .map(t => s"k$t AS qk$t").mkString(", ")
-      val anyCollision = (0 until NumTables)
-        .map(t => s"c.k$t = q.qk$t").mkString(" OR ")
-      s"""WITH c0 AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
-         |c AS (
-         |  SELECT vec_id, emb, nrm,
-         |    $corpusCodes
-         |  FROM c0),
-         |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm,
-         |        $queryCodes
-         |      FROM c WHERE vec_id < 10),
+    "sim_ann_lsh" ->
+      s"""WITH c0 AS $corpusSql,
+         |c AS $lshCorpusSql,
+         |$lshProbesSql,
          |cand AS (
          |  SELECT q.query_id, c.vec_id, c.emb, c.nrm, q.q_emb, q.q_nrm
-         |  FROM c JOIN q ON c.vec_id <> q.query_id AND ($anyCollision)),
+         |  FROM c JOIN q ON c.vec_id <> q.query_id AND ($probeCollisionSql)),
          |ranked AS (
          |  SELECT query_id, vec_id,
          |    list_dot_product(q_emb, emb) / (sqrt(q_nrm) * sqrt(nrm))
@@ -911,77 +881,37 @@ object Similarity extends QueryModule {
          |  FROM cand)
          |SELECT query_id, rank, vec_id AS neighbor_id, cosine
          |FROM ranked WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin
-    },
+         |ORDER BY query_id, rank""".stripMargin,
 
     "sim_ann_ivf" ->
-      """WITH c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                     CAST(embedding AS DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
-        |         FROM c WHERE vec_id < 32),
-        |assigned AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT c.vec_id, cent.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
-        |        ORDER BY list_dot_product(c.emb, cent.c_emb)
-        |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
-        |          cent.cid) AS rk
-        |    FROM c CROSS JOIN cent) t WHERE rk = 1),
-        |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
-        |      FROM c WHERE vec_id < 10),
-        |probes AS (
-        |  SELECT query_id, cid FROM (
-        |    SELECT q.query_id, cent.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        |        ORDER BY list_dot_product(q.q_emb, cent.c_emb)
-        |                   / (sqrt(q.q_nrm) * sqrt(cent.c_nrm)) DESC,
-        |          cent.cid) AS rk
-        |    FROM q CROSS JOIN cent) t WHERE rk <= 8),
-        |cand AS (
-        |  SELECT DISTINCT p.query_id, a.vec_id
-        |  FROM probes p JOIN assigned a ON p.cid = a.cid
-        |  WHERE a.vec_id <> p.query_id),
-        |ranked AS (
-        |  SELECT cand.query_id, cand.vec_id,
-        |    list_dot_product(q.q_emb, c.emb) / (sqrt(q.q_nrm) * sqrt(c.nrm))
-        |      AS cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY cand.query_id
-        |      ORDER BY list_dot_product(q.q_emb, c.emb)
-        |                 / (sqrt(q.q_nrm) * sqrt(c.nrm)) DESC,
-        |        cand.vec_id) AS rank
-        |  FROM cand JOIN c ON c.vec_id = cand.vec_id
-        |           JOIN q ON q.query_id = cand.query_id)
-        |SELECT query_id, rank, vec_id AS neighbor_id, cosine
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
+      s"""WITH c AS $corpusSql,
+         |$ivfListsSql,
+         |$ivfCandidatesSql,
+         |ranked AS (
+         |  SELECT cand.query_id, cand.vec_id,
+         |    list_dot_product(q.q_emb, c.emb) / (sqrt(q.q_nrm) * sqrt(c.nrm))
+         |      AS cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY cand.query_id
+         |      ORDER BY list_dot_product(q.q_emb, c.emb)
+         |                 / (sqrt(q.q_nrm) * sqrt(c.nrm)) DESC,
+         |        cand.vec_id) AS rank
+         |  FROM cand JOIN c ON c.vec_id = cand.vec_id
+         |           JOIN q ON q.query_id = cand.query_id)
+         |SELECT query_id, rank, vec_id AS neighbor_id, cosine
+         |FROM ranked WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin,
 
     "sim_ivf_balance" ->
-      """WITH c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                     CAST(embedding AS DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |cent AS (SELECT vec_id AS cid, emb AS c_emb, nrm AS c_nrm
-        |         FROM c WHERE vec_id < 32),
-        |assigned AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT c.vec_id, cent.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
-        |        ORDER BY list_dot_product(c.emb, cent.c_emb)
-        |                   / (sqrt(c.nrm) * sqrt(cent.c_nrm)) DESC,
-        |          cent.cid) AS rk
-        |    FROM c CROSS JOIN cent) t WHERE rk = 1),
-        |sizes AS (SELECT cid, COUNT(*) AS n_vecs
-        |          FROM assigned GROUP BY cid),
-        |tot AS (SELECT CAST(SUM(n_vecs) AS BIGINT) AS total,
-        |          CAST(MAX(n_vecs) AS BIGINT) AS mx FROM sizes)
-        |SELECT cid, n_vecs,
-        |  CAST(n_vecs * 1000000 // total AS BIGINT) AS share_ppm,
-        |  CAST(mx * 3200 // total AS BIGINT) AS skew_x100
-        |FROM sizes, tot ORDER BY cid""".stripMargin,
+      s"""WITH c AS $corpusSql,
+         |$ivfListsSql,
+         |sizes AS (SELECT cid, COUNT(*) AS n_vecs
+         |          FROM assigned GROUP BY cid),
+         |tot AS (SELECT CAST(SUM(n_vecs) AS BIGINT) AS total,
+         |          CAST(MAX(n_vecs) AS BIGINT) AS mx FROM sizes)
+         |SELECT cid, n_vecs,
+         |  CAST(n_vecs * 1000000 // total AS BIGINT) AS share_ppm,
+         |  CAST(mx * 3200 // total AS BIGINT) AS skew_x100
+         |FROM sizes, tot ORDER BY cid""".stripMargin,
 
     "sim_hard_negatives" ->
       """WITH c AS (
@@ -1008,26 +938,22 @@ object Similarity extends QueryModule {
         |ORDER BY query_id, rank""".stripMargin,
 
     "sim_topk_brute" ->
-      """WITH c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                     CAST(embedding AS DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
-        |      FROM c WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.query_id, c.vec_id,
-        |    list_dot_product(q.q_emb, c.emb) / (sqrt(q.q_nrm) * sqrt(c.nrm))
-        |      AS cosine
-        |  FROM c JOIN q ON c.vec_id <> q.query_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, vec_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, rank, vec_id AS neighbor_id, cosine
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
+      s"""WITH c AS $corpusSql,
+         |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
+         |      FROM c WHERE vec_id < 10),
+         |scored AS (
+         |  SELECT q.query_id, c.vec_id,
+         |    list_dot_product(q.q_emb, c.emb) / (sqrt(q.q_nrm) * sqrt(c.nrm))
+         |      AS cosine
+         |  FROM c JOIN q ON c.vec_id <> q.query_id),
+         |ranked AS (
+         |  SELECT query_id, vec_id, cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY cosine DESC, vec_id) AS rank
+         |  FROM scored)
+         |SELECT query_id, rank, vec_id AS neighbor_id, cosine
+         |FROM ranked WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin,
 
     "sim_matryoshka_recall" ->
       """WITH c AS (
@@ -1060,25 +986,10 @@ object Similarity extends QueryModule {
         |  ON f.query_id = p.query_id AND f.vec_id = p.vec_id
         |GROUP BY f.query_id ORDER BY f.query_id""".stripMargin,
 
-    "sim_ann_recall" -> {
-      val corpusCodes = (0 until NumTables)
-        .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
-      val queryCodes = (0 until NumTables)
-        .map(t => s"k$t AS qk$t").mkString(", ")
-      val anyCollision = (0 until NumTables)
-        .map(t => s"c.k$t = q.qk$t").mkString(" OR ")
-      s"""WITH c0 AS MATERIALIZED (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
-         |c AS MATERIALIZED (
-         |  SELECT vec_id, emb, nrm,
-         |    $corpusCodes
-         |  FROM c0),
-         |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm,
-         |        $queryCodes
-         |      FROM c WHERE vec_id < 10),
+    "sim_ann_recall" ->
+      s"""WITH c0 AS MATERIALIZED $corpusSql,
+         |c AS MATERIALIZED $lshCorpusSql,
+         |$lshProbesSql,
          |truth AS (
          |  SELECT query_id, vec_id FROM (
          |    SELECT q.query_id, c0.vec_id,
@@ -1097,7 +1008,7 @@ object Similarity extends QueryModule {
          |    FROM (SELECT q.query_id, c.vec_id, c.emb, c.nrm, q.q_emb,
          |            q.q_nrm
          |          FROM c JOIN q ON c.vec_id <> q.query_id
-         |            AND ($anyCollision)))
+         |            AND ($probeCollisionSql)))
          |  WHERE rank <= 10)
          |SELECT t.query_id, COUNT(*) AS n_truth,
          |  CAST(COALESCE(SUM(CASE WHEN a.vec_id IS NOT NULL
@@ -1107,28 +1018,12 @@ object Similarity extends QueryModule {
          |    AS recall_ppm
          |FROM truth t LEFT JOIN ann a
          |  ON t.query_id = a.query_id AND t.vec_id = a.vec_id
-         |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-    },
+         |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin,
 
-    "sim_recall_curve" -> {
-      val corpusCodes = (0 until NumTables)
-        .map(t => s"${codeSql(t)} AS k$t").mkString(",\n    ")
-      val queryCodes = (0 until NumTables)
-        .map(t => s"k$t AS qk$t").mkString(", ")
-      val anyCollision = (0 until NumTables)
-        .map(t => s"c.k$t = q.qk$t").mkString(" OR ")
-      s"""WITH c0 AS MATERIALIZED (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
-         |c AS MATERIALIZED (
-         |  SELECT vec_id, emb, nrm,
-         |    $corpusCodes
-         |  FROM c0),
-         |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm,
-         |        $queryCodes
-         |      FROM c WHERE vec_id < 10),
+    "sim_recall_curve" ->
+      s"""WITH c0 AS MATERIALIZED $corpusSql,
+         |c AS MATERIALIZED $lshCorpusSql,
+         |$lshProbesSql,
          |truth AS (
          |  SELECT query_id, vec_id, t_rank FROM (
          |    SELECT q.query_id, c0.vec_id,
@@ -1147,7 +1042,7 @@ object Similarity extends QueryModule {
          |    FROM (SELECT q.query_id, c.vec_id, c.emb, c.nrm, q.q_emb,
          |            q.q_nrm
          |          FROM c JOIN q ON c.vec_id <> q.query_id
-         |            AND ($anyCollision)))
+         |            AND ($probeCollisionSql)))
          |  WHERE a_rank <= 20),
          |ks AS (SELECT * FROM (VALUES (1), (5), (10), (20)) t(k))
          |SELECT CAST(k AS BIGINT) AS k,
@@ -1161,18 +1056,13 @@ object Similarity extends QueryModule {
          |  ON t.query_id = a.query_id AND t.vec_id = a.vec_id
          |CROSS JOIN ks
          |WHERE t.t_rank <= k
-         |GROUP BY k ORDER BY k""".stripMargin
-    },
+         |GROUP BY k ORDER BY k""".stripMargin,
 
     "emb_jl_audit" -> {
       val projList = (0 until NumTables)
         .map(t => s"list_dot_product(emb, ${weightsLit(t, 0)})")
         .mkString("[", ", ", "]")
-      s"""WITH c0 AS MATERIALIZED (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                     CAST(embedding AS DOUBLE[])) AS nrm
-         |  FROM embeddings),
+      s"""WITH c0 AS MATERIALIZED $corpusSql,
          |q AS (SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm
          |      FROM c0 WHERE vec_id < 10),
          |truth AS (

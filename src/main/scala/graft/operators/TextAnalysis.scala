@@ -20,7 +20,7 @@ object TextAnalysis extends QueryModule {
   import Num._
 
   /** Non-empty whitespace tokens — identical semantics both engines. */
-  private val toksExpr = "filter(split(text, '\\\\s+'), t -> t != '')"
+  private[operators] val toksExpr = "filter(split(text, '\\\\s+'), t -> t != '')"
 
   private[operators] val stopwords =
     Seq("the", "and", "of", "to", "a", "in", "is", "it")
@@ -125,6 +125,35 @@ object TextAnalysis extends QueryModule {
       .agg(count(lit(1)).as("n_bigrams"),
         graft.Num.davg(col("p")).as("mean_p"))
   }
+
+  /** Opens the bigram-LM oracles' WITH list: bigrams `bg` (doc_id,
+    * w1, big), counts `c2` and `c1`, and P(w2|w1) per bigram `probs`,
+    * mirroring [[bigramFluency]]. */
+  private val bigramProbsSql =
+    s"""WITH bg AS MATERIALIZED (
+       |  SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS big
+       |  FROM (SELECT doc_id, $sqlToks AS toks FROM documents),
+       |  UNNEST(generate_series(1, len(toks) - 1)) u(i)
+       |  WHERE len(toks) >= 2),
+       |c2 AS (SELECT big, w1, COUNT(*) AS c2 FROM bg GROUP BY big, w1),
+       |c1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
+       |probs AS (
+       |  SELECT big, CAST(c2 AS DOUBLE) / c1 AS p
+       |  FROM c2 JOIN c1 USING (w1))""".stripMargin
+
+  /** The per-document counts [[gopherFlags]] tests, as DuckDB select
+    * items over `toks` and `text`. */
+  private[operators] val gopherSignalsSql =
+    s"""CAST(len(toks) AS BIGINT) AS n_tokens,
+       |    CAST(list_sum(list_prepend(0,
+       |      list_transform(toks, t -> len(t)))) AS BIGINT) AS tok_chars,
+       |    CAST(len(list_filter(toks,
+       |      t -> regexp_matches(t, '[a-zA-Z]'))) AS BIGINT) AS n_alpha,
+       |    CAST(len(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      AS BIGINT) AS n_sym,
+       |    CAST(len(list_filter(toks, t -> t IN
+       |      (${stopwords.map("'" + _ + "'").mkString(",")})))
+       |      AS BIGINT) AS n_stop""".stripMargin
 
   /** The Gopher rule battery's per-document flags (doc_id, counts,
     * r_* bits, pass) — shared by text_gopher_rules (which just
@@ -1404,32 +1433,14 @@ object TextAnalysis extends QueryModule {
          |ORDER BY lift_ppm DESC, a, b LIMIT 20""".stripMargin,
 
     "text_bigram_lm" -> {
-      s"""WITH bg AS MATERIALIZED (
-         |  SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS big
-         |  FROM (SELECT doc_id, $sqlToks AS toks FROM documents),
-         |  UNNEST(generate_series(1, len(toks) - 1)) u(i)
-         |  WHERE len(toks) >= 2),
-         |c2 AS (SELECT big, w1, COUNT(*) AS c2 FROM bg GROUP BY big, w1),
-         |c1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-         |probs AS (
-         |  SELECT big, CAST(c2 AS DOUBLE) / c1 AS p
-         |  FROM c2 JOIN c1 USING (w1))
+      s"""$bigramProbsSql
          |SELECT doc_id, COUNT(*) AS n_bigrams, ${sqlAvg("p")} AS mean_p
          |FROM bg JOIN probs USING (big)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin
     },
 
     "text_ccnet_buckets" -> {
-      s"""WITH bg AS MATERIALIZED (
-         |  SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS big
-         |  FROM (SELECT doc_id, $sqlToks AS toks FROM documents),
-         |  UNNEST(generate_series(1, len(toks) - 1)) u(i)
-         |  WHERE len(toks) >= 2),
-         |c2 AS (SELECT big, w1, COUNT(*) AS c2 FROM bg GROUP BY big, w1),
-         |c1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-         |probs AS (
-         |  SELECT big, CAST(c2 AS DOUBLE) / c1 AS p
-         |  FROM c2 JOIN c1 USING (w1)),
+      s"""$bigramProbsSql,
          |score AS (
          |  SELECT doc_id, ${sqlAvg("p")} AS mean_p
          |  FROM bg JOIN probs USING (big) GROUP BY doc_id),
@@ -1528,16 +1539,7 @@ object TextAnalysis extends QueryModule {
          |  SELECT doc_id, text, $sqlToks AS toks FROM documents),
          |m AS (
          |  SELECT doc_id, text,
-         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-         |    CAST(list_sum(list_prepend(0,
-         |      list_transform(toks, t -> len(t)))) AS BIGINT) AS tok_chars,
-         |    CAST(len(list_filter(toks,
-         |      t -> regexp_matches(t, '[a-zA-Z]'))) AS BIGINT) AS n_alpha,
-         |    CAST(len(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-         |      AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter(toks, t -> t IN
-         |      (${stopwords.map("'" + _ + "'").mkString(",")})))
-         |      AS BIGINT) AS n_stop
+         |    $gopherSignalsSql
          |  FROM t),
          |r AS (
          |  SELECT doc_id, n_tokens,
@@ -1619,16 +1621,7 @@ object TextAnalysis extends QueryModule {
          |  FROM t),
          |m AS (
          |  SELECT doc_id,
-         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-         |    CAST(list_sum(list_prepend(0,
-         |      list_transform(toks, t -> len(t)))) AS BIGINT) AS tok_chars,
-         |    CAST(len(list_filter(toks,
-         |      t -> regexp_matches(t, '[a-zA-Z]'))) AS BIGINT) AS n_alpha,
-         |    CAST(len(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-         |      AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter(toks, t -> t IN
-         |      (${stopwords.map("'" + _ + "'").mkString(",")})))
-         |      AS BIGINT) AS n_stop,
+         |    $gopherSignalsSql,
          |    len(text) AS text_len
          |  FROM t),
          |g AS (

@@ -120,32 +120,6 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
-  test("kmeans loop: WCSS is non-increasing across iterations (Lloyd guarantee)") {
-    val vecs = Tables.embeddings(spark, sf)
-    def wcss(iters: Int): Double = {
-      val (assigned, _) = Corpus.kmeans(vecs, k = 8, iters = iters)
-      assigned.agg(sum(col("d2"))).head().getDouble(0)
-    }
-    val w1 = wcss(1); val w2 = wcss(2); val w3 = wcss(3)
-    // Each Lloyd step (re-center, then re-assign) cannot raise the
-    // objective; tiny epsilon absorbs double reassociation noise.
-    assert(w2 <= w1 * (1 + 1e-9), s"WCSS rose: $w1 -> $w2")
-    assert(w3 <= w2 * (1 + 1e-9), s"WCSS rose: $w2 -> $w3")
-    // and the loop genuinely improves on the seed assignment here
-    assert(w3 < w1, s"no improvement after 3 iterations: $w1 -> $w3")
-  }
-
-  test("kmeans loop: assignment partitions the corpus; centroids stay K") {
-    val vecs = Tables.embeddings(spark, sf)
-    val (assigned, cent) = Corpus.kmeans(vecs, k = 8, iters = 2)
-    assert(assigned.count() === vecs.count())
-    assert(assigned.select("vec_id").distinct().count() === vecs.count())
-    assert(cent.count() === 8)
-    // every centroid vector keeps the embedding dimensionality
-    assert(cent.select(expr("size(c_vec)")).distinct().head().getInt(0) ===
-      vecs.select(expr("size(embedding)")).head().getInt(0))
-  }
-
   test("emb_kmeans_step: clusters partition the corpus") {
     val rows = q("emb_kmeans_step").collect()
     assert(rows.length <= 32 && rows.nonEmpty)

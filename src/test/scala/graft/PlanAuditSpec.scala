@@ -209,6 +209,11 @@ class PlanAuditSpec extends SparkSpec {
       // deflated second power chain squares the lineage tree and
       // Catalyst analysis goes exponential (see emb_pca2)
       "emb_pca2")
+    // Other queries (corpus_split_safe, ...) reuse that memoized
+    // cluster fixpoint; whichever query is constructed first runs its
+    // rounds. Compute it here, before counting, so the verdict does
+    // not depend on which tests ran earlier in the session.
+    SparkEntry.queries("dedup_cluster")(spark, sf)
     val sc = spark.sparkContext
     @volatile var jobs = 0
     @volatile var lastSite = ""

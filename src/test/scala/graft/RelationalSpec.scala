@@ -19,6 +19,23 @@ class RelationalSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("every oracle string is fully assembled: no margin bar, no splice left") {
+    // Oracles splice shared SQL fragments into stripMargin literals. A
+    // literal that misses its stripMargin keeps lines starting with a
+    // lone `|`; a splice in a literal without the `s` interpolator
+    // stays `$name` or `${...}`. SQL's `||` continuation lines and a
+    // regex's `$` anchor are legitimate.
+    val splice = """\$[\w{][\w.]*""".r
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, sql) =>
+        val margin = sql.split("\n").map(_.dropWhile(_.isWhitespace))
+          .find(l => l.startsWith("|") && !l.startsWith("||"))
+        margin.map(l => s"$name: unstripped margin: $l") ++
+          splice.findFirstIn(sql).map(m => s"$name: unexpanded splice: $m")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("q1 pushes the shipdate filter into the parquet scan") {
     val plan = SparkEntry.queries("q1_pricing")(spark, sf)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))

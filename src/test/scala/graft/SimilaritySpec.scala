@@ -51,31 +51,6 @@ class SimilaritySpec extends SparkSpec {
     assert(ivfRecall >= 0.5, f"IVF recall $ivfRecall%.3f below 0.5")
   }
 
-  test("Lloyd-refined IVF centroids: recall@10 at or above the stand-ins") {
-    // the sim_ann_ivf contract: "production swaps in kmeans centroids
-    // with no other change" — prove the swap. Seed = the stand-ins,
-    // 2 Lloyd rounds, same ivfTopK machinery.
-    import graft.operators.Similarity
-    val c = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"),
-        graft.expressions.FloatDot.float_dot(
-          col("embedding"), col("embedding")).as("nrm"))
-    def recallOf(cent: org.apache.spark.sql.DataFrame): Double = {
-      val brute = SparkEntry.queries("sim_topk_brute")(spark, sf)
-        .select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = Similarity.ivfTopK(c, 10, centroids = cent)
-        .select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      (brute & got).size.toDouble / brute.size
-    }
-    val standIn = recallOf(Similarity.standInCentroids(c, 32))
-    val refined = recallOf(Similarity.kmeansCentroids(c, 32, rounds = 2))
-    info(f"IVF recall@10: stand-in $standIn%.3f, kmeans-refined $refined%.3f")
-    assert(refined >= standIn,
-      f"Lloyd refinement must not lose recall: $refined%.3f < $standIn%.3f")
-  }
-
   test("PQ ADC recall@10 against exact L2 on the same grid") {
     // PQ approximates L2, not cosine — so its recall is measured
     // against the exact L2 top-10 over the same micro-int grid the
