@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RegExpExtractBase, RegExpUtils}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * input gives null.
   */
 case class CachedRegexpExtract(subject: Expression, regexp: Expression,
-    idx: Int) extends BinaryExpression with CodegenFallback {
+    idx: Int) extends BinaryExpression {
 
   override def left: Expression = subject
   override def right: Expression = regexp
@@ -36,7 +36,19 @@ case class CachedRegexpExtract(subject: Expression, regexp: Expression,
   @transient private lazy val patterns =
     new java.util.HashMap[UTF8String, Pattern]()
 
-  override protected def nullSafeEval(s: Any, p: Any): Any = {
+  override protected def nullSafeEval(s: Any, p: Any): Any =
+    extract(s.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
+
+  // the generated code calls extract on this instance: its children
+  // are generated, and the pattern cache is still one per deserialized
+  // plan
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("regexpExtractCached", this)
+    defineCodeGen(ctx, ev, (s, p) => s"$self.extract($s, $p)")
+  }
+
+  def extract(s: UTF8String, p: UTF8String): UTF8String = {
     var pattern = patterns.get(p)
     if (pattern == null) {
       if (patterns.size >= CachedRegexpExtract.MaxPatterns) patterns.clear()

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.expressions.CachedRegexpExtract.regexp_extract_cached
 import graft.expressions.PkLookup.pk_lookup
+import graft.expressions.TestDecodingSplit.test_decoding_split
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -173,24 +174,15 @@ object Cdc {
         col("operation"), col("pkey"))
   }
 
-  /** The grammar of a test_decoding change line, `table <name>: <op>:
-    * <body>`. `\z`, not `$`: `rlike`/`regexp_extract` search with
-    * `find()`, whose `$` also matches before one trailing line
-    * terminator; this pattern matches exactly the lines the whole-line
-    * `matches()` of `^table ([^:]+): (\w+): (.*)$` matches, with the
-    * same groups. */
-  private val TestDecodingLine = "^table ([^:]+): (\\w+): (.*)\\z"
-
   /** Split test_decoding change lines into `table_name`, `operation`
     * and `body` (P1); BEGIN, COMMIT and noise lines drop out (F3). The
-    * other input columns pass through. */
+    * other input columns pass through. One
+    * [[graft.expressions.TestDecodingSplit]] per line, exactly the
+    * groups of `^table ([^:]+): (\w+): (.*)\z` under `find()`, read
+    * in one scan of an ASCII line's bytes. */
   def splitTestDecoding(df: DataFrame, payloadCol: String): DataFrame = {
-    val p = col(payloadCol)
     val keep = df.columns.filter(_ != payloadCol).map(col).toSeq
-    df.filter(p.rlike(TestDecodingLine)).select((keep ++ Seq(
-      regexp_extract(p, TestDecodingLine, 1).as("table_name"),
-      regexp_extract(p, TestDecodingLine, 2).as("operation"),
-      regexp_extract(p, TestDecodingLine, 3).as("body"))): _*)
+    df.select((keep :+ inline(test_decoding_split(col(payloadCol)))): _*)
   }
 
   /** Per-table PK regex extraction for already-split test_decoding

@@ -502,8 +502,7 @@ object Dedup extends QueryModule {
     * out, same as the oracle's len(toks) >= 3 guard. */
   def wordGramSets(docs: DataFrame): DataFrame =
     QueryCache.cached(docs
-      .withColumn("toks", expr(
-        "filter(split(text, '\\\\s+'), t -> t != '')"))
+      .withColumn("toks", expr(TextAnalysis.toksExpr))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), expr(
         "array_sort(array_distinct(transform(sequence(1, size(toks) - 2)," +

@@ -31,6 +31,7 @@ object Pipeline extends QueryModule {
   import Tables._
   import Num._
   import Dedup.{jaccardNpSql, shinglePairsSql, shinglesSql}
+  import TextAnalysis.toksExpr
 
   private val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
   private val cardPat = "[0-9]{12,19}"
@@ -172,7 +173,7 @@ object Pipeline extends QueryModule {
     docs.select(col("doc_id"),
       expr("cast(conv(substring(md5(concat('sh', cast(doc_id as string)))," +
         s" 1, 8), 16, 10) as bigint) % $nShards").as("shard"),
-      expr("size(filter(split(text, '\\\\s+'), t -> t != ''))")
+      expr(s"size($toksExpr)")
         .cast("long").as("tokens"))
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("doc_id"))
@@ -202,7 +203,7 @@ object Pipeline extends QueryModule {
   private def curationSets(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val docs = documents(s, d).withColumn("n_toks",
-      expr("size(filter(split(text, '\\\\s+'), t -> t != ''))")
+      expr(s"size($toksExpr)")
         .cast("long"))
     val input = docs.filter(col("doc_id") >= 20)
     val firsts = input.filter(col("n_toks") >= 20)
@@ -510,7 +511,7 @@ object Pipeline extends QueryModule {
         .select(col("lang"),
           size(expr(s"regexp_extract_all(text, '$bpePat', 0)"))
             .cast("long").as("n_tok"),
-          expr("size(filter(split(text, '\\\\s+'), t -> t != ''))")
+          expr(s"size($toksExpr)")
             .cast("long").as("n_word"),
           length(col("text")).cast("long").as("n_char"))
         .groupBy(col("lang"))
@@ -810,7 +811,7 @@ object Pipeline extends QueryModule {
     // map-side-combinable aggregate over the memoized cluster table.
     "dedup_survivors_quality" -> ((s, d) => {
       val nt = documents(s, d).withColumn("n_toks",
-        expr("size(filter(split(text, '\\\\s+'), t -> t != ''))")
+        expr(s"size($toksExpr)")
           .cast("long"))
       clusters(s, d).join(nt, Seq("doc_id"))
         .withColumn("pk",

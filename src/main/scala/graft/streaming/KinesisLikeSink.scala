@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Kinesis-shaped ordered sink (operators A1/A2/K1, SURVEY.md §2.1):
   * size-bounded record aggregation (the KPL 1 MB packing,
@@ -20,18 +21,21 @@ import org.apache.spark.sql.functions.col
   * cadence exactly.
   *
   * Total order through a system built to reorder: the batch is
-  * coalesced to ONE partition and sorted by LSN inside it — the same
-  * single-lane constraint the reference lives with (its throughput
-  * bound is likewise one shard). The put client is pluggable; the AWS
+  * coalesced to ONE partition and read in source order, which is LSN
+  * order (a decrease fails the batch) — the same single-lane
+  * constraint the reference lives with (its throughput bound is
+  * likewise one shard). The put client is pluggable; the AWS
   * client drops in where LocalFilePutClient stands.
   *
   * Retry stays INSIDE the task (not Spark task retry, which would
   * re-put the whole batch — SURVEY.md §4).
   */
 trait PutClient extends Serializable {
-  /** Deliver one aggregated record. May throw ThrottlingException. */
+  /** Deliver one aggregated record, the `seq`-th (from 0) of the
+    * current (batch, lane). May throw ThrottlingException. */
   def put(seq: Long, data: Array[Byte]): Unit
-  /** Number of records already delivered (for sequence numbering). */
+  /** Number of records already delivered. The writer no longer calls
+    * it: sequence numbers restart at every (batch, lane). */
   def deliveredCount(): Long
   /** Called once per micro-batch before any put, with the foreachBatch
     * batchId. Clients that can key deliveries on (batchId, position)
@@ -97,8 +101,8 @@ object StreamLifecycle {
   * idempotent on this client (the real-Kinesis path stays
   * at-least-once; see PutClient.beginBatch). A put before any
   * [[beginBatch]] fails. failFirstAttemptEvery injects a
-  * ThrottlingException on the first attempt of every Nth put to
-  * exercise the backoff path. */
+  * ThrottlingException on the first attempt of every Nth position of
+  * a (batch, lane) to exercise the backoff path. */
 class LocalFilePutClient(dir: String, failFirstAttemptEvery: Int = 0)
     extends PutClient {
   // Task-local (the client is serialized into each foreachPartition
@@ -119,9 +123,11 @@ class LocalFilePutClient(dir: String, failFirstAttemptEvery: Int = 0)
   override def put(seq: Long, data: Array[Byte]): Unit = {
     if (curBatch < 0)
       throw new IllegalStateException(s"put of record $seq before beginBatch")
-    if (failFirstAttemptEvery > 0 && seq % failFirstAttemptEvery == 0 &&
-        LocalFilePutClient.attempted.putIfAbsent(s"$dir/$seq", true) == null) {
-      throw new ThrottlingException(s"injected throttle for seq $seq")
+    if (failFirstAttemptEvery > 0 && posInBatch % failFirstAttemptEvery == 0 &&
+        LocalFilePutClient.attempted.putIfAbsent(
+          s"$dir/$curBatch/$curLane/$posInBatch", true) == null) {
+      throw new ThrottlingException(
+        s"injected throttle for batch $curBatch lane $curLane position $posInBatch")
     }
     val d = Paths.get(dir)
     Files.createDirectories(d)
@@ -192,9 +198,17 @@ class OrderedAggregatingWriter(client: PutClient,
     * reference's "filtered messages still tick the batcher" cadence.
     *
     * lanes = 1 (default) is the reference's contract verbatim: ONE
-    * shard, TOTAL WAL order (stream.py:15-20) — the batch coalesces to
-    * one task sorted by LSN. lanes > 1 is the engine's horizontal
-    * scale-out past the reference's one-shard throughput cap
+    * shard, TOTAL WAL order (stream.py:15-20). The batch's planned
+    * rows (`foreachBatch` hands over a Dataset over its RDD) coalesce
+    * to one task and are read in source order, which is LSN order: the
+    * stream plans one partition per batch and every transform after
+    * the source keeps order. The loop checks it: an LSN below the one
+    * before it fails the batch with an IllegalStateException naming
+    * both, so a misordered batch is never delivered silently. A shuffle
+    * on this path would need an LSN sort.
+    *
+    * lanes > 1 is the engine's horizontal scale-out past the
+    * reference's one-shard throughput cap
     * (ARCHITECTURE.md "per-key lanes"): the ordering contract weakens
     * to PER-KEY — every record of one partition key (xid,
     * stream.py:36) lands on one deterministic lane (hash(xid) mod
@@ -202,70 +216,84 @@ class OrderedAggregatingWriter(client: PutClient,
     * order with lane-local sequence numbers, while distinct keys ride
     * `lanes` parallel tasks. Exactly the semantics a multi-shard
     * Kinesis stream gives a consumer: ordered within a partition key,
-    * unordered across keys. */
+    * unordered across keys. Sequence numbers count from 0 in every
+    * (batch, lane). */
   def writeBatch(batch: DataFrame, batchId: Long): Unit = {
     val c = client
     val maxB = maxAggBytes
     val base = backoffBaseMs
     val limit = backoffLimitMs
-    val nLanes = lanes
     val routed =
-      if (nLanes <= 1)
-        batch.select(col("lsn"), col("fmt_msg"), col("xid"))
-          .withColumn("__lane", org.apache.spark.sql.functions.lit(-1))
-          .coalesce(1)
-          .sortWithinPartitions("lsn")
-      else
-        batch.select(col("lsn"), col("fmt_msg"), col("xid"))
+      if (lanes <= 1) batch
+      else batch.select(col("lsn"), col("fmt_msg"), col("xid"),
           // pmod, not abs(hash)%n: abs(Long.MinValue) stays negative
-          .withColumn("__lane", org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.xxhash64(col("xid")),
-            org.apache.spark.sql.functions.lit(nLanes)).cast("int"))
-          // hash-repartition ON the lane id: all records of a lane
-          // (hence of a key) land in one task; a task may own several
-          // lanes (hash(lane) mod lanes is not identity), so the
-          // per-partition loop below re-groups on the lane boundary
-          .repartition(nLanes, col("__lane"))
-          .sortWithinPartitions("__lane", "lsn")
-    routed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      var agg: RecordAggregator = null
-      var seq = 0L
-      var curLane = Int.MinValue
-      def send(data: Array[Byte]): Unit = {
-        var backoff = base
-        var waited = 0L
-        var done = false
-        while (!done) {
-          try { c.put(seq, data); done = true }
-          catch {
-            case e: ThrottlingException =>
-              if (waited >= limit) throw e
-              Thread.sleep(backoff)
-              waited += backoff
-              backoff = math.min(backoff * 2, limit)
+          pmod(xxhash64(col("xid")), lit(lanes)).cast("int").as("__lane"))
+        // hash-repartition ON the lane id: all records of a lane
+        // (hence of a key) land in one task; a task may own several
+        // lanes (hash(lane) mod lanes is not identity), so the
+        // per-partition loop below re-groups on the lane boundary
+        .repartition(lanes, col("__lane"))
+        .sortWithinPartitions("__lane", "lsn")
+    val schema = routed.schema
+    def field(name: String, t: DataType): Int = {
+      val i = schema.fieldIndex(name)
+      require(schema(i).dataType == t,
+        s"sink column $name must be $t, got ${schema(i).dataType}")
+      i
+    }
+    val lsnAt = field("lsn", LongType)
+    val msgAt = field("fmt_msg", StringType)
+    val xidAt = field("xid", LongType)
+    val laneAt = if (lanes <= 1) -1 else schema.fieldIndex("__lane")
+    val rows = routed.queryExecution.toRdd
+    (if (lanes <= 1) rows.coalesce(1) else rows).foreachPartition {
+      (it: Iterator[InternalRow]) =>
+        var agg: RecordAggregator = null
+        var seq = 0L
+        var curLane = Int.MinValue
+        var lastLsn = Long.MinValue
+        def send(data: Array[Byte]): Unit = {
+          var backoff = base
+          var waited = 0L
+          var done = false
+          while (!done) {
+            try { c.put(seq, data); done = true }
+            catch {
+              case e: ThrottlingException =>
+                if (waited >= limit) throw e
+                Thread.sleep(backoff)
+                waited += backoff
+                backoff = math.min(backoff * 2, limit)
+            }
+          }
+          seq += 1
+        }
+        it.foreach { r =>
+          val lane = if (laneAt < 0) -1 else r.getInt(laneAt)
+          if (lane != curLane) {
+            // lane boundary (or first row): flush the previous lane's
+            // partial aggregate, then open the new lane's sequence
+            if (agg != null && agg.nonEmpty) send(agg.clearAndGet())
+            curLane = lane
+            agg = new RecordAggregator(maxB)
+            if (lane >= 0) c.beginBatch(batchId, lane) else c.beginBatch(batchId)
+            seq = 0L
+            lastLsn = Long.MinValue
+          }
+          val lsn = r.getLong(lsnAt)
+          if (lsn < lastLsn)
+            throw new IllegalStateException(s"batch $batchId: LSN $lsn " +
+              s"follows LSN $lastLsn; the ordered sink needs rows in LSN order")
+          lastLsn = lsn
+          if (!r.isNullAt(msgAt)) {
+            if (r.isNullAt(xidAt))
+              throw new NullPointerException(s"batch $batchId: null xid at LSN $lsn")
+            // partition key = str(xid), reference stream.py:36
+            agg.add(String.valueOf(r.getLong(xidAt)),
+              r.getUTF8String(msgAt).getBytes).foreach(send)
           }
         }
-        seq += 1
-      }
-      rows.foreach { r =>
-        val lane = r.getInt(3)
-        if (lane != curLane) {
-          // lane boundary (or first row): flush the previous lane's
-          // partial aggregate, then open the new lane's sequence
-          if (agg != null && agg.nonEmpty) send(agg.clearAndGet())
-          curLane = lane
-          agg = new RecordAggregator(maxB)
-          if (lane >= 0) { c.beginBatch(batchId, lane); seq = 0L }
-          else { c.beginBatch(batchId); seq = c.deliveredCount() }
-        }
-        if (!r.isNullAt(1)) {
-          // partition key = str(xid), reference stream.py:36
-          agg.add(String.valueOf(r.getLong(2)),
-            r.getString(1).getBytes(StandardCharsets.UTF_8))
-            .foreach(send)
-        }
-      }
-      if (agg != null && agg.nonEmpty) send(agg.clearAndGet())
+        if (agg != null && agg.nonEmpty) send(agg.clearAndGet())
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
 import org.scalacheck.{Gen, Prop}
 
 import graft.expressions.{KmvSmallest, PyJson}
@@ -14,10 +16,10 @@ import org.apache.spark.sql.types.DoubleType
   * handful of goldens cannot. */
 class PropertySpec extends SparkSpec {
 
-  private def check(prop: Prop): Unit = {
+  private def check(prop: Prop, tests: Int = 200): Unit = {
     val res = org.scalacheck.Test.check(
       org.scalacheck.Test.Parameters.default
-        .withMinSuccessfulTests(200), prop)
+        .withMinSuccessfulTests(tests), prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -247,6 +249,79 @@ class PropertySpec extends SparkSpec {
       }
       got == want && got.forall(v => v >= 0 && v < (1L << 32))
     })
+  }
+
+  // ---- test_decoding line split -----------------------------------------
+  private val tdPiece: Gen[Array[Byte]] = Gen.frequency(
+    4 -> Gen.oneOf(":", " ", ": "),
+    4 -> Gen.nonEmptyListOf(Gen.oneOf(Gen.alphaNumChar, Gen.const('_')))
+      .map(_.mkString),
+    2 -> Gen.oneOf("-", ".", "'", "[", "]", "\t", "#", "\u007f"),
+    1 -> Gen.oneOf("\r", "\n", "\r\n"),
+    1 -> Gen.oneOf("\u0085", "\u2028", "\u2029"),
+    1 -> Gen.oneOf("é", "ä", "中", "🎉"),
+  ).map(_.getBytes(StandardCharsets.UTF_8)).flatMap(b => Gen.frequency(
+    // invalid UTF-8: lone lead and continuation bytes, cut sequences
+    12 -> Gen.const(b),
+    1 -> Gen.oneOf(Seq(0xFF), Seq(0xC3), Seq(0x80), Seq(0xE2, 0x80),
+      Seq(0xF0, 0x9F, 0x8E)).map(_.map(_.toByte).toArray)))
+
+  private def tdBytes(pieces: Seq[Array[Byte]]): Array[Byte] =
+    pieces.flatten.toArray
+
+  private val genTdLine: Gen[Array[Byte]] = Gen.oneOf(
+    // free: a prefix, then any pieces
+    for {
+      head <- Gen.frequency(8 -> "table ", 1 -> "", 1 -> "tabl",
+        1 -> "TABLE ", 1 -> " table ")
+      rest <- Gen.listOf(tdPiece)
+    } yield head.getBytes(StandardCharsets.UTF_8) ++ tdBytes(rest),
+    // shaped: table <name>: <op>: <body>, each part drawn from pieces
+    for {
+      name <- Gen.resize(8, Gen.listOf(tdPiece.map(_.filter(_ != ':'))))
+      op <- Gen.frequency(3 -> Gen.identifier,
+        2 -> Gen.zip(Gen.identifier, Gen.oneOf("-", ".", " ", "'", "$", "é",
+          "\u0085"), Gen.identifier).map { case (a, c, b) => a + c + b },
+        1 -> tdPiece.map(new String(_, StandardCharsets.UTF_8)))
+      body <- Gen.resize(12, Gen.listOf(tdPiece))
+    } yield "table ".getBytes(StandardCharsets.UTF_8) ++ tdBytes(name) ++
+      s": $op: ".getBytes(StandardCharsets.UTF_8) ++ tdBytes(body))
+
+  test("test_decoding_split equals rlike + 3x regexp_extract on any line") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RLike, RegExpExtract, UnsafeProjection}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expressions.TestDecodingSplit
+    val line = BoundReference(0, StringType, nullable = true)
+    val pat = Literal(TestDecodingSplit.Line.pattern)
+    val matches = RLike(line, pat)
+    val groups = (1 to 3).map(i => RegExpExtract(line, pat, Literal(i)))
+    val split = TestDecodingSplit(line)
+    val generated = UnsafeProjection.create(Seq(split))
+    var matched = 0
+    var nonAscii = 0
+    check(Prop.forAll(genTdLine) { bytes =>
+      val row = new GenericInternalRow(Array[Any](UTF8String.fromBytes(bytes)))
+      val want =
+        if (matches.eval(row) == true) Some(groups.map(_.eval(row).toString))
+        else None
+      def read(a: ArrayData): Option[Seq[String]] =
+        Option(a).map { a =>
+          assert(a.numElements() == 1)
+          val r = a.getStruct(0, 3)
+          (0 until 3).map(r.getUTF8String(_).toString)
+        }
+      val interpreted = read(split.eval(row).asInstanceOf[ArrayData])
+      val codegen = generated(row)
+      val compiled = if (codegen.isNullAt(0)) None else read(codegen.getArray(0))
+      if (want.nonEmpty) {
+        matched += 1
+        if (bytes.exists(_ < 0)) nonAscii += 1
+      }
+      interpreted == want && compiled == want
+    }, tests = 1000)
+    assert(matched >= 20 && nonAscii >= 5,
+      s"too few matching lines drawn: $matched, $nonAscii with non-ASCII bytes")
   }
 
   // ---- progress-window accounting --------------------------------------

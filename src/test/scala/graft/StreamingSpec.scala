@@ -271,6 +271,56 @@ class StreamingSpec extends SparkSpec {
     assert(sinkRecords(s"$dir/sink").size == 8, "6 originals + 2 new")
   }
 
+  test("a lanes=1 batch whose LSN decreases fails and names both LSNs") {
+    // the ordered sink reads the batch in source order and does not
+    // sort it: a decrease must fail the batch, never reach the shard
+    import graft.streaming.OrderedAggregatingWriter
+    import spark.implicits._
+    val dir = tmp()
+    val writer = new OrderedAggregatingWriter(
+      new LocalFilePutClient(s"$dir/sink"))
+    val batch = Seq((5L, "a", 1L), (9L, "b", 1L), (7L, "c", 2L), (8L, "d", 2L))
+      .toDF("lsn", "fmt_msg", "xid")
+    val e = intercept[Exception](writer.writeBatch(batch, 0L))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Seq.empty else t +: causes(t.getCause)
+    val ise = causes(e).collectFirst { case i: IllegalStateException => i }
+      .getOrElse(fail(s"expected an IllegalStateException, got $e"))
+    assert(ise.getMessage.contains("LSN 7") && ise.getMessage.contains("LSN 9"),
+      ise.getMessage)
+    assert(!Files.exists(Paths.get(s"$dir/sink")), "nothing may be delivered")
+  }
+
+  test("an ordered batch over 8 partitions delivers the aggregates of the LSN sort") {
+    // the sink's source-order read against a coalesce(1) + LSN sort of
+    // the same rows: byte-identical aggregates
+    import graft.streaming.{OrderedAggregatingWriter, RecordAggregator}
+    import org.apache.spark.sql.functions.{concat, lit, repeat, when}
+    val dir = tmp()
+    val batch = spark.range(0, 400, 1, 8).select(
+      (col("id") * 3).as("lsn"),
+      when(col("id") % 5 =!= 0, concat(lit("é,CDC,"), col("id").cast("string"),
+        repeat(lit("x"), (col("id") % 13).cast("int")))).as("fmt_msg"),
+      (col("id") / 7).cast("long").as("xid"))
+    assert(batch.rdd.getNumPartitions == 8)
+    new OrderedAggregatingWriter(new LocalFilePutClient(s"$dir/sink"),
+      maxAggBytes = 200).writeBatch(batch, 4L)
+    val agg = new RecordAggregator(200)
+    val sorted = batch.coalesce(1).sortWithinPartitions("lsn").collect()
+      .filter(!_.isNullAt(1))
+      .flatMap(r => agg.add(r.getLong(2).toString,
+        r.getString(1).getBytes(StandardCharsets.UTF_8)))
+      .toSeq :+ agg.clearAndGet()
+    val d = Paths.get(s"$dir/sink")
+    val delivered = Files.list(d).iterator().asScala.toSeq
+      .map(_.getFileName.toString).sorted
+    assert(delivered == sorted.indices.map(i => f"rec-000000004-$i%06d"))
+    assert(sorted.size > 10, s"want many aggregates, got ${sorted.size}")
+    delivered.zip(sorted).foreach { case (name, want) =>
+      assert(Files.readAllBytes(d.resolve(name)).sameElements(want), name)
+    }
+  }
+
   test("the local file client rejects a put before any beginBatch") {
     val dir = tmp()
     val client = new LocalFilePutClient(s"$dir/sink")
