@@ -9,7 +9,7 @@ import org.apache.spark.sql.classic.ClassicConversions._
   * share. Results reused across one session are a session resource:
   * [[cached]] registers them, [[shared]] memoizes the few that plan
   * equality cannot find, and [[release]] is the single call that frees
-  * both (Bench, Profile and ScaleProbe call it between timed runs;
+  * both (Bench and Profile call it between measured runs;
   * long-lived sessions call it when their inputs change, since a
   * cached plan assumes its input dirs are immutable).
   */

@@ -60,11 +60,12 @@ object Corpus extends QueryModule {
        |          cent.cid) AS rk
        |    FROM c CROSS JOIN cent) t WHERE rk = 1)""".stripMargin
 
-  /** The BM25 inputs in the DuckDB dialect, mirroring [[bm25Top]]:
+  /** The BM25 scores in the DuckDB dialect, mirroring [[bm25Top]]:
     * the query terms `qt`, document lengths `docs`, corpus totals
-    * `scal`, query-term occurrences `toks`, term frequencies `tf` and
-    * document frequencies `dft`. */
-  private val bm25TermsSql =
+    * `scal`, query-term occurrences `toks`, term frequencies `tf`,
+    * document frequencies `dft`, and per (query_id, doc_id) the
+    * `scored` score_micro and matched n_terms. */
+  private val bm25ScoredSql =
     s"""qt AS (
        |  SELECT * FROM (VALUES (0, 'spark'), (0, 'join'), (1, 'hash'),
        |    (1, 'table'), (1, 'scan'), (2, 'window'), (2, 'agg'))
@@ -77,7 +78,18 @@ object Corpus extends QueryModule {
        |    SELECT doc_id, unnest($sqlToks) AS tok FROM documents)
        |  WHERE tok IN (SELECT tok FROM qt)),
        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-       |dft AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1)""".stripMargin
+       |dft AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
+       |scored AS (
+       |  SELECT qt.query_id, tf.doc_id,
+       |    SUM(CAST(
+       |      ((2000000 * (s.n_docs - dft.df) + 1000000) // (2 * dft.df + 1))
+       |        ::HUGEINT * 22 * tf.tf * s.total_len
+       |      // (10 * s.total_len * tf.tf + 3 * s.total_len
+       |         + 9 * docs.dl * s.n_docs) AS BIGINT)) AS score_micro,
+       |    COUNT(*) AS n_terms
+       |  FROM tf JOIN dft USING (tok) JOIN qt USING (tok)
+       |    JOIN docs USING (doc_id) CROSS JOIN scal s
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** The BM25 ranking shared by text_bm25 and text_rrf_fusion —
     * (query_id, rank, doc_id, n_terms, score_micro) for the fixed
@@ -598,18 +610,7 @@ object Corpus extends QueryModule {
          |ORDER BY doc_id, rank""".stripMargin,
 
     "text_bm25" ->
-      s"""WITH $bm25TermsSql,
-         |scored AS (
-         |  SELECT qt.query_id, tf.doc_id,
-         |    SUM(CAST(
-         |      ((2000000 * (s.n_docs - dft.df) + 1000000) // (2 * dft.df + 1))
-         |        ::HUGEINT * 22 * tf.tf * s.total_len
-         |      // (10 * s.total_len * tf.tf + 3 * s.total_len
-         |         + 9 * docs.dl * s.n_docs) AS BIGINT)) AS score_micro,
-         |    COUNT(*) AS n_terms
-         |  FROM tf JOIN dft USING (tok) JOIN qt USING (tok)
-         |    JOIN docs USING (doc_id) CROSS JOIN scal s
-         |  GROUP BY 1, 2),
+      s"""WITH $bm25ScoredSql,
          |ranked AS (
          |  SELECT query_id, doc_id, n_terms, score_micro,
          |    ROW_NUMBER() OVER (PARTITION BY query_id
@@ -621,17 +622,7 @@ object Corpus extends QueryModule {
          |ORDER BY query_id, rank""".stripMargin,
 
     "text_rrf_fusion" ->
-      s"""WITH $bm25TermsSql,
-         |scored AS (
-         |  SELECT qt.query_id, tf.doc_id,
-         |    SUM(CAST(
-         |      ((2000000 * (s.n_docs - dft.df) + 1000000) // (2 * dft.df + 1))
-         |        ::HUGEINT * 22 * tf.tf * s.total_len
-         |      // (10 * s.total_len * tf.tf + 3 * s.total_len
-         |         + 9 * docs.dl * s.n_docs) AS BIGINT)) AS score_micro
-         |  FROM tf JOIN dft USING (tok) JOIN qt USING (tok)
-         |    JOIN docs USING (doc_id) CROSS JOIN scal s
-         |  GROUP BY 1, 2),
+      s"""WITH $bm25ScoredSql,
          |bm AS (
          |  SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
          |    ROW_NUMBER() OVER (PARTITION BY query_id

@@ -701,16 +701,34 @@ object Similarity extends QueryModule {
       |  FROM probes p JOIN assigned a ON p.cid = a.cid
       |  WHERE a.vec_id <> p.query_id)""".stripMargin
 
-  /** The micro-int grid vectors `e` and their 8 subvectors `sub`
-    * (vec_id, m, svec), the input of [[pqCodesLut]]. */
-  private val pqSubvectorsSql =
+  /** The micro-int grid vectors `e`, their 8 subvectors `sub`
+    * (vec_id, m, svec), the 16-entry codebook `pcent`, every vector's
+    * `codes` and the 10 probes' distance table `lut`, mirroring
+    * [[pqCodesLut]]. The codebook is `pcent` because sim_ann_ivfpq's
+    * IVF lists already name their centroids `cent`. */
+  private val pqCodesLutSql =
     """e AS MATERIALIZED (
       |  SELECT vec_id, list_transform(embedding,
       |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       |  FROM embeddings),
       |sub AS MATERIALIZED (
       |  SELECT vec_id, u.m, qv[u.m * 8 + 1 : u.m * 8 + 8] AS svec
-      |  FROM e, UNNEST(generate_series(0, 7)) u(m))""".stripMargin
+      |  FROM e, UNNEST(generate_series(0, 7)) u(m)),
+      |pcent AS (SELECT vec_id AS cid, m, svec AS cvec
+      |          FROM sub WHERE vec_id < 16),
+      |codes AS (
+      |  SELECT vec_id, m, CAST(MIN(
+      |      list_sum(list_transform(generate_series(1, 8),
+      |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
+      |      * 16 + cid) % 16 AS BIGINT) AS cid
+      |  FROM sub JOIN pcent USING (m)
+      |  GROUP BY vec_id, m),
+      |lut AS (
+      |  SELECT s.vec_id AS query_id, s.m, c.cid,
+      |    CAST(list_sum(list_transform(generate_series(1, 8),
+      |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
+      |      AS BIGINT) AS pd
+      |  FROM sub s JOIN pcent c USING (m) WHERE s.vec_id < 10)""".stripMargin
 
   override def oracles: Map[String, String] = Map(
     "emb_triplets" ->
@@ -745,22 +763,7 @@ object Similarity extends QueryModule {
         |ORDER BY p.query_id""".stripMargin,
 
     "sim_ann_pq" ->
-      s"""WITH $pqSubvectorsSql,
-         |cent AS (SELECT vec_id AS cid, m, svec AS cvec
-         |         FROM sub WHERE vec_id < 16),
-         |codes AS (
-         |  SELECT vec_id, m, CAST(MIN(
-         |      list_sum(list_transform(generate_series(1, 8),
-         |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
-         |      * 16 + cid) % 16 AS BIGINT) AS cid
-         |  FROM sub JOIN cent USING (m)
-         |  GROUP BY vec_id, m),
-         |lut AS (
-         |  SELECT s.vec_id AS query_id, s.m, c.cid,
-         |    CAST(list_sum(list_transform(generate_series(1, 8),
-         |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
-         |      AS BIGINT) AS pd
-         |  FROM sub s JOIN cent c USING (m) WHERE s.vec_id < 10),
+      s"""WITH $pqCodesLutSql,
          |adc AS (
          |  SELECT l.query_id, c.vec_id, CAST(SUM(l.pd) AS BIGINT) AS adc
          |  FROM codes c JOIN lut l ON c.m = l.m AND c.cid = l.cid
@@ -777,22 +780,7 @@ object Similarity extends QueryModule {
       s"""WITH c AS $corpusSql,
          |$ivfListsSql,
          |$ivfCandidatesSql,
-         |$pqSubvectorsSql,
-         |pcent AS (SELECT vec_id AS cid, m, svec AS cvec
-         |          FROM sub WHERE vec_id < 16),
-         |codes AS (
-         |  SELECT vec_id, m, CAST(MIN(
-         |      list_sum(list_transform(generate_series(1, 8),
-         |        i -> (svec[i] - cvec[i]) * (svec[i] - cvec[i])))
-         |      * 16 + cid) % 16 AS BIGINT) AS cid
-         |  FROM sub JOIN pcent USING (m)
-         |  GROUP BY vec_id, m),
-         |lut AS (
-         |  SELECT s.vec_id AS query_id, s.m, c.cid,
-         |    CAST(list_sum(list_transform(generate_series(1, 8),
-         |      i -> (s.svec[i] - c.cvec[i]) * (s.svec[i] - c.cvec[i])))
-         |      AS BIGINT) AS pd
-         |  FROM sub s JOIN pcent c USING (m) WHERE s.vec_id < 10),
+         |$pqCodesLutSql,
          |adc AS (
          |  SELECT cand.query_id, cand.vec_id,
          |    CAST(SUM(l.pd) AS BIGINT) AS adc

@@ -141,6 +141,16 @@ object TextAnalysis extends QueryModule {
        |  SELECT big, CAST(c2 AS DOUBLE) / c1 AS p
        |  FROM c2 JOIN c1 USING (w1))""".stripMargin
 
+  /** The space-joined token 5-grams of `toks` in order, `[]` under 5
+    * tokens, as a DuckDB expression. No line starts with `||`: the
+    * oracle's own stripMargin would strip it. */
+  private val fiveGramsSql =
+    """CASE WHEN len(toks) >= 5 THEN
+      |      list_transform(generate_series(1, len(toks) - 4),
+      |        i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2] || ' ' ||
+      |          toks[i + 3] || ' ' || toks[i + 4])
+      |    ELSE [] END""".stripMargin
+
   /** The per-document counts [[gopherFlags]] tests, as DuckDB select
     * items over `toks` and `text`. */
   private[operators] val gopherSignalsSql =
@@ -1215,11 +1225,7 @@ object TextAnalysis extends QueryModule {
          |  SELECT doc_id, $sqlToks AS toks FROM documents),
          |g AS (
          |  SELECT doc_id, toks,
-         |    CASE WHEN len(toks) >= 5 THEN
-         |      list_transform(generate_series(1, len(toks) - 4),
-         |        i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]
-         |          || ' ' || toks[i + 3] || ' ' || toks[i + 4])
-         |    ELSE [] END AS grams
+         |    $fiveGramsSql AS grams
          |  FROM t),
          |uni AS (
          |  SELECT doc_id, MAX(n) AS top_tok_n, SUM(n) AS n_tokens FROM (
@@ -1329,11 +1335,7 @@ object TextAnalysis extends QueryModule {
          |gr AS MATERIALIZED (
          |  SELECT doc_id, u.g FROM (
          |    SELECT doc_id,
-         |      CASE WHEN len(toks) >= 5 THEN
-         |        list_transform(generate_series(1, len(toks) - 4),
-         |          i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]
-         |            || ' ' || toks[i + 3] || ' ' || toks[i + 4])
-         |      ELSE [] END AS grams
+         |      $fiveGramsSql AS grams
          |    FROM t), UNNEST(grams) u(g)),
          |f AS (
          |  SELECT g, COUNT(*) AS df

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * second stream or file nothing runs in `src/main` fails here. */
 class EntryPointSpec extends AnyFunSuite {
   private val mains = Set("Main", "Verify", "Bench", "Profile",
-    "CdcThroughput", "ScaleProbe", "HupProbe")
+    "CdcThroughput", "HupProbe")
 
   private def scalaFiles(root: Path): Seq[(Path, String)] = {
     assert(Files.isDirectory(root), s"run from the project root: $root")

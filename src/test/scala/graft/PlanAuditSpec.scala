@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+
 /** Physical-plan hygiene for EVERY declared query: catches silent
   * regressions into cartesian products and plans that fall out of
   * whole-stage codegen. Runs at sf0.001 — plan SHAPE is what is
@@ -233,10 +235,10 @@ class PlanAuditSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       for ((name, fn) <- SparkEntry.queries if !eagerOk(name)) {
-        org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
+        ListenerBusAccess.waitUntilEmpty(sc)
         val before = jobs
         fn(spark, sf)
-        org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
+        ListenerBusAccess.waitUntilEmpty(sc)
         assert(jobs == before,
           s"$name launched ${jobs - before} job(s) during query construction" +
             s" (last: $lastSite)")
