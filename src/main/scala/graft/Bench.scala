@@ -1,316 +1,217 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every declared query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
-  * A [[Tuning.localSession]] of SPARK_GRAFT_CPUS cores (default 32),
-  * shuffle partitions matching threads, not 200.
+/** Benchmark main: times every declared query against
+  * SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on a
+  * [[Tuning.localSession]] of SPARK_GRAFT_CPUS cores (default 32), and
+  * prints two JSON lines, the full one and then a short summary
+  * {"metric":"total","value":N,"unit":"sec",...}. The body is [[run]].
+  *
+  * Every timed run is one [[QueryMetrics.measure]], after one
+  * [[QueryCache.release]], so each attempt pays its own full input scan
+  * and materialization, computes every output column, and brings its
+  * structural figures with it.
   *
   * Wall-clock discipline: the harness runs this under an external
   * timeout, and a bench that never prints is worth less than one that
-  * prints slightly-noisier numbers (round 4's run was killed at the
-  * timeout with zero output). So measurement runs under an explicit
-  * budget (SPARK_GRAFT_BENCH_BUDGET_S, default 420 s of measurement
-  * wall time) and sheds protocol — never queries — as it fills,
-  * PACE-based since round 13 (the old fixed 60%-of-budget cliff
-  * single-attempted the whole late alphabet even on runs that would
-  * have finished in budget):
+  * prints slightly noisier numbers. So measurement runs under a budget
+  * (SPARK_GRAFT_BENCH_BUDGET_S, default 420 s of measurement wall time)
+  * and sheds protocol, never queries, as it fills, by pace:
   *   on pace (spent/budget ≤ queries-done/n) and < 90% spent:
-  *     inline sf0.001 warm + min of 2 cold-data attempts
-  *   over pace: 1 attempt (self-balancing — shed queries pull the
-  *     run back on pace, so shedding spreads across the tail)
-  *   ≥ 85% spent: the warm pass is dropped too
-  * Every query always runs at least once, and the JSON line always
-  * prints. Two protocol steps are EXEMPT from shedding because they
-  * are bounded and exist to make contended runs adjudicable: the
-  * q1_pricing calibration (stamps the artifact with this box's speed
-  * factor vs the committed clean run) and the over-cap variance
-  * recheck (one extra attempt for cap violators only). The artifact
-  * also stamps budget_exhausted when any query ran a shed protocol.
+  *     warm on [[QueryMetrics.warmDir]] + min of 2 attempts
+  *   over pace: 1 attempt (self-balancing: shed queries pull the run
+  *     back on pace, so shedding spreads across the tail)
+  *   ≥ 85% spent: the warm run is dropped too
+  * Every query runs at least once, and the JSON lines always print. Two
+  * protocol steps are exempt from shedding because they are bounded and
+  * make contended runs adjudicable: the q1_pricing calibration (stamps
+  * the artifact with this box's speed factor against a clean run) and
+  * the over-cap recheck (one extra attempt for cap violators only,
+  * SPARK_GRAFT_BENCH_QUERY_CAP_S, default 20 s). The artifact also
+  * stamps budget_exhausted when any query ran a shed protocol.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "420").toDouble
     val spark =
       Tuning.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    // Inline per-query warmup at the smallest scale factor: the
-    // generated whole-stage-codegen source is identical across scale
-    // factors, so a warm pass right before timing populates the Janino
-    // class cache and JIT profiles for THIS query's stages; the timed
-    // attempts then measure the engine, not one-shot compilation.
-    // (An additional whole-surface pre-pass used to run here — useless
-    // once the inline warm existed: the 100-entry codegen cache evicts
-    // most of the surface's several hundred stages long before a
-    // mid-alphabet query is timed, so the pre-pass warmed nothing that
-    // survived, at minutes of wall cost.)
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).getParent
-      val c = if (p == null) null else p.resolve("sf0.001")
-      // skip warmup when no smaller SF exists OR when the measured dir
-      // IS sf0.001 — pre-reading the measured dir would prime the OS
-      // page cache for the timed loop (Spark-level clears don't cover it)
-      if (c != null && java.nio.file.Files.isDirectory(c) &&
-          c.toRealPath() != java.nio.file.Paths.get(sfDir).toRealPath())
-        c.toString
-      else null
-    }
-    if (warmDir == null)
-      System.err.println(s"bench: no sf0.001 sibling of $sfDir; cold-start timings")
-    val wall0 = System.nanoTime()
-    def spent: Double = (System.nanoTime() - wall0) / 1e9
-    // local profiling aid: comma-separated query-name filter
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
-    type Query = (SparkSession, String) => DataFrame
-    // One timed attempt on sfDir. Data caches and the cluster memo are
-    // cleared first, so the attempt pays its own full input scan and
-    // materialization. A query that throws must not masquerade as a
-    // fast success: the attempt reads NaN, never its
-    // elapsed-time-to-failure, and `onFail` sees the exception.
-    def attempt(fn: Query, onFail: Throwable => Unit = _ => ()): Double = {
-      QueryCache.release(spark)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case t: Throwable => onFail(t); Double.NaN }
-    }
-    // Untimed warm run on the sf0.001 sibling (none: no-op); a throw
-    // is left to the timed attempts to report.
-    def warm(fn: Query): Unit =
-      if (warmDir != null) {
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-    // Machine-speed calibration (round-12 lesson: the driver's box ran
-    // the same bytecode 3x slower than the committed clean run, and
-    // nothing IN the artifact said so — q_seasonal_decompose's 26.72 s
-    // single cold attempt vs 0.74 s clean was unadjudicable from the
-    // JSON alone). Time ONE fixed reference query first, full protocol
-    // (warm + min of 2 cleared-cache attempts), and stamp the artifact
-    // with its ratio to the committed clean time: any future run
-    // self-documents its contention factor, so a flag on a contended
-    // box reads as "box was Nx slow today", not "query got slow".
-    // CalibCleanS is the reference for THIS protocol — q1_pricing at
-    // session start after the plateau warm below, measured on an idle
-    // box (load<3/32; readings 0.36-0.50 across repeats). It is NOT
-    // the mid-alphabet bench_last number (0.21): a start-of-session
-    // JIT never matches a 245-query-warm one, so the calibrator needs
-    // its own same-conditions baseline. Re-pin when the protocol or
-    // the clean-run regime moves. Box factor ≤ ~1.5 ⇒ clean box;
-    // ≥ ~2.5 ⇒ contended (r12's driver run would have shown >3x).
-    val CalibCleanS = 0.45
-    val calibS: Double = {
-      val fn = SparkEntry.queries("q1_pricing")
-      // UNtimed full-scale passes first, until the timing plateaus:
-      // mid-run queries see a warm OS page cache and a JIT-compiled
-      // session (the alphabet already warmed both), so a first-touch
-      // cold read here would bias the ratio toward disk + C2 compile
-      // queues, not the box (measured: pass 1 ≈ 3x pass 5 on an IDLE
-      // box — without the plateau the calibrator cries contention on
-      // every clean run)
-      try {
-        var prev = Double.MaxValue
-        var i = 0
-        var cont = true
-        while (cont && i < 8) {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val t = (System.nanoTime() - t0) / 1e9
-          cont = t < prev * 0.9 // still improving >10%: keep warming
-          prev = t
-          i += 1
-        }
-      } catch { case _: Throwable => () }
-      (1 to 2).map(_ => attempt(fn)).min
-    }
-    val calibRatio = calibS / CalibCleanS
-    System.err.println(f"bench: calibration q1_pricing $calibS%.3f s " +
-      f"(clean $CalibCleanS%.2f s, box factor $calibRatio%.2f)")
-    // Pace baseline starts AFTER calibration: its plateau warm burns
-    // ~5-10 s of wall before any query runs, and charging that to the
-    // first queries' pace share would single-attempt the early
-    // alphabet (the exact bias the pace protocol exists to remove).
-    // Round 14: calibWall is a VAR because the mid-run re-calibration
-    // stamps below also exclude their wall from the pace share (same
-    // principle — calibration work must not shed anyone's attempt).
-    var calibWall = spent
-    // Mid-run re-calibration curve (round-13 verdict prescription #2):
-    // the start-only box factor could not adjudicate a contention
-    // window that opened MID-run (r13: emb_consistency_audit read
-    // 18.65 s at box_factor 1.00 because the box was clean at minute 0
-    // and contended at minute 3). Every ~50 queries, q1_pricing is
-    // re-timed (min of 2 cleared-cache attempts, the same protocol as
-    // the start calibration) and appended to box_factor_curve in the
-    // artifact. ADDITIVE ONLY: per-query attempt/shedding semantics
-    // are untouched (the r13 protocol freeze), and the ~1 s per
-    // checkpoint is excluded from the pace share like the start
-    // calibration's wall. NOTE for adjudicators: mid-run readings on a
-    // clean box run BELOW CalibCleanS (deep-warm JIT — the r13 clean
-    // mid-alphabet reading was ~0.2-0.3 s), so the curve discriminates
-    // contention (factor >> 1) from clean (factor ~0.5-1.1); it is not
-    // drift if the factor sits under 1.
-    val calibCurve = scala.collection.mutable.ArrayBuffer(
-      (0, calibS, calibRatio))
-    def recalibrate(afterN: Int): Unit = {
-      val t0 = spent
-      val fn = SparkEntry.queries("q1_pricing")
-      val t = (1 to 2).map(_ => attempt(fn)).min
-      if (!t.isNaN) {
-        calibCurve += ((afterN, t, t / CalibCleanS))
-        System.err.println(f"bench: recalibration after $afterN queries: " +
-          f"q1_pricing $t%.3f s (box factor ${t / CalibCleanS}%.2f)")
-      }
-      calibWall += spent - t0
-    }
-    // Any first-pass query measured under a shed protocol (one attempt
-    // and/or no warm) marks the run budget-degraded: its numbers carry
-    // less counter-evidence than the protocol intends.
-    var budgetShed = false
-    var done = 0
-    val nSelected = math.max(selected.size, 1)
-    val firstPass = selected.map { case (name, fn) =>
-      // Protocol per remaining budget (never sheds the query itself):
-      //  - inline warm keeps codegen classes + JIT profiles hot at
-      //    measurement time,
-      //  - min-of-two cancels the residual one-off JVM pauses that
-      //    land on ~one arbitrary query per run,
-      //  - honesty: data caches and the cluster memo are cleared
-      //    before EVERY attempt, so each attempt pays its own full
-      //    input-scan and materialization cost — min-of-two only ever
-      //    removes compile/scheduler noise, never real engine work.
-      // Shedding is PACE-based (round 13): the old fixed 60%-of-budget
-      // cliff dropped the second attempt for every late-alphabet query
-      // even on runs that would have finished inside the budget, which
-      // is exactly how the r12/r13-baseline artifacts ended up with
-      // one-attempt noise flags. A query keeps the full min-of-two
-      // protocol while the wall spent so far is within the budget
-      // share of the queries completed (spent/budget ≤ done/n); a run
-      // over pace sheds single attempts adaptively and self-balances
-      // back on pace, so shedding spreads across the tail instead of
-      // cliffing at a fixed wall mark. Per-query values keep the same
-      // semantics as every prior round (min over honest cold attempts),
-      // and the artifact still records per-query attempt counts.
-      if (done > 0 && done % 50 == 0) recalibrate(done)
-      val frac = spent / budgetS
-      val onPace = (spent - calibWall) <=
-        (budgetS - calibWall) * ((done + 1).toDouble / nSelected)
-      val attempts = if (onPace && frac < 0.9) 2 else 1
-      if (attempts == 1) budgetShed = true
-      if (frac < 0.85) warm(fn)
-      val times = (1 to attempts).map(_ => attempt(fn, t =>
-        System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")))
-      // a failed attempt records the query as -1
-      val t = if (times.exists(_.isNaN)) -1.0 else times.min
-      System.err.println(f"bench: $name%-26s ${t}%9.3f s   [wall ${spent}%7.1f s, $attempts att]")
-      done += 1
-      (name, t, times)
-    }
-    // Over-cap variance recheck (round-10 lesson: q_important_parts
-    // read 44.5 s from ONE noisy attempt on bytecode that ran 1.28 s
-    // the round before, and the flag landed in the artifact with no
-    // counter-evidence). Any query over the cap gets exactly one more
-    // clean attempt — same honesty protocol, caches cleared, own full
-    // scan — we keep the min and log BOTH numbers. Genuine structural
-    // slowness reproduces and stays flagged; a scheduler/page-cache
-    // hiccup clears itself. Deliberately EXEMPT from budget shedding
-    // (round-12 lesson): the recheck is bounded work — cap violators
-    // only — and a contended run burns its budget early, which is
-    // precisely when every late query gets one cold noisy attempt and
-    // most needs the recheck. Skipping it there is what made BENCH_r12
-    // carry an unadjudicable single-attempt flag.
-    val capS = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERY_CAP_S", "20").toDouble
-    val withRaw = firstPass.map { case (name, t, times) =>
-      if (t > capS) {
-        val fn = SparkEntry.queries(name)
-        warm(fn)
-        val t2 = attempt(fn)
-        val best = if (!t2.isNaN && t2 < t) t2 else t
-        System.err.println(
-          f"bench: RECHECK $name first=$t%.2f s again=$t2%.2f s -> keeping $best%.2f s")
-        (name, best, times :+ t2)
-      } else (name, t, times)
-    }
-    val results = withRaw.map { case (name, t, _) => name -> t }
-    // Variance evidence in the ARTIFACT (round-11 advisory: the min
-    // alone can mask intermittent slowness — a query flaky-slow half
-    // the time clears the over-cap flag with p≈0.5 and the artifact
-    // carries no counter-evidence). bench_last.json records EVERY raw
-    // attempt per query (first-pass attempts plus any over-cap
-    // recheck); the headline per-query number stays the min — the
-    // best observation of identical engine work under an honest
-    // cleared-cache protocol — and a reader can now judge the spread.
-    val rawJson = withRaw.map { case (name, _, times) =>
-      s""""$name":[${times.map(v =>
-        if (v.isNaN) "-1" else f"$v%.2f").mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    // 10 ms per-query precision: full doubles made the line long
-    // enough that log capture truncated it
-    val qs = results.map { case (k, v) => f""""$k":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, v) if v < 0 => s""""$k"""" }
-      .mkString("[", ",", "]")
-    // Per-query monster guard (round-8 lesson: one unprobed query was
-    // 163 s of a 316 s bench AND degraded every later measurement via
-    // budget shedding). Any single query over the cap — after the
-    // variance recheck above — is flagged in both JSON lines and on
-    // stderr — it cannot land unnoticed.
-    val overCap = results.filter { case (_, v) => v > capS }
-    overCap.foreach { case (k, v) =>
-      System.err.println(f"bench: OVER-CAP $k ${v}%.1f s > ${capS}%.0f s — " +
-        "probe and fix before snapshot (see ARCHITECTURE.md probe rule)")
-    }
-    val overCapJson = overCap.map { case (k, v) => f""""$k":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // Contention self-documentation: the calibration ratio and the
-    // budget_exhausted stamp let a reader adjudicate a flag without
-    // access to this box — over_cap on a run with box_factor 3.2 and
-    // budget_exhausted=true is contention; the same flag at factor
-    // ~1.0 with full protocol is a real regression.
-    // n_shed (round-14, ADVICE item): budget_exhausted flips true when
-    // ANY single query shed its second attempt, which under pace-based
-    // shedding happens on routine clean runs too — the shed-query
-    // COUNT is what discriminates "protocol degraded for 3 queries"
-    // from "the whole tail ran single-attempt". Additive field;
-    // budget_exhausted keeps its historical meaning.
-    val nShed = firstPass.count { case (_, _, times) => times.size < 2 }
-    val curveJson = calibCurve.map { case (n, s, r) =>
-      f"""{"after":$n,"sec":$s%.3f,"box_factor":$r%.2f}"""
-    }.mkString("[", ",", "]")
-    val calibJson = f""""calibration":{"query":"q1_pricing","sec":$calibS%.3f,"clean_ref_sec":$CalibCleanS%.2f,"box_factor":$calibRatio%.2f},"box_factor_curve":$curveJson,"budget_exhausted":$budgetShed,"n_shed":$nShed"""
-    val fullJson =
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir",$calibJson,"queries":$qs,"failed":$failed,"over_cap":$overCapJson,"value":$total}"""
-    // attempts only in the on-disk artifact: the printed line must
-    // stay parseable within the harness's bounded output capture
-    val fileJson =
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir",$calibJson,"queries":$qs,"attempts":$rawJson,"failed":$failed,"over_cap":$overCapJson,"value":$total}"""
-    // The harness keeps only the LAST 2000 chars of output, and the
-    // full per-query map alone is longer than that — rounds 4/5 both
-    // recorded "parsed": null because the line's head (with the
-    // opening brace) fell off the front of the capture. So:
-    //  (a) the full JSON goes to bench_last.json on disk (per-query
-    //      history lives in git — one commit per round),
-    //  (b) the full line prints EARLY for humans / generous captures,
-    //  (c) the LAST line is a short summary that always fits whole
-    //      inside a 2000-char tail: total, failure list, 5 slowest.
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
-        (fileJson + "\n").getBytes("UTF-8"))
-    } catch { case t: Throwable =>
-      System.err.println(s"bench: could not write bench_last.json: ${t.getMessage}")
-    }
+    val (full, summary) = run(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "420").toDouble,
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERY_CAP_S", "20").toDouble)
     // silence Spark's shutdown logging and stop the session BEFORE
-    // printing, so no stray WARN line (or sbt epilogue — suppressed
-    // via showSuccess := false) interleaves with the result lines
+    // printing, so no stray WARN line interleaves with the result lines;
+    // a shutdown race inside stop() must not eat them either
     spark.sparkContext.setLogLevel("OFF")
-    // a shutdown race inside stop() must not eat the result lines
     try spark.stop() catch { case _: Throwable => () }
-    println(fullJson)
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},$calibJson,"slowest":$slowest,"queries_file":"bench_last.json","failed":$failed,"over_cap":$overCapJson,"value":$total}""")
+    println(full)
+    println(summary)
   }
+
+  /** q1_pricing's time under the calibration protocol below (session
+    * start, after the plateau warm), measured on an idle box. It is not
+    * the mid-alphabet bench_last number: a start-of-session JIT never
+    * matches a 245-query-warm one. Re-pin when the protocol or the
+    * clean-run regime moves. Box factor ≤ ~1.5 ⇒ clean box; ≥ ~2.5 ⇒
+    * contended. It was 0.45 while runs were timed as `count()`, which
+    * pruned q1_pricing's six exact-decimal sums; the full run takes
+    * 7.9× as long under this protocol on one 4-vCPU box (0.61 → 4.83 s,
+    * local[32], two runs each), hence 3.6. */
+  val CalibCleanS = 3.6
+
+  /** The body of [[main]]: times `queries` on `sfDir`, writes the full
+    * result with every attempt and each query's kept-attempt
+    * [[RunMetrics]] to `artifact`, and returns the two lines [[main]]
+    * prints. Leaves the session running. */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      budgetS: Double, capS: Double,
+      artifact: Path = Paths.get("bench_last.json")): (String, String) =
+    QueryMetrics.listening(spark) { metrics =>
+      val warmDir = QueryMetrics.warmDir(sfDir)
+      if (warmDir.isEmpty)
+        System.err.println(s"bench: no warm dir for $sfDir; cold-start timings")
+      val wall0 = System.nanoTime()
+      def spent: Double = (System.nanoTime() - wall0) / 1e9
+      // One timed attempt on sfDir. A query that throws must not pose as
+      // a fast success: the attempt is None, and `onFail` sees why.
+      def attempt(fn: Query, onFail: Throwable => Unit = _ => ()): Option[RunMetrics] = {
+        QueryCache.release(spark)
+        try Some(metrics.measure(fn(spark, sfDir)))
+        catch { case t: Throwable => onFail(t); None }
+      }
+      // Untimed run on the warm dir right before timing: the generated
+      // code is the same at every scale factor, so this compiles and
+      // JIT-profiles the query's stages and the timed attempts measure
+      // the engine. A throw is left to the timed attempts to report.
+      def warm(fn: Query): Unit = warmDir.foreach { w =>
+        try metrics.measure(fn(spark, w)) catch { case _: Throwable => () }
+      }
+      def minOfTwo(fn: Query): Double =
+        (1 to 2).flatMap(_ => attempt(fn)).map(_.wallS).minOption
+          .getOrElse(Double.NaN)
+      // Machine-speed calibration: time one fixed reference query first
+      // and stamp the artifact with its ratio to CalibCleanS, so a flag
+      // on a contended box reads as "box was Nx slow today", not "query
+      // got slow". Full-scale warm runs come first, until the time
+      // stops improving by 10% (at most 8 runs): mid-run queries see a
+      // warm page cache and a JIT-compiled session, and a first-touch
+      // read would bias the ratio toward disk and compile queues.
+      val q1 = SparkEntry.queries("q1_pricing")
+      try {
+        Iterator.continually(metrics.measure(q1(spark, sfDir)).wallS).take(8)
+          .sliding(2).takeWhile { case Seq(prev, t) => t < prev * 0.9 }
+          .foreach(_ => ())
+      } catch { case _: Throwable => () }
+      val calibS = minOfTwo(q1)
+      val calibRatio = calibS / CalibCleanS
+      System.err.println(f"bench: calibration q1_pricing $calibS%.3f s " +
+        f"(clean $CalibCleanS%.2f s, box factor $calibRatio%.2f)")
+      // The pace baseline excludes calibration wall (the start and each
+      // recalibration below): calibration work must not shed anyone's
+      // attempt.
+      var calibWall = spent
+      // Every 50 queries q1_pricing is re-timed (min of 2) and appended
+      // to box_factor_curve, so a contention window that opens mid-run
+      // shows in the artifact. Mid-run readings on a clean box sit below
+      // CalibCleanS (deep-warm JIT): the curve tells contention
+      // (factor >> 1) from clean (about 0.5-1.1), not drift under 1.
+      val calibCurve = scala.collection.mutable.ArrayBuffer((0, calibS, calibRatio))
+      def recalibrate(afterN: Int): Unit = {
+        val t0 = spent
+        val t = minOfTwo(q1)
+        if (!t.isNaN) {
+          calibCurve += ((afterN, t, t / CalibCleanS))
+          System.err.println(f"bench: recalibration after $afterN queries: " +
+            f"q1_pricing $t%.3f s (box factor ${t / CalibCleanS}%.2f)")
+        }
+        calibWall += spent - t0
+      }
+      // Any query measured under a shed protocol (one attempt and/or no
+      // warm) marks the run budget-degraded.
+      var budgetShed = false
+      val firstPass = queries.zipWithIndex.map { case ((name, fn), done) =>
+        if (done > 0 && done % 50 == 0) recalibrate(done)
+        val frac = spent / budgetS
+        val onPace = (spent - calibWall) <=
+          (budgetS - calibWall) * ((done + 1).toDouble / queries.size)
+        val n = if (onPace && frac < 0.9) 2 else 1
+        if (n == 1) budgetShed = true
+        if (frac < 0.85) warm(fn)
+        // min of two cancels one-off JVM pauses, never real engine work:
+        // each attempt pays its own scan and materialization
+        val runs = (1 to n).map(_ => attempt(fn, t =>
+          System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")))
+        // a failed attempt records the query as -1
+        val kept = if (runs.contains(None)) None else Some(runs.flatten.minBy(_.wallS))
+        System.err.println(f"bench: $name%-26s ${kept.fold(-1.0)(_.wallS)}%9.3f s   " +
+          f"[wall ${spent}%7.1f s, $n att]")
+        (name, fn, runs, kept)
+      }
+      // Over-cap recheck: one noisy attempt must not flag a query with no
+      // counter-evidence. Any query over the cap gets exactly one more
+      // warm + attempt, keeps the faster, and logs both. Structural
+      // slowness reproduces; a scheduler or page-cache hiccup clears.
+      val results = firstPass.map {
+        case (name, fn, runs, Some(k)) if k.wallS > capS =>
+          warm(fn)
+          val again = attempt(fn)
+          val best = (k +: again.toSeq).minBy(_.wallS)
+          System.err.println(f"bench: RECHECK $name first=${k.wallS}%.2f s " +
+            f"again=${again.fold(Double.NaN)(_.wallS)}%.2f s -> keeping ${best.wallS}%.2f s")
+          (name, runs :+ again, Some(best))
+        case (name, _, runs, kept) => (name, runs, kept)
+      }
+      val secs = results.map { case (name, _, kept) => name -> kept.fold(-1.0)(_.wallS) }
+      def obj[V](kv: Seq[(String, V)])(v: V => String): String =
+        kv.map { case (k, x) => s""""$k":${v(x)}""" }.mkString("{", ",", "}")
+      // 10 ms per-query precision keeps the printed line short enough
+      // for log capture
+      def sec(v: Double): String = f"$v%.2f"
+      val failed = secs.collect { case (k, v) if v < 0 => s""""$k"""" }
+        .mkString("[", ",", "]")
+      // Any query still over the cap is flagged in both lines and on
+      // stderr, so it cannot land unnoticed.
+      val overCap = secs.filter { case (_, v) => v > capS }
+      overCap.foreach { case (k, v) =>
+        System.err.println(f"bench: OVER-CAP $k ${v}%.1f s > ${capS}%.0f s — " +
+          "probe and fix before snapshot (see ARCHITECTURE.md probe rule)")
+      }
+      val total = secs.map(_._2).filter(_ >= 0).sum
+      // box_factor and budget_exhausted let a reader judge a flag without
+      // this box; n_shed counts the queries that ran one attempt, since
+      // pace-based shedding sets budget_exhausted on clean runs too.
+      val nShed = firstPass.count(_._3.size < 2)
+      val curveJson = calibCurve.map { case (n, s, r) =>
+        f"""{"after":$n,"sec":$s%.3f,"box_factor":$r%.2f}"""
+      }.mkString("[", ",", "]")
+      val head = s""""metric":"total","unit":"sec","sf":"$sfDir""""
+      val calib =
+        f""""calibration":{"query":"q1_pricing","sec":$calibS%.3f,"clean_ref_sec":$CalibCleanS%.2f,"box_factor":$calibRatio%.2f},""" +
+          s""""box_factor_curve":$curveJson,"budget_exhausted":$budgetShed,"n_shed":$nShed"""
+      val tail = s""""failed":$failed,"over_cap":${obj(overCap)(sec)},"value":$total}"""
+      val full = s"""{$head,$calib,"queries":${obj(secs)(sec)},$tail"""
+      // The artifact adds every raw attempt (the min alone can hide a
+      // query that is slow half the time) and the kept attempt's
+      // structural figures; they stay off the printed lines, which must
+      // parse within the harness's bounded capture.
+      val attempts = obj(results.map(r => r._1 -> r._2))(
+        _.map(_.fold("-1")(m => sec(m.wallS))).mkString("[", ",", "]"))
+      val figures = obj(results.collect { case (n, _, Some(k)) => n -> k })(_.json)
+      try {
+        Files.write(artifact, (s"""{$head,$calib,"queries":${obj(secs)(sec)},""" +
+          s""""attempts":$attempts,"metrics":$figures,$tail""" + "\n").getBytes("UTF-8"))
+      } catch { case t: Throwable =>
+        System.err.println(s"bench: could not write $artifact: ${t.getMessage}")
+      }
+      // The harness keeps only the LAST 2000 chars of output, and the
+      // per-query map alone is longer: the last line is a summary that
+      // always fits (total, failures, 5 slowest).
+      val slowest = obj(secs.filter(_._2 >= 0).sortBy(-_._2).take(5))(sec)
+      (full, s"""{$head,"n_queries":${secs.size},$calib,"slowest":$slowest,""" +
+        s""""queries_file":"$artifact",$tail""")
+    }
 }

@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * `runMain graft.Profile <time|plan|exec-plan|scale> <sfDir> <q1,q2,…|all> [n|outDir|N]`
   * (`all` names every declared query).
   *
-  *  - `time`: per query, one warm run on the `sf0.001` sibling of
-  *    sfDir (when it exists), then `n` (default 2) timed runs, each
-  *    after [[QueryCache.release]]. Each run prints its wall time, rows,
-  *    and the jobs, stages and shuffle write/read bytes [[QueryMetrics]]
-  *    counted, so structural claims are measured, not inferred.
+  *  - `time`: per query, one warm run on [[QueryMetrics.warmDir]] of
+  *    sfDir (when there is one), then `n` (default 2) timed runs, each
+  *    after [[QueryCache.release]]. Each run prints one line, the query,
+  *    the run and its [[RunMetrics]] JSON, so structural claims are
+  *    measured, not inferred.
   *  - `plan`: the formatted physical plan as built.
   *  - `exec-plan`: the AQE-final `executedPlan` after a collect. AQE
   *    settles (and reuses exchanges) only at execution, so the built
@@ -82,39 +82,35 @@ object Profile {
   }
 
   private def time(spark: SparkSession, sfDir: String, names: Seq[String],
-      n: Int): Unit = {
-    val warm = Paths.get(sfDir).resolveSibling("sf0.001")
+      n: Int): Unit =
     QueryMetrics.listening(spark) { metrics =>
       names.foreach { q =>
         val fn = SparkEntry.queries(q)
-        if (Files.isDirectory(warm)) {
+        QueryMetrics.warmDir(sfDir).foreach { w =>
           QueryCache.release(spark)
-          fn(spark, warm.toString).count()
+          metrics.measure(fn(spark, w))
         }
         (1 to n).foreach { r =>
           QueryCache.release(spark)
-          val m = metrics.measure(fn(spark, sfDir))
-          println(f"$q%-24s r$r  ${m.wallS}%7.3f s  rows=${m.outputRows}%8d  " +
-            f"jobs=${m.jobs}%4d stages=${m.stages}%4d " +
-            f"shufW=${m.shuffleWriteBytes / 1024}%8d KiB " +
-            f"shufR=${m.shuffleReadBytes / 1024}%8d KiB")
+          println(f"$q%-24s r$r  ${metrics.measure(fn(spark, sfDir)).json}")
         }
       }
     }
-  }
 
   /** True when the shuffle bytes grew from `base` to `scaled` by more
-    * than [[Slack]] times the larger of the input-rows and output-rows
-    * growth: an all-pairs step, a skewed key or a plan that changed
-    * with size. Pair growth that is reduced before any exchange (a pair
-    * sample folded into a fixed histogram) does not show in shuffle
-    * bytes, and input rows sum every scan, fixed-size ones included. */
+    * than [[Slack]] times the larger of the largest scan's row growth and
+    * the output-rows growth: an all-pairs step, a skewed key or a plan
+    * that changed with size. The largest scan stands for the corpus; a
+    * sum over all scans would count fixed-size ones too, such as a probe
+    * scan that row-group statistics prune to the first copy. Pair growth
+    * that is reduced before any exchange (a pair sample folded into a
+    * fixed histogram) does not show in shuffle bytes. */
   def flagged(base: RunMetrics, scaled: RunMetrics): Boolean = {
     def ratio(a: Long, b: Long): Double =
       if (a == 0) { if (b == 0) 1.0 else Double.PositiveInfinity }
       else b.toDouble / a
     ratio(base.shuffleWriteBytes, scaled.shuffleWriteBytes) > Slack *
-      math.max(ratio(base.inputRows, scaled.inputRows),
+      math.max(ratio(base.largestScanRows, scaled.largestScanRows),
         ratio(base.outputRows, scaled.outputRows))
   }
 
@@ -135,14 +131,9 @@ object Profile {
           (q, base, scaled)
         }
       }
-      def fig(m: RunMetrics): String =
-        f"""{"input_rows":${m.inputRows},"output_rows":${m.outputRows},""" +
-          f""""jobs":${m.jobs},"stages":${m.stages},""" +
-          f""""shuffle_write_bytes":${m.shuffleWriteBytes},""" +
-          f""""spill_bytes":${m.spillBytes},"wall_s":${m.wallS}%.3f}"""
       val flags = runs.collect { case (q, b, s) if flagged(b, s) => s""""$q"""" }
       val queries = runs.map { case (q, b, s) =>
-        s""""$q":{"base":${fig(b)},"scaled":${fig(s)},""" +
+        s""""$q":{"base":${b.json},"scaled":${s.json},""" +
           s""""flagged":${flagged(b, s)}}"""
       }
       println(s"""{"scale":$n,"slack":$Slack,"flagged":""" +
@@ -160,13 +151,22 @@ object Profile {
     * part and supplier and never copy j's. That gives an n-times corpus
     * with the same join selectivities. nation and region are fixed-size
     * dimensions and are copied once. */
-  private def replicateTables(spark: SparkSession, d: String, out: String,
+  private[graft] def replicateTables(spark: SparkSession, d: String, out: String,
       n: Int): Unit = {
     def write(name: String, df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
     write("documents", replicate(Tables.documents(spark, d), Seq("doc_id"), n,
       perturb = Some("text")))
-    write("embeddings", replicate(Tables.embeddings(spark, d), Seq("vec_id"), n))
+    // copy i negates a seeded per-copy set of dimensions. Negation is
+    // exact in float, so dots and norms within a copy stay exact, while a
+    // vector and its copy-i twin become near orthogonal. Without it every
+    // vector has n-1 exact clones, and the similarity queries' ratios
+    // measure clone-pair blow-up, not scaling.
+    val signFlip: (DataFrame, Int) => DataFrame = (df, i) =>
+      df.withColumn("embedding", transform(col("embedding"), (x, j) =>
+        when(pmod(xxhash64(lit(i), j), lit(2)) === 0, -x).otherwise(x)))
+    write("embeddings", replicate(Tables.embeddings(spark, d), Seq("vec_id"), n,
+      perturbRow = Some(signFlip)))
     write("lineitem", replicate(Tables.lineitem(spark, d),
       Seq("l_orderkey", "l_partkey", "l_suppkey"), n))
     write("orders", replicate(Tables.orders(spark, d),
@@ -193,7 +193,7 @@ object Profile {
   }
 
   /** Per-copy key offset, shared by all tables so FK consistency holds. */
-  private val offset = 10000000L
+  private[graft] val offset = 10000000L
 
   /** `copies` copies of `df` with `idCols` shifted by `i * offset` in
     * copy i. Copies after the first rewrite the `perturb` text column

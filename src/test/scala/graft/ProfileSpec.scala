@@ -22,7 +22,7 @@ class ProfileSpec extends SparkSpec {
   test("time: one line per run, with the jobs the listener counted") {
     val lines = out("time", Some("2")).split("\n").filter(_.startsWith(q))
     assert(lines.length == 2, lines.mkString("\n"))
-    val jobs = lines.map(l => """jobs=\s*(\d+)""".r.findFirstMatchIn(l).get
+    val jobs = lines.map(l => """"jobs":(\d+)""".r.findFirstMatchIn(l).get
       .group(1).toInt)
     assert(jobs.forall(_ >= 1), lines.mkString("\n"))
   }
@@ -51,17 +51,57 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("scale flags shuffle growth above Slack times the larger row growth") {
-    val base = RunMetrics(inputRows = 100, outputRows = 10, jobs = 1,
-      stages = 1, shuffleWriteBytes = 1000, shuffleReadBytes = 0,
-      spillBytes = 0, wallS = 1.0)
+    val base = RunMetrics(inputRows = 100, largestScanRows = 100,
+      outputRows = 10, jobs = 1, stages = 1, shuffleWriteBytes = 1000,
+      shuffleReadBytes = 0, spillBytes = 0, wallS = 1.0)
     // input rows x10, output rows x1: the bound is 1.5 * 10 = 15x
-    val in10 = base.copy(inputRows = 1000)
+    val in10 = base.copy(inputRows = 1000, largestScanRows = 1000)
     assert(!Profile.flagged(base, in10.copy(shuffleWriteBytes = 14900)))
     assert(Profile.flagged(base, in10.copy(shuffleWriteBytes = 15100)))
     // output rows x20 outgrow input rows x10: the bound is 30x
     val out20 = in10.copy(outputRows = 200)
     assert(!Profile.flagged(base, out20.copy(shuffleWriteBytes = 29900)))
     assert(Profile.flagged(base, out20.copy(shuffleWriteBytes = 30100)))
+  }
+
+  test("scale judges shuffle growth against the largest scan, not the sum of scans") {
+    // a corpus scan grows 10x, a pruned probe scan stays at 100 rows: the
+    // summed input grows 5.5x, the corpus 10x, so the bound is 15x
+    val base = RunMetrics(inputRows = 200, largestScanRows = 100,
+      outputRows = 10, jobs = 1, stages = 1, shuffleWriteBytes = 1000,
+      shuffleReadBytes = 0, spillBytes = 0, wallS = 1.0)
+    val scaled = base.copy(inputRows = 1100, largestScanRows = 1000)
+    assert(!Profile.flagged(base, scaled.copy(shuffleWriteBytes = 10000)))
+    assert(!Profile.flagged(base, scaled.copy(shuffleWriteBytes = 14900)))
+    assert(Profile.flagged(base, scaled.copy(shuffleWriteBytes = 15100)))
+  }
+
+  test("measure computes every column: dedup_threshold_sweep scans and shuffles its MinHash side") {
+    val m = QueryMetrics.listening(spark)(
+      _.measure(SparkEntry.queries("dedup_threshold_sweep")(spark, sf)))
+    assert(m.outputRows > 0, m)
+    assert(m.inputRows > 0 && m.largestScanRows > 0, m)
+    assert(m.stages >= 2 && m.shuffleWriteBytes > 0, m)
+  }
+
+  test("scale: embedding copies keep their own dots and are no clones of copy 0") {
+    val dir = Files.createTempDirectory("graft-replicate").toString
+    Profile.replicateTables(spark, sf, dir, 2)
+    val vecs = Tables.embeddings(spark, dir).collect().map { r =>
+      r.getLong(r.fieldIndex("vec_id")) ->
+        r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray
+    }.toMap
+    val ids = vecs.keys.filter(_ < Profile.offset).toSeq.sorted
+    assert(ids.size > 1 && vecs.size == 2 * ids.size)
+    def dot(a: Array[Double], b: Array[Double]): Double =
+      a.indices.map(k => a(k) * b(k)).sum
+    def copy1(id: Long) = vecs(id + Profile.offset)
+    for (a <- ids.take(40); b <- ids.take(40))
+      assert(dot(copy1(a), copy1(b)) == dot(vecs(a), vecs(b)), (a, b))
+    val cos = ids.map { id =>
+      dot(vecs(id), copy1(id)) / dot(vecs(id), vecs(id))
+    }
+    assert(cos.forall(c => math.abs(c) < 0.9), cos.max)
   }
 
   test("the session is still usable afterwards") {
