@@ -1,21 +1,19 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions._
 
 /** The one owner of every cached intermediate the query builders
   * share. Results reused across one session are a session resource:
-  * [[cached]] registers them, [[shared]] memoizes the few that plan
-  * equality cannot find, and [[release]] is the single call that frees
-  * both (Bench and Profile call it between measured runs;
-  * long-lived sessions call it when their inputs change, since a
-  * cached plan assumes its input dirs are immutable).
+  * [[cached]] registers them in the session CacheManager, where a
+  * consumer finds them by plan equality — also the iterative fixpoints,
+  * whose rounds live in one [[Iterate]] node, so an equal build is an
+  * equal plan. [[release]] is the single call that frees them (Bench
+  * and Profile call it between measured runs; long-lived sessions call
+  * it when their inputs change, since a cached plan assumes its input
+  * dirs are immutable).
   */
 object QueryCache {
-  private val memo = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Registers `df`'s plan in the session CacheManager unless an equal
     * plan is already registered, and returns `df`. Registration is lazy
     * (no job runs until an action), and a consumer built from an equal
@@ -28,27 +26,9 @@ object QueryCache {
     df
   }
 
-  /** The session-keyed memo for an intermediate whose every build is a
-    * new plan (the connected-components fixpoint's rounds are local
-    * checkpoints), so [[cached]] could not match a second build.
-    * `build` runs at most once per (session, key), also when queries
-    * are built concurrently. */
-  def shared(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    // evict entries whose session is gone so long-lived JVMs that cycle
-    // SparkSessions don't pin dead cached plans
-    memo.keySet.removeIf(_._1.sparkContext.isStopped)
-    memo.computeIfAbsent((spark, key), _ => build)
-  }
-
-  /** Drops every cached relation and every [[shared]] entry, so the next
-    * run pays its full input-scan and materialization cost. Every
-    * session of a JVM shares one CacheManager, so this releases them
-    * all. */
-  def release(spark: SparkSession): Unit = {
-    memo.values.forEach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    memo.clear()
+  /** Drops every cached relation, so the next run pays its full
+    * input-scan and materialization cost. Every session of a JVM shares
+    * one CacheManager, so this releases them all. */
+  def release(spark: SparkSession): Unit =
     spark.sharedState.cacheManager.clearCache()
-  }
 }

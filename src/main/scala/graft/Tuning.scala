@@ -28,8 +28,7 @@ object Tuning {
     * (round-4 bench died inside the inferred predicate).
     */
   val excludedRules =
-    sys.env.getOrElse("GRAFT_EXCLUDED_RULES",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
   /** A session builder with the confs every session shares:
     * [[excludedRules]], UTC session time, and room for 2000 generated

@@ -17,11 +17,11 @@ object Verify {
     // sequential jobs whose wall cost is scheduling, not CPU, so
     // running a few concurrently nearly divides the wall time (the
     // Spark scheduler interleaves their stages). Queries are
-    // independent; the one shared mutable (the CC cluster memo) is a
-    // computeIfAbsent. Keep the pool small so heavyweight queries
-    // can't starve each other's executors. SPARK_GRAFT_VERIFY_PAR=1
-    // restores strictly sequential behavior.
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "3").toInt
+    // independent; the shared intermediates are CacheManager entries,
+    // each materialized once whichever query reads it first. Keep the
+    // pool small so heavyweight queries can't starve each other's
+    // executors.
+    val par = 3
     val queries = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val status = dump(spark, queries, SparkEntry.oracleSql, sfDir, outDir, par)

@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.{Num, QueryCache, QueryModule, Tables}
+import graft.{Fixpoint, Iterate, Num, QueryCache, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
 
 /** Training-data pipeline operators beyond per-pair dedup: near-dup
   * CLUSTERING (connected components), deterministic SAMPLING, a
@@ -46,79 +47,168 @@ object Pipeline extends QueryModule {
     * old label), so a round costs exactly two shuffles and one tiny
     * scan of materialized output — no extra convergence job.
     *
+    * The rounds run when the plan executes ([[graft.Iterate]]), not
+    * when it is built, and two builds over equal pairs give equal
+    * plans.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    Iterate(HashToMin, pairs.select(col("a_id").cast("long").as("src"),
+      col("b_id").cast("long").as("dst")))
+
+  /** The hash-to-min loop over (src, dst) edges: (doc_id, cluster_id).
+    *
     * Both the edge set and each round's labels are eagerly
     * localCheckpoint'ed: the upstream candidate-pair pipeline runs
     * exactly once, and the per-round plan stays flat instead of
     * re-analyzing an N-round lineage (which made driver-side plan
     * analysis, not cluster work, the dominant cost). On a real
-    * cluster the same shape uses reliable checkpointing to HDFS/S3;
-    * rounds are bounded by component diameter (near-dup clusters are
-    * clique-ish, so 2-3 rounds).
+    * cluster the same shape uses reliable checkpointing to HDFS/S3.
+    * The loop ends at convergence: labels only decrease, so it ends
+    * within the longest path's length in rounds (near-dup clusters
+    * are clique-ish, so 2-3 rounds).
     */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val p = pairs.select(col("a_id").cast("long").as("src"),
-      col("b_id").cast("long").as("dst"))
-    // (Round 14 re-examined: hash-partitioning + cache()ing sym to
-    // kill the per-round join exchange measured NO job/time win — AQE
-    // already broadcasts the tiny label side, so sym streams without
-    // an exchange anyway; the repartition only added a shuffle.
-    // Kept the proven checkpoint.)
-    val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    // Round 1 is fused into the loop (round 14): with identity labels
-    // the neighbor-label join IS the edge list itself (label = dst),
-    // and the self rows are (src, src, src) — duplicates are harmless
-    // under min/max, so the initial distinct-nodes pass AND its
-    // checkpoint AND the first join all collapse away (two fewer
-    // actions and one less shuffle join per clustering; the label
-    // stream per round is otherwise identical, so every round's output
-    // — and the fixpoint — is bit-for-bit unchanged).
-    var labels: DataFrame = null
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < 50) {
-      // Neighbor label stream + tagged self rows in one union: the min
-      // aggregate yields the new label, the max of `old` (null on
-      // neighbor rows) recovers the previous one for the convergence
-      // test — one groupBy serves both.
-      val (nbrRows, selfRows) =
-        if (labels == null) (
-          sym.select(col("src").as("node"), col("dst").as("label"),
-            lit(null).cast("long").as("old")),
-          sym.select(col("src").as("node"), col("src").as("label"),
-            col("src").as("old")))
-        else (
-          sym.join(labels, sym("dst") === labels("node"))
-            .select(sym("src").as("node"), col("label"),
+  private case object HashToMin extends Fixpoint {
+    val schema: StructType = new StructType()
+      .add("doc_id", LongType).add("cluster_id", LongType)
+
+    def run(inputs: Seq[DataFrame]): DataFrame = {
+      val p = inputs.head
+      // (Round 14 re-examined: hash-partitioning + cache()ing sym to
+      // kill the per-round join exchange measured NO job/time win — AQE
+      // already broadcasts the tiny label side, so sym streams without
+      // an exchange anyway; the repartition only added a shuffle.
+      // Kept the proven checkpoint.)
+      val sym = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
+        .localCheckpoint()
+      // Round 1 is fused into the loop (round 14): with identity labels
+      // the neighbor-label join IS the edge list itself (label = dst),
+      // and the self rows are (src, src, src) — duplicates are harmless
+      // under min/max, so the initial distinct-nodes pass AND its
+      // checkpoint AND the first join all collapse away (two fewer
+      // actions and one less shuffle join per clustering; the label
+      // stream per round is otherwise identical, so every round's output
+      // — and the fixpoint — is bit-for-bit unchanged).
+      var labels: DataFrame = null
+      var changed = true
+      while (changed) {
+        // Neighbor label stream + tagged self rows in one union: the min
+        // aggregate yields the new label, the max of `old` (null on
+        // neighbor rows) recovers the previous one for the convergence
+        // test — one groupBy serves both.
+        val (nbrRows, selfRows) =
+          if (labels == null) (
+            sym.select(col("src").as("node"), col("dst").as("label"),
               lit(null).cast("long").as("old")),
-          labels.select(col("node"), col("label"),
-            col("label").as("old")))
-      val next = nbrRows.union(selfRows)
-        .groupBy(col("node"))
-        .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-        .localCheckpoint() // eager: one pass computes labels + delta
-      changed = next.filter(col("label") < col("old")).limit(1).count() > 0
-      labels = next.select(col("node"), col("label"))
-      rounds += 1
+            sym.select(col("src").as("node"), col("src").as("label"),
+              col("src").as("old")))
+          else (
+            sym.join(labels, sym("dst") === labels("node"))
+              .select(sym("src").as("node"), col("label"),
+                lit(null).cast("long").as("old")),
+            labels.select(col("node"), col("label"),
+              col("label").as("old")))
+        val next = nbrRows.union(selfRows)
+          .groupBy(col("node"))
+          .agg(min(col("label")).as("label"), max(col("old")).as("old"))
+          .localCheckpoint() // eager: one pass computes labels + delta
+        changed = next.filter(col("label") < col("old")).limit(1).count() > 0
+        labels = next.select(col("node"), col("label"))
+      }
+      labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
     }
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** Near-dup cluster map for a corpus dir, computed once per session.
+  /** `rounds` PageRank iterations (d=0.85) over (a_id, b_id) pairs as
+    * an undirected graph: (doc_id, pr), pr in 1e-8 units.
     *
-    * Unlike the single-DataFrame operators (which share work through
-    * Spark's plan cache automatically), the CC loop materializes per
-    * round, so two consumers (`dedup_cluster`, `dedup_survivors`)
-    * would each re-run the whole iteration. A real pipeline computes
-    * the clustering once and every downstream stage reads it; the
-    * [[QueryCache.shared]] entry (keyed by session + immutable input
-    * dir) is that shape.
+    * Eager per-round checkpoints, like the CC loop: each iteration
+    * references pr_{i-1} twice, so an unmaterialized lineage doubles
+    * per round (the 5-round plan carried 32 copies of the whole LSH
+    * pipeline — 10 MB task binaries before this). On a cluster the
+    * same shape checkpoints to HDFS/S3. */
+  private case class PageRank(rounds: Int) extends Fixpoint {
+    val schema: StructType = new StructType()
+      .add("doc_id", LongType).add("pr", LongType)
+
+    def run(inputs: Seq[DataFrame]): DataFrame = {
+      val p = inputs.head
+      val edges = p.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .union(p.select(col("b_id").as("src"), col("a_id").as("dst")))
+        .localCheckpoint()
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      // node count as a driver-side long (a distributed count returning
+      // 8 bytes — scale-safe), NOT a count over an empty global window,
+      // which would funnel every node row through one partition to
+      // stamp it; the loop is already eager, so the extra job is free
+      val nNodes = deg.count()
+      var pr = deg.select(col("src").as("node"), col("deg"))
+        .withColumn("n", lit(nNodes))
+        .withColumn("pr", expr("100000000L div n"))
+        .localCheckpoint()
+      for (_ <- 1 to rounds) {
+        val sums = pr.join(edges, pr("node") === edges("src"))
+          .select(col("dst").as("node"),
+            expr("pr div deg").as("c"))
+          .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
+        pr = pr.drop("pr").join(sums, Seq("node"))
+          .withColumn("pr", expr(
+            "((15L * 100000000L) div n) div 100L" +
+              " + (85L * in_sum) div 100L"))
+          .drop("in_sum")
+          .localCheckpoint()
+      }
+      pr.select(col("node").as("doc_id"), col("pr"))
+    }
+  }
+
+  /** `rounds` power iterations over a centered (vec_id, dim, c) matrix
+    * from the all-ones start vector over (dim): (dim, vv, nrm), the
+    * unit eigenvector estimate and its norm (the same on every row).
+    *
+    * The norm rides the SAME plan as the eigenvector via a global
+    * window over the 64-row wk table (a second dsum aggregate +
+    * crossJoin would re-run the corpus-sized wk computation per
+    * checkpoint — measured ~40% of the query). Window quantization is
+    * identical to dsum, so the value matches the oracle's
+    * scalar-subquery nrm bit-for-bit. Each round's 64-row vector is
+    * checkpointed: without that barrier its lineage re-embeds the
+    * prior round several times over (Catalyst analysis goes
+    * exponential in rounds). */
+  private case class PowerIteration(rounds: Int) extends Fixpoint {
+    val schema: StructType = new StructType()
+      .add("dim", IntegerType).add("vv", DoubleType).add("nrm", DoubleType)
+
+    def run(inputs: Seq[DataFrame]): DataFrame = {
+      import graft.Num.{dsum, dsumExpr}
+      val Seq(mat, dims) = inputs
+      var vk = dims.select(col("dim"), lit(1.0).as("vv"))
+      var withNrm: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val dk = mat.join(broadcast(vk), Seq("dim"))
+          .groupBy(col("vec_id")).agg(dsum(col("c") * col("vv")).as("dot"))
+        val wk = mat.join(dk, Seq("vec_id"))
+          .groupBy(col("dim")).agg(dsum(col("dot") * col("c")).as("w"))
+        withNrm = wk.withColumn("nrm", sqrt(
+          sum(dsumExpr(col("w") * col("w")))
+            .over(Window.partitionBy()).cast("double") / 1e8))
+          .select(col("dim"), (col("w") / col("nrm")).as("vv"),
+            col("nrm"))
+          .localCheckpoint()
+        vk = withNrm.select(col("dim"), col("vv"))
+      }
+      withNrm
+    }
+  }
+
+  /** Near-dup cluster map for a corpus dir. Every consumer
+    * (`dedup_cluster`, `dedup_survivors`, the corpus stages) builds an
+    * equal plan, so the one [[QueryCache.cached]] entry serves them
+    * all and the loop runs once until [[QueryCache.release]].
     */
   private def clusters(s: SparkSession, d: String): DataFrame =
-    QueryCache.shared(s, "cc:" + d)(
-      QueryCache.cached(connectedComponents(
-        Dedup.minhashPairs(documents(s, d))
-          .select(col("a_id"), col("b_id")))))
+    QueryCache.cached(connectedComponents(
+      Dedup.minhashPairs(documents(s, d)).select(col("a_id"), col("b_id"))))
 
   /** Forwards to [[QueryCache.release]]; kept only because the
     * benchmark harness (`perfbench/Queries.scala`) calls it. */
@@ -681,41 +771,7 @@ object Pipeline extends QueryModule {
     "graph_pagerank" -> ((s, d) => {
       val p = Dedup.minhashPairs(documents(s, d))
         .select(col("a_id"), col("b_id"))
-      // Eager per-round checkpoints, like the CC loop: each iteration
-      // references pr_{i-1} twice, so an unmaterialized lineage doubles
-      // per round (the 5-round plan carried 32 copies of the whole LSH
-      // pipeline — 10 MB task binaries before this). On a cluster the
-      // same shape checkpoints to HDFS/S3. PlanAuditSpec exempts this
-      // query from the zero-jobs-at-construction audit for exactly the
-      // reason it exempts dedup_cluster.
-      val edges = p.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(p.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .localCheckpoint()
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      // node count as a driver-side long (a distributed count returning
-      // 8 bytes — scale-safe), NOT a count over an empty global window,
-      // which would funnel every node row through one partition to
-      // stamp it; the loop is already eager, so the extra job is free
-      val nNodes = deg.count()
-      var pr = deg.select(col("src").as("node"), col("deg"))
-        .withColumn("n", lit(nNodes))
-        .withColumn("pr", expr("100000000L div n"))
-        .localCheckpoint()
-      for (_ <- 1 to 5) {
-        val sums = pr.join(edges, pr("node") === edges("src"))
-          .select(col("dst").as("node"),
-            expr("pr div deg").as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-        pr = pr.drop("pr").join(sums, Seq("node"))
-          .withColumn("pr", expr(
-            "((15L * 100000000L) div n) div 100L" +
-              " + (85L * in_sum) div 100L"))
-          .drop("in_sum")
-          .localCheckpoint()
-      }
-      pr.select(col("node").as("doc_id"), col("pr"))
-        .orderBy(col("doc_id"))
+      Iterate(PageRank(5), p).orderBy(col("doc_id"))
     }),
 
     // Containment-ratio decontamination: flag corpus documents covering
@@ -894,14 +950,15 @@ object Pipeline extends QueryModule {
       val safe = queries("corpus_split_safe")(s, d)
         .select(col("doc_id"), col("split"))
       // three consumers (two leak-label joins + the card rollup) —
-      // materialize the narrow released table once (distributed
-      // localCheckpoint, the text_winnow_pairs discipline) instead of
-      // re-running the whole curation chain per consumer
-      val rel = clean.select(col("doc_id"), col("n_toks"))
+      // cache the narrow released table (lazy, like q_theil_sen's
+      // monthly table) instead of re-running the whole curation chain
+      // per consumer: column pruning specializes each consumer's copy,
+      // so exchange reuse cannot dedupe them (uncached at sf0.1: 126
+      // jobs instead of 70, and 2.4× the input rows)
+      val rel = QueryCache.cached(clean.select(col("doc_id"), col("n_toks"))
         .join(safe, Seq("doc_id"))
         .join(documents(s, d).select(col("doc_id"), col("source")),
-          Seq("doc_id"))
-        .localCheckpoint()
+          Seq("doc_id")))
       val leakPairs = broadcast(Dedup.minhashPairs(documents(s, d)))
         .join(rel.select(col("doc_id").as("a_id"),
           col("split").as("a_split")), Seq("a_id"))
@@ -1173,26 +1230,23 @@ object Pipeline extends QueryModule {
     // the 64-row eigenvector broadcast back each iteration; the
     // corpus-sized table is touched a constant number of times.
     "emb_pca2" -> ((s, d) => {
-      import graft.Num.{davg, dsum}
+      import graft.Num.{davg, dsumExpr}
       val e = embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding"))
           .as(Seq("pos", "val")))
         .select(col("vec_id"), (col("pos") + 1).as("dim"),
           col("val").cast("double").as("v"))
       val m = e.groupBy(col("dim")).agg(davg(col("v")).as("mean"))
-      // Checkpoint discipline (exempted in PlanAuditSpec's zero-jobs
-      // audit, same reason as the CC/PageRank loops):
+      // Materialization discipline:
       //  - the centered matrix c (and its deflation c2) is materialized
       //    ONCE — every subsequent power-iteration job reads the cached
       //    partitions instead of re-running explode+center per job
       //    (MEMORY_AND_DISK, so a 100 TB corpus spills rather than
       //    OOMs; an engine that can't afford the cache re-derives c
       //    per pass at 2× scan cost, same answer);
-      //  - each iteration's 64-row eigenvector vk is checkpointed:
-      //    without that barrier vk's lineage re-embeds the prior
-      //    iteration several times over and the deflated second chain
-      //    SQUARES the tree — Catalyst analysis goes exponential in
-      //    iterations (measured: minutes at sf0.01).
+      //  - each power chain is one [[graft.Iterate]] node: its rounds
+      //    run when the plan executes, and Catalyst never sees the
+      //    iteration lineage (see PowerIteration);
       //  - round 14: the matrix is hash-partitioned on vec_id BEFORE
       //    the barrier (cache() — a lazy barrier, cleared per bench
       //    attempt, same honesty contract as q_theil_sen's monthly
@@ -1204,55 +1258,33 @@ object Pipeline extends QueryModule {
       //    no longer needs a corpus-wide distinct (see dims below).
       //    Measured at sf0.1: 5.18 → 4.03 s, 53 → 46 jobs, 5.9 →
       //    2.3 MB shuffled. (Tried and rejected on the way: the same
-      //    repartition in front of the previous localCheckpoint
-      //    barrier — a checkpoint's LogicalRDD loses the partitioning
-      //    under AQE and every iteration re-shuffled anyway, measured
-      //    WORSE at 54 jobs / 7.7 MB.)
+      //    repartition in front of a localCheckpoint barrier — a
+      //    checkpoint's LogicalRDD loses the partitioning under AQE
+      //    and every iteration re-shuffled anyway, measured WORSE at
+      //    54 jobs / 7.7 MB.)
       def center(mat: DataFrame): DataFrame = QueryCache.cached(mat)
       val c = center(e.join(broadcast(m), Seq("dim"))
         .select(col("vec_id"), col("dim"), (col("v") - col("mean")).as("c"))
         .repartition(col("vec_id")))
-      // The norm rides the SAME plan as the eigenvector via a global
-      // window over the 64-row wk table (a second dsum aggregate +
-      // crossJoin would re-run the corpus-sized wk computation per
-      // checkpoint — measured ~40% of the query). Window quantization
-      // is identical to dsum, so the value matches the oracle's
-      // scalar-subquery nrm bit-for-bit.
       // dims: the 64-row dimension table for the all-ones start vector.
       // Derived from the means table m instead of a corpus-wide
       // distinct over mat: joins on dim preserve the dim set, so
-      // m's dims == mat's dims for both power() calls — same rows,
-      // minus one full scan of the checkpointed matrix per call.
+      // m's dims == mat's dims for both chains — same rows, minus one
+      // full scan of the materialized matrix per chain.
       val dims = m.select(col("dim"))
-      def power(mat: DataFrame): (DataFrame, DataFrame) = {
-        import graft.Num.dsumExpr
-        var vk = dims.select(col("dim"), lit(1.0).as("vv"))
-        var nk: DataFrame = null
-        for (_ <- 1 to 3) {
-          val dk = mat.join(broadcast(vk), Seq("dim"))
-            .groupBy(col("vec_id")).agg(dsum(col("c") * col("vv")).as("dot"))
-          val wk = mat.join(dk, Seq("vec_id"))
-            .groupBy(col("dim")).agg(dsum(col("dot") * col("c")).as("w"))
-          val withNrm = wk.withColumn("nrm", sqrt(
-            sum(dsumExpr(col("w") * col("w")))
-              .over(Window.partitionBy()).cast("double") / 1e8))
-            .select(col("dim"), (col("w") / col("nrm")).as("vv"),
-              col("nrm"))
-            .localCheckpoint()
-          vk = withNrm.select(col("dim"), col("vv"))
-          nk = withNrm.agg(max(col("nrm")).as("nrm"))
-        }
-        (vk, nk)
-      }
-      val (v1, _) = power(c)
-      val d1 = c.join(broadcast(v1), Seq("dim"))
-        .groupBy(col("vec_id")).agg(dsum(col("c") * col("vv")).as("dot"))
-      val c2 = center(c.join(d1, Seq("vec_id"))
-        .join(broadcast(v1), Seq("dim"))
+      // Deflation: v1 is read once, so the first chain runs once (two
+      // reads plan two chain nodes, and their broadcasts differ after
+      // filter inference, so exchange reuse cannot merge them). The
+      // per-vector dot is dsum's exact decimal sum over a vec_id window
+      // instead of a grouped join-back: the same value, bit for bit.
+      val v1 = Iterate(PowerIteration(3), c, dims)
+        .select(col("dim"), col("vv"))
+      val dot = sum(dsumExpr(col("c") * col("vv")))
+        .over(Window.partitionBy(col("vec_id"))).cast("double") / 1e8
+      val c2 = center(c.join(broadcast(v1), Seq("dim"))
         .select(col("vec_id"), col("dim"),
-          (col("c") - col("dot") * col("vv")).as("c")))
-      val (v2, n2) = power(c2)
-      v2.crossJoin(broadcast(n2))
+          (col("c") - dot * col("vv")).as("c")))
+      Iterate(PowerIteration(3), c2, dims)
         .select(col("dim"),
           expr("cast(round(vv * 1000000) as bigint)").as("loading_ppm"),
           col("nrm").as("eigenvalue"))

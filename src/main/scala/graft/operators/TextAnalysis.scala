@@ -49,36 +49,6 @@ object TextAnalysis extends QueryModule {
     "array_distinct(transform(sequence(1, greatest(1, size(hs) - 7))," +
       " j -> array_min(slice(hs, j, 8))))"
 
-  /** Per-doc winnowed fingerprint set (doc_id, hs, fps) — shared by the
-    * per-doc summary and the pair generator.
-    *
-    * `materializeHs` puts an eager barrier between the shingle-hash
-    * column and its consumers. The pair generator NEEDS it: the
-    * explode downstream makes Catalyst infer a `size(fps) > 0`
-    * predicate and push it to the scan, inlining `fps` — and, inside
-    * its lambda, `hs` — into the filter. `slice(hs, j, 8)` then
-    * re-evaluates the ENTIRE md5-shingle transform once per j, turning
-    * a linear 290-md5s-per-doc column into ~84k interpreted md5s per
-    * doc per plan leg (the round-4 bench died inside exactly that
-    * predicate). Materializing (doc_id, hs) makes every downstream
-    * re-evaluation an O(window) slice over a stored array. On a real
-    * cluster the barrier is a reliable checkpoint or an intermediate
-    * table — same shape, same reason. */
-  private def winnowFps(docs: org.apache.spark.sql.DataFrame,
-      materializeHs: Boolean = false) = {
-    val base =
-      if (materializeHs) {
-        // hashing is compute-bound per row, so parallelism = cores, not
-        // input splits: a small corpus file arrives as ONE split and
-        // would serialize the whole md5 stage on one core (the shuffle
-        // moves raw text once — trivial next to ~40 md5s per character)
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-          .withColumn("hs", hsCol)
-          .select(col("doc_id"), col("hs")).localCheckpoint()
-      } else docs.withColumn("hs", hsCol)
-    base.withColumn("fps", expr(fpsExpr))
-  }
-
   /** The same winnowed-fingerprint set in the DuckDB dialect. */
   private val sqlWinnow =
     """t AS (
@@ -310,7 +280,7 @@ object TextAnalysis extends QueryModule {
     // except the final sort); hashes are md5-derived so the DuckDB
     // oracle recomputes identical fingerprints.
     "text_winnow" -> ((s, d) => {
-      winnowFps(documents(s, d))
+      documents(s, d).withColumn("hs", hsCol).withColumn("fps", expr(fpsExpr))
         .select(col("doc_id"), size(col("hs")).cast("long").as("n_shingles"),
           size(col("fps")).cast("long").as("n_fp"),
           expr("aggregate(fps, 0L, (a, x) -> a + x)").as("fp_sum"))
@@ -334,23 +304,25 @@ object TextAnalysis extends QueryModule {
     // number of distinct fingerprints). Same df-cap idea as the
     // AllPairs prefix filter's frequency ordering.
     "text_winnow_pairs" -> ((s, d) => {
-      // ONE barrier, ONE pass: the fused native winnow_fps32 computes
-      // hash → sliding-min → distinct per row with the positional hash
-      // array living only in task-local scratch (see WinnowFps doc for
-      // why a two-column pipeline must either checkpoint that
-      // corpus-sized intermediate or risk CollapseProject re-running
-      // the md5 stage per slice element). The checkpointed exploded
-      // index — the ~4x-winnowed small form — then feeds all THREE
-      // consumers (df keep-list + both self-join legs). repartition
-      // first: hashing is compute-bound per row, so parallelism =
-      // cores, not input splits.
+      // ONE pass: the fused native winnow_fps32 computes hash →
+      // sliding-min → distinct per row with the positional hash array
+      // living only in task-local scratch (see WinnowFps doc for why a
+      // two-column pipeline must either materialize that corpus-sized
+      // intermediate or risk CollapseProject re-running the md5 stage
+      // per slice element). The exploded index — the ~4x-winnowed
+      // small form — feeds all THREE consumers (df keep-list + both
+      // self-join legs) with no materialization barrier, so building
+      // the query runs nothing. The keep side and the pair side each
+      // scan and hash the documents: the pair side's join-inferred
+      // null filter makes its scan, and so its exchange, differ.
+      // repartition first: hashing is compute-bound per row, so
+      // parallelism = cores, not input splits.
       val docs = documents(s, d)
       val f = docs
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .select(col("doc_id"),
           explode(graft.expressions.WinnowFps.winnow_fps32(col("text"), 8, 8))
             .as("fp"))
-        .localCheckpoint()
       // keep-list join (not broadcast): the discriminative-fp table is
       // ~all distinct fingerprints, far too large to broadcast at
       // corpus scale; both join legs key on fp, so the shuffle

@@ -14,6 +14,12 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
       10L -> 10L, 11L -> 10L))
+    // a 52-node path: the min label needs 51 hops to reach node 51, so
+    // the loop must run to convergence, not to a round cap
+    val path = Pipeline.connectedComponents(
+      (0L until 51L).map(i => (i, i + 1)).toDF("a_id", "b_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(path == (0L to 51L).map(_ -> 0L).toMap)
   }
 
   test("dedup_cluster groups every paired doc, cluster id is member min") {

@@ -184,38 +184,9 @@ class PlanAuditSpec extends SparkSpec {
     // the driver at plan time — the scale anti-pattern behind the old
     // ngram df-table and embedding-corpus collects. Building the
     // DataFrame must be fully lazy: zero jobs until an action runs.
-    // Exempt: the cluster-memoized family, which by design computes the
-    // iterative CC fixpoint eagerly exactly once per session (each
-    // round is a bounded delta-count, not an input materialization).
-    // graph_pagerank: iterative loop with eager per-round checkpoints
-    // (lineage doubles per round otherwise), same reason as the CC
-    // family
-    // text_winnow_pairs: eager localCheckpoint barriers by design —
-    // (1) materializing hs stops predicate pushdown from inlining the
-    // md5-shingle transform into an inferred filter where the slice
-    // lambda re-evaluates it per element (quadratic interpreted md5,
-    // the round-4 bench killer), (2) the exploded index feeds three
-    // consumers. Distributed materialization, nothing on the driver.
-    val eagerOk = Set("dedup_cluster", "dedup_survivors", "shard_assign",
-      "corpus_mix", "graph_pagerank", "text_winnow_pairs",
-      // rides the memoized cluster fixpoint like the rest of the
-      // cluster family
-      "corpus_curate",
-      // same memoized cluster fixpoint as corpus_curate
-      "corpus_funnel", "dedup_survivors_quality", "dedup_cluster_hist",
-      // composes corpus_curate's stages + corpus_split_safe — same
-      // memoized cluster fixpoint, plus the released-table
-      // localCheckpoint (three consumers)
-      "corpus_release",
-      // per-iteration 64-row eigenvector checkpoints: without them the
-      // deflated second power chain squares the lineage tree and
-      // Catalyst analysis goes exponential (see emb_pca2)
-      "emb_pca2")
-    // Other queries (corpus_split_safe, ...) reuse that memoized
-    // cluster fixpoint; whichever query is constructed first runs its
-    // rounds. Compute it here, before counting, so the verdict does
-    // not depend on which tests ran earlier in the session.
-    SparkEntry.queries("dedup_cluster")(spark, sf)
+    // The iterative fixpoints (connected components, pagerank, the
+    // power chains) are plan nodes whose rounds run at execution, so no
+    // query is exempt.
     val sc = spark.sparkContext
     @volatile var jobs = 0
     @volatile var lastSite = ""
@@ -234,7 +205,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      for ((name, fn) <- SparkEntry.queries if !eagerOk(name)) {
+      for ((name, fn) <- SparkEntry.queries) {
         ListenerBusAccess.waitUntilEmpty(sc)
         val before = jobs
         fn(spark, sf)
@@ -440,19 +411,31 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("one QueryCache.release frees every cached table and shared entry") {
-    // runs after the collect sweeps, so both kinds are populated: the
-    // cluster family registered its fixpoint under this key
-    val ccKey = "cc:" + sf
-    val probe = spark.range(1).toDF()
+  test("one QueryCache.release frees every cached table") {
+    // runs after the collect sweeps, so the CacheManager is populated
     try {
-      assert(!(QueryCache.shared(spark, ccKey)(probe) eq probe),
-        "the sweep left no shared cluster entry to release")
       assert(!spark.sharedState.cacheManager.isEmpty)
       QueryCache.release(spark)
       assert(spark.sharedState.cacheManager.isEmpty)
-      assert(QueryCache.shared(spark, ccKey)(probe) eq probe,
-        "release left a shared entry behind")
+    } finally QueryCache.release(spark)
+  }
+
+  test("dedup_cluster and corpus_curate share one fixpoint entry, which release empties") {
+    import org.apache.spark.sql.classic.ClassicConversions._
+    val cm = spark.sharedState.cacheManager
+    def fixpoints(q: String) = SparkEntry.queries(q)(spark, sf)
+      .queryExecution.analyzed.collect { case i: Iterate => i }
+    QueryCache.release(spark)
+    try {
+      val found = fixpoints("dedup_cluster") ++ fixpoints("corpus_curate")
+      assert(found.size >= 2)
+      // two builds give equal plans, so every lookup finds one entry
+      assert(found.forall(_.sameResult(found.head)))
+      val entries = found.map(f => cm.lookupCachedData(spark, f)
+        .getOrElse(fail(s"no cache entry for $f")).cachedRepresentation)
+      assert(entries.forall(_ eq entries.head))
+      QueryCache.release(spark)
+      assert(cm.isEmpty && found.forall(cm.lookupCachedData(spark, _).isEmpty))
     } finally QueryCache.release(spark)
   }
 }
