@@ -1,4 +1,4 @@
-// Compiled by CI in the `adapters` subproject against compile-only
+// Built and tested by the `adapters` subproject against compile-only
 // shims of the pgjdbc replication API (extras/shims/ — the real
 // org.postgresql:postgresql is unresolvable in this offline build; at
 // deploy time swap the shims for the real driver jar, see README
@@ -23,26 +23,24 @@ import org.postgresql.replication.{LogSequenceNumber, PGReplicationStream}
   * slot.py:122-129).
   *
   * Mapping onto the seam:
-  *  - [[headLsn]]  — drain `readPending()` into an ordered buffer and
-  *    report the last received LSN (drives micro-batch admission),
-  *  - [[read]]     — serve buffered records in (start, end]; later
-  *    records stay buffered for the next batch,
-  *  - [[flushed]]  — `setFlushedLSN` + `forceUpdateStatus`, the
+  *  - [[poll]]    — one `readPending()`: the message's UTF-8 payload
+  *    at `getLastReceiveLSN`, or null when nothing is pending,
+  *  - [[flushed]] — `setFlushedLSN` + `forceUpdateStatus`, the
   *    standby status update the reference sends as
-  *    `send_feedback(flush_lsn=...)` (__main__.py:101-104); also
-  *    drops served records at or below the ack from the buffer.
+  *    `send_feedback(flush_lsn=...)` (__main__.py:101-104).
   *
-  * Single-threaded by contract: the CDC stream drives headLsn /
-  * read / flushed from the driver; the one-partition reader uses a
-  * separate connection made by the same factory (a slot is one totally
-  * ordered lane — same constraint the reference lives with).
+  * It buffers nothing: unread messages stay in the socket and the slot.
+  * `ReplicationTransport` is its only caller, on the driver, one
+  * instance per stream (Postgres streams a slot to one walsender at a
+  * time); it holds the planned batch plus at most
+  * `maxRecordsPerTrigger` polled messages in driver heap.
   *
   * @param url    plain JDBC url, e.g. jdbc:postgresql://host/db
   * @param user   role with REPLICATION
   * @param password password for `user`
-  * @param slot   logical slot name (create via SlotAdmin, S3)
-  * @param plugin output plugin: "wal2json" or "test_decoding" —
-  *               graft.functions.Cdc parses both wire formats
+  * @param slot   logical slot name (create via SlotAdmin, S3), made
+  *               with the output plugin graft.functions.Cdc parses
+  *               (wal2json or test_decoding)
   * @param slotOptions extra plugin options, e.g.
   *               Map("include-xids" -> "true") for wal2json
   */
@@ -51,7 +49,6 @@ class PgJdbcReplicationStream(
     user: String,
     password: String,
     slot: String,
-    plugin: String = "wal2json",
     slotOptions: Map[String, String] = Map("include-xids" -> "true"),
     statusIntervalSeconds: Int = 10)
     extends ReplicationStream {
@@ -67,7 +64,9 @@ class PgJdbcReplicationStream(
     DriverManager.getConnection(url, props)
   }
 
-  private val stream: PGReplicationStream = {
+  // a slot another walsender streams refuses the start: close the
+  // connection rather than leak it
+  private val stream: PGReplicationStream = try {
     var b = conn.unwrap(classOf[PGConnection])
       .getReplicationAPI
       .replicationStream()
@@ -76,38 +75,15 @@ class PgJdbcReplicationStream(
       .withStatusInterval(statusIntervalSeconds, TimeUnit.SECONDS)
     slotOptions.foreach { case (k, v) => b = b.withSlotOption(k, v) }
     b.start()
-  }
+  } catch { case e: Throwable => conn.close(); throw e }
 
-  /** Received-but-unserved WAL messages, ordered by LSN. Bounded by
-    * the admission window: latestOffset admits at most
-    * maxRecordsPerTrigger positions per trigger, and flushed() trims
-    * after every committed epoch. */
-  private val buffer = new java.util.TreeMap[Long, String]()
-
-  private def drain(): Unit = {
-    var buf = stream.readPending()
-    while (buf != null) {
-      val bytes = new Array[Byte](buf.remaining())
-      buf.get(bytes)
-      buffer.put(stream.getLastReceiveLSN.asLong(),
-        new String(bytes, StandardCharsets.UTF_8))
-      buf = stream.readPending()
-    }
-  }
-
-  override def headLsn(): Long = {
-    drain()
-    if (buffer.isEmpty) stream.getLastReceiveLSN.asLong()
-    else buffer.lastKey()
-  }
-
-  override def read(start: Long, end: Long): Iterator[WalRecord] = {
-    drain()
-    // (start, end] — same replay-and-skip semantics a restarted
-    // reference process gets from the slot's confirmed position
-    import scala.jdk.CollectionConverters._
-    buffer.subMap(start, false, end, true).entrySet().asScala.iterator
-      .map(e => WalRecord(e.getKey, e.getValue))
+  override def poll(): WalRecord = {
+    val buf = stream.readPending()
+    if (buf == null) return null
+    val bytes = new Array[Byte](buf.remaining())
+    buf.get(bytes)
+    WalRecord(stream.getLastReceiveLSN.asLong(),
+      new String(bytes, StandardCharsets.UTF_8))
   }
 
   override def flushed(lsn: Long): Unit = {
@@ -115,8 +91,6 @@ class PgJdbcReplicationStream(
     stream.setFlushedLSN(ack)
     stream.setAppliedLSN(ack)
     stream.forceUpdateStatus()
-    // committed epochs never re-read below the ack
-    buffer.headMap(lsn, true).clear()
   }
 
   override def close(): Unit = {
@@ -127,11 +101,11 @@ class PgJdbcReplicationStream(
 object PgJdbcReplicationStream {
   /** Register a pgjdbc-backed factory so `spark.readStream
     * .format("graft.sources.CdcSourceProvider")
-    * .option("connection", name)` resolves to live walsender
-    * connections. In local mode one registration covers driver and
-    * executors; on a cluster, call this from an executor plugin. */
+    * .option("connection", name)` (or `graft.Main` without
+    * `--source-path`, under the slot name) opens one walsender
+    * connection per stream, on the driver. */
   def register(name: String, url: String, user: String, password: String,
-      slot: String, plugin: String = "wal2json"): Unit =
+      slot: String): Unit =
     PgReplicationSource.registerConnection(name,
-      () => new PgJdbcReplicationStream(url, user, password, slot, plugin))
+      () => new PgJdbcReplicationStream(url, user, password, slot))
 }

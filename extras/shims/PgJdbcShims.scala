@@ -3,9 +3,9 @@
 // logical-replication API that extras/pgjdbc-adapter touches
 // (org.postgresql:postgresql is unresolvable in this offline build).
 // They exist so the adapter is COMPILED by CI — signatures mirror the
-// public pgjdbc API (package names, method names, arity) and nothing
-// here ever runs: the only entry point that could instantiate the
-// chain is a real walsender connection. These classes live ONLY on the
+// public pgjdbc API (package names, method names, arity). The traits
+// are plain traits, so the adapter's spec runs it on a walsender model
+// that implements them (extras/test/). These classes live ONLY on the
 // `adapters` subproject's classpath, never in the library artifact, so
 // deploying with the real driver jar cannot conflict.
 package org.postgresql

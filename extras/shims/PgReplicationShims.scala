@@ -18,8 +18,8 @@ trait PGReplicationConnection {
   def replicationStream(): fluent.ChainedStreamBuilder
 }
 
-/** Mirror of pgjdbc's PGReplicationStream — the five methods the
-  * adapter's drain/ack loop uses. */
+/** Mirror of pgjdbc's PGReplicationStream — the methods the adapter's
+  * poll and ack use. */
 trait PGReplicationStream {
   def readPending(): java.nio.ByteBuffer
   def getLastReceiveLSN: LogSequenceNumber

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.catalog.PkCatalog
-import graft.sources.SlotAdmin
+import graft.sources.{PgReplicationSource, SlotAdmin}
 
 /** The executable front door — the reference's console script
   * (reference __main__.py:14-41, setup.py entry_points) re-expressed
@@ -32,7 +32,8 @@ import graft.sources.SlotAdmin
   *                           .ReplicationStream]] factory must be
   *                           registered under that name — the
   *                           extras/pgjdbc adapter's `register` does
-  *                           exactly this at deploy time)
+  *                           exactly this at deploy time — or
+  *                           [[start]] fails before the query starts)
   *   --checkpoint-dir PATH   streaming checkpoint (exactly-once source
   *                           progress; default under java.io.tmpdir)
   *   --pk-catalog PATH       parquet/JSON dump of the PK catalog for
@@ -235,6 +236,11 @@ object Main {
     * catalog resolution, slot-DDL wiring, job start. */
   def start(spark: SparkSession, o: CliOptions)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    require(o.sourcePath.nonEmpty || PgReplicationSource.registered(o.slotName),
+      s"no --source-path, and no replication connection is registered as " +
+        s"'${o.slotName}' (--pg-slot-name): pass --source-path <WAL dump> " +
+        s"to replay a file, or call PgJdbcReplicationStream.register(" +
+        s""""${o.slotName}", url, user, password, slot) before Main.start""")
     val cat = o.pkCatalogPath match {
       case Some(path) => PkCatalog.fromFile(spark, path)
       case None if o.pgDbname.isDefined =>

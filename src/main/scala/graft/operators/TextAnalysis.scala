@@ -312,12 +312,15 @@ object TextAnalysis extends QueryModule {
       // per slice element). The exploded index — the ~4x-winnowed
       // small form — feeds all THREE consumers (df keep-list + both
       // self-join legs) with no materialization barrier, so building
-      // the query runs nothing. The keep side and the pair side each
-      // scan and hash the documents: the pair side's join-inferred
-      // null filter makes its scan, and so its exchange, differ.
+      // the query runs nothing. Both consumers must plan the same scan
+      // and exchange for exchange reuse to hash the documents once: the
+      // documents are filtered on a non-null doc_id (which it always
+      // is) before the repartition, so the pair side infers no filter
+      // of its own, and the keep side counts doc_ids, not rows (the
+      // same count), so column pruning keeps doc_id on its side too.
       // repartition first: hashing is compute-bound per row, so
       // parallelism = cores, not input splits.
-      val docs = documents(s, d)
+      val docs = documents(s, d).filter(col("doc_id").isNotNull)
       val f = docs
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .select(col("doc_id"),
@@ -327,7 +330,7 @@ object TextAnalysis extends QueryModule {
       // ~all distinct fingerprints, far too large to broadcast at
       // corpus scale; both join legs key on fp, so the shuffle
       // partitioning carries into the pair self-join.
-      val keep = f.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+      val keep = f.groupBy(col("fp")).agg(count(col("doc_id")).as("df"))
         .filter(col("df") <= 128).select(col("fp"))
       val fk = f.join(keep, Seq("fp"))
       fk.as("x").join(fk.as("y"), col("x.fp") === col("y.fp") &&

@@ -255,7 +255,13 @@ class FileTransport(path: String) extends CdcTransport {
   private val index = new LineIndex(path)
 
   override def name: String = s"cdc-file($path)"
-  override def head(keepFrom: Long): Long = index.refresh(keepFrom)
+  override def head(keepFrom: Long, floor: Long): Long =
+    index.refresh(keepFrom)
+  // saturating add: start + Long.MaxValue must not wrap negative, or
+  // the offset oscillates and the engine schedules empty batches
+  // forever (processAllAvailable never converges)
+  override def end(start: Long, cap: Long, head: Long): Long =
+    if (cap > head - start) head else start + cap
   override def xidAt(lsn: Long, known: LsnOffset): Long = index.xidAt(lsn)
   override def partition(start: LsnOffset, end: Long): InputPartition =
     CdcFilePartition(path, start.lsn, end, index.byteOf(start.lsn),

@@ -106,9 +106,15 @@ trait CdcTransport {
   /** Names the WAL in the table name and in errors. */
   def name: String
 
-  /** The WAL head: one past its last complete record. No batch starts
-    * below `keepFrom` again. */
-  def head(keepFrom: Long): Long
+  /** The WAL head: one past its last complete record. Every record
+    * below `floor` was planned or checkpointed; a transport that
+    * receives the WAL asynchronously waits for the resend of those at
+    * or past `keepFrom`. No batch starts below `keepFrom` again. */
+  def head(keepFrom: Long, floor: Long): Long
+
+  /** The end of a batch from `start`: one past the last of at most
+    * `cap` records, at most `head`. */
+  def end(start: Long, cap: Long, head: Long): Long
 
   /** The xid in effect at `lsn`, given `known`, an offset at or below
     * it whose xid is right. */
@@ -138,16 +144,16 @@ class CdcSourceProvider extends TableProvider {
     CdcFileSource.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    val cap = Option(properties.get("maxRecordsPerTrigger")).map(_.toLong)
+      .getOrElse(Long.MaxValue)
     val transport: () => CdcTransport =
       (Option(properties.get("path")), Option(properties.get("connection"))) match {
         case (Some(path), None) => () => new FileTransport(path)
-        case (None, Some(conn)) => () => new ReplicationTransport(conn)
+        case (None, Some(conn)) => () => new ReplicationTransport(conn, cap)
         case _ => throw new IllegalArgumentException(
           "the CDC source needs exactly one of the options path and connection")
       }
-    new CdcTable(transport,
-      Option(properties.get("maxRecordsPerTrigger")).map(_.toLong)
-        .getOrElse(Long.MaxValue),
+    new CdcTable(transport, cap,
       Option(properties.get("peek")).exists(_.toBoolean))
   }
   override def supportsExternalMetadata(): Boolean = true
@@ -176,7 +182,8 @@ class CdcTable(transport: () => CdcTransport, maxPerTrigger: Long,
   * either transport:
   *
   *  - offsets are LSN ranges, `{"lsn":N,"xid":X}`: N is a position in
-  *    one totally ordered, ever-growing WAL, X the test_decoding xid in
+  *    one totally ordered, ever-growing WAL (a line number of the file,
+  *    one past a record's LSN on a slot), X the test_decoding xid in
   *    effect at N. A partition starts its `begin_xid` carry from its
   *    start offset's X, so the checkpoint's offset log makes the carry
   *    exactly as durable as the position, and a micro-batch needs no
@@ -188,7 +195,8 @@ class CdcTable(transport: () => CdcTransport, maxPerTrigger: Long,
   *    `send_feedback(flush_lsn=...)` (reference __main__.py:101-104).
   *    Crash before commit ⇒ replay ⇒ the same at-least-once contract
   *    (reference README.rst:15-18),
-  *  - `maxRecordsPerTrigger` caps each micro-batch (K3 backpressure:
+  *  - `maxRecordsPerTrigger` caps each micro-batch at that many
+  *    records, whatever the LSN gaps between them (K3 backpressure:
   *    unread records simply stay in the slot),
   *  - one input partition per batch: a slot is a single totally
   *    ordered lane (the reference is equally single-lane); parallelism
@@ -234,12 +242,9 @@ class CdcMicroBatchStream(transport: CdcTransport, maxPerTrigger: Long,
       case _ => Long.MaxValue
     }
     val floor = math.max(math.max(base, lastPlanned), restoredFloor)
-    val total = transport.head(keepFrom = floor)
+    val total = transport.head(keepFrom = floor, floor = floor)
     guardRegression(total, floor)
-    // saturating add: base + Long.MaxValue must not wrap negative, or
-    // the offset oscillates and the engine schedules empty batches
-    // forever (processAllAvailable never converges)
-    val admitted = if (cap > total - base) total else base + cap
+    val admitted = transport.end(base, cap, total)
     lastPlanned = math.max(lastPlanned, admitted)
     LsnOffset(admitted, transport.xidAt(admitted, from))
   }
@@ -256,7 +261,7 @@ class CdcMicroBatchStream(transport: CdcTransport, maxPerTrigger: Long,
     // and a server round-trip must not be paid twice per trigger.
     val last = math.max(s, e)
     if (last > lastPlanned) {
-      guardRegression(transport.head(keepFrom = s), last)
+      guardRegression(transport.head(keepFrom = s, floor = last), last)
       lastPlanned = last
     }
     if (e <= s) Array.empty else Array(transport.partition(from, e))

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -11,36 +13,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * (psycopg2's ReplicationMessage / pgjdbc's buffer + getLastReceiveLSN). */
 case class WalRecord(lsn: Long, payload: String)
 
-/** The injected seam over a Postgres logical-replication connection —
-  * a 1:1 projection of pgjdbc's public replication API
-  * (`PGConnection.getReplicationAPI().replicationStream()
-  * .logical().withSlotName(...)` → `PGReplicationStream`), which is
+/** The injected seam over a Postgres logical-replication connection:
+  * the two calls of pgjdbc's `PGReplicationStream` the transport makes,
   * the JVM analog of the reference's psycopg2
   * `start_replication`/`consume_stream` loop (reference slot.py:47-53,
   * slot.py:122-129):
   *
-  *  - [[headLsn]]  ≈ `getLastReceiveLSN` after a `readPending()` drain
-  *    (server's available WAL head; drives micro-batch admission),
-  *  - [[read]]     ≈ `readPending()` replay of the slot from its
-  *    restart position, skipping below `start`, stopping at `end`
-  *    (a slot replays from its confirmed LSN — range reads are
-  *    expressed as replay-and-skip, which is exactly what a restarted
-  *    reference process does),
-  *  - [[flushed]]  ≈ `setFlushedLSN` + `forceUpdateStatus` — the
+  *  - [[poll]]    ≈ one `readPending()`, with the LSN from
+  *    `getLastReceiveLSN`; null when nothing is pending. Records come
+  *    in LSN order; a new connection starts at the slot's confirmed
+  *    flush LSN, so it resends what the last ack did not cover,
+  *  - [[flushed]] ≈ `setFlushedLSN` + `forceUpdateStatus` — the
   *    standby status update / `send_feedback(flush_lsn=...)` ack
   *    (reference __main__.py:101-104, K2).
   *
-  * The production adapter wrapping a real `PGReplicationStream` behind
-  * this trait is `extras/pgjdbc-adapter/PgJdbcReplicationStream.scala`,
-  * compiled by CI in the `adapters` subproject against API shims (the
-  * sandbox has no Postgres driver or server to run it against); specs
-  * fake the trait to prove the source honors the identical
-  * offset/commit/backpressure contract as the file-backed source — the
-  * contract suite (CdcSourceContractSpec) is shared between both.
+  * The production adapter is
+  * `extras/pgjdbc-adapter/PgJdbcReplicationStream.scala`, built and
+  * tested by the `adapters` subproject against API shims (the build
+  * has no Postgres driver or server); specs run the transport on a
+  * walsender model (one stream per slot, sparse LSNs, asynchronous
+  * delivery, resend on reconnect) through the contract suite
+  * (CdcSourceContractSpec) the file transport runs too.
   */
 trait ReplicationStream extends AutoCloseable {
-  def headLsn(): Long
-  def read(start: Long, end: Long): Iterator[WalRecord]
+  def poll(): WalRecord
   def flushed(lsn: Long): Unit
   override def close(): Unit = ()
 }
@@ -49,10 +45,16 @@ object PgReplicationSource {
   private val registry =
     new ConcurrentHashMap[String, () => ReplicationStream]()
 
+  /** How long a resend the checkpoint needs may go silent before the
+    * stream fails. */
+  private[sources] val ResendWaitMs = 10000L
+
   /** Register a connection factory under a name referenced by the
     * `connection` option. */
   def registerConnection(name: String, f: () => ReplicationStream): Unit =
     registry.put(name, f)
+
+  def registered(name: String): Boolean = registry.containsKey(name)
 
   def connect(name: String): ReplicationStream = {
     val f = registry.get(name)
@@ -65,59 +67,145 @@ object PgReplicationSource {
     if (r.payload.startsWith("BEGIN ")) CdcSource.beginXid(r.payload) else xid
 }
 
-/** The walsender transport (S1 live): records come from a connection
-  * resolved by name from a process-local registry (the option map is
-  * string-typed): production registers a pgjdbc-backed factory, specs
-  * register fakes. In local mode driver and executors share the
-  * registry; a cluster deployment registers the factory in an executor
-  * plugin from connection options.
+/** The walsender transport (S1 live): the one replication connection
+  * of a stream, opened on the driver on first use from a factory
+  * registered by name (the option map is string-typed): production
+  * registers the pgjdbc adapter, specs a walsender model. Postgres
+  * lets one walsender stream a slot at a time, so executors open
+  * nothing: each partition carries its records.
   *
-  * The driver-side control connection serves admission (`headLsn`),
-  * the xid carry and the ack. The xid in effect at an admitted offset
-  * is read off the records since the batch's start offset: once a
-  * batch is acked the slot no longer holds the records below the ack,
-  * so only the offset can carry the xid across a restart.
+  * Each trigger polls the connection into an LSN-ordered buffer of
+  * records and the xid in effect after each, until `maxPerTrigger`
+  * records lie at or past the batch start (K3: the rest stays in the
+  * slot) or nothing is pending. An offset is one past a record's LSN,
+  * so the ack needs no mapping. `release` drops records below the
+  * committed offset, including what the slot resends after a
+  * reconnect; the buffer holds the planned batch plus at most
+  * `maxPerTrigger` records. A checkpointed position the slot has to
+  * resend is waited for while the slot keeps sending, for at most
+  * [[PgReplicationSource.ResendWaitMs]] of silence.
   */
-class ReplicationTransport(connection: String) extends CdcTransport {
-  private lazy val conn = PgReplicationSource.connect(connection)
+class ReplicationTransport(connection: String, maxPerTrigger: Long)
+    extends CdcTransport {
+  private case class Held(rec: WalRecord, xid: Long)
+
+  private var conn: ReplicationStream = _
+  private val held = mutable.ArrayDeque.empty[Held]
+  private var released = 0L    // records below it are dropped
+  private var releasedXid = -1L // in effect at `released`, if known
+  private var received = 0L    // one past the last LSN polled, 0 before any
+  private var xid = -1L        // in effect after the last record polled
+
+  private def stream: ReplicationStream = {
+    if (conn == null) conn = PgReplicationSource.connect(connection)
+    conn
+  }
+
+  /** Poll one record; false when none is pending. */
+  private def pollOne(): Boolean = {
+    val r = stream.poll()
+    if (r == null) return false
+    xid = PgReplicationSource.carry(xid, r)
+    received = r.lsn + 1
+    if (r.lsn >= released) held.append(Held(r, xid)) else releasedXid = xid
+    true
+  }
+
+  /** Poll until `received` reaches `lsn`, or the slot has sent nothing
+    * for ResendWaitMs. */
+  private def await(lsn: Long): Unit = {
+    var quietSince = System.nanoTime()
+    while (received < lsn)
+      if (pollOne()) quietSince = System.nanoTime()
+      else if (System.nanoTime() - quietSince >
+          PgReplicationSource.ResendWaitMs * 1000000L) return
+      else Thread.sleep(5)
+  }
+
+  /** Index of the first held record at or past `lsn`. */
+  private def indexOf(lsn: Long): Int =
+    held.search(Held(WalRecord(lsn, null), 0L))(
+      Ordering.by[Held, Long](_.rec.lsn)).insertionPoint
 
   override def name: String = s"cdc-pg($connection)"
-  override def head(keepFrom: Long): Long = conn.headLsn()
-  override def xidAt(lsn: Long, known: LsnOffset): Long =
-    conn.read(known.lsn, lsn).foldLeft(known.xid)(PgReplicationSource.carry)
-  override def partition(start: LsnOffset, end: Long): InputPartition =
-    PgReplicationPartition(connection, start.lsn, end, start.xid)
+
+  /** Records below `floor` were planned or checkpointed. The slot must
+    * resend those at or past `keepFrom` (a batch replanned after a
+    * restart), and a resend that starts below `floor` must reach it;
+    * a slot that stops short returns a head below `floor`. */
+  override def head(keepFrom: Long, floor: Long): Long = {
+    var past = held.length - indexOf(keepFrom)
+    while (past < maxPerTrigger && pollOne())
+      if (received > keepFrom) past += 1
+    if (received > 0L || floor > keepFrom) await(floor)
+    if (received == 0L) keepFrom else received
+  }
+
+  override def end(start: Long, cap: Long, head: Long): Long = {
+    val from = indexOf(start)
+    val n = math.min(cap, (held.length - from).toLong).toInt
+    if (n == 0) start else held(from + n - 1).rec.lsn + 1
+  }
+
+  /** Read off the buffer; a restored offset first polls what the slot
+    * has resent below it. -1 on the buffer means no BEGIN came on this
+    * connection, so `known` holds. */
+  override def xidAt(lsn: Long, known: LsnOffset): Long = {
+    while (received < lsn && pollOne()) ()
+    val i = indexOf(lsn)
+    val x = if (i > 0) held(i - 1).xid
+      else if (lsn >= released) releasedXid
+      else -1L
+    if (x != -1L) x else known.xid
+  }
+
+  override def partition(start: LsnOffset, end: Long): InputPartition = {
+    val recs = held.slice(indexOf(start.lsn), indexOf(end)).map(_.rec).toArray
+    if (recs.isEmpty || recs.last.lsn != end - 1)
+      CdcSource.regressed(s"the slot resent ${recs.length} records of the " +
+        s"planned batch [${start.lsn}, $end) for $name")
+    PgReplicationPartition(recs, start.xid)
+  }
+
   override def readerFactory: PartitionReaderFactory =
     new PgReplicationReaderFactory
-  override def ack(lsn: Long): Unit = conn.flushed(lsn)
-  override def close(): Unit = conn.close()
+  override def ack(lsn: Long): Unit = stream.flushed(lsn)
+
+  override def release(lsn: Long): Unit = if (lsn > released) {
+    val k = indexOf(lsn)
+    if (k > 0) releasedXid = held(k - 1).xid
+    held.dropInPlace(k)
+    released = lsn
+  }
+
+  override def close(): Unit = if (conn != null) conn.close()
 }
 
-/** Records [start, end); `startXid` is the xid in effect at `start`. */
-case class PgReplicationPartition(connection: String, start: Long, end: Long,
-    startXid: Long) extends InputPartition
+/** A batch's records; `startXid` is the xid in effect before the first. */
+case class PgReplicationPartition(records: Array[WalRecord], startXid: Long)
+    extends InputPartition
 
 class PgReplicationReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PgReplicationPartition]
-    val conn = PgReplicationSource.connect(p.connection)
-    val it = conn.read(p.start, p.end)
     new PartitionReader[InternalRow] {
-      private var cur: WalRecord = _
+      private var i = -1
       private var xid = p.startXid
       override def next(): Boolean = {
-        if (it.hasNext) {
-          cur = it.next()
-          xid = PgReplicationSource.carry(xid, cur)
+        i += 1
+        if (i < p.records.length) {
+          xid = PgReplicationSource.carry(xid, p.records(i))
           true
         } else false
       }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(cur.payload), cur.lsn,
-        cur.payload.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          .length.toLong, xid))
-      override def close(): Unit = conn.close()
+      override def get(): InternalRow = {
+        val r = p.records(i)
+        val payload = UTF8String.fromString(r.payload)
+        new GenericInternalRow(Array[Any](payload, r.lsn,
+          payload.numBytes.toLong, xid))
+      }
+      override def close(): Unit = ()
     }
   }
 }

@@ -6,15 +6,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import graft.sources.{PgReplicationSource, ReplicationStream, WalRecord}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** THE source contract, proven identically for every CDC transport:
-  * LSN-range offsets (k-th message has lsn k, head = message count),
-  * at-least-once with exactly-once across a checkpoint resume,
+  * LSN-range offsets (each message at the LSN its transport assigned:
+  * the line number of the file, a sparse byte position of the
+  * walsender model), at-least-once with exactly-once across a checkpoint resume,
   * maxRecordsPerTrigger admission, and commit(end) → transport ack
   * (feedback may trail by one epoch — engine behavior), and the
   * test_decoding `begin_xid` carry across restarts. The file source and
@@ -23,14 +23,16 @@ import org.apache.spark.sql.streaming.Trigger
   */
 trait CdcSourceFixture {
   def name: String
-  /** Extend the WAL with payload messages (lsn = arrival index). */
+  /** Extend the WAL with payload messages. */
   def append(payloads: Seq[String]): Unit
+  /** The LSN of every message in the WAL, in order. */
+  def lsns: Seq[Long]
   /** Fresh readStream DataFrame over this transport. */
   def stream(maxPerTrigger: Long = Long.MaxValue): DataFrame
   /** LSNs the transport has been told are flushed (K2 acks). */
   def acked: Seq[Long]
   /** DROP-AND-RECREATE the slot under the consumer: the WAL restarts
-    * from position 0 holding only `payloads` (the new slot's fresh
+    * from its origin holding only `payloads` (the new slot's fresh
     * restart_lsn world). The regression-contract test uses this. */
   def reset(payloads: Seq[String]): Unit
 }
@@ -74,7 +76,7 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
     drain(f.stream(), tmpDir() + "/ckpt", sink)
     val got = sink.sortBy(_._1)
-    assert(got.map(_._1) == (0L until 25L))
+    assert(got.map(_._1) == f.lsns)
     assert(got.map(_._2) == msgs)
     assert(got.forall { case (_, p, sz) =>
       sz == p.getBytes(StandardCharsets.UTF_8).length.toLong })
@@ -85,9 +87,9 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     f.append((0 until 20).map(i => s"m$i"))
     val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
     val counts = drain(f.stream(maxPerTrigger = 7), tmpDir() + "/ckpt", sink)
-    assert(sink.size == 20)
-    assert(counts.forall(_ <= 7), s"a batch exceeded the cap: $counts")
-    assert(counts.size >= 3, s"expected >= ceil(20/7) batches: $counts")
+    assert(sink.sortBy(_._1).map(_._1) == f.lsns)
+    // the cap counts records, whatever the LSN gaps between them
+    assert(counts == Seq(7L, 7L, 6L), s"batch sizes: $counts")
   }
 
   test("contract: checkpoint resume processes appended messages exactly once") {
@@ -101,7 +103,7 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     drain(f.stream(), ckpt, sink)
     val got = sink.sortBy(_._1)
     assert(got.size == 20, "resume must neither replay nor drop")
-    assert(got.map(_._1) == (0L until 20L))
+    assert(got.map(_._1) == f.lsns)
     assert(got.map(_._2) ==
       (0 until 10).map(i => s"a$i") ++ (0 until 10).map(i => s"b$i"))
   }
@@ -119,8 +121,9 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     val acks = f.acked
     assert(acks.nonEmpty, "no feedback reached the transport")
     assert(acks == acks.sorted, s"feedback regressed: $acks")
-    assert(acks.last >= 6L, s"first round never acked: $acks")
-    assert(acks.last <= 12L, s"acked beyond delivered WAL: $acks")
+    // an offset is one past its last record's LSN
+    assert(acks.last >= f.lsns(5) + 1, s"first round never acked: $acks")
+    assert(acks.last <= f.lsns(11) + 1, s"acked beyond delivered WAL: $acks")
   }
 
   test("contract: slot recreation under a live checkpoint fails fast, never replays from 0") {
@@ -175,14 +178,15 @@ abstract class CdcSourceContractSpec extends SparkSpec {
   }
 
   /** (lsn, xid) of every message as `Cdc.parseTestDecoding` carries it:
-    * `last(_xid_begin) OVER (ORDER BY lsn)`, -1 before any BEGIN. */
-  protected def expectedCarry(wal: Seq[String]): Seq[(Long, Long)] = {
+    * `last(_xid_begin) OVER (ORDER BY lsn)`, -1 before any BEGIN; the
+    * messages sit at `lsns`. */
+  protected def expectedCarry(wal: Seq[String], lsns: Seq[Long])
+      : Seq[(Long, Long)] = {
     import spark.implicits._
     val p = col("payload")
     val w = Window.orderBy(col("lsn"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wal.zipWithIndex.map { case (m, i) => (i.toLong, m) }
-      .toDF("lsn", "payload")
+    lsns.zip(wal).toDF("lsn", "payload")
       .withColumn("_xid_begin",
         when(p.startsWith("BEGIN "), split(p, " ").getItem(1).cast("long")))
       .select(col("lsn"),
@@ -234,26 +238,21 @@ abstract class CdcSourceContractSpec extends SparkSpec {
   protected def carried(sink: mutable.Map[Long, Seq[(Long, Long)]])
       : Seq[(Long, Long)] = sink.values.flatten.toSeq.sorted
 
-  /** Drain `wal` with caps 1, 2 and 3, restarting after every batch;
-    * every message arrives once, with the carry the batch parser
-    * computes. */
-  protected def assertCarryAcrossRestarts(fixture: () => CdcSourceFixture)
-      : Unit = {
+  // Drain a WAL with caps 1, 2 and 3, restarting after every batch:
+  // every message arrives once, with the carry the batch parser
+  // computes.
+  test("contract: begin_xid carries the last BEGIN across restarts, exactly once") {
     val wal = carryWal(seed = 7, txs = 4)
-    val want = expectedCarry(wal)
-    assert(want.exists(_._2 == -1L) && want.map(_._2).distinct.size > 4)
     for (cap <- 1L to 3L) {
-      val f = fixture()
+      val f = mkFixture()
       f.append(wal)
+      val want = expectedCarry(wal, f.lsns)
+      assert(want.exists(_._2 == -1L) && want.map(_._2).distinct.size > 4)
       val sink = mutable.Map.empty[Long, Seq[(Long, Long)]]
       val queries = oneBatchPerQuery(f, cap, tmpDir() + "/ckpt", wal.size, sink)
       assert(queries >= wal.size / cap, s"cap $cap: only $queries restarts")
       assert(carried(sink) == want, s"cap $cap")
     }
-  }
-
-  test("contract: begin_xid carries the last BEGIN across restarts, exactly once") {
-    assertCarryAcrossRestarts(() => mkFixture())
   }
 
   test("contract: begin_xid restores from offsets written as {\"lsn\":N}") {
@@ -283,7 +282,7 @@ abstract class CdcSourceContractSpec extends SparkSpec {
     assert(rewritten > 0, s"no offset rewritten in $offsets")
     f.append(wal.drop(cut))
     drainCarry(f.stream(2), ckpt, sink)(_.processAllAvailable())
-    assert(carried(sink) == expectedCarry(wal))
+    assert(carried(sink) == expectedCarry(wal, f.lsns))
   }
 }
 
@@ -292,11 +291,15 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
   override def mkFixture(): CdcSourceFixture = new CdcSourceFixture {
     private val dir = Files.createTempDirectory("graft-file-src")
     private val path = dir.resolve("wal.jsonl")
+    private var lines = 0
     override def name: String = "cdc-file"
-    override def append(payloads: Seq[String]): Unit =
+    override def append(payloads: Seq[String]): Unit = {
       Files.write(path, payloads.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      lines += payloads.size
+    }
+    override def lsns: Seq[Long] = (0L until lines.toLong)
     override def stream(maxPerTrigger: Long): DataFrame =
       spark.readStream
         .format(classOf[graft.sources.CdcSourceProvider].getName)
@@ -309,10 +312,12 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
       else new String(Files.readAllBytes(fb), StandardCharsets.UTF_8)
         .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
     }
-    override def reset(payloads: Seq[String]): Unit =
+    override def reset(payloads: Seq[String]): Unit = {
       Files.write(path, payloads.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      lines = payloads.size
+    }
   }
 
   // ---- file transport edges: the byte-offset index and its reader ----
@@ -431,58 +436,122 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
   }
 }
 
-/** Walsender-backed transport over a faked replication connection:
-  * proves PgReplicationSource honors the identical contract without a
-  * Postgres (the ReplicationStream seam is what a pgjdbc
-  * PGReplicationStream adapter implements in production). */
-class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
-  override def mkFixture(): CdcSourceFixture = fixture(dropFlushed = false)
 
-  /** `dropFlushed`: the slot no longer serves records an ack covers, as
-    * the pgjdbc adapter trims its buffer at each `flushed`. */
-  private def fixture(dropFlushed: Boolean) = new CdcSourceFixture {
-    private val wal =
-      new java.util.concurrent.CopyOnWriteArrayList[WalRecord]()
-    private val flushes =
-      new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
-    @volatile private var floor = 0L
-    private val connName =
-      s"fake-${java.util.UUID.randomUUID().toString.take(8)}"
-    PgReplicationSource.registerConnection(connName, () =>
-      new ReplicationStream {
-        override def headLsn(): Long = wal.size().toLong
-        override def read(start: Long, end: Long): Iterator[WalRecord] = {
-          import scala.jdk.CollectionConverters._
-          // slot replay semantics: skip below start, stop at end
-          val from = if (dropFlushed) math.max(start, floor) else start
-          wal.iterator().asScala.filter(r => r.lsn >= from && r.lsn < end)
-        }
-        override def flushed(lsn: Long): Unit = {
-          flushes.add(lsn)
-          floor = math.max(floor, lsn)
-        }
-      })
+/** The walsender transport over [[WalsenderModel]]: one stream per
+  * slot, sparse LSNs, asynchronous delivery and resend from the
+  * confirmed flush LSN, so the transport meets the same contract as
+  * the file without a Postgres. */
+class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
+  import graft.sources.{CdcMicroBatchStream, LsnOffset, PgReplicationPartition, ReplicationTransport}
+
+  private def load(conn: String, maxPerTrigger: Long): DataFrame =
+    spark.readStream
+      .format(classOf[graft.sources.CdcSourceProvider].getName)
+      .option("connection", conn)
+      .option("maxRecordsPerTrigger", maxPerTrigger.toString)
+      .load()
+
+  override def mkFixture(): CdcSourceFixture = new CdcSourceFixture {
+    private val model = new WalsenderModel()
+    private val conn = WalsenderModel.register(model)
     override def name: String = "cdc-pg"
-    override def append(payloads: Seq[String]): Unit =
-      payloads.foreach(p => wal.add(WalRecord(wal.size().toLong, p)))
-    override def stream(maxPerTrigger: Long): DataFrame =
-      spark.readStream
-        .format(classOf[graft.sources.CdcSourceProvider].getName)
-        .option("connection", connName)
-        .option("maxRecordsPerTrigger", maxPerTrigger.toString)
-        .load()
-    override def acked: Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      flushes.iterator().asScala.map(_.toLong).toSeq
+    override def append(payloads: Seq[String]): Unit = model.write(payloads)
+    override def lsns: Seq[Long] = model.lsns
+    // a query that failed may still be closing its stream: wait for the
+    // slot to be released, as an operator restarting the job would
+    override def stream(maxPerTrigger: Long): DataFrame = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (model.isActive && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      load(conn, maxPerTrigger)
     }
-    override def reset(payloads: Seq[String]): Unit = {
-      wal.clear()
-      floor = 0L
-      append(payloads)
-    }
+    override def acked: Seq[Long] = model.acked
+    override def reset(payloads: Seq[String]): Unit = model.recreate(payloads)
   }
 
-  test("pg: the carry comes from the offset once the slot drops acked records") {
-    assertCarryAcrossRestarts(() => fixture(dropFlushed = true))
+  test("pg: a second stream on an active slot is refused") {
+    val model = new WalsenderModel("busy")
+    val s = model.open()
+    val e = intercept[java.sql.SQLException](model.open())
+    assert(e.getMessage.contains("replication slot \"busy\" is active"))
+    s.close()
+    model.open().close()
+  }
+
+  test("pg: one connection per stream, and each record is polled from it once") {
+    val model = new WalsenderModel()
+    val conn = WalsenderModel.register(model)
+    // test_decoding prints text values raw: a payload may hold a newline
+    val msgs = (0 until 17).map(i => s"table public.t: INSERT: v[text]:'a$i\nb'")
+    model.write(msgs)
+    val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    val counts = drain(load(conn, 3), tmpDir() + "/ckpt", sink)
+    assert(counts == Seq(3L, 3L, 3L, 3L, 3L, 2L), s"batch sizes: $counts")
+    assert(sink.sortBy(_._1).map(r => (r._1, r._2)) == model.lsns.zip(msgs))
+    assert(model.connections == 1)
+    assert(model.deliveries == model.lsns.map(l => (1, l)),
+      "every record polled once, in order, from the one connection")
+  }
+
+  /** A stream over `model` outside any query, capped at `cap`. */
+  private def modelStream(model: WalsenderModel, cap: Long) =
+    new CdcMicroBatchStream(
+      new ReplicationTransport(WalsenderModel.register(model), cap), cap)
+
+  private def records(s: CdcMicroBatchStream, start: LsnOffset,
+      end: LsnOffset): Seq[Long] =
+    s.planInputPartitions(start, end).toSeq.flatMap(
+      _.asInstanceOf[PgReplicationPartition].records.map(_.lsn))
+
+  test("pg: nothing is admitted until the walsender sends, and unread records stay in the slot") {
+    val model = new WalsenderModel(autoSend = false)
+    val s = modelStream(model, 4)
+    try {
+      val lsns = model.write((0 until 10).map(i => s"m$i"))
+      val start = s.initialOffset().asInstanceOf[LsnOffset]
+      assert(s.latestOffset(start, s.getDefaultReadLimit) == start)
+      model.send()
+      val end = s.latestOffset(start, s.getDefaultReadLimit)
+        .asInstanceOf[LsnOffset]
+      assert(end.lsn == lsns(3) + 1)
+      assert(model.deliveries.size == 4, "polling stops at the cap")
+      assert(records(s, start, end) == lsns.take(4))
+    } finally s.stop()
+  }
+
+  test("pg: a batch replanned after a restart waits for the resend, and never plans fewer records") {
+    val model = new WalsenderModel(autoSend = false)
+    val lsns = model.write((0 until 10).map(i => s"r$i"))
+    val start = LsnOffset(0L)
+    // a first run admits [0, end) and stops before the commit
+    val end = {
+      val s = modelStream(model, 4)
+      try {
+        assert(s.latestOffset(start, s.getDefaultReadLimit) == start)
+        model.send()
+        s.latestOffset(start, s.getDefaultReadLimit).asInstanceOf[LsnOffset]
+      } finally s.stop()
+    }
+    // the restarted stream replans the same batch; the slot resends late
+    val s = modelStream(model, 4)
+    val sender = new Thread(() => {
+      while (!model.isActive) Thread.sleep(5)
+      Thread.sleep(300)
+      model.send()
+    })
+    try {
+      s.deserializeOffset(end.json)
+      sender.start()
+      assert(records(s, start, end) == lsns.take(4))
+    } finally { sender.join(); s.stop() }
+    // a slot acked past the batch does not resend it: the replan fails
+    val t = modelStream(model, 4)
+    try t.commit(end) finally t.stop()
+    val u = modelStream(model, 4)
+    try {
+      u.deserializeOffset(end.json)
+      val e = intercept[IllegalStateException](records(u, start, end))
+      assert(e.getMessage.contains("regressed"), e.getMessage)
+    } finally u.stop()
   }
 }

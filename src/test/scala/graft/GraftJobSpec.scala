@@ -161,25 +161,13 @@ class GraftJobSpec extends SparkSpec {
   }
 
   test("walsender transport end-to-end through the front door (pg: path)") {
-    import graft.sources.{PgReplicationSource, ReplicationStream, WalRecord}
-    val wal = new java.util.concurrent.CopyOnWriteArrayList[WalRecord]()
-    val flushes =
-      new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
-    (0 until 4).foreach(i => wal.add(WalRecord(i.toLong,
+    val model = new WalsenderModel()
+    model.write((0 until 4).map(i =>
       s"""{"xid": ${500 + i}, "change": [{"kind": "insert",""" +
         s""" "schema": "public", "table": "species",""" +
         s""" "columnnames": ["id"], "columntypes": ["integer"],""" +
-        s""" "columnvalues": [$i]}]}""")))
-    val connName = s"job-fake-${java.util.UUID.randomUUID().toString.take(8)}"
-    PgReplicationSource.registerConnection(connName, () =>
-      new ReplicationStream {
-        override def headLsn(): Long = wal.size().toLong
-        override def read(start: Long, end: Long): Iterator[WalRecord] = {
-          import scala.jdk.CollectionConverters._
-          wal.iterator().asScala.filter(r => r.lsn >= start && r.lsn < end)
-        }
-        override def flushed(lsn: Long): Unit = flushes.add(lsn)
-      })
+        s""" "columnvalues": [$i]}]}"""))
+    val connName = WalsenderModel.register(model)
     val dir = tmp()
     run(GraftConfig(s"pg:$connName", s"$dir/sink", s"$dir/ckpt",
       formatter = "CSV", sendWindowSecs = 0))
@@ -292,6 +280,20 @@ class GraftJobSpec extends SparkSpec {
     val o = Main.parse(Seq("--full-change", "-f", "CSV",
       "--source-path", "/nope")).fold(e => fail(e), identity)
     intercept[IllegalArgumentException] { GraftJob.transform(spark, o.toConfig, cat) }
+  }
+
+  test("CLI: without --source-path or a registered connection, Main.start fails before the query starts") {
+    val dir = tmp()
+    val o = Main.parse(Seq(
+      "--pg-slot-name", s"unregistered-${java.util.UUID.randomUUID()}",
+      "--stream-name", s"$dir/sink", "--checkpoint-dir", s"$dir/ckpt"))
+      .fold(e => fail(e), identity)
+    val active = spark.streams.active.length
+    val e = intercept[IllegalArgumentException](Main.start(spark, o))
+    assert(e.getMessage.contains("--source-path") &&
+      e.getMessage.contains("PgJdbcReplicationStream.register"), e.getMessage)
+    assert(!Files.exists(Paths.get(dir, "ckpt")), "no checkpoint may be made")
+    assert(spark.streams.active.length == active)
   }
 
   test("CLI: file-transport pipeline end-to-end from parsed args") {
@@ -442,25 +444,14 @@ class GraftJobSpec extends SparkSpec {
   }
 
   test("--dry-run over the walsender transport never sends standby feedback") {
-    import graft.sources.{CdcSource, PgReplicationSource, ReplicationStream, WalRecord}
-    val wal = new java.util.concurrent.CopyOnWriteArrayList[WalRecord]()
-    val flushes =
-      new java.util.concurrent.CopyOnWriteArrayList[java.lang.Long]()
-    (0 until 3).foreach(i => wal.add(WalRecord(i.toLong,
+    import graft.sources.CdcSource
+    val model = new WalsenderModel()
+    model.write((0 until 3).map(i =>
       s"""{"xid": ${800 + i}, "change": [{"kind": "insert",""" +
         s""" "schema": "public", "table": "species",""" +
         s""" "columnnames": ["id"], "columntypes": ["integer"],""" +
-        s""" "columnvalues": [$i]}]}""")))
-    val connName = s"peek-fake-${java.util.UUID.randomUUID().toString.take(8)}"
-    PgReplicationSource.registerConnection(connName, () =>
-      new ReplicationStream {
-        override def headLsn(): Long = wal.size().toLong
-        override def read(start: Long, end: Long): Iterator[WalRecord] = {
-          import scala.jdk.CollectionConverters._
-          wal.iterator().asScala.filter(r => r.lsn >= start && r.lsn < end)
-        }
-        override def flushed(lsn: Long): Unit = flushes.add(lsn)
-      })
+        s""" "columnvalues": [$i]}]}"""))
+    val connName = WalsenderModel.register(model)
     val previews = scala.collection.mutable.ArrayBuffer.empty[String]
     val peeked = scala.collection.mutable.ArrayBuffer.empty[Long]
     val oldOut = GraftJob.dryRunOut
@@ -476,7 +467,7 @@ class GraftJobSpec extends SparkSpec {
       q.processAllAvailable()
       // one more record drives the next batch so epoch 0's peek
       // commit fires (the trailing-epoch contract)
-      wal.add(WalRecord(3L,
+      model.write(Seq(
         """{"xid": 803, "change": [{"kind": "insert", "schema":""" +
           """ "public", "table": "species", "columnnames": ["id"],""" +
           """ "columntypes": ["integer"], "columnvalues": [3]}]}"""))
@@ -491,7 +482,7 @@ class GraftJobSpec extends SparkSpec {
     }
     assert(previews.size == 4, s"previews: $previews")
     assert(peeked.nonEmpty, "peek commits must log")
-    assert(flushes.isEmpty,
+    assert(model.acked.isEmpty,
       "dry-run must NEVER call ReplicationStream.flushed — the server" +
         " keeps WAL and the slot position")
   }
@@ -579,9 +570,8 @@ class GraftJobSpec extends SparkSpec {
     // catalog jobs or tasks next to the sink's single ordered lane. The
     // catalog is read on the driver by the first batch and by the first
     // batch after a HUP trigger; those batches add the read's jobs. The
-    // walsender transport runs over a fake connection that serves the
-    // same file's lines.
-    import graft.sources.{CdcFileSource, PgReplicationSource, ReplicationStream, WalRecord}
+    // walsender transport runs over a walsender model that is sent the
+    // same lines as the file, and its sink holds the same bytes.
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -590,6 +580,7 @@ class GraftJobSpec extends SparkSpec {
           e.stageInfos.map(_.numTasks).sum))
     }
     spark.sparkContext.addSparkListener(listener)
+    val fileSinks = scala.collection.mutable.Map.empty[String, Seq[Seq[Byte]]]
     try for (plugin <- Seq("wal2json", "test_decoding"); pg <- Seq(false, true)) {
       val label = s"$plugin over ${if (pg) "pg" else "file"}"
       // a catalog no earlier test has read
@@ -598,6 +589,7 @@ class GraftJobSpec extends SparkSpec {
       val trigger = PkCatalog.hupRefreshable(cat)
       val dir = tmp()
       val wal = Paths.get(dir, "wal")
+      val model = new WalsenderModel()
       def append(from: Int): Unit = {
         val lines = (from until from + 4).flatMap { i =>
           if (plugin == "wal2json") Seq(
@@ -608,22 +600,10 @@ class GraftJobSpec extends SparkSpec {
         }
         Files.write(wal, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        model.write(lines)
       }
-      val source = if (!pg) wal.toString else {
-        val conn = s"tasks-${java.util.UUID.randomUUID().toString.take(8)}"
-        PgReplicationSource.registerConnection(conn, () =>
-          new ReplicationStream {
-            override def headLsn(): Long = CdcFileSource.lineCount(wal.toString)
-            override def read(start: Long, end: Long): Iterator[WalRecord] = {
-              val (it, h) = CdcFileSource.lineRange(wal.toString, start, end)
-              try it.zipWithIndex.map { case (l, i) => WalRecord(start + i, l) }
-                .toList.iterator
-              finally h.close()
-            }
-            override def flushed(lsn: Long): Unit = ()
-          })
-        s"pg:$conn"
-      }
+      val source =
+        if (pg) s"pg:${WalsenderModel.register(model)}" else wal.toString
       val q = GraftJob.start(spark, GraftConfig(source, s"$dir/sink",
         s"$dir/ckpt", plugin = plugin, formatter = "CSV", sendWindowSecs = 0,
         maxRecordsPerTrigger = 2), cat)
@@ -640,6 +620,13 @@ class GraftJobSpec extends SparkSpec {
       } finally q.stop()
       val batches = dataBatches.map(_.toString).toSet
       assert(batches.size >= 4, s"$label: ${q.recentProgress.map(_.numInputRows).toSeq}")
+      // the put files' bytes in put order; their names hold batch ids,
+      // which an empty first batch (a trigger before the first append)
+      // shifts on either transport
+      val sink = Files.list(Paths.get(dir, "sink")).iterator().asScala.toSeq
+        .sortBy(_.getFileName.toString).map(f => Files.readAllBytes(f).toSeq)
+      if (!pg) fileSinks(plugin) = sink
+      else assert(sink == fileSinks(plugin), s"$label: the sink differs from the file's")
       // jobs in start order, by batch
       def perBatch = jobs.asScala.toSeq.filter(_._1 == q.runId.toString)
         .groupBy(_._2).filter(b => batches(b._1))
