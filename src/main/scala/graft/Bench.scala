@@ -10,10 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prints two JSON lines, the full one and then a short summary
   * {"metric":"total","value":N,"unit":"sec",...}. The body is [[run]].
   *
-  * Every timed run is one [[QueryMetrics.measure]], after one
-  * [[QueryCache.release]], so each attempt pays its own full input scan
-  * and materialization, computes every output column, and brings its
-  * structural figures with it.
+  * Every timed run is one [[QueryMetrics.measure]] of a fresh build, so
+  * each attempt pays its own full input scan and materialization (a
+  * [[Shared]] table belongs to the plan that built it), computes every
+  * output column, and brings its structural figures with it.
   *
   * Wall-clock discipline: the harness runs this under an external
   * timeout, and a bench that never prints is worth less than one that
@@ -78,11 +78,9 @@ object Bench {
       def spent: Double = (System.nanoTime() - wall0) / 1e9
       // One timed attempt on sfDir. A query that throws must not pose as
       // a fast success: the attempt is None, and `onFail` sees why.
-      def attempt(fn: Query, onFail: Throwable => Unit = _ => ()): Option[RunMetrics] = {
-        QueryCache.release(spark)
+      def attempt(fn: Query, onFail: Throwable => Unit = _ => ()): Option[RunMetrics] =
         try Some(metrics.measure(fn(spark, sfDir)))
         catch { case t: Throwable => onFail(t); None }
-      }
       // Untimed run on the warm dir right before timing: the generated
       // code is the same at every scale factor, so this compiles and
       // JIT-profiles the query's stages and the timed attempts measure

@@ -8,12 +8,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** An iterative computation whose rounds run when the plan executes.
   * A value (a case class or object), so two builds over equal inputs
-  * give equal plans, and [[QueryCache.cached]] finds the second. */
+  * give equal plans. */
 trait Fixpoint extends Product with Serializable {
   /** The columns [[run]] returns, in order. */
   def schema: StructType
@@ -27,8 +28,8 @@ trait Fixpoint extends Product with Serializable {
   * stays out of the plan, so neither analysis nor a query build runs it.
   * Every input column is referenced, so column pruning leaves the inputs
   * whole. `session` is the one that built the query, and the loop's
-  * rounds run under its conf (not in plan equality): a cached plan is
-  * planned in a clone without AQE's final-stage coalescing, under
+  * rounds run under its conf (not in plan equality): a [[Shared]] plan
+  * is planned in a clone without AQE's final-stage coalescing, under
   * which every round would run a task per shuffle partition. */
 case class Iterate(fix: Fixpoint, output: Seq[Attribute],
     children: Seq[LogicalPlan])(val session: SparkSession) extends LogicalPlan {
@@ -86,5 +87,29 @@ object IterateStrategy extends SparkStrategy {
     val exp = spark.experimental
     if (!exp.extraStrategies.contains(this))
       exp.extraStrategies = this +: exp.extraStrategies
+  }
+}
+
+/** A table that several consumers of one query read. `Shared(df)` is a
+  * DataFrame over `df` as an InMemoryRelation, built as Spark builds a
+  * cached Dataset's (the default cache storage level, planned in
+  * [[Bridge.cachedPlanSession]]) but registered nowhere, so the plan
+  * that reads it owns it:
+  *  - it is materialized once, the first time the query runs, for every
+  *    consumer in that plan; a new build materializes its own;
+  *  - Spark's ContextCleaner unpersists it once no plan reaches it
+  *    (`RDD.persist` registers it for cleanup).
+  * Building it runs no job and leaves the session as it was. Two calls
+  * make two tables, so a query that reads one table in two places
+  * calls this once and passes the result down. */
+object Shared {
+  def apply(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val planner = Bridge.cachedPlanSession(spark)
+    val rel = Bridge.withActive(planner) {
+      InMemoryRelation(spark.sessionState.conf.defaultCacheStorageLevel,
+        planner.sessionState.executePlan(df.queryExecution.analyzed), None)
+    }
+    Bridge.ofRows(spark, rel)
   }
 }

@@ -14,16 +14,17 @@ import org.apache.spark.sql.functions._
   *
   *  - `time`: per query, one warm run on [[QueryMetrics.warmDir]] of
   *    sfDir (when there is one), then `n` (default 2) timed runs, each
-  *    after [[QueryCache.release]]. Each run prints one line, the query,
-  *    the run and its [[RunMetrics]] JSON, so structural claims are
-  *    measured, not inferred.
+  *    of a fresh build (so each materializes its own [[Shared]]
+  *    tables). Each run prints one line, the query, the run and its
+  *    [[RunMetrics]] JSON, so structural claims are measured, not
+  *    inferred.
   *  - `plan`: the formatted physical plan as built.
   *  - `exec-plan`: the AQE-final `executedPlan` after a collect. AQE
   *    settles (and reuses exchanges) only at execution, so the built
   *    plan can show exchanges the run does not have.
   *  - `scale`: writes an `N`-times (default 10) copy of sfDir's tables
-  *    to a temp dir (see [[replicateTables]]) and runs each query at 1× and
-  *    N×, each run after [[QueryCache.release]]. Prints one JSON object
+  *    to a temp dir (see [[replicateTables]]) and runs a fresh build of
+  *    each query at 1× and N×. Prints one JSON object
   *    of both runs' [[RunMetrics]] per query, and flags a query whose
   *    shuffle bytes outgrow its rows (see [[flagged]]). The point is the
   *    ratio of structural figures, which do not move with the host's
@@ -86,12 +87,8 @@ object Profile {
     QueryMetrics.listening(spark) { metrics =>
       names.foreach { q =>
         val fn = SparkEntry.queries(q)
-        QueryMetrics.warmDir(sfDir).foreach { w =>
-          QueryCache.release(spark)
-          metrics.measure(fn(spark, w))
-        }
+        QueryMetrics.warmDir(sfDir).foreach(w => metrics.measure(fn(spark, w)))
         (1 to n).foreach { r =>
-          QueryCache.release(spark)
           println(f"$q%-24s r$r  ${metrics.measure(fn(spark, sfDir)).json}")
         }
       }
@@ -121,10 +118,8 @@ object Profile {
       replicateTables(spark, sfDir, tmp, n)
       val runs = QueryMetrics.listening(spark) { metrics =>
         names.map { q =>
-          def at(d: String): RunMetrics = {
-            QueryCache.release(spark)
+          def at(d: String): RunMetrics =
             metrics.measure(SparkEntry.queries(q)(spark, d))
-          }
           val (base, scaled) = (at(sfDir), at(tmp))
           System.err.println(f"[scale] $q: ${base.wallS}%.2f s -> " +
             f"${scaled.wallS}%.2f s")
@@ -139,10 +134,7 @@ object Profile {
       println(s"""{"scale":$n,"slack":$Slack,"flagged":""" +
         flags.mkString("[", ",", "]") + ""","queries":{""" + "\n" +
         queries.mkString(",\n") + "\n}}")
-    } finally {
-      QueryCache.release(spark)
-      FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    } finally FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   /** Writes an `n`-times copy of every table in `d` to `out`, FK

@@ -17,8 +17,7 @@ object Verify {
     // sequential jobs whose wall cost is scheduling, not CPU, so
     // running a few concurrently nearly divides the wall time (the
     // Spark scheduler interleaves their stages). Queries are
-    // independent; the shared intermediates are CacheManager entries,
-    // each materialized once whichever query reads it first. Keep the
+    // independent: each build owns its shared intermediates. Keep the
     // pool small so heavyweight queries can't starve each other's
     // executors.
     val par = 3

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.QueryCache
+import graft.Shared
 import graft.operators.SaxBlocking
 
 /** Shared kernels for time-series similarity (q_ts_similarity) — the
@@ -29,7 +29,7 @@ object TimeSeries {
     * (vx = 0) dropped. This is the ONE table every TS-similarity
     * consumer derives from — [[similarPairs]]' six downstream stages
     * AND [[saxWords]]' symbolization audit — so it is built here once
-    * and shared through [[features]]' cached table. */
+    * and shared through [[features]]' table. */
   def featureTable(weekly: DataFrame): DataFrame = {
     val minWk = weekly.agg(min(col("wk")).as("w0"))
     weekly.crossJoin(broadcast(minWk))
@@ -48,24 +48,23 @@ object TimeSeries {
       .filter(col("vx") > 0)
   }
 
-  /** The feature table over a cached weekly table, both registered
-    * through [[graft.QueryCache.cached]]: a repeat call with an equal
-    * weekly plan (q_ts_similarity and q_sax_words in one Verify/Bench
-    * run) reads the same two cached tables, so the raw-event
-    * aggregation happens ONCE per action across BOTH queries. The
-    * weekly table is cached too: featureTable needs it twice (global
-    * min week + the pivot), so an uncached build scans raw events
-    * TWICE — with the |users|x|weeks|-bounded weekly cache the corpus
-    * is scanned exactly once per build. cache(), not localCheckpoint:
-    * lazy (no build-time jobs — PlanAuditSpec's no-eager rule holds)
-    * and ~3x faster end-to-end (the checkpoint's materialization job +
-    * lost whole-stage fusion cost more than it saved at bench SF). */
+  /** The feature table over the weekly table, both [[graft.Shared]]:
+    * the feature table's consumers read one materialization per run.
+    * The weekly table is shared too: featureTable needs it twice
+    * (global min week + the pivot), so an unshared build scans raw
+    * events TWICE — with the |users|x|weeks|-bounded weekly table the
+    * corpus is scanned exactly once per run. Shared, not
+    * localCheckpoint: lazy (no build-time jobs — PlanAuditSpec's
+    * no-eager rule holds) and ~3x faster end-to-end (the checkpoint's
+    * materialization job + lost whole-stage fusion cost more than it
+    * saved at bench SF). */
   private def features(weekly: DataFrame): DataFrame =
-    QueryCache.cached(featureTable(QueryCache.cached(weekly)))
+    Shared(featureTable(Shared(weekly)))
 
-  /** Forwards to [[graft.QueryCache.release]]; kept only because the
-    * benchmark harness (`perfbench/Queries.scala`) calls it. */
-  def resetMemo(): Unit = QueryCache.release(SparkSession.active)
+  /** Does nothing: builds leave no session state to reset. Kept only
+    * because the benchmark harness (`perfbench/Queries.scala`) calls
+    * it. */
+  def resetMemo(): Unit = ()
 
   /** Corpus-adaptive SAX blocking + exact-Pearson verify over the
     * maintained weekly-count table. See the q_ts_similarity Scaladoc
@@ -82,12 +81,11 @@ object TimeSeries {
       kOverride: Option[Long] = None): DataFrame = {
     // The per-user feature table feeds SIX downstream consumers
     // (n-count, max, histogram cells, and the keyed a/b self-join
-    // sides) — the shared session cache in [[features]] makes the
-    // raw-event aggregation happen ONCE per action. Without it the
-    // executed plan re-derives the whole aggregation per consumer
-    // (measured: 27 parquet scans of events at sf0.01); with the
-    // |users|-bounded InMemoryRelation the corpus is scanned once —
-    // and q_sax_words reads the same entry for free.
+    // sides) — the shared table in [[features]] makes the raw-event
+    // aggregation happen ONCE per run. Without it the executed plan
+    // re-derives the whole aggregation per consumer (measured: 27
+    // parquet scans of events at sf0.01); with the |users|-bounded
+    // table the corpus is scanned once.
     val withStats = features(weekly)
     // ONE corpus-stats row (round 13): n_users and max(sx) used to be
     // two separate 1-row aggregates, each its own job + broadcast
@@ -118,12 +116,10 @@ object TimeSeries {
     // round 14: the keyed table feeds BOTH self-join legs, and each
     // leg re-evaluates the generated SAX word CASE (the largest
     // expression in the engine) plus the stats/cellMap attach per
-    // row. Cache the |users|-bounded result so symbolization runs
-    // once per action (lazy, cleared per bench attempt — the
-    // features-cache contract). A/B at sf0.1, 4 vCPU: uncached 40 jobs
-    // and 570 KiB shuffled, 7.7-8.6 s; cached 26 jobs and 283 KiB,
-    // 5.4-6.0 s.
-    val keyed = QueryCache.cached((0 until 6).foldLeft(
+    // row. Share the |users|-bounded result so symbolization runs
+    // once per run. A/B at sf0.1, 4 vCPU: unshared 40 jobs and 570
+    // KiB shuffled, 7.7-8.6 s; shared 26 jobs and 283 KiB, 5.4-6.0 s.
+    val keyed = Shared((0 until 6).foldLeft(
       withStats.crossJoin(broadcast(stats))) { (df, i) =>
         df.withColumn(s"d$i", expr(s"6 * w$i - sx"))
           .withColumn(s"q$i",
@@ -169,12 +165,8 @@ object TimeSeries {
     * The b columns are string literals, so the engine constant-folds
     * each word CASE down to its single live arm. */
   def saxWords(weekly: DataFrame, bs: Seq[Int]): DataFrame = {
-    // shares [[features]]' cached tables with similarPairs — in a run
-    // that executes both queries the raw events scan happens once
-    // total. (No point building an "uncached" featureTable lineage
-    // here instead: the CacheManager substitutes the registered
-    // InMemoryRelation into any plan that canonically matches it, so
-    // the materialization is paid either way — one code path, not two.)
+    // the same [[features]] tables as similarPairs: the shared weekly
+    // table keeps the raw events scan to one
     val withD = (0 until 6).foldLeft(features(weekly)) { (df, i) =>
       df.withColumn(s"d$i", expr(s"6 * w$i - sx"))
         .withColumn(s"q$i",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryCache, QueryModule, Tables}
+import graft.{QueryModule, Shared, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,11 +46,9 @@ object Dedup extends QueryModule {
     * set column comes straight off the scan. Semantically identical to
     * the DuckDB UNNEST(list_transform(...substr...)) shingling in the
     * oracles up to 64-bit hash collisions (~1e-7 at this vocabulary).
-    * Cached: every dedup query consumes it 2-3×, and the plan cache
-    * shares one materialization across the whole dedup family in a
-    * session. */
+    * Shared: every dedup query reads it 2-3×. */
   def shingleSets(docs: DataFrame): DataFrame =
-    QueryCache.cached(docs.select(col("doc_id"),
+    Shared(docs.select(col("doc_id"),
       graft.expressions.ShingleHashes.shingle_hashes(col("text"), 8)
         .as("set"))
       .withColumn("n", size(col("set")).cast("long")))
@@ -102,12 +100,12 @@ object Dedup extends QueryModule {
       // the trade to make.
       val K = 16
       val sets = shingleSets(documents(s, d))
-      // cached: both sides of the candidate self-join consume it, and
+      // shared: both sides of the candidate self-join consume it, and
       // AQE does not reuse the exchange across self-join aliases here —
-      // without the cache the df-agg + join + window pipeline runs twice
-      // (A/B at sf0.1, 4 vCPU: uncached 18 jobs and 40 MB shuffled,
-      // cached 13 jobs and 13-20 MB)
-      val prefixes = QueryCache.cached(prefixTable(sets, K))
+      // unshared, the df-agg + join + window pipeline runs twice (A/B
+      // at sf0.1, 4 vCPU: unshared 18 jobs and 40 MB shuffled, shared
+      // 13 jobs and 13-20 MB)
+      val prefixes = Shared(prefixTable(sets, K))
       // length filter inside the candidate join: J >= 0.8 forces
       // 4*max(n) <= 5*min(n), killing size-mismatched pairs before
       // the expensive set intersection. Candidates then need >= K
@@ -151,7 +149,8 @@ object Dedup extends QueryModule {
     // set — which is exactly what the DuckDB oracle computes by brute
     // force. DedupSpec additionally proves candidate recall.
     "dedup_minhash_lsh" -> ((s, d) =>
-      minhashPairs(documents(s, d)).orderBy(col("a_id"), col("b_id"))),
+      minhashPairs(shingleSets(documents(s, d)))
+        .orderBy(col("a_id"), col("b_id"))),
 
     // Word-shingle MinHash-LSH: the banding production LLM pipelines
     // actually run (word n-grams à la RefinedWeb/Dolma — robust to
@@ -162,7 +161,7 @@ object Dedup extends QueryModule {
     // 3 rows miss such a pair with p ~ 1e-9), so the verified output
     // EQUALS the brute-force oracle pair set.
     "dedup_minhash_words" -> ((s, d) =>
-      bandedMinhashPairs(wordGramSets(documents(s, d)), 0.8)
+      minhashPairs(wordGramSets(documents(s, d)))
         .orderBy(col("a_id"), col("b_id"))),
 
     // Threshold-sensitivity sweep — the tuning artifact read before
@@ -178,7 +177,7 @@ object Dedup extends QueryModule {
     // can brute-force it.
     "dedup_threshold_sweep" -> ((s, d) => {
       import s.implicits._
-      val pairs = bandedMinhashPairs(wordGramSets(documents(s, d)), 0.9)
+      val pairs = minhashPairs(wordGramSets(documents(s, d)), 0.9)
         .withColumn("jac_ppm", expr("inter * 1000000L div union_n"))
       val ths = Seq(900000L, 950000L, 980000L).toDF("threshold_ppm")
       val agg = pairs.crossJoin(broadcast(ths))
@@ -403,7 +402,7 @@ object Dedup extends QueryModule {
       // the lossless AllPairs filter) at sf0.001 AND the gate's
       // sf0.01, so a banding miss fails there with pairs named rather
       // than as a hash mismatch here.
-      val jac = minhashPairs(documents(s, d))
+      val jac = minhashPairs(shingleSets(documents(s, d)))
         .select(col("a_id"), col("b_id"), lit(1L).as("in_jaccard"))
       sim.join(jac, Seq("a_id", "b_id"), "full_outer")
         .agg(
@@ -472,25 +471,6 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), col("n"), col("h"))
   }
 
-  /** MinHash signature → banded LSH candidates → exact-Jaccard verify.
-    *
-    * 48 seeded-xxhash64 permutations over shingle hashes
-    * (deterministic across runs/partitions), 16 bands × 3 rows:
-    * P(miss | j=0.8) = (1-0.8^3)^16 ≈ 1.1e-5 per pair — at that rate
-    * the verified output equals the exact-Jaccard pair set, which is
-    * what the DuckDB oracle checks. The verify step removes false
-    * positives entirely, so banding only ever costs candidates.
-    *
-    * One groupBy(doc_id) computes the signature AND the sorted verify
-    * set: a single shuffle of the shingle stream, then everything
-    * else operates on one small cached row per document.
-    */
-  def minhashPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    // the per-doc distinct shingle-hash set comes straight off the scan
-    // (no shuffle — see shingleSets); cached: dedup_cluster and
-    // dedup_minhash_lsh both consume the identical plan.
-    bandedMinhashPairs(shingleSets(docs), threshold)
-
   /** Per-doc distinct word-3-gram md5 hash sets — the WORD-shingle
     * face of shingleSets (what production LLM dedup pipelines band
     * on: RefinedWeb/Dolma-style word n-grams, robust to whitespace
@@ -501,7 +481,7 @@ object Dedup extends QueryModule {
     * dominates here. Docs under 3 tokens have no gram set and drop
     * out, same as the oracle's len(toks) >= 3 guard. */
   def wordGramSets(docs: DataFrame): DataFrame =
-    QueryCache.cached(docs
+    Shared(docs
       .withColumn("toks", expr(TextAnalysis.toksExpr))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), expr(
@@ -511,20 +491,32 @@ object Dedup extends QueryModule {
           " as bigint))))").as("set"))
       .withColumn("n", size(col("set")).cast("long")))
 
-  /** Banded MinHash over any (doc_id, set, n) hash-set table. */
-  private def bandedMinhashPairs(sets: DataFrame,
-      threshold: Double): DataFrame = {
+  /** MinHash signature → banded LSH candidates → exact-Jaccard verify.
+    *
+    * 48 seeded-xxhash64 permutations over shingle hashes
+    * (deterministic across runs/partitions), 16 bands × 3 rows:
+    * P(miss | j=0.8) = (1-0.8^3)^16 ≈ 1.1e-5 per pair — at that rate
+    * the verified output equals the exact-Jaccard pair set, which is
+    * what the DuckDB oracle checks. The verify step removes false
+    * positives entirely, so banding only ever costs candidates.
+    *
+    * `sets` is any (doc_id, set, n) hash-set table: [[shingleSets]]
+    * for character shingles, [[wordGramSets]] for word grams. A query
+    * that reads the pairs and the sets elsewhere passes the same sets
+    * table to both.
+    */
+  def minhashPairs(sets: DataFrame, threshold: Double = 0.8): DataFrame = {
     val numPerm = 48
     val bands = 16
     val rowsPerBand = numPerm / bands
     // all 48 per-permutation mins come from ONE native pass over the
     // set (see MinHashSig — the nested transform/array_min formulation
     // materialized 48 intermediate arrays per row and dominated the
-    // pipeline). Cached: both band-join legs read the signatures, so
+    // pipeline). Shared: both band-join legs read the signatures, so
     // the signature pass runs once (A/B at sf0.1, 4 vCPU: same 11 jobs
-    // and 133 KiB shuffled either way, median wall 1.71/1.98 s cached
-    // vs 1.82/2.03 s uncached over two runs of 3).
-    val perDoc = QueryCache.cached(sets
+    // and 133 KiB shuffled either way, median wall 1.71/1.98 s shared
+    // vs 1.82/2.03 s unshared over two runs of 3).
+    val perDoc = Shared(sets
       .withColumn("sig",
         graft.expressions.MinHashSig.minhash_sig(col("set"), numPerm))
       .select(col("doc_id"), col("sig")))
@@ -545,7 +537,7 @@ object Dedup extends QueryModule {
   }
 
   /** The LSH band-hash expression — ONE definition shared by the
-    * candidate self-join (bandedMinhashPairs) and the incremental
+    * candidate self-join (minhashPairs) and the incremental
     * gate's asymmetric probe (dedup_incremental). Returns
     * array<struct<band:int, bh:long>> over a MinHash signature
     * column. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fixpoint, Iterate, Num, QueryCache, QueryModule, Tables}
+import graft.{Fixpoint, Iterate, Num, QueryModule, Shared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,7 +73,7 @@ object Pipeline extends QueryModule {
 
     def run(inputs: Seq[DataFrame]): DataFrame = {
       val p = inputs.head
-      // (Round 14 re-examined: hash-partitioning + cache()ing sym to
+      // (Round 14 re-examined: hash-partitioning + caching sym to
       // kill the per-round join exchange measured NO job/time win — AQE
       // already broadcasts the tiny label side, so sym streams without
       // an exchange anyway; the repartition only added a shuffle.
@@ -201,18 +201,66 @@ object Pipeline extends QueryModule {
     }
   }
 
-  /** Near-dup cluster map for a corpus dir. Every consumer
-    * (`dedup_cluster`, `dedup_survivors`, the corpus stages) builds an
-    * equal plan, so the one [[QueryCache.cached]] entry serves them
-    * all and the loop runs once until [[QueryCache.release]].
-    */
-  private def clusters(s: SparkSession, d: String): DataFrame =
-    QueryCache.cached(connectedComponents(
-      Dedup.minhashPairs(documents(s, d)).select(col("a_id"), col("b_id"))))
+  /** The near-dup tables of one corpus dir, each built at most once
+    * per query: the char-shingle sets, the verified MinHash pairs over
+    * them and the cluster map over the pairs. A query that reads two of
+    * them takes both from one NearDup, so all its consumers read the
+    * same [[Shared]] tables. */
+  private class NearDup(s: SparkSession, d: String) {
+    lazy val sets: DataFrame = Dedup.shingleSets(documents(s, d))
+    lazy val pairs: DataFrame = Dedup.minhashPairs(sets)
+    /** (doc_id, cluster_id), the cluster being the min doc id of its
+      * component; shared, so the loop runs once per run. */
+    lazy val clusters: DataFrame = Shared(connectedComponents(
+      pairs.select(col("a_id"), col("b_id"))))
+  }
 
-  /** Forwards to [[QueryCache.release]]; kept only because the
-    * benchmark harness (`perfbench/Queries.scala`) calls it. */
-  def resetMemo(): Unit = QueryCache.release(SparkSession.active)
+  /** Does nothing: builds leave no session state to reset. Kept only
+    * because the benchmark harness (`perfbench/Queries.scala`) calls
+    * it. */
+  def resetMemo(): Unit = ()
+
+  /** The centered (vec_id, dim, c) embedding matrix and its 64-row
+    * (dim) table: the inputs of the first power chain of emb_pca_power
+    * and emb_pca2.
+    *  - The matrix is [[Shared]], so every round of the chain reads
+    *    the materialized partitions instead of re-running
+    *    explode+center (MEMORY_AND_DISK, so a 100 TB corpus spills
+    *    rather than OOMs).
+    *  - Round 14: it is hash-partitioned on vec_id BEFORE the barrier.
+    *    The win is PARTIAL-AGGREGATION locality (guide §2.3): with
+    *    every vec's 64 rows in one partition, each round's dot
+    *    aggregate collapses to ONE partial row per vector before its
+    *    exchange, instead of up to one partial per (vector,
+    *    partition). Measured on emb_pca2 at sf0.1: 5.18 → 4.03 s, 53 →
+    *    46 jobs, 5.9 → 2.3 MB shuffled. (Tried and rejected: the same
+    *    repartition in front of a localCheckpoint barrier — a
+    *    checkpoint's LogicalRDD loses the partitioning under AQE and
+    *    every round re-shuffled anyway, 54 jobs / 7.7 MB.)
+    *  - The dims come from the means table instead of a corpus-wide
+    *    distinct over the matrix: joins on dim preserve the dim set,
+    *    so they are the same rows, minus one full scan per chain. */
+  private def centeredEmbeddings(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    import graft.Num.davg
+    val e = embeddings(s, d)
+      .select(col("vec_id"), posexplode(col("embedding"))
+        .as(Seq("pos", "val")))
+      .select(col("vec_id"), (col("pos") + 1).as("dim"),
+        col("val").cast("double").as("v"))
+    val m = e.groupBy(col("dim")).agg(davg(col("v")).as("mean"))
+    (Shared(e.join(broadcast(m), Seq("dim"))
+      .select(col("vec_id"), col("dim"), (col("v") - col("mean")).as("c"))
+      .repartition(col("vec_id"))), m.select(col("dim")))
+  }
+
+  /** A power chain's (dim, vv, nrm) as the PCA report: (dim,
+    * loading_ppm, eigenvalue) by dim. */
+  private def loadings(chain: DataFrame): DataFrame =
+    chain.select(col("dim"),
+      expr("cast(round(vv * 1000000) as bigint)").as("loading_ppm"),
+      col("nrm").as("eigenvalue"))
+      .orderBy(col("dim"))
 
   /** Int8 symmetric per-vector quantization audit over (vec_id,
     * embedding): scale = max|v|/127, q_i = round(v_i/scale); emits the
@@ -290,7 +338,7 @@ object Pipeline extends QueryModule {
     * cluster members, and the decontaminated ids (>= 80 shared 8-gram
     * shingles vs the benchmark). Both faces below join the same sets,
     * so the stage semantics cannot drift between the consumers. */
-  private def curationSets(s: SparkSession, d: String)
+  private def curationSets(s: SparkSession, d: String, nd: NearDup)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val docs = documents(s, d).withColumn("n_toks",
       expr(s"size($toksExpr)")
@@ -300,10 +348,10 @@ object Pipeline extends QueryModule {
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val dropped = clusters(s, d)
+    val dropped = nd.clusters
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
-    val sets = Dedup.shingleSets(documents(s, d))
+    val sets = nd.sets
     def shingles(df: DataFrame) =
       df.select(col("doc_id"), explode(col("set")).as("h"))
     val bench = shingles(sets.filter(col("doc_id") < 20))
@@ -329,9 +377,9 @@ object Pipeline extends QueryModule {
     * original shape, which measured FASTER than a left-join+flag
     * formulation for single-stage consumers (anti joins shrink rows at
     * each step instead of carrying null-extended flags through). */
-  private def curationStages(s: SparkSession, d: String)
+  private def curationStages(s: SparkSession, d: String, nd: NearDup)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (input, firsts, dropped, contam) = curationSets(s, d)
+    val (input, firsts, dropped, contam) = curationSets(s, d, nd)
     val quality = input.filter(col("n_toks") >= 20)
     val exact = quality.join(firsts, Seq("doc_id"))
     val surv = exact.join(dropped, Seq("doc_id"), "left_anti")
@@ -346,7 +394,7 @@ object Pipeline extends QueryModule {
     * conditional aggregate over one pass instead of five nested count
     * chains (guide §2.3). */
   private def curationFlags(s: SparkSession, d: String): DataFrame = {
-    val (input, firsts, dropped, contam) = curationSets(s, d)
+    val (input, firsts, dropped, contam) = curationSets(s, d, new NearDup(s, d))
     input
       .join(firsts.withColumn("_first", lit(true)), Seq("doc_id"), "left")
       .join(dropped.withColumn("_dropped", lit(true)), Seq("doc_id"), "left")
@@ -357,6 +405,28 @@ object Pipeline extends QueryModule {
       .withColumn("st_surv", col("st_exact") && col("_dropped").isNull)
       .withColumn("st_clean", col("st_surv") && col("_contam").isNull)
       .drop("_first", "_dropped", "_contam")
+  }
+
+  /** corpus_split_safe over the cluster map `cl` (doc_id, cluster_id),
+    * output-sized. */
+  private def safeSplit(s: SparkSession, d: String,
+      cl: DataFrame): DataFrame = {
+    val h = splitAssign(documents(s, d))
+      .select(col("doc_id"), col("bucket").as("own_bucket"))
+    val repBucket = h
+      .join(broadcast(cl.select(col("cluster_id")).distinct()),
+        col("doc_id") === col("cluster_id"))
+      .select(col("cluster_id").as("rep_cl"),
+        col("own_bucket").as("rep_bucket"))
+    h.join(broadcast(cl), Seq("doc_id"), "left")
+      .join(broadcast(repBucket), col("cluster_id") === col("rep_cl"),
+        "left")
+      .withColumn("rep_id", coalesce(col("cluster_id"), col("doc_id")))
+      .withColumn("bucket", coalesce(col("rep_bucket"), col("own_bucket")))
+      .withColumn("split", expr("CASE WHEN bucket < 90 THEN 'train'" +
+        " WHEN bucket < 95 THEN 'val' ELSE 'test' END"))
+      .select(col("doc_id"), col("rep_id"), col("bucket"), col("split"))
+      .orderBy(col("doc_id"))
   }
 
   /** Content-hash train/val/test assignment shared by corpus_split,
@@ -428,7 +498,7 @@ object Pipeline extends QueryModule {
     // id in the component. The dedup decision a pipeline actually
     // ships: keep one survivor per cluster, not per pair.
     "dedup_cluster" -> ((s, d) =>
-      clusters(s, d).orderBy(col("doc_id"))),
+      new NearDup(s, d).clusters.orderBy(col("doc_id"))),
 
     // Deterministic Bernoulli sampling by content hash: keep ~5% of
     // docs where md5("b"+doc_id) % 20 == 0. No shuffle — the filter
@@ -501,7 +571,7 @@ object Pipeline extends QueryModule {
     "corpus_split_leakage" -> ((s, d) => {
       val split = splitAssign(documents(s, d))
         .select(col("doc_id"), col("split"))
-      broadcast(Dedup.minhashPairs(documents(s, d)))
+      broadcast(new NearDup(s, d).pairs)
         .join(split.select(col("doc_id").as("a_id"),
           col("split").as("a_split")), Seq("a_id"))
         .join(split.select(col("doc_id").as("b_id"),
@@ -522,25 +592,8 @@ object Pipeline extends QueryModule {
     // pipelines converge on. Costs: the cluster map is output-sized
     // (clustered docs only, a small fraction of any sane corpus) so
     // both label joins broadcast; the corpus-size side never shuffles.
-    "corpus_split_safe" -> ((s, d) => {
-      val h = splitAssign(documents(s, d))
-        .select(col("doc_id"), col("bucket").as("own_bucket"))
-      val cl = clusters(s, d) // (doc_id, cluster_id), output-sized
-      val repBucket = h
-        .join(broadcast(cl.select(col("cluster_id")).distinct()),
-          col("doc_id") === col("cluster_id"))
-        .select(col("cluster_id").as("rep_cl"),
-          col("own_bucket").as("rep_bucket"))
-      h.join(broadcast(cl), Seq("doc_id"), "left")
-        .join(broadcast(repBucket), col("cluster_id") === col("rep_cl"),
-          "left")
-        .withColumn("rep_id", coalesce(col("cluster_id"), col("doc_id")))
-        .withColumn("bucket", coalesce(col("rep_bucket"), col("own_bucket")))
-        .withColumn("split", expr("CASE WHEN bucket < 90 THEN 'train'" +
-          " WHEN bucket < 95 THEN 'val' ELSE 'test' END"))
-        .select(col("doc_id"), col("rep_id"), col("bucket"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
+    "corpus_split_safe" -> ((s, d) =>
+      safeSplit(s, d, new NearDup(s, d).clusters)),
 
     // Stratification audit over the split: per-(source, split) doc
     // counts and integer ppm shares of each source — the pre-flight
@@ -689,10 +742,10 @@ object Pipeline extends QueryModule {
     // actually are — the report that distinguishes "pairwise dups"
     // (size-2 cliques, cheap survivors) from "boilerplate galaxies"
     // (giant cliques that dominate removal and deserve a template
-    // rule instead). Rides the memoized CC fixpoint; two
+    // rule instead). Rides the shared CC fixpoint; two
     // cluster-count-sized aggregates after it.
     "dedup_cluster_hist" -> ((s, d) => {
-      clusters(s, d)
+      new NearDup(s, d).clusters
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size"))
@@ -769,8 +822,7 @@ object Pipeline extends QueryModule {
     // reproduces the exact integers — the same determinism discipline
     // Num applies to float sums, extended to an iterative fixpoint.
     "graph_pagerank" -> ((s, d) => {
-      val p = Dedup.minhashPairs(documents(s, d))
-        .select(col("a_id"), col("b_id"))
+      val p = new NearDup(s, d).pairs.select(col("a_id"), col("b_id"))
       Iterate(PageRank(5), p).orderBy(col("doc_id"))
     }),
 
@@ -851,7 +903,8 @@ object Pipeline extends QueryModule {
     // set (tiny relative to the corpus), so the corpus streams.
     "dedup_survivors" -> ((s, d) => {
       documents(s, d)
-        .join(clusters(s, d).filter(col("doc_id") =!= col("cluster_id")),
+        .join(new NearDup(s, d).clusters
+          .filter(col("doc_id") =!= col("cluster_id")),
           Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
@@ -864,12 +917,12 @@ object Pipeline extends QueryModule {
     // production pipelines pick by length/quality. The packed
     // (n_toks·2³² − doc_id) ordinal makes both engines maximize the
     // same scalar (neither defines max_by/arg_max tie order); one
-    // map-side-combinable aggregate over the memoized cluster table.
+    // map-side-combinable aggregate over the shared cluster table.
     "dedup_survivors_quality" -> ((s, d) => {
       val nt = documents(s, d).withColumn("n_toks",
         expr(s"size($toksExpr)")
           .cast("long"))
-      clusters(s, d).join(nt, Seq("doc_id"))
+      new NearDup(s, d).clusters.join(nt, Seq("doc_id"))
         .withColumn("pk",
           col("n_toks") * lit(4294967296L) - col("doc_id"))
         .groupBy(col("cluster_id"))
@@ -883,7 +936,7 @@ object Pipeline extends QueryModule {
     // THE end-to-end curation pass as ONE declared query — what a user
     // actually runs nightly: eval-exclusion → quality gate (>= 20
     // tokens) → exact dedup (first doc per content hash) → near-dup
-    // survivor selection (corpus-wide clusters, memoized) → benchmark
+    // survivor selection (corpus-wide clusters, shared) → benchmark
     // decontamination (>= 8 shared shingles) → per-shard accounting of
     // what ships to training. Every stage is the already-oracle-proven
     // operator, composed; the stages that matter at 100 TB keep their
@@ -894,7 +947,7 @@ object Pipeline extends QueryModule {
     "corpus_curate" -> ((s, d) => {
       // stages shared with corpus_funnel / corpus_release
       // (curationStages); the drop-threshold rationale lives there
-      val (_, _, _, _, clean) = curationStages(s, d)
+      val (_, _, _, _, clean) = curationStages(s, d, new NearDup(s, d))
       clean
         .withColumn("shard", expr(
           "cast(conv(substring(md5(concat('sh', cast(doc_id as string))), 1, 8), 16, 10) as bigint) % 32"))
@@ -908,7 +961,7 @@ object Pipeline extends QueryModule {
     // survive each stage of corpus_curate — the observability report
     // a data team reads before any training run ships ("where did my
     // corpus go?"). Five one-row aggregates over the SAME stage
-    // definitions (shingle sets cached, cluster fixpoint memoized —
+    // definitions (shingle sets and cluster fixpoint shared —
     // the stages are not recomputed five times from scratch), unioned
     // into a 5-row funnel. If corpus_curate's stage semantics change,
     // change them here too.
@@ -946,20 +999,21 @@ object Pipeline extends QueryModule {
     // (curation stages, the output-sized cluster map, the banded pair
     // kernel); the card rollup is a 3-row aggregate.
     "corpus_release" -> ((s, d) => {
-      val (_, _, _, _, clean) = curationStages(s, d)
-      val safe = queries("corpus_split_safe")(s, d)
+      val nd = new NearDup(s, d)
+      val (_, _, _, _, clean) = curationStages(s, d, nd)
+      val safe = safeSplit(s, d, nd.clusters)
         .select(col("doc_id"), col("split"))
       // three consumers (two leak-label joins + the card rollup) —
-      // cache the narrow released table (lazy, like q_theil_sen's
+      // share the narrow released table (lazy, like q_theil_sen's
       // monthly table) instead of re-running the whole curation chain
       // per consumer: column pruning specializes each consumer's copy,
-      // so exchange reuse cannot dedupe them (uncached at sf0.1: 126
+      // so exchange reuse cannot dedupe them (unshared at sf0.1: 126
       // jobs instead of 70, and 2.4× the input rows)
-      val rel = QueryCache.cached(clean.select(col("doc_id"), col("n_toks"))
+      val rel = Shared(clean.select(col("doc_id"), col("n_toks"))
         .join(safe, Seq("doc_id"))
         .join(documents(s, d).select(col("doc_id"), col("source")),
           Seq("doc_id")))
-      val leakPairs = broadcast(Dedup.minhashPairs(documents(s, d)))
+      val leakPairs = broadcast(nd.pairs)
         .join(rel.select(col("doc_id").as("a_id"),
           col("split").as("a_split")), Seq("a_id"))
         .join(rel.select(col("doc_id").as("b_id"),
@@ -1133,12 +1187,12 @@ object Pipeline extends QueryModule {
     // Per-source near-dup accounting: how much of each source the
     // near-dup dedup pass would drop — the report that decides which
     // acquisition pipelines are feeding the corpus duplicates. Joins
-    // the (memoized) cluster assignment's non-survivor set against the
+    // the (shared) cluster assignment's non-survivor set against the
     // corpus; the dropped set is tiny relative to the corpus, the
     // rollup groups on a handful of source keys. dup_ppm is integer
     // floor-div, exactly portable.
     "dedup_source_stats" -> ((s, d) => {
-      val dropped = clusters(s, d)
+      val dropped = new NearDup(s, d).clusters
         .filter(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id"), lit(1L).as("is_dup"))
       documents(s, d).join(dropped, Seq("doc_id"), "left")
@@ -1191,34 +1245,12 @@ object Pipeline extends QueryModule {
     // the quantization is part of the operator's definition, not an
     // approximation of it). Per iteration: one broadcast join against
     // the 64-row direction vector, one shuffle on vec_id, one on dim —
-    // the corpus is scanned, never collected; at 100 TB you persist
-    // the centered table once and the loop stays scan-bound.
+    // the corpus is scanned once, never collected: the rounds read the
+    // shared centered table (centeredEmbeddings), and the loop stays
+    // scan-bound. It is emb_pca2's first chain.
     "emb_pca_power" -> ((s, d) => {
-      import graft.Num.{davg, dsum}
-      val e = embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding"))
-          .as(Seq("pos", "val")))
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          col("val").cast("double").as("v"))
-      val m = e.groupBy(col("dim")).agg(davg(col("v")).as("mean"))
-      val c = e.join(broadcast(m), Seq("dim"))
-        .select(col("vec_id"), col("dim"), (col("v") - col("mean")).as("c"))
-      var vk = m.select(col("dim"), lit(1.0).as("vv"))
-      var nk: DataFrame = null
-      for (_ <- 1 to 3) {
-        val dk = c.join(broadcast(vk), Seq("dim"))
-          .groupBy(col("vec_id")).agg(dsum(col("c") * col("vv")).as("dot"))
-        val wk = c.join(dk, Seq("vec_id"))
-          .groupBy(col("dim")).agg(dsum(col("dot") * col("c")).as("w"))
-        nk = wk.agg(sqrt(dsum(col("w") * col("w"))).as("nrm"))
-        vk = wk.crossJoin(broadcast(nk))
-          .select(col("dim"), (col("w") / col("nrm")).as("vv"))
-      }
-      vk.crossJoin(broadcast(nk))
-        .select(col("dim"),
-          expr("cast(round(vv * 1000000) as bigint)").as("loading_ppm"),
-          col("nrm").as("eigenvalue"))
-        .orderBy(col("dim"))
+      val (c, dims) = centeredEmbeddings(s, d)
+      loadings(Iterate(PowerIteration(3), c, dims))
     }),
 
     // Second principal component via deflation: run the same
@@ -1230,48 +1262,8 @@ object Pipeline extends QueryModule {
     // the 64-row eigenvector broadcast back each iteration; the
     // corpus-sized table is touched a constant number of times.
     "emb_pca2" -> ((s, d) => {
-      import graft.Num.{davg, dsumExpr}
-      val e = embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding"))
-          .as(Seq("pos", "val")))
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          col("val").cast("double").as("v"))
-      val m = e.groupBy(col("dim")).agg(davg(col("v")).as("mean"))
-      // Materialization discipline:
-      //  - the centered matrix c (and its deflation c2) is materialized
-      //    ONCE — every subsequent power-iteration job reads the cached
-      //    partitions instead of re-running explode+center per job
-      //    (MEMORY_AND_DISK, so a 100 TB corpus spills rather than
-      //    OOMs; an engine that can't afford the cache re-derives c
-      //    per pass at 2× scan cost, same answer);
-      //  - each power chain is one [[graft.Iterate]] node: its rounds
-      //    run when the plan executes, and Catalyst never sees the
-      //    iteration lineage (see PowerIteration);
-      //  - round 14: the matrix is hash-partitioned on vec_id BEFORE
-      //    the barrier (cache() — a lazy barrier, cleared per bench
-      //    attempt, same honesty contract as q_theil_sen's monthly
-      //    cache). The win is PARTIAL-AGGREGATION locality (guide
-      //    §2.3): with every vec's 64 rows in one partition, each
-      //    iteration's dot aggregate collapses to ONE partial row per
-      //    vector before its exchange, instead of up to one partial
-      //    per (vector, partition); and the power loop's start vector
-      //    no longer needs a corpus-wide distinct (see dims below).
-      //    Measured at sf0.1: 5.18 → 4.03 s, 53 → 46 jobs, 5.9 →
-      //    2.3 MB shuffled. (Tried and rejected on the way: the same
-      //    repartition in front of a localCheckpoint barrier — a
-      //    checkpoint's LogicalRDD loses the partitioning under AQE
-      //    and every iteration re-shuffled anyway, measured WORSE at
-      //    54 jobs / 7.7 MB.)
-      def center(mat: DataFrame): DataFrame = QueryCache.cached(mat)
-      val c = center(e.join(broadcast(m), Seq("dim"))
-        .select(col("vec_id"), col("dim"), (col("v") - col("mean")).as("c"))
-        .repartition(col("vec_id")))
-      // dims: the 64-row dimension table for the all-ones start vector.
-      // Derived from the means table m instead of a corpus-wide
-      // distinct over mat: joins on dim preserve the dim set, so
-      // m's dims == mat's dims for both chains — same rows, minus one
-      // full scan of the materialized matrix per chain.
-      val dims = m.select(col("dim"))
+      import graft.Num.dsumExpr
+      val (c, dims) = centeredEmbeddings(s, d)
       // Deflation: v1 is read once, so the first chain runs once (two
       // reads plan two chain nodes, and their broadcasts differ after
       // filter inference, so exchange reuse cannot merge them). The
@@ -1281,14 +1273,11 @@ object Pipeline extends QueryModule {
         .select(col("dim"), col("vv"))
       val dot = sum(dsumExpr(col("c") * col("vv")))
         .over(Window.partitionBy(col("vec_id"))).cast("double") / 1e8
-      val c2 = center(c.join(broadcast(v1), Seq("dim"))
+      // the deflated matrix is shared too: every round reads it
+      val c2 = Shared(c.join(broadcast(v1), Seq("dim"))
         .select(col("vec_id"), col("dim"),
           (col("c") - dot * col("vv")).as("c")))
-      Iterate(PowerIteration(3), c2, dims)
-        .select(col("dim"),
-          expr("cast(round(vv * 1000000) as bigint)").as("loading_ppm"),
-          col("nrm").as("eigenvalue"))
-        .orderBy(col("dim"))
+      loadings(Iterate(PowerIteration(3), c2, dims))
     }),
 
     // Quantization-quality gate: recall@10 of int8-reconstructed

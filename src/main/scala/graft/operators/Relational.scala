@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, QueryCache, QueryModule, Tables}
+import graft.{Num, QueryModule, Shared, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1101,7 +1101,7 @@ object Relational extends QueryModule {
     "q_assoc_rules" -> ((s, d) => {
       // NOT cached (round-13 measurement): caching the distinct item
       // set for its four consumers was tried and made the query 2.2×
-      // SLOWER at sf0.1 (3.9 s vs 1.8 s) — the InMemoryRelation
+      // SLOWER at sf0.1 (3.9 s vs 1.8 s) — the in-memory table's
       // materialization plus lost whole-stage fusion cost more than
       // AQE's existing exchange reuse across the identical self-join
       // legs saves. Left as lineage; exchange reuse dedupes the
@@ -1254,12 +1254,12 @@ object Relational extends QueryModule {
     // the degree table; the coefficient is one IEEE divide of exact
     // integers.
     "q_triangle_count" -> ((s, d) => {
-      // cached: the basket-pair join feeds five consumers (degree
+      // shared: the basket-pair join feeds five consumers (degree
       // table, both wedge legs, the closure probe, the edge count) —
-      // uncached, Catalyst re-runs the lineitem self-join per leg
+      // unshared, Catalyst re-runs the lineitem self-join per leg
       // (measured 4.5 s -> the join once). On a cluster this barrier
       // is a checkpoint or an intermediate table, same shape.
-      val e = QueryCache.cached(basketPairs(s, d).select(col("p1"), col("p2")))
+      val e = Shared(basketPairs(s, d).select(col("p1"), col("p2")))
       val deg = e.select(col("p1").as("v"))
         .unionByName(e.select(col("p2").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -1270,10 +1270,10 @@ object Relational extends QueryModule {
           Seq("p2"))
       val uIsP1 = col("d1") < col("d2") ||
         (col("d1") === col("d2") && col("p1") < col("p2"))
-      // cached: both wedge legs and the closure probe read it (A/B at
-      // sf0.1, 4 vCPU: uncached 43 jobs and 13.4 MB shuffled, 10.1-11.2
-      // s; cached 26 jobs and 12.5 MB, 5.8-7.4 s)
-      val oriented = QueryCache.cached(wd.select(
+      // shared: both wedge legs and the closure probe read it (A/B at
+      // sf0.1, 4 vCPU: unshared 43 jobs and 13.4 MB shuffled, 10.1-11.2
+      // s; shared 26 jobs and 12.5 MB, 5.8-7.4 s)
+      val oriented = Shared(wd.select(
         when(uIsP1, col("p1")).otherwise(col("p2")).as("u"),
         when(uIsP1, col("p2")).otherwise(col("p1")).as("v"),
         when(uIsP1, col("d2")).otherwise(col("d1")).as("dv")))
@@ -1964,16 +1964,15 @@ object Relational extends QueryModule {
       // has no NULL l_suppkey, so the two agree here; a NULLable-key
       // deployment would need an IS NOT NULL pre-filter to keep them
       // equivalent.
-      // cache()d (round 14): the r13 claim that AQE reuses the pair
+      // Shared (round 14): the r13 claim that AQE reuses the pair
       // exchange across the two consumers was WRONG — the executed
       // plan at both sf0.001 and sf0.1 materializes TWO
       // (l_orderkey, l_suppkey) exchanges, i.e. the lineitem⋈orders
       // join and the pair aggregate ran twice. The bounded pair table
-      // (≤ suppliers-per-order × orders) now materializes once and
-      // both faces read it (guide §2.4); the bench clears the cache
-      // manager before every attempt. Measured: 22.6 → 13.4 MB
+      // (≤ suppliers-per-order × orders) now materializes once per run
+      // and both faces read it (guide §2.4). Measured: 22.6 → 13.4 MB
       // shuffled at sf0.1 (the duplicated fact-join pass gone).
-      val perPair = QueryCache.cached(lineitem(s, d)
+      val perPair = Shared(lineitem(s, d)
         .join(orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_orderkey"), col("l_suppkey"))
@@ -2516,20 +2515,17 @@ object Relational extends QueryModule {
       //      column pruning specializes each copy, exchange reuse
       //      could not dedupe them (measured: 18 parquet scans / 11
       //      live exchanges in the executed plan). A LAZY
-      //      cache() pins the |nations| × |calendar-months| table
-      //      (≤ ~2 100 rows at ANY corpus size) as one InMemoryRelation:
-      //      the fact join runs once per action. cache, not
-      //      localCheckpoint — registration is fully lazy (the zero-jobs
-      //      audit holds with no exemption; localCheckpoint, even
-      //      eager=false, finalizes the AQE plan and runs its stages at
-      //      construction), and the bench clears the cache manager
-      //      before every attempt so each attempt still pays the full
-      //      input scan.
+      //      Shared table pins the |nations| × |calendar-months| table
+      //      (≤ ~2 100 rows at ANY corpus size): the fact join runs
+      //      once per run. Shared, not localCheckpoint — the build is
+      //      fully lazy (the zero-jobs audit holds with no exemption;
+      //      localCheckpoint, even eager=false, finalizes the AQE plan
+      //      and runs its stages at construction).
       val liOrder = lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(sum(dsumExpr(col("l_extendedprice") * (lit(1) - col("l_discount"))))
           .as("rev_q"))
-      val monthly = QueryCache.cached(liOrder
+      val monthly = Shared(liOrder
         .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
         .join(customer(s, d), col("o_custkey") === col("c_custkey"))
         .join(broadcast(nation(s, d)),

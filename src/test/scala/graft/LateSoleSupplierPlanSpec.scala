@@ -7,14 +7,13 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * AQE's exchange reuse deduplicates the (order, supplier) pair
   * aggregate across its two consumers was REFUTED by the executed
   * plans (two materialized pair exchanges at both sf0.001 and sf0.1),
-  * so round 14 made the sharing explicit with cache(). This spec
+  * so round 14 made the sharing explicit (a `Shared` table). This spec
   * fails if a refactor ever drops the barrier and the fact join
   * silently runs twice again.
   */
 class LateSoleSupplierPlanSpec extends SparkSpec {
 
   test("both consumers read ONE cached (order, supplier) aggregate") {
-    spark.sharedState.cacheManager.clearCache()
     val df = SparkEntry.queries("q_late_sole_supplier")(spark, sf)
     val rels = df.queryExecution.optimizedPlan.collect {
       case r: InMemoryRelation => r

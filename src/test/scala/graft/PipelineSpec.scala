@@ -166,7 +166,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pagerank matches an exact integer-arithmetic recompute") {
-    val pairs = operators.Dedup.minhashPairs(Tables.documents(spark, sf))
+    val pairs = operators.Dedup.minhashPairs(
+      operators.Dedup.shingleSets(Tables.documents(spark, sf)))
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -485,8 +486,8 @@ class PipelineSpec extends SparkSpec {
       val safe = SparkEntry.queries("corpus_split_safe")(spark, dir)
         .select("doc_id", "split").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val pairs = graft.operators.Dedup
-        .minhashPairs(Tables.documents(spark, dir))
+      val pairs = graft.operators.Dedup.minhashPairs(
+        graft.operators.Dedup.shingleSets(Tables.documents(spark, dir)))
         .select("a_id", "b_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(pairs.nonEmpty, s"no near-dup pairs in $dir")

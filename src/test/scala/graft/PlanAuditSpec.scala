@@ -335,10 +335,10 @@ class PlanAuditSpec extends SparkSpec {
     case _ => false
   }
 
-  /** Collect across cache barriers too (round 14): a Window inside a
-    * cache()d subtree still RUNS — q_ts_similarity's bounded cellMap
+  /** Collect across shared tables too (round 14): a Window inside a
+    * shared subtree still RUNS — q_ts_similarity's bounded cellMap
     * window moved inside the keyed-table InMemoryRelation when that
-    * table was cached, and a collect over only the outer plan would
+    * table was shared, and a collect over only the outer plan would
     * have read it as vanished (stale-entry false positive) while a
     * real unbounded window could hide the same way (missed offender).
     * The cached subtree is stored analyzed; it is optimized here so it
@@ -411,31 +411,83 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("one QueryCache.release frees every cached table") {
-    // runs after the collect sweeps, so the CacheManager is populated
-    try {
-      assert(!spark.sharedState.cacheManager.isEmpty)
-      QueryCache.release(spark)
-      assert(spark.sharedState.cacheManager.isEmpty)
-    } finally QueryCache.release(spark)
+  // ---------------------------------------------------------------
+  // Shared tables (graft.Shared) belong to the plan that built them:
+  // building or running a query registers nothing in the session, a
+  // plan holds each shared table once, and a dropped plan's tables are
+  // unpersisted.
+
+  import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
+  /** Every shared table `p` reads, also those read inside another
+    * shared table's plan, once per table. */
+  private def sharedTables(p: LogicalPlan): Seq[InMemoryRelation] = {
+    def all(q: LogicalPlan): Seq[InMemoryRelation] =
+      q.collect { case r: InMemoryRelation => r }
+        .flatMap(r => r +: all(r.cacheBuilder.logicalPlan))
+    all(p).foldLeft(Seq.empty[InMemoryRelation]) { (seen, r) =>
+      if (seen.exists(_.cacheBuilder eq r.cacheBuilder)) seen else seen :+ r
+    }
   }
 
-  test("dedup_cluster and corpus_curate share one fixpoint entry, which release empties") {
-    import org.apache.spark.sql.classic.ClassicConversions._
+  /** Pairs of distinct shared tables in `p` that compute the same
+    * result: a table the query builds twice where it should pass one
+    * down. */
+  private def duplicateShared(p: LogicalPlan): Seq[(InMemoryRelation, InMemoryRelation)] = {
+    val ts = sharedTables(p)
+    for {
+      (a, i) <- ts.zipWithIndex
+      b <- ts.drop(i + 1)
+      if a.cacheBuilder.logicalPlan.sameResult(b.cacheBuilder.logicalPlan)
+    } yield (a, b)
+  }
+
+  /** The queries whose plans hold a shared table, sorted. */
+  private lazy val sharedSites: Seq[String] =
+    SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn) if sharedTables(
+        fn(spark, sf).queryExecution.analyzed).nonEmpty => name
+    }
+
+  test("building every query, and running each that shares a table, leaves the CacheManager empty") {
     val cm = spark.sharedState.cacheManager
-    def fixpoints(q: String) = SparkEntry.queries(q)(spark, sf)
-      .queryExecution.analyzed.collect { case i: Iterate => i }
-    QueryCache.release(spark)
-    try {
-      val found = fixpoints("dedup_cluster") ++ fixpoints("corpus_curate")
-      assert(found.size >= 2)
-      // two builds give equal plans, so every lookup finds one entry
-      assert(found.forall(_.sameResult(found.head)))
-      val entries = found.map(f => cm.lookupCachedData(spark, f)
-        .getOrElse(fail(s"no cache entry for $f")).cachedRepresentation)
-      assert(entries.forall(_ eq entries.head))
-      QueryCache.release(spark)
-      assert(cm.isEmpty && found.forall(cm.lookupCachedData(spark, _).isEmpty))
-    } finally QueryCache.release(spark)
+    assert(cm.isEmpty, "the session held cached tables before the builds")
+    SparkEntry.queries.values.foreach(_(spark, sf))
+    assert(cm.isEmpty, "a query build registered a cached table")
+    assert(sharedSites.size >= 25, s"shared-table queries: $sharedSites")
+    for (name <- sharedSites) {
+      SparkEntry.queries(name)(spark, sf).collect()
+      assert(cm.isEmpty, s"$name registered a cached table when it ran")
+    }
+  }
+
+  test("no plan holds two shared tables that compute the same result") {
+    val dups = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      duplicateShared(fn(spark, sf).queryExecution.analyzed).map { case (a, b) =>
+        s"$name: ${a.cacheBuilder.cachedName} and ${b.cacheBuilder.cachedName}"
+      }
+    }
+    assert(dups.isEmpty, s"build the table once and pass it down:\n" +
+      dups.mkString("\n"))
+    // the audit fires on a table built twice (mutation probe)
+    def twice = Shared(Tables.nation(spark, sf).select("n_nationkey"))
+    assert(duplicateShared(twice.union(twice).queryExecution.analyzed).size == 1)
+    val once = twice
+    assert(duplicateShared(once.union(once).queryExecution.analyzed).isEmpty)
+  }
+
+  test("a dropped plan's shared tables are unpersisted") {
+    // the tables the runs above materialized are reachable from no plan
+    // now, so the ContextCleaner (and the weak persistent-RDD map) let
+    // them go once the garbage collector has run
+    val sc = spark.sparkContext
+    val deadline = System.currentTimeMillis() + 60000
+    while (sc.getPersistentRDDs.nonEmpty &&
+        System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(sc.getPersistentRDDs.isEmpty, "still persisted: " +
+      sc.getPersistentRDDs.values.map(r => s"${r.id} ${r.name}").mkString(", "))
   }
 }
